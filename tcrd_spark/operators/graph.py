@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from tcrd_spark.operators.lineage import _truncate
+from tcrd_spark.session import memo
 
 
 def apsp_iterative(
@@ -564,30 +565,25 @@ def pagerank(
     return ranks.select("node", F.round("pr", 6).alias("pagerank"))
 
 
-# cached distinct-edge frames keyed by (applicationId, sf_dir): bench
-# reps and the oracle sweep re-invoke q_pagerank in one session, and
-# per-invocation .cache() without cleanup is the storage leak the sq.py
-# round-5 advice flagged — memoize instead (the sq._memo_cached idiom)
-_PR_EDGE_MEMO: dict = {}
-
-
 def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PageRank over the global part→part order-chain graph (the KEGG
     pathway union shape): which parts sit centrally in order flows.
     Extends §2.8 beyond the reference's BFS family (`loaders/
     load-KEGGDistances.py` computes distances only) with the standard
     iterative-centrality workload."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    triple = _PR_EDGE_MEMO.get(key)
-    if triple is None:
+    # the distinct-edge frames live in the session memo store: bench
+    # reps and the oracle sweep re-invoke q_pagerank in one session, and
+    # per-invocation .cache() without cleanup would leak storage (ADVICE
+    # r5). The node count is memoized WITH the frames (r12): it is a
+    # property of the memoized node frame, and the separate count job
+    # otherwise re-ran on every invocation.
+    def build():
         e, deg, nodes = graph_frames(
             _order_chain_edges(spark, sf_dir), "src", "dst"
         )
-        # the node count is memoized WITH the frames (r12): it is a
-        # property of the memoized node frame, and the separate count
-        # job otherwise re-ran on every invocation
-        triple = (e.cache(), deg.cache(), nodes.cache(), nodes.count())
-        _PR_EDGE_MEMO[key] = triple
+        return e.cache(), deg.cache(), nodes.cache(), nodes.count()
+
+    triple = memo(spark, "pagerank-edges", sf_dir, build)
     return pagerank(
         triple[0], "src", "dst", PR_ITERS, PR_DAMPING,
         prebuilt=triple[:3], n_nodes=triple[3],

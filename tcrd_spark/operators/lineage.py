@@ -1,15 +1,18 @@
 """Lineage-cut helper shared by every iterative algorithm.
 
-Deliberately a LEAF module (imports nothing from tcrd_spark): corpus
-connected-components, BPE training, and graph BFS all need the cut,
-and an import edge through graph.py previously made graph churn stale
-the whole corpus family under the registry's closure-based rotation
-invariant (tests/test_registry.py).
+Deliberately a LEAF module (imports nothing from tcrd_spark but the
+leaf `session`): corpus connected-components, BPE training, and graph
+BFS all need the cut, and an import edge through graph.py previously
+made graph churn stale the whole corpus family under the registry's
+closure-based rotation invariant (tests/test_registry.py).
 """
 
 from __future__ import annotations
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame
+
+from tcrd_spark.session import memo
 
 
 def _truncate(
@@ -28,8 +31,7 @@ def _truncate(
     shipped every cut row out to the Python driver-side serializer and
     back (guide §4: every Python crossing pays transpose+serialize both
     ways); measured on a 100k-row window-derived cut this was 1.65s vs
-    0.34s warm, and it tripled corpus/CC loop wall time. The pickle
-    path remains as a fallback if the JVM accessors ever move.
+    0.34s warm, and it tripled corpus/CC loop wall time.
     (localCheckpoint is NOT equivalent: unpersisting a local checkpoint
     loses the blocks permanently — CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND on
     re-read — while this cut's lineage survives unpersist.)
@@ -47,27 +49,14 @@ def _truncate(
     only costs storage-memory bookkeeping per hop.
     """
     spark = df.sparkSession
-    try:
-        jrdd = df._jdf.javaRDD()
-        if cache:
-            jrdd = jrdd.cache()
-        out = DataFrame(
-            spark._jsparkSession.createDataFrame(jrdd, df._jdf.schema()),
-            spark,
-        )
-        handle = jrdd
-    except Exception:  # pragma: no cover — internal-API drift fallback
-        handle = df.rdd
-        if cache:
-            handle = handle.cache()
-        out = spark.createDataFrame(handle, df.schema)
-    if cache and _caches is not None:
-        _caches.append(handle)
-    return out
-
-
-# one cached-cut handle per (application, slot) — see _truncate_rotating
-_ROTATING: dict = {}
+    jrdd = df._jdf.javaRDD()
+    if cache:
+        jrdd = jrdd.cache()
+        if _caches is not None:
+            _caches.append(jrdd)
+    return DataFrame(
+        spark._jsparkSession.createDataFrame(jrdd, df._jdf.schema()), spark
+    )
 
 
 def _truncate_rotating(
@@ -87,20 +76,11 @@ def _truncate_rotating(
     if _caches is not None:
         return _truncate(df, _caches)
     held: list = []
-    out = _truncate(df, held)
-    key = (df.sparkSession.sparkContext.applicationId, slot)
-    prev = _ROTATING.pop(key, None)
-    if prev is not None:
-        try:
-            prev.unpersist()
-        except Exception:  # pragma: no cover — JVM handle already gone
-            pass
-    _ROTATING[key] = held[0]
-    return out
-
-
-# one cached-DataFrame handle per (application, slot) — see _cache_rotating
-_DF_ROTATING: dict = {}
+    # a fresh key per call: the slot always rotates; the entry holds
+    # the cut RDD handle (what the store releases) next to the frame
+    return memo(
+        df.sparkSession, slot, object(), lambda: (_truncate(df, held), held[0])
+    )[0]
 
 
 def _cache_rotating(df, slot: str, _caches: list | None = None):
@@ -126,25 +106,23 @@ def _cache_rotating(df, slot: str, _caches: list | None = None):
         out = df.cache()
         _caches.append(out)
         return out
-    key = (df.sparkSession.sparkContext.applicationId, slot)
-    prev = _DF_ROTATING.get(key)
-    if prev is not None:
+    out = memo(df.sparkSession, slot, _SamePlan(df), df.cache)
+    # a plan match returns the slot's frame; hand back the caller's own
+    # frame (its column ids), cached onto the shared relation
+    return out if out is df else df.cache()
+
+
+class _SamePlan:
+    """Memo key equal to another when the analyzed plans compute the
+    same result (``sameResult``) — the CacheManager's own dedup rule."""
+
+    def __init__(self, df):
+        self.df = df
+
+    def __eq__(self, other):
         try:
-            same = (
-                prev._jdf.queryExecution()
-                .analyzed()
-                .sameResult(df._jdf.queryExecution().analyzed())
+            return self.df._jdf.queryExecution().analyzed().sameResult(
+                other.df._jdf.queryExecution().analyzed()
             )
-        except Exception:  # pragma: no cover — handle from a dead app
-            same = False
-        if same:
-            # CacheManager will reuse prev's cached relation — keep it
-            return df.cache()
-        _DF_ROTATING.pop(key, None)
-        try:
-            prev.unpersist()
-        except Exception:  # pragma: no cover
-            pass
-    out = df.cache()
-    _DF_ROTATING[key] = out
-    return out
+        except Py4JError:  # handle from a stopped application
+            return False

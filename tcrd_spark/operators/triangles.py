@@ -90,35 +90,22 @@ def triangle_counts(
 # ------------------------------------------------- registered queries
 
 
-# cached oriented-edge frame keyed by (applicationId, sf_dir) — the
-# _PR_EDGE_MEMO idiom (operators/graph.py): bench reps and the oracle
-# sweep re-invoke q_triangle_counts within one session, and the frame
-# is scan-derived, so memoize-and-cache rather than rebuild per call
-_TRI_EDGE_MEMO: dict = {}
-
-
 def q_triangle_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-node triangle counts over the 2%-of-orders part-chain graph
     (the apsp edge set, undirected)."""
     from tcrd_spark.operators.graph import _order_chain_edges
+    from tcrd_spark.session import memo
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    # evict every other entry (r7 ADVICE): dead applications' frames
-    # are unreachable anyway, and a second sf_dir's cached edges would
-    # otherwise pin executor storage for the session lifetime — no
-    # caller interleaves sf_dirs, so at most ONE live entry is ever
-    # useful
-    for stale in [k for k in _TRI_EDGE_MEMO if k != key]:
-        df = _TRI_EDGE_MEMO.pop(stale)
-        try:
-            df.unpersist()
-        except Exception:
-            pass  # frame from a dead application: nothing to release
-    o = _TRI_EDGE_MEMO.get(key)
-    if o is None:
-        edges = _order_chain_edges(spark, sf_dir, order_mod=50)
-        o = oriented_edges(edges, "src", "dst").cache()
-        _TRI_EDGE_MEMO[key] = o
+    # the oriented-edge frame is scan-derived and re-read by bench reps
+    # and the oracle sweep, so it is cached in the session memo store;
+    # its one-entry-per-slot bound releases a dead application's or a
+    # second sf_dir's frame (r7 ADVICE) instead of pinning it
+    o = memo(
+        spark, "triangle-edges", sf_dir,
+        lambda: oriented_edges(
+            _order_chain_edges(spark, sf_dir, order_mod=50), "src", "dst"
+        ).cache(),
+    )
     return triangle_counts(None, "src", "dst", prebuilt=o)
 
 

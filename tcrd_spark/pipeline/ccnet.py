@@ -99,12 +99,12 @@ def q_ccnet_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     session like the SQ/PQ code tables, so the LM lineage runs once
     across the edge pass, the label pass, and repeated invocations."""
     from tcrd_spark.pipeline.lm import _docs
-    from tcrd_spark.pipeline.sq import _memo_cached
+    from tcrd_spark.session import memo
 
     docs = _docs(spark, sf_dir)
-    labeled = _memo_cached(
-        spark, (sf_dir, "ccnet-labeled"),
-        lambda: lang_nll(docs, "doc_id", "text"),
+    labeled = memo(
+        spark, "ccnet-labeled", sf_dir,
+        lambda: lang_nll(docs, "doc_id", "text").cache(),
     )
     return ccnet_buckets(docs, "doc_id", "text", _labeled=labeled)
 

@@ -65,12 +65,12 @@ def q_classifier_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     perplexity tertiles (shares the standalone query's session memo)."""
     from tcrd_spark.pipeline.ccnet import ccnet_buckets, lang_nll
     from tcrd_spark.pipeline.lm import _docs
-    from tcrd_spark.pipeline.sq import _memo_cached
+    from tcrd_spark.session import memo
 
     docs = _docs(spark, sf_dir)
-    labeled = _memo_cached(
-        spark, (sf_dir, "ccnet-labeled"),
-        lambda: lang_nll(docs, "doc_id", "text"),
+    labeled = memo(
+        spark, "ccnet-labeled", sf_dir,
+        lambda: lang_nll(docs, "doc_id", "text").cache(),
     )
     buckets = ccnet_buckets(docs, "doc_id", "text", _labeled=labeled)
     return classifier_quality_gate(docs, buckets, "doc_id", "text")

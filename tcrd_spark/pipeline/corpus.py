@@ -417,7 +417,7 @@ def build_dedup_index(
     table_prefix: str,
     n: int = 3,
     n_buckets: int = 32,
-) -> None:
+) -> tuple[str, str, str]:
     """Persist the standing corpus's dedup probe assets as BUCKETED
     tables (the asset `incremental_near_dups` recomputes per call):
 
@@ -430,7 +430,8 @@ def build_dedup_index(
     buckets in place), so per-ingest cost is proportional to the
     batch, while the corpus-sized shuffle happened once, at build
     time. Same layout philosophy as build_ivf_index's cell_id
-    partitioning (pipeline/similarity.py).
+    partitioning (pipeline/similarity.py). Returns the three table
+    names.
     """
     from tcrd_spark.pipeline.dedup import hashed_shingles
     from tcrd_spark.sources.lake import write_bucketed
@@ -449,6 +450,7 @@ def build_dedup_index(
         n_buckets,
     )
     write_bucketed(sh, f"{table_prefix}_sets", "c_id", n_buckets)
+    return f"{table_prefix}_th", f"{table_prefix}_inv", f"{table_prefix}_sets"
 
 
 def incremental_near_dups_indexed(

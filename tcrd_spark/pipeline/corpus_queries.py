@@ -19,6 +19,7 @@ from tcrd_spark.pipeline.testdata_queries import (
     _LANG_SCORE,
     _TOKS,
 )
+from tcrd_spark.session import memo
 from tcrd_spark.sources.lake import load_table
 
 N_SHARDS = 8
@@ -57,27 +58,25 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_DEDUP_INDEX_CACHE: dict[str, str] = {}
-
-
 def q_dedup_incremental_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Same verdicts as dedup_incremental, but probing the PERSISTED
     bucketed shingle/hash index (build_dedup_index) — the build is the
-    one-off cost (once per process per sf_dir), every probe join's
-    exchange stays on the batch side."""
+    one-off cost (once per session per sf_dir), every probe join's
+    exchange stays on the batch side. The index tables are a session
+    memo entry, dropped when it is released."""
     import hashlib
     import os
 
     docs = load_table(spark, sf_dir, "documents")
     key = os.path.realpath(sf_dir)
-    prefix = _DEDUP_INDEX_CACHE.get(key)
-    if prefix is None:
-        tag = hashlib.md5(f"{key}:{os.getpid()}".encode()).hexdigest()[:12]
-        prefix = f"dedup_idx_{tag}"
-        corpus.build_dedup_index(
+    tag = hashlib.md5(f"{key}:{os.getpid()}".encode()).hexdigest()[:12]
+    prefix = f"dedup_idx_{tag}"
+    memo(
+        spark, "dedup-index", key,
+        lambda: corpus.build_dedup_index(
             docs.filter(~_batch_pred()), "doc_id", "text", prefix, n=3
-        )
-        _DEDUP_INDEX_CACHE[key] = prefix
+        ),
+    )
     return corpus.incremental_near_dups_indexed(
         docs.filter(_batch_pred()), prefix, "doc_id", "text", n=3, threshold=0.3
     )

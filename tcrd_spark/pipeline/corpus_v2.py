@@ -78,8 +78,8 @@ from tcrd_spark.pipeline.dsir import (
     gumbel_key,
 )
 from tcrd_spark.pipeline.semdedup import _EMB_DIM, semantic_dedup_reps
-from tcrd_spark.pipeline.sq import _memo_cached
 from tcrd_spark.pipeline.substring import _split_docs, excise_duplicate_spans
+from tcrd_spark.session import memo
 from tcrd_spark.sources.lake import load_table
 
 EXCISE_K, EXCISE_MIN_OCC = 8, 2
@@ -131,7 +131,7 @@ def _docs2(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    return _memo_cached(spark, (sf_dir, "v2-docs2"), build)
+    return memo(spark, "v2-docs2", sf_dir, lambda: build().cache())
 
 
 def corpus_pipeline_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -162,11 +162,11 @@ def corpus_pipeline_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     # trained on the survivors — self-contained, like the standalone
     # query trains on its corpus). labeled is memoized: the edge pass
     # and the label pass both read the full LM lineage.
-    labeled = _memo_cached(
-        spark, (sf_dir, "v2-labeled"),
+    labeled = memo(
+        spark, "v2-labeled", sf_dir,
         # cut for the same reason as _docs2: the LM train+score tree is
         # re-analyzed by both the edge pass and the label pass otherwise
-        lambda: _truncate(lang_nll(b, "doc_id", "text")),
+        lambda: _truncate(lang_nll(b, "doc_id", "text")).cache(),
     )
     buckets = ccnet_buckets(b, "doc_id", "text", _labeled=labeled)
     c = _truncate(b.join(

@@ -182,15 +182,15 @@ def _web_stages(spark: SparkSession, sf_dir: str):
     from tcrd_spark.operators.lineage import _truncate
     from tcrd_spark.pipeline import gopher
     from tcrd_spark.pipeline.ccnet import ccnet_buckets, lang_nll
-    from tcrd_spark.pipeline.sq import _memo_cached
+    from tcrd_spark.session import memo
 
     def build_w0():
         ex = q_html_extract(spark, sf_dir)
         return _truncate(
             ex.select("doc_id", F.col("extracted").alias("text"))
-        )
+        ).cache()
 
-    w0 = _memo_cached(spark, (sf_dir, "web-w0"), build_w0)
+    w0 = memo(spark, "web-w0", sf_dir, build_w0)
 
     def build_g():
         stats = gopher.gopher_stats(w0, "doc_id", "text")
@@ -209,14 +209,14 @@ def _web_stages(spark: SparkSession, sf_dir: str):
             w0.join(
                 stats.filter(keep).select("doc_id"), "doc_id", "semi"
             )
-        )
+        ).cache()
 
-    g = _memo_cached(spark, (sf_dir, "web-gopher"), build_g)
+    g = memo(spark, "web-gopher", sf_dir, build_g)
 
     def build_c():
-        labeled = _memo_cached(
-            spark, (sf_dir, "web-labeled"),
-            lambda: lang_nll(g, "doc_id", "text"),
+        labeled = memo(
+            spark, "web-labeled", sf_dir,
+            lambda: lang_nll(g, "doc_id", "text").cache(),
         )
         buck = ccnet_buckets(g, "doc_id", "text", _labeled=labeled)
         return _truncate(
@@ -225,9 +225,9 @@ def _web_stages(spark: SparkSession, sf_dir: str):
                 .select("doc_id"),
                 "doc_id", "semi",
             )
-        )
+        ).cache()
 
-    c = _memo_cached(spark, (sf_dir, "web-ccnet"), build_c)
+    c = memo(spark, "web-ccnet", sf_dir, build_c)
     return w0, g, c
 
 

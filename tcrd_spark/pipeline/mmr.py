@@ -13,9 +13,8 @@ scale path produces the candidate list with the ANN stack (IVF/SQ/PQ,
 bounded K), and everything here touches only K rows / K² pairwise
 sims. The greedy loop collects ONE row per step (the argmax), the
 same bounded-by-contract driver loop `pipeline/bpe.py` uses per merge;
-candidate relevance and the K×K sim matrix are cached DataFrames
-keyed per (applicationId, sf_dir) so repeated invocations reuse them
-(the sq.py memo idiom).
+candidate relevance and the K×K sim matrix are cached DataFrames in
+the session memo store, so repeated invocations reuse them.
 
 Cross-engine determinism: rel, pairwise sims, and mmr all round to 6
 with doc-id tie-breaks; the DuckDB oracle unrolls the k greedy steps
@@ -32,16 +31,21 @@ from tcrd_spark.pipeline.similarity import _pair_score, _with_norm
 LAMBDA = 0.7
 N_CAND = 30
 K_OUT = 10
-_MEMO: dict = {}
 
 
 def _cand_frames(spark: SparkSession, sf_dir: str):
-    """(rel, pairs): cached per (appId, sf_dir) — relevance of the
-    top-N_CAND candidates to query vector 0, and their pairwise sims."""
-    key = (spark.sparkContext.applicationId, sf_dir, "mmr")
-    got = _MEMO.get(key)
-    if got is not None:
-        return got
+    """(rel, pairs): relevance of the top-N_CAND candidates to query
+    vector 0, and their pairwise sims — cached per sf_dir in the
+    session memo store."""
+    from tcrd_spark.session import memo
+
+    rel, pairs = memo(
+        spark, "mmr", sf_dir, lambda: _build_cand_frames(spark, sf_dir)
+    )
+    return rel.select("c_id", "rel"), pairs
+
+
+def _build_cand_frames(spark: SparkSession, sf_dir: str):
     from tcrd_spark.pipeline.testdata_queries import EMB_DIM
     from tcrd_spark.sources.lake import load_table
 
@@ -81,9 +85,7 @@ def _cand_frames(spark: SparkSession, sf_dir: str):
         .select("a", "b", _pair_score("q_vec", "c_vec", EMB_DIM).alias("sim"))
         .cache()
     )
-    got = (rel.select("c_id", "rel"), pairs)
-    _MEMO[key] = got
-    return got
+    return rel, pairs
 
 
 def mmr_select(

@@ -116,12 +116,6 @@ def q_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     return hard_negatives(qs, corpus, 64, k=K, dup_threshold=DUP_THRESHOLD)
 
 
-# own index cache (NOT testdata_queries' — that module's closure stays
-# out of this one): build once per process per sf_dir, pid-tagged so
-# concurrent processes never race overwrite-writes against reads
-_HN_INDEX_CACHE: dict[str, str] = {}
-
-
 def q_hard_negatives_shortlist(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The same 5-anchor panel mined through the persisted-IVF
     shortlist (first-8 centroids, probe 2, shortlist 50): the scan is
@@ -133,6 +127,7 @@ def q_hard_negatives_shortlist(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from tcrd_spark.pipeline.similarity import build_ivf_index
+    from tcrd_spark.session import memo
     from tcrd_spark.sources.lake import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -142,13 +137,18 @@ def q_hard_negatives_shortlist(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroids = emb.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("cell_id"), F.col("embedding").alias("cell_vec")
     )
+    # own memo slot (NOT testdata_queries' — that module's closure
+    # stays out of this one): built once per sf_dir, pid-tagged so
+    # concurrent processes never race overwrite-writes against reads
     key = os.path.realpath(sf_dir)
-    path = _HN_INDEX_CACHE.get(key)
-    if path is None:
-        tag = hashlib.md5(f"hn:{key}:{os.getpid()}".encode()).hexdigest()[:12]
-        path = os.path.join(tempfile.gettempdir(), f"tcrd_hn_ivf_{tag}")
-        build_ivf_index(corpus, centroids, 64, path)
-        _HN_INDEX_CACHE[key] = path
+    tag = hashlib.md5(f"hn:{key}:{os.getpid()}".encode()).hexdigest()[:12]
+    path = memo(
+        spark, "hn-ivf-index", key,
+        lambda: build_ivf_index(
+            corpus, centroids, 64,
+            os.path.join(tempfile.gettempdir(), f"tcrd_hn_ivf_{tag}"),
+        ),
+    )
     qs = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
     )

@@ -43,6 +43,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from tcrd_spark.pipeline.dedup import dot, dot_sql
+from tcrd_spark.session import memo
 
 # m subspaces over the 64-dim synthetic embeddings (TESTDATA.md)
 _EMB_DIM = 64
@@ -401,13 +402,11 @@ def q_ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PQ ADC cosine top-10 for the standard 5-query panel —
     first-16-by-id codebooks (the oracle contract), full-corpus scan
     of the 8-byte codes."""
-    from tcrd_spark.pipeline.sq import _memo_cached
-
     _, corpus, qs = _panel(spark, sf_dir)
     cb_row = deterministic_codebooks(corpus, _EMB_DIM, _M, _KSUB)
-    coded = _memo_cached(
-        spark, (sf_dir, "pq"),
-        lambda: pq_encode(corpus, cb_row, _EMB_DIM, _M),
+    coded = memo(
+        spark, "pq", sf_dir,
+        lambda: pq_encode(corpus, cb_row, _EMB_DIM, _M).cache(),
     )
     return pq_topk(qs, coded, cb_row, _EMB_DIM, _M, k=10)
 
@@ -416,7 +415,6 @@ def q_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The composed Faiss IVF-PQ pipeline: first-8 cells (the ann_ivf
     contract), PQ codes in the inverted lists, probe-2 ADC scan."""
     from tcrd_spark.pipeline.similarity import assign_cells
-    from tcrd_spark.pipeline.sq import _memo_cached
 
     emb, corpus, qs = _panel(spark, sf_dir)
     cents = emb.filter(F.col("vec_id") < 8).select(
@@ -431,9 +429,9 @@ def q_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return pq_encode(
             assigned, cb_row, _EMB_DIM, _M, extra_cols=("cell_id",)
-        )
+        ).cache()
 
-    coded = _memo_cached(spark, (sf_dir, "ivfpq"), _build)
+    coded = memo(spark, "ivfpq", sf_dir, _build)
     return ivf_pq_topk(
         qs, coded, cb_row, cents, _EMB_DIM, _M, k=10, n_probe=2
     )
@@ -442,13 +440,11 @@ def q_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_ann_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ADC shortlist-50 + exact re-rank top-10 — the deployment
     composition (the exact pass touches 50 rows/query)."""
-    from tcrd_spark.pipeline.sq import _memo_cached
-
     _, corpus, qs = _panel(spark, sf_dir)
     cb_row = deterministic_codebooks(corpus, _EMB_DIM, _M, _KSUB)
-    coded = _memo_cached(
-        spark, (sf_dir, "pq"),
-        lambda: pq_encode(corpus, cb_row, _EMB_DIM, _M),
+    coded = memo(
+        spark, "pq", sf_dir,
+        lambda: pq_encode(corpus, cb_row, _EMB_DIM, _M).cache(),
     )
     return pq_rerank_topk(
         qs, coded, cb_row, corpus, _EMB_DIM, _M, k=10, shortlist=50

@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tcrd_spark.pipeline.dedup import dot
+from tcrd_spark.session import memo
 
 _EMB_DIM = 64
 
@@ -327,12 +328,10 @@ def _panel(spark: SparkSession, sf_dir: str):
 
 def _assigned_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The cell assignment both registered queries read — memoized per
-    (session, sf_dir) like the SQ/PQ code tables (one cached copy,
-    shared by the pair sides, the rep score, and repeated bench/sweep
-    invocations)."""
+    sf_dir like the SQ/PQ code tables (one cached copy, shared by the
+    pair sides, the rep score, and repeated bench/sweep invocations)."""
     from tcrd_spark.operators.lineage import _truncate
     from tcrd_spark.pipeline.similarity import assign_cells
-    from tcrd_spark.pipeline.sq import _memo_cached
 
     corpus, cents = _panel(spark, sf_dir)
     # lineage-cut the memoized assignment: .cache() does not bound
@@ -340,23 +339,19 @@ def _assigned_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     # products × 8 cells) was re-analyzed by every reader (pair sides,
     # rep score, both registered queries) — the cut makes each reader's
     # plan start from an opaque scan of the cached rows
-    return _memo_cached(
-        spark, (sf_dir, "semassign"),
-        lambda: _truncate(assign_cells(corpus, cents, _EMB_DIM)),
+    return memo(
+        spark, "semassign", sf_dir,
+        lambda: _truncate(assign_cells(corpus, cents, _EMB_DIM)).cache(),
     )
 
 
 def _assigned_count_cached(spark: SparkSession, sf_dir: str) -> int:
     """Row count of the memoized assignment — one cheap job over the
     cached cut, memoized alongside it; sizes the adaptive pair blocks."""
-    from tcrd_spark.pipeline.sq import _CODE_TABLES
-
-    key = (spark.sparkContext.applicationId, sf_dir, "semassign-n")
-    n = _CODE_TABLES.get(key)
-    if n is None:
-        n = _assigned_cached(spark, sf_dir).count()
-        _CODE_TABLES[key] = n
-    return n
+    return memo(
+        spark, "semassign-n", sf_dir,
+        lambda: _assigned_cached(spark, sf_dir).count(),
+    )
 
 
 def q_semantic_dedup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -461,14 +461,14 @@ def _probe_cells(
 
 def build_ivf_index(
     corpus: DataFrame, centroids: DataFrame, dim: int, path: str
-) -> None:
+) -> str:
     """Persist the IVF inverted lists as a cell_id-PARTITIONED parquet
     table — the real at-scale index layout (each cell is a partition
     directory; norms precomputed at build time). `ivf_topk` recomputes
     the assignment per search; a stored index makes a probe a
     partition-PRUNED scan of n_probe/n_cells of the data — at 10^9
     vectors the search never touches the unprobed 1 - n_probe/n_cells
-    of the corpus."""
+    of the corpus. Returns ``path``."""
     assigned = assign_cells(corpus, centroids, dim)
     (
         assigned.select("c_id", "c_vec", "c_vec_nrm", "cell_id")
@@ -476,6 +476,7 @@ def build_ivf_index(
         .partitionBy("cell_id")
         .parquet(path)
     )
+    return path
 
 
 def ivf_topk_indexed(

@@ -32,6 +32,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from tcrd_spark.session import memo
+
 # codes per dimension: 8-bit
 _LEVELS = 256
 # the synthetic embeddings table is 64-dim (TESTDATA.md)
@@ -178,24 +180,11 @@ def sq_topk(
 # ------------------------------------------------- registered queries
 
 # The cached SQ code tables stand in for the persisted index, so the
-# registered queries memoize them per (application, sf_dir, kind):
-# repeated invocations (bench min-of-3 reps, the threaded oracle
-# sweep) reuse ONE cached DataFrame instead of caching a fresh copy
-# per call and accumulating executor storage (ADVICE r5 #3). Bounded
-# by contract — one entry per sf_dir per session, like the persisted
-# index it models.
-_CODE_TABLES: dict[tuple, DataFrame] = {}
-
-
-def _memo_cached(spark: SparkSession, key: tuple, build) -> DataFrame:
-    full = (spark.sparkContext.applicationId,) + key
-    df = _CODE_TABLES.get(full)
-    if df is None:
-        df = build().cache()
-        _CODE_TABLES[full] = df
-    return df
-
-
+# registered queries memoize them in the session memo store (slot =
+# kind, key = sf_dir): repeated invocations (bench min-of-3 reps, the
+# threaded oracle sweep) reuse ONE cached DataFrame instead of caching
+# a fresh copy per call and accumulating executor storage (ADVICE r5
+# #3) — one entry per slot, like the persisted index it models.
 def q_ann_sq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SQ8 cosine top-10 for the standard 5-query panel (vec_id < 5),
     corpus = every embedding, quantized."""
@@ -209,8 +198,9 @@ def q_ann_sq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     qs = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
     )
-    deq = _memo_cached(
-        spark, (sf_dir, "sq"), lambda: sq_dequant_frame(corpus, _EMB_DIM)
+    deq = memo(
+        spark, "sq", sf_dir,
+        lambda: sq_dequant_frame(corpus, _EMB_DIM).cache(),
     )
     return brute_force_topk(qs, deq, _EMB_DIM, k=10)
 
@@ -248,7 +238,7 @@ def q_ann_ivfsq(spark: SparkSession, sf_dir: str) -> DataFrame:
     stats = quantize_stats(corpus, "c_vec", _EMB_DIM)
 
     # the SQ-coded inverted lists — the memoized cache() stands in for
-    # the persisted cell-partitioned code table (see _memo_cached)
+    # the persisted cell-partitioned code table (see q_ann_sq_topk)
     def _build_lists() -> DataFrame:
         return (
             assigned.crossJoin(F.broadcast(stats))
@@ -263,9 +253,10 @@ def q_ann_ivfsq(spark: SparkSession, sf_dir: str) -> DataFrame:
                     )
                 ),
             )
+            .cache()
         )
 
-    lists = _memo_cached(spark, (sf_dir, "ivfsq"), _build_lists)
+    lists = memo(spark, "ivfsq", sf_dir, _build_lists)
     probes = _probe_cells(qs, cents, _EMB_DIM, n_probe=2)
     w = Window.partitionBy("q_id").orderBy(F.desc("score"), F.asc("c_id"))
     return (

@@ -17,6 +17,7 @@ from tcrd_spark.functions.hashing import (
     sql_hash60,
 )
 from tcrd_spark.pipeline import dedup, similarity, text
+from tcrd_spark.session import memo
 from tcrd_spark.sources.lake import load_table
 
 EMB_DIM = 64
@@ -204,14 +205,12 @@ def q_kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("c_id", "cell_id")
 
 
-_IVF_INDEX_CACHE: dict[str, str] = {}
-
-
 def q_ann_ivf_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF search against the PERSISTED cell_id-partitioned index —
     same centroids/probes as ann_ivf, so identical results; the scan
     is partition-pruned to the probed cells. The index builds once per
-    process per sf_dir (the write is the build step, not the query)."""
+    session per sf_dir (the write is the build step, not the query) and
+    its directory is removed when the memo entry is released."""
     import hashlib
     import os
     import tempfile
@@ -224,16 +223,16 @@ def q_ann_ivf_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("cell_id"), F.col("embedding").alias("cell_vec")
     )
     key = os.path.realpath(sf_dir)
-    path = _IVF_INDEX_CACHE.get(key)
-    if path is None:
-        # pid in the tag: concurrent processes (bench + check) must not
-        # race overwrite-writes against each other's reads
-        tag = hashlib.md5(f"{key}:{os.getpid()}".encode()).hexdigest()[:12]
-        path = os.path.join(
-            tempfile.gettempdir(), f"tcrd_ivf_index_{tag}"
-        )
-        similarity.build_ivf_index(corpus, centroids, EMB_DIM, path)
-        _IVF_INDEX_CACHE[key] = path
+    # pid in the tag: concurrent processes (bench + check) must not
+    # race overwrite-writes against each other's reads
+    tag = hashlib.md5(f"{key}:{os.getpid()}".encode()).hexdigest()[:12]
+    path = memo(
+        spark, "ivf-index", key,
+        lambda: similarity.build_ivf_index(
+            corpus, centroids, EMB_DIM,
+            os.path.join(tempfile.gettempdir(), f"tcrd_ivf_index_{tag}"),
+        ),
+    )
     qs = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
     )

@@ -11,6 +11,8 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from tcrd_spark.session import clear
+
 _MODULES = []
 
 PRIORITY = (
@@ -344,42 +346,10 @@ def all_oracle_sql() -> dict[str, str]:
     return _collect()[1]
 
 
-def clear_session_memos(spark: SparkSession) -> None:
-    """Reset every in-process memo/cache a query family keeps for the
-    session (SQ/PQ code tables, IVF/dedup/HN index markers, kmeans
-    assignment, pagerank/triangle edge frames, MMR panel, the
-    corpus_v2 stage memos) and unpersist all cached data.
-
-    Bench-isolation hook (VERDICT r11 #8): memos are shared across
-    QUERIES (kmeans assignment ↔ semantic_dedup ↔ corpus_pipeline_v2),
-    so one query's min-of-3 can exclude work a sibling already paid
-    for. `SPARK_GRAFT_BENCH_ISOLATE=1` calls this between queries so
-    per-query seconds are attributable. Results are unaffected —
-    memos only ever cache intermediates derived from the inputs.
-    """
-    import importlib
-
-    for modname, attr in (
-        ("pipeline.sq", "_CODE_TABLES"),
-        ("pipeline.corpus_queries", "_DEDUP_INDEX_CACHE"),
-        ("pipeline.negatives", "_HN_INDEX_CACHE"),
-        ("pipeline.testdata_queries", "_IVF_INDEX_CACHE"),
-        ("pipeline.mmr", "_MEMO"),
-        ("operators.graph", "_PR_EDGE_MEMO"),
-        ("operators.triangles", "_TRI_EDGE_MEMO"),
-        ("operators.lineage", "_ROTATING"),
-    ):
-        try:
-            mod = importlib.import_module(f"tcrd_spark.{modname}")
-            getattr(mod, attr).clear()
-        except (ImportError, AttributeError):  # pragma: no cover
-            pass
-    # release every cached DataFrame and RDD (memoized frames above
-    # hold .cache()d plans / cut RDDs; clearing the dicts alone would
-    # leave their blocks pinned in executor storage)
-    spark.catalog.clearCache()
-    # SparkContext.getPersistentRDDs → scala Map[Int, RDD]; walk its
-    # values through py4j and unpersist each (non-blocking)
-    it = spark.sparkContext._jsc.sc().getPersistentRDDs().values().iterator()
-    while it.hasNext():
-        it.next().unpersist(False)
+# Bench-isolation hook (VERDICT r11 #8): memos are shared across
+# QUERIES (kmeans assignment ↔ semantic_dedup ↔ corpus_pipeline_v2),
+# so one query's min-of-3 can exclude work a sibling already paid for;
+# `SPARK_GRAFT_BENCH_ISOLATE=1` resets between queries so per-query
+# seconds are attributable. It IS the memo store's `clear`: every memo
+# lives in that store, so no family's state can be missed by a reset.
+clear_session_memos = clear

@@ -5,13 +5,20 @@ setting is the one you'd want on a 1000-executor cluster too: AQE for
 runtime re-planning + skew-join splitting, Arrow for the few pandas_udf
 paths, and a broadcast threshold that lets every dimension table
 (region/nation/supplier/type-dictionaries) broadcast instead of shuffle.
+
+Also home of the session memo store (`memo` / `clear`): the one
+mechanism by which query families reuse intermediates across queries.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
+import threading
 
-from pyspark.sql import SparkSession
+from py4j.java_gateway import JavaObject
+from py4j.protocol import Py4JError
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(app_name: str = "tcrd_spark", master: str | None = None) -> SparkSession:
@@ -48,3 +55,73 @@ def get_spark(app_name: str = "tcrd_spark", master: str | None = None) -> SparkS
     if dp:
         builder = builder.config("spark.default.parallelism", dp)
     return builder.getOrCreate()
+
+
+# ------------------------------------------------------- session memo store
+
+# The one place a query family keeps intermediates across queries of a
+# session (code tables, edge frames, lineage cuts, persisted indexes,
+# fixture lakes): slot -> ((applicationId, key), value). At most ONE
+# live entry per slot: a new key releases its predecessor, so storage
+# stays bounded however many sf_dirs or applications a process sees.
+_SESSION_MEMO: dict[str, tuple[tuple, object]] = {}
+_LOCKS: dict[str, threading.Lock] = {}
+
+
+def _release(spark: SparkSession, value) -> None:
+    """Free what a memo entry holds: unpersist a cached DataFrame or a
+    cut RDD handle, rmtree a directory (absolute path), DROP TABLE a
+    warehouse table (any other string); tuples release each member.
+    Releasing is a storage decision, never a correctness one: a lazy
+    frame still referencing a released cache recomputes on demand."""
+    if isinstance(value, tuple):
+        for v in value:
+            _release(spark, v)
+    elif isinstance(value, str):
+        if os.path.isabs(value):
+            shutil.rmtree(value, ignore_errors=True)
+        else:
+            spark.sql(f"DROP TABLE IF EXISTS {value}")
+    elif isinstance(value, JavaObject) or (
+        isinstance(value, DataFrame) and value.is_cached
+    ):
+        try:
+            value.unpersist()
+        except Py4JError:  # handle from a stopped application
+            pass
+
+
+def memo(spark: SparkSession, slot: str, key, build):
+    """The slot's value for ``key`` in this application: the live entry
+    when its key matches (``==``), else ``build()`` after releasing the
+    predecessor. Builds run under a per-slot lock — the oracle sweep
+    calls queries from a thread pool, and one build per key is the
+    point."""
+    full = (spark.sparkContext.applicationId, key)
+    with _LOCKS.setdefault(slot, threading.Lock()):
+        held = _SESSION_MEMO.get(slot)
+        if held is not None:
+            if held[0] == full:
+                return held[1]
+            del _SESSION_MEMO[slot]
+            _release(spark, held[1])
+        value = build()
+        _SESSION_MEMO[slot] = (full, value)
+        return value
+
+
+def clear(spark: SparkSession) -> None:
+    """Release every memo entry, then every cached DataFrame and
+    persistent RDD of the session (cut RDDs a caller never handed to
+    the store included)."""
+    for slot in list(_SESSION_MEMO):
+        with _LOCKS.setdefault(slot, threading.Lock()):
+            held = _SESSION_MEMO.pop(slot, None)
+            if held is not None:
+                _release(spark, held[1])
+    spark.catalog.clearCache()
+    # SparkContext.getPersistentRDDs → scala Map[Int, RDD]; walk its
+    # values through py4j and unpersist each (non-blocking)
+    it = spark.sparkContext._jsc.sc().getPersistentRDDs().values().iterator()
+    while it.hasNext():
+        it.next().unpersist(False)

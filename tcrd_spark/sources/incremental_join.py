@@ -39,7 +39,6 @@ import hashlib
 import os
 import shutil
 import tempfile
-import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -127,10 +126,6 @@ def incremental_join_agg(
 
 # ---------------------------------------------------------- fixture
 
-_LAKE_LOCK = threading.Lock()
-_LAKE_CACHE: dict[str, tuple[str, str]] = {}
-
-
 def _join_lakes(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """Deterministic two-version fact (orders) + dim (customer) lakes.
 
@@ -139,20 +134,16 @@ def _join_lakes(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     o_custkey carried so the join exists.
     dim: v1 = all customers; v2 = MERGE moving keys %5 == 0 to nation
     (24 - nation) — a GROUP MOVE, partition col (mktsegment) stable.
-    Built once per process per sf_dir under a lock (the oracle sweep
-    runs queries from a thread pool)."""
+    Built once per session per sf_dir as a session memo entry (its
+    slot lock serializes the oracle sweep's thread pool; releasing the
+    entry removes the lake)."""
+    from tcrd_spark.session import memo
     from tcrd_spark.sources.lake import load_table
-    from tcrd_spark.sources.snapshots import (
-        _manifest_dir, create_table, merge_version,
-    )
+    from tcrd_spark.sources.snapshots import create_table, merge_version
 
     key = os.path.realpath(sf_dir)
-    with _LAKE_LOCK:
-        paths = _LAKE_CACHE.get(key)
-        if paths is not None and all(
-            os.path.isdir(_manifest_dir(p)) for p in paths
-        ):
-            return paths
+
+    def build() -> str:
         tag = hashlib.md5(f"{key}:{os.getpid()}".encode()).hexdigest()[:12]
         root = os.path.join(tempfile.gettempdir(), f"tcrd_join_lake_{tag}")
         if os.path.exists(root):
@@ -184,9 +175,10 @@ def _join_lakes(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
             "c_nationkey", (F.lit(24) - F.col("c_nationkey")).cast("int")
         )
         merge_version(spark, dim_path, dsrc, ["c_custkey"])
+        return root
 
-        _LAKE_CACHE[key] = (fact_path, dim_path)
-        return fact_path, dim_path
+    root = memo(spark, "join-lakes", key, build)
+    return os.path.join(root, "orders"), os.path.join(root, "customer")
 
 
 # ------------------------------------------------- registered query

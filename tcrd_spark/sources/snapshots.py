@@ -256,6 +256,7 @@ def _file_stats(path: str) -> dict:
     JSON-portable primitives (int/float/str/bool) are recorded; a
     column without usable footer stats is simply absent, which the
     pruner treats as \"must scan\" (always safe)."""
+    import pyarrow as pa
     import pyarrow.parquet as pq
 
     md = pq.ParquetFile(path).metadata
@@ -269,11 +270,17 @@ def _file_stats(path: str) -> dict:
             if name in bad:
                 continue
             st = c.statistics
-            if (
-                st is None
-                or not st.has_min_max
-                or not isinstance(st.min, (int, float, str, bool))
-            ):
+            try:
+                usable = (
+                    st is not None
+                    and st.has_min_max
+                    and isinstance(st.min, (int, float, str, bool))
+                )
+            except pa.ArrowNotImplementedError:
+                # no min/max extractor for the column's logical type
+                # (pyarrow 16: a decimal stored as INT64)
+                usable = False
+            if not usable:
                 stats.pop(name, None)
                 bad.add(name)
                 continue
@@ -1922,60 +1929,59 @@ def vacuum(table_dir: str, keep_versions: int = 2) -> list[str]:
 
 # ------------------------------------------------- registered query
 
-_SNAP_LAKE_CACHE: dict[str, str] = {}
-_SNAP_LAKE_LOCK = __import__("threading").Lock()
+def _orders_lake(spark: SparkSession, sf_dir: str, name: str, commit) -> str:
+    """An orders lake for the registered lake queries: v1 = orders
+    with key % 7 != 0, then ``commit(path, orders)`` writes the later
+    versions. Built once per session per sf_dir (the build is the
+    commit history, not the query) as a session memo entry: its slot
+    lock serializes the oracle sweep's thread pool — two registered
+    queries share each lake, and unsynchronized both threads would
+    build (and rmtree) the same path — and releasing the entry
+    removes the lake."""
+    import hashlib
+    import tempfile
+
+    from tcrd_spark.session import memo
+    from tcrd_spark.sources.lake import load_table
+
+    key = os.path.realpath(sf_dir)
+
+    def build() -> str:
+        tag = hashlib.md5(f"{name}:{key}:{os.getpid()}".encode()).hexdigest()
+        root = os.path.join(tempfile.gettempdir(), f"tcrd_{name}_{tag[:12]}")
+        shutil.rmtree(root, ignore_errors=True)
+        path = os.path.join(root, "orders")
+        orders = load_table(spark, sf_dir, "orders").select(
+            "o_orderkey", "o_orderstatus", "o_totalprice", "o_orderpriority",
+        )
+        create_table(
+            orders.filter(F.col("o_orderkey") % 7 != 0),
+            path,
+            "o_orderpriority",
+        )
+        commit(path, orders)
+        return root
+
+    return os.path.join(memo(spark, name, key, build), "orders")
 
 
 def _changes_lake(spark: SparkSession, sf_dir: str) -> str:
     """Deterministic two-version orders lake for the CDC query: v1 =
     orders with key % 7 != 0; v2 = COW MERGE of a source batch (key %
-    3 == 0, totalprice +100, matched 'F'-status rows deleted).
-    Built once per process per sf_dir (the build is the commit
-    history, not the query). Serialized under a lock: the oracle
-    sweep runs queries from a thread pool, and two registered queries
-    share this lake — unsynchronized, both threads would build (and
-    rmtree) the same path concurrently."""
-    import hashlib
-    import tempfile
+    3 == 0, totalprice +100, matched 'F'-status rows deleted)."""
 
-    key = os.path.realpath(sf_dir)
-    with _SNAP_LAKE_LOCK:
-        path = _SNAP_LAKE_CACHE.get(key)
-        if path is not None and not versions(path):
-            # externally wiped tmp dir — rebuild, don't serve a ghost
-            path = None
-        if path is None:
-            from tcrd_spark.sources.lake import load_table
+    def commit(path: str, orders: DataFrame) -> None:
+        # +100.0 not ×1.1: an IEEE-exact double op, so Spark and the
+        # DuckDB oracle agree bit-for-bit with no round-half-tie risk
+        src = orders.filter(F.col("o_orderkey") % 3 == 0).withColumn(
+            "o_totalprice", F.col("o_totalprice") + 100.0
+        )
+        merge_version(
+            spark, path, src, ["o_orderkey"],
+            delete_condition="s.o_orderstatus = 'F'",
+        )
 
-            tag = hashlib.md5(
-                f"{key}:{os.getpid()}".encode()
-            ).hexdigest()[:12]
-            path = os.path.join(
-                tempfile.gettempdir(), f"tcrd_snap_lake_{tag}", "orders"
-            )
-            if os.path.exists(path):
-                shutil.rmtree(path)
-            orders = load_table(spark, sf_dir, "orders").select(
-                "o_orderkey", "o_orderstatus", "o_totalprice",
-                "o_orderpriority",
-            )
-            create_table(
-                orders.filter(F.col("o_orderkey") % 7 != 0),
-                path,
-                "o_orderpriority",
-            )
-            # +100.0 not ×1.1: an IEEE-exact double op, so Spark and
-            # the DuckDB oracle agree bit-for-bit with no
-            # round-half-tie risk
-            src = orders.filter(F.col("o_orderkey") % 3 == 0).withColumn(
-                "o_totalprice", F.col("o_totalprice") + 100.0
-            )
-            merge_version(
-                spark, path, src, ["o_orderkey"],
-                delete_condition="s.o_orderstatus = 'F'",
-            )
-            _SNAP_LAKE_CACHE[key] = path
-        return path
+    return _orders_lake(spark, sf_dir, "snap_lake", commit)
 
 
 def q_snapshot_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2020,9 +2026,6 @@ def q_lake_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     return h.join(nrows, "version").join(nparts, "version")
 
 
-_DV_LAKE_CACHE: dict[str, str] = {}
-
-
 def _dv_lake(spark: SparkSession, sf_dir: str) -> str:
     """Deterministic five-version orders lake for the deletion-
     vector queries: v1 = orders with key % 7 != 0; v2 = dv delete of
@@ -2031,58 +2034,30 @@ def _dv_lake(spark: SparkSession, sf_dir: str) -> str:
     no rounding ambiguity); v5 = MOR MERGE of the key % 13 = 0 slice
     of the BASE table (totalprice + 50.0) with delete_condition
     status='F' — matched rows update-or-die, source-only keys
-    (including previously deleted ones) insert. Same
-    build-once-per-process discipline (and lock) as
-    `_changes_lake`."""
-    import hashlib
-    import tempfile
+    (including previously deleted ones) insert."""
 
-    key = os.path.realpath(sf_dir)
-    with _SNAP_LAKE_LOCK:
-        path = _DV_LAKE_CACHE.get(key)
-        if path is not None and not versions(path):
-            path = None
-        if path is None:
-            from tcrd_spark.sources.lake import load_table
+    def commit(path: str, orders: DataFrame) -> None:
+        delete_version(
+            spark, path,
+            "o_orderkey % 5 = 0 AND o_orderstatus = 'F'",
+            mode="dv",
+        )
+        delete_version(spark, path, "o_orderkey % 11 = 0", mode="dv")
+        update_version(
+            spark, path, "o_orderkey % 3 = 0",
+            {"o_totalprice": "o_totalprice + 100.0"},
+        )
+        merge_version(
+            spark, path,
+            orders.filter(F.col("o_orderkey") % 13 == 0).withColumn(
+                "o_totalprice", F.col("o_totalprice") + 50.0
+            ),
+            ["o_orderkey"],
+            delete_condition="s.o_orderstatus = 'F'",
+            granularity="dv",
+        )
 
-            tag = hashlib.md5(
-                f"dv:{key}:{os.getpid()}".encode()
-            ).hexdigest()[:12]
-            path = os.path.join(
-                tempfile.gettempdir(), f"tcrd_dv_lake_{tag}", "orders"
-            )
-            shutil.rmtree(os.path.dirname(path), ignore_errors=True)
-            orders = load_table(spark, sf_dir, "orders").select(
-                "o_orderkey", "o_orderstatus", "o_totalprice",
-                "o_orderpriority",
-            )
-            create_table(
-                orders.filter(F.col("o_orderkey") % 7 != 0),
-                path,
-                "o_orderpriority",
-            )
-            delete_version(
-                spark, path,
-                "o_orderkey % 5 = 0 AND o_orderstatus = 'F'",
-                mode="dv",
-            )
-            delete_version(spark, path, "o_orderkey % 11 = 0", mode="dv")
-            update_version(
-                spark, path, "o_orderkey % 3 = 0",
-                {"o_totalprice": "o_totalprice + 100.0"},
-            )
-            merge_version(
-                spark, path,
-                orders.filter(F.col("o_orderkey") % 13 == 0)
-                .withColumn(
-                    "o_totalprice", F.col("o_totalprice") + 50.0
-                ),
-                ["o_orderkey"],
-                delete_condition="s.o_orderstatus = 'F'",
-                granularity="dv",
-            )
-            _DV_LAKE_CACHE[key] = path
-        return path
+    return _orders_lake(spark, sf_dir, "dv_lake", commit)
 
 
 def q_dv_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:

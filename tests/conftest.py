@@ -21,6 +21,11 @@ def spark():
 
     s = get_spark("tests")
     yield s
+    # release the session memo store: index tables and temp-dir
+    # indexes/lakes would otherwise outlive the run
+    from tcrd_spark.session import clear
+
+    clear(s)
 
 
 @pytest.fixture(scope="session")

@@ -30,8 +30,8 @@ def test_jaccard_cache_storage_bounded_across_invocations(spark):
     """r12: repeated pair-builds must not accumulate one cached shingle
     frame per invocation — _cache_rotating releases the predecessor
     (the DataFrame twin of the r11 videodup rotating-cut discipline)."""
-    from tcrd_spark.operators.lineage import _DF_ROTATING
     from tcrd_spark.pipeline.dedup import ngram_jaccard_pairs
+    from tcrd_spark.session import _SESSION_MEMO
 
     def n_persistent():
         return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
@@ -41,10 +41,20 @@ def test_jaccard_cache_storage_bounded_across_invocations(spark):
 
     ngram_jaccard_pairs(docs, "doc_id", "text", n=3, threshold=0.3).collect()
     base = n_persistent()
-    key = (spark.sparkContext.applicationId, "jaccard-sh")
-    assert key in _DF_ROTATING
+    app = spark.sparkContext.applicationId
+    assert _SESSION_MEMO["jaccard-sh"][0][0] == app
     for _ in range(3):
         ngram_jaccard_pairs(docs, "doc_id", "text", n=3,
                             threshold=0.3).collect()
     # the slots rotate: persistent count does not grow per call
     assert n_persistent() <= base
+    # a different plan in the slot releases the predecessor's cache;
+    # the same plan again (sameResult) reuses it
+    prev = _SESSION_MEMO["jaccard-sh"][1]
+    assert prev.is_cached
+    other = spark.createDataFrame(rows[:5], "doc_id long, text string")
+    ngram_jaccard_pairs(other, "doc_id", "text", n=3, threshold=0.3).collect()
+    assert not prev.is_cached
+    held = _SESSION_MEMO["jaccard-sh"][1]
+    ngram_jaccard_pairs(other, "doc_id", "text", n=3, threshold=0.3).collect()
+    assert _SESSION_MEMO["jaccard-sh"][1] is held and held.is_cached

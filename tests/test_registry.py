@@ -356,22 +356,23 @@ def test_past_cap_greens_postdate_code_changes():
 
 def test_clear_session_memos_resets_caches(spark):
     """SPARK_GRAFT_BENCH_ISOLATE support (VERDICT r11 #5/#8): the reset
-    hook empties every query-family memo and unpersists cached data so
+    hook empties the session memo store and unpersists cached data so
     per-query bench numbers are attributable."""
     from pyspark.sql import functions as F
 
-    from tcrd_spark.pipeline.sq import _CODE_TABLES, _memo_cached
     from tcrd_spark.registry import clear_session_memos
+    from tcrd_spark.session import _SESSION_MEMO, memo
 
-    df = _memo_cached(
-        spark, ("isolate-test",), lambda: spark.range(10).select(
+    df = memo(
+        spark, "isolate-test", None, lambda: spark.range(10).select(
             F.col("id"), (F.col("id") * 2).alias("v")
-        )
+        ).cache()
     )
     assert df.count() == 10
-    assert _CODE_TABLES
+    assert "isolate-test" in _SESSION_MEMO
     clear_session_memos(spark)
-    assert not _CODE_TABLES
+    assert not _SESSION_MEMO
+    assert not df.is_cached
     n_persistent = (
         spark.sparkContext._jsc.sc().getPersistentRDDs().size()
     )

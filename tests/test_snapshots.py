@@ -426,6 +426,27 @@ def test_pruned_read_empty_range_returns_no_rows(spark, sf_dir, tmp_path):
     assert df.count() == 0
 
 
+def test_decimal_column_commits_without_zone_map(spark, tmp_path):
+    """Spark stores decimal(<=18) as INT64, whose footer min/max pyarrow
+    cannot extract: the column is left out of the zone maps (must
+    scan) instead of failing the commit, and a filtered read returns
+    exactly the filtered rows."""
+    from decimal import Decimal
+
+    table = str(tmp_path / "t")
+    rows = [(i, i % 3, Decimal(i * 7919 % 10007) / 16) for i in range(60)]
+    df = spark.createDataFrame(
+        rows, "id long, part int, amount decimal(12,4)"
+    )
+    assert snap.create_table(df, table, "part") == 1
+    m = snap._read_manifest(table, 1)
+    assert all("amount" not in s and "id" in s for s in m["stats"].values())
+    cut = Decimal(300)
+    got = _rows(snap.read_version(spark, table, 1).where(F.col("amount") > cut))
+    assert got == sorted((i, p, a) for i, p, a in rows if a > cut)
+    assert got
+
+
 # ----------------------------------------------- schema evolution
 
 

@@ -833,38 +833,42 @@ def test_streaming_substring_dedup_matches_batch(
     batch = docs.filter(F.col("doc_id") % 5 == 0).select("doc_id", "text")
     corpus = docs.filter(F.col("doc_id") % 5 != 0)
     prefix = f"gram_idx_{uuid.uuid4().hex[:8]}"
-    build_gram_index(corpus, "doc_id", "text", prefix, k=8)
-
-    rows = [r.asDict() for r in batch.collect()]
-    third = max(1, len(rows) // 3)
-    for i in range(0, len(rows), third):
-        _write_batch(src, rows[i : i + third], f"chunk_{i:04d}")
-    schema = StructType(
-        [StructField("doc_id", LongType()), StructField("text", StringType())]
-    )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .json(src)
-    )
-    out_path = str(tmp_path / "spans")
-    q = streaming_substring_dedup(stream, prefix, out_path, ckpt)
     try:
-        q.processAllAvailable()
+        build_gram_index(corpus, "doc_id", "text", prefix, k=8)
+
+        rows = [r.asDict() for r in batch.collect()]
+        third = max(1, len(rows) // 3)
+        for i in range(0, len(rows), third):
+            _write_batch(src, rows[i : i + third], f"chunk_{i:04d}")
+        schema = StructType([
+            StructField("doc_id", LongType()),
+            StructField("text", StringType()),
+        ])
+        stream = (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1)
+            .json(src)
+        )
+        out_path = str(tmp_path / "spans")
+        q = streaming_substring_dedup(stream, prefix, out_path, ckpt)
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+        got = {
+            (r["doc_id"], r["span_start"], r["span_end"], r["span_len"])
+            for r in spark.read.parquet(out_path).collect()
+        }
+        want = {
+            tuple(r)
+            for r in incremental_duplicate_spans(
+                batch, corpus, "doc_id", "text", k=8
+            ).collect()
+        }
+        assert got == want
+        assert len(got) > 0
     finally:
-        q.stop()
-    got = {
-        (r["doc_id"], r["span_start"], r["span_end"], r["span_len"])
-        for r in spark.read.parquet(out_path).collect()
-    }
-    want = {
-        tuple(r)
-        for r in incremental_duplicate_spans(
-            batch, corpus, "doc_id", "text", k=8
-        ).collect()
-    }
-    assert got == want
-    assert len(got) > 0
+        spark.sql(f"DROP TABLE IF EXISTS {prefix}_grams")
 
 
 def test_streaming_incremental_dedup_replayed_batch_idempotent(

@@ -130,19 +130,22 @@ def test_incremental_indexed_equals_plain(spark, sf_dir):
     batch = docs.filter(F.col("doc_id") % 5 == 0)
     corpus = docs.filter(F.col("doc_id") % 5 != 0)
     prefix = f"gram_idx_{uuid.uuid4().hex[:8]}"
-    build_gram_index(corpus, "doc_id", "text", prefix, k=8)
-    plain = {
-        tuple(r) for r in incremental_duplicate_spans(
-            batch, corpus, "doc_id", "text", k=8
-        ).collect()
-    }
-    indexed = {
-        tuple(r) for r in incremental_duplicate_spans_indexed(
-            batch, prefix, "doc_id", "text", k=8
-        ).collect()
-    }
-    assert indexed == plain
-    assert len(plain) > 0
+    try:
+        build_gram_index(corpus, "doc_id", "text", prefix, k=8)
+        plain = {
+            tuple(r) for r in incremental_duplicate_spans(
+                batch, corpus, "doc_id", "text", k=8
+            ).collect()
+        }
+        indexed = {
+            tuple(r) for r in incremental_duplicate_spans_indexed(
+                batch, prefix, "doc_id", "text", k=8
+            ).collect()
+        }
+        assert indexed == plain
+        assert len(plain) > 0
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {prefix}_grams")
 
 
 def test_substring_plan_shuffles_hashes_not_text(spark, sf_dir):

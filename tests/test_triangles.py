@@ -45,18 +45,19 @@ def test_orientation_is_acyclic_by_degree(spark):
 
 
 def test_tri_edge_memo_evicts_other_keys(spark, sf_dir):
-    """r7 ADVICE: the oriented-edge memo keeps at most the current
-    (applicationId, sf_dir) entry — dead apps' and other sf_dirs'
-    frames are unpersisted, not pinned for the session lifetime."""
+    """r7 ADVICE: the oriented-edge memo slot keeps at most the current
+    (applicationId, sf_dir) entry — a dead app's or another sf_dir's
+    frame is unpersisted, not pinned for the session lifetime."""
     from tcrd_spark.operators import triangles as tri
+    from tcrd_spark.session import _SESSION_MEMO
 
     tri.q_triangle_counts(spark, sf_dir)
     key = (spark.sparkContext.applicationId, sf_dir)
-    assert set(tri._TRI_EDGE_MEMO) == {key}
-    # plant a foreign entry (dead app) and an alternate sf_dir entry
-    ghost = spark.createDataFrame([(1,)], "x long").cache()
-    tri._TRI_EDGE_MEMO[("dead-app", sf_dir)] = ghost
-    tri._TRI_EDGE_MEMO[(key[0], "/elsewhere")] = ghost
-    tri.q_triangle_counts(spark, sf_dir)
-    assert set(tri._TRI_EDGE_MEMO) == {key}
-    assert not ghost.is_cached
+    assert _SESSION_MEMO["triangle-edges"][0] == key
+    # plant a foreign entry (dead app), then an alternate sf_dir entry
+    for planted in (("dead-app", sf_dir), (key[0], "/elsewhere")):
+        ghost = spark.createDataFrame([(1,)], "x long").cache()
+        _SESSION_MEMO["triangle-edges"] = (planted, ghost)
+        tri.q_triangle_counts(spark, sf_dir)
+        assert _SESSION_MEMO["triangle-edges"][0] == key
+        assert not ghost.is_cached

@@ -223,7 +223,7 @@ def test_image_hot_band_cap(spark):
 def test_fp_cut_storage_bounded_across_invocations(spark):
     # ADVICE r11: repeated pair-builds must not accumulate one cached
     # RDD per invocation — the rotating slot releases the predecessor
-    from tcrd_spark.operators.lineage import _ROTATING
+    from tcrd_spark.session import _SESSION_MEMO
 
     def n_persistent():
         return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
@@ -234,8 +234,8 @@ def test_fp_cut_storage_bounded_across_invocations(spark):
 
     videodup.video_near_dup_pairs(fp, "doc_id").collect()
     base = n_persistent()
-    key = (spark.sparkContext.applicationId, "videodup-fp")
-    assert key in _ROTATING
+    app = spark.sparkContext.applicationId
+    assert _SESSION_MEMO["videodup-fp"][0][0] == app
     for _ in range(3):
         videodup.video_near_dup_pairs(fp, "doc_id").collect()
     # the slot rotates: persistent-RDD count does not grow per call

@@ -90,7 +90,7 @@ def main():
     only = args[1:] if args and os.path.isdir(args[0]) else args
 
     import __spark_entry__ as e
-    from tcrd_spark.session import get_spark
+    from tcrd_spark.session import clear, get_spark
 
     spark = get_spark("check")
     con = duckdb.connect()
@@ -139,6 +139,8 @@ def main():
         else:
             print(f"PASS {name}: rows={len(spark_rows)} [{time.time()-t0:.1f}s]")
             n_pass += 1
+    # drop the index tables and temp-dir indexes/lakes the run built
+    clear(spark)
     print(f"\n{n_pass} pass, {n_weak} weak (rows-only), {n_fail} fail")
     sys.exit(1 if n_fail else 0)
 
