@@ -46,7 +46,7 @@ EXCLUDE = {
 
 # Kept for ordering: the long-standing headline queries run first so
 # round-over-round diffs line up; every other registered query follows
-# in registry (PRIORITY) order via main().
+# in registry order via main().
 HEADLINE = [
     "pricing_summary",
     "shipping_priority",

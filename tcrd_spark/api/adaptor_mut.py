@@ -20,6 +20,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from tcrd_spark.schema.tables import (
+    DATA_TYPES,
+    FAM_VALUES,
+    QUAL_VALUES,
+    TABLE_SCHEMAS,
+    TDL_VALUES,
+    validate_enum,
+)
+
 Lake = dict[str, DataFrame]
 
 
@@ -213,28 +222,14 @@ def ins_tdl_update_log(lake: Lake, rows: DataFrame) -> DataFrame:
 
 # enum-typed columns the reference's MySQL schema CHECKs at insert;
 # ins_rows applies the same domains loader-side
-_ENUM_COLS: dict[tuple[str, str], tuple[str, ...]] = {}
-
-
-def _enum_cols():
-    global _ENUM_COLS
-    if not _ENUM_COLS:
-        from tcrd_spark.schema.tables import (
-            DATA_TYPES,
-            FAM_VALUES,
-            QUAL_VALUES,
-            TDL_VALUES,
-        )
-
-        _ENUM_COLS = {
-            ("target", "tdl"): TDL_VALUES,
-            ("target", "fam"): FAM_VALUES,
-            ("expression", "qual_value"): QUAL_VALUES,
-            ("info_type", "data_type"): DATA_TYPES,
-            ("expression_type", "data_type"): DATA_TYPES,
-            ("kegg_nearest_tclin", "direction"): ("upstream", "downstream"),
-        }
-    return _ENUM_COLS
+_ENUM_COLS: dict[tuple[str, str], tuple[str, ...]] = {
+    ("target", "tdl"): TDL_VALUES,
+    ("target", "fam"): FAM_VALUES,
+    ("expression", "qual_value"): QUAL_VALUES,
+    ("info_type", "data_type"): DATA_TYPES,
+    ("expression_type", "data_type"): DATA_TYPES,
+    ("kegg_nearest_tclin", "direction"): ("upstream", "downstream"),
+}
 
 
 def ins_rows(lake: Lake, table: str, rows: DataFrame) -> DataFrame:
@@ -247,8 +242,6 @@ def ins_rows(lake: Lake, table: str, rows: DataFrame) -> DataFrame:
     and appends in one plan. Column set may be a subset of the schema
     (nullable columns fill with NULL), matching the reference's
     optional-param handling."""
-    from tcrd_spark.schema.tables import TABLE_SCHEMAS, validate_enum
-
     if table not in TABLE_SCHEMAS:
         raise ValueError(f"ins_rows: unknown table {table!r}")
     schema = TABLE_SCHEMAS[table]
@@ -267,7 +260,7 @@ def ins_rows(lake: Lake, table: str, rows: DataFrame) -> DataFrame:
         # table is worse
         raise ValueError(f"ins_rows({table}): unknown columns: {unknown}")
     out = rows
-    for (tbl, col), domain in _enum_cols().items():
+    for (tbl, col), domain in _ENUM_COLS.items():
         if tbl == table and col in rows.columns:
             out = validate_enum(out, col, domain)
     return lake[table].unionByName(out, allowMissingColumns=True)

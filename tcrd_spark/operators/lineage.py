@@ -2,9 +2,10 @@
 
 Deliberately a LEAF module (imports nothing from tcrd_spark but the
 leaf `session`): corpus connected-components, BPE training, and graph
-BFS all need the cut, and an import edge through graph.py previously
-made graph churn stale the whole corpus family under the registry's
-closure-based rotation invariant (tests/test_registry.py).
+BFS all need the cut, and the pytest oracle/plan sweeps key each
+query's cached PASS on its import closure (tests/sweep_cache.py) — an
+import edge through graph.py would put graph.py in every corpus
+query's closure, so any graph edit would invalidate their cached PASSes.
 """
 
 from __future__ import annotations

@@ -14,8 +14,8 @@ Result caching (VERDICT r6 #8 — the sweep re-ran 145 DuckDB twins per
 pytest invocation, ~14 min of suite wall and growing every round): a
 query whose PASS is recorded under an unchanged content key skips
 re-execution. The key is a sha256 over (every file in the query's
-transitive tcrd_spark import closure — the registry rotation's own
-AST resolver, on BYTES, so uncommitted edits invalidate; the oracle
+transitive tcrd_spark import closure — sweep_cache's AST resolver,
+on BYTES, so uncommitted edits invalidate; the oracle
 SQL; the compare harness; the testdata parquet stats; engine
 versions). A fresh clone has no cache file, so an independent run —
 the judge's — always executes the full sweep; only PASSES are cached,

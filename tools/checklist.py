@@ -3,8 +3,8 @@ from git (VERDICT r11 #9: the hand-maintained r11 table mislabeled
 lttb_downsample "optimized" with no commit behind it).
 
 For every registered query: status = "touched" iff any file in the
-query's import closure (tests/test_registry.py::_closure — the same
-rule the adjudication-staleness invariants use) was changed by a
+query's import closure (tests/sweep_cache.py::closure — the same
+closure that keys the oracle/plan sweep PASS cache) was changed by a
 commit in the given range; the changing files are listed. Everything
 else is "untouched". "Examined, left alone" judgments live in the
 round's OPTIMIZATION log — a measurement is not derivable from git,
@@ -21,7 +21,6 @@ Usage: python tools/checklist.py <base_rev> [head_rev] [--exclude f1,f2]
 
 from __future__ import annotations
 
-import inspect
 import os
 import subprocess
 import sys
@@ -40,7 +39,7 @@ def main() -> None:
         del args[i:i + 2]
     base = args[0]
     head = args[1] if len(args) > 1 else "HEAD"
-    import test_registry as tr
+    import sweep_cache
     from tcrd_spark.registry import all_queries
 
     changed = set(
@@ -57,7 +56,7 @@ def main() -> None:
     q = all_queries()
     touched, untouched = [], []
     for name in sorted(q):
-        hits = sorted(tr._closure(q[name]) & changed)
+        hits = sorted(sweep_cache.closure(q[name]) & changed)
         if hits:
             touched.append((name, hits))
         else:
@@ -70,7 +69,6 @@ def main() -> None:
         print(f"| {name} | touched | {', '.join(hits)} |")
     for name in untouched:
         print(f"| {name} | untouched | |")
-    src = os.path.relpath(inspect.getsourcefile(main), REPO)  # noqa: F841
 
 
 if __name__ == "__main__":

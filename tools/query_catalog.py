@@ -1,6 +1,6 @@
 """Generate QUERIES.md: a navigable catalog of every registered query
-— adjudication-cap position, oracle coverage, implementing function,
-and first docstring line. Regenerate after registry changes:
+— registry position, oracle coverage, implementing function, and
+first docstring line. Regenerate after registry changes:
 
     python tools/query_catalog.py
 """
@@ -23,23 +23,19 @@ def main() -> int:
     with open(out, "w") as f:
         f.write(
             "# Query catalog — generated by tools/query_catalog.py\n\n"
-            f"{len(queries)} registered queries; the driver adjudicates "
-            "the first 50 against the DuckDB oracle each round "
-            "(tests/test_registry.py enforces that every past-cap entry "
-            "already holds a green CORRECTNESS row from a prior round; "
-            "pytest's test_operators sweep re-checks ALL of them against "
-            "their oracles every run).\n\n"
+            f"{len(queries)} registered queries, in registry order; "
+            "pytest's test_operators sweep checks every query that has "
+            "an oracle against its DuckDB twin on every run.\n\n"
             "| # | query | oracle | implementation | summary |\n"
             "|---|---|---|---|---|\n"
         )
         for i, (name, fn) in enumerate(queries.items(), 1):
-            cap = "in-cap" if i <= 50 else "past-cap"
             mod = fn.__module__.removeprefix("tcrd_spark.")
             doc = (fn.__doc__ or "").strip().splitlines()
             summary = doc[0].rstrip() if doc else ""
             oracle = "sql" if name in oracles else "rows-only"
             f.write(
-                f"| {i} ({cap}) | {name} | {oracle} | "
+                f"| {i} | {name} | {oracle} | "
                 f"`{mod}.{fn.__name__}` | {summary} |\n"
             )
     print(out)
