@@ -26,7 +26,6 @@ a single graph exceeds task memory. Depth caps bound both.
 
 from __future__ import annotations
 
-import os
 from collections import deque
 from decimal import ROUND_HALF_UP, Decimal
 from typing import Iterable
@@ -36,7 +35,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from tcrd_spark.operators.lineage import _truncate
+from tcrd_spark.operators.lineage import _keep, _truncate, cache
 from tcrd_spark.session import memo
 
 
@@ -46,7 +45,6 @@ def apsp_iterative(
     src: str,
     dst: str,
     max_hops: int = 10,
-    _caches: list | None = None,
 ) -> DataFrame:
     """All-pairs shortest path lengths per graph via BFS-to-fixpoint.
 
@@ -55,11 +53,10 @@ def apsp_iterative(
     data stays distributed. Frontier dedup keeps the work linear in
     the true distance closure, not in path multiplicity.
 
-    Hop caches are released as the loop advances (ADVICE r6): once the
+    Hop caches are released as the loop ends (ADVICE r6): once the
     final path set is materialized, every superseded cut is
-    unpersisted; only the final cut stays pinned (the returned plan
-    reads it), handed to ``_caches`` when given so the caller can
-    release it after its terminal action.
+    unpersisted; the final cut (the returned plan reads it) goes to
+    the rotating "apsp" store slot.
     """
     held: list = []
 
@@ -97,11 +94,7 @@ def apsp_iterative(
             break
         paths, paths_rdd = cut(paths.unionByName(frontier))
     paths_rdd.count()  # materialize the kept cut before releasing ancestors
-    for r in held:
-        if r is not paths_rdd:
-            r.unpersist()
-    if _caches is not None:
-        _caches.append(paths_rdd)
+    paths = _keep(paths, paths_rdd, held, "apsp")
     return paths.groupBy(graph, src, dst).agg(F.min("dist").alias("dist"))
 
 
@@ -358,10 +351,10 @@ PR_DAMPING = 0.85
 # this count (~8 MB of longs at the default) iterate driver-side with
 # bit-identical arithmetic instead of paying Catalyst analysis +
 # planning of every cut segment (measured: the distributed loop's wall
-# at sf0.1 is ~98% driver plan work, 2% execution). Parameterised for
-# the cluster regime; 0 disables the fast path — the distributed
-# star-shaped loop below runs unchanged at scale.
-_PR_DRIVER_MAX = int(os.environ.get("TCRD_PR_DRIVER_MAX", "500000"))
+# at sf0.1 is ~98% driver plan work, 2% execution). Above it — and
+# when tests set 0 to force it — the distributed star-shaped loop
+# below runs unchanged.
+_PR_DRIVER_MAX = 500_000
 
 
 def _pagerank_driver(spark, src_vals, dst_vals, node_type, iters, damping):
@@ -445,7 +438,6 @@ def pagerank(
     damping: float = PR_DAMPING,
     exact_fold: bool = True,
     cache_inputs: bool = True,
-    _caches: list | None = None,
     prebuilt: tuple | None = None,
     cut_every: int = 3,
     n_nodes: int | None = None,
@@ -461,9 +453,7 @@ def pagerank(
     output is plan-cut through an (uncached) RDD round-trip: the chain
     is strictly linear so every cut is computed exactly once, and
     without the cut Catalyst re-analysis cost grows superlinearly with
-    depth (the apsp lesson above). At 100 TB the scan-derived frames
-    (edges, degrees, nodes) would be persisted once and the cut done
-    with localCheckpoint; node count is ONE bounded driver long
+    depth (the apsp lesson above). Node count is ONE bounded driver long
     (r11: folded into the rank expressions as a literal — the
     per-iteration count-aggregate + broadcast-exchange pair it
     replaces was 2 jobs × iters for the same scalar).
@@ -516,11 +506,11 @@ def pagerank(
         if cache_inputs:
             # e/deg/nodes appear in EVERY iteration's plan; uncached
             # they re-run the upstream scan+window+distinct once per
-            # iteration (measured 9.9s → warm 3s at sf0.1). Caller
-            # owns cleanup via _caches (the corpus.py idiom).
-            e, deg, nodes = e.cache(), deg.cache(), nodes.cache()
-            if _caches is not None:
-                _caches.extend([e, deg, nodes])
+            # iteration (measured 9.9s → warm 3s at sf0.1). One
+            # rotating store slot each bounds session storage.
+            e = cache(e, "pagerank-e")
+            deg = cache(deg, "pagerank-deg")
+            nodes = cache(nodes, "pagerank-nodes")
     # one bounded driver long; the literals below reproduce the exact
     # IEEE doubles the old per-iteration aggregate produced (division
     # of the same operands is correctly rounded either way). Callers

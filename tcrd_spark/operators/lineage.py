@@ -1,4 +1,24 @@
-"""Lineage-cut helper shared by every iterative algorithm.
+"""Lineage cuts and session caches, each with ONE owner: the session
+memo store (`tcrd_spark.session.memo`).
+
+- ``cut(df, slot, key=None)`` — an RDD round trip that resets the
+  plan. The store entry holds the frame AND its cached RDD handle, so
+  releasing the entry frees both. No key: the slot rotates on every
+  call (at most one live cut per slot). A key (e.g. ``sf_dir``): the
+  cut is reused, and ``df`` may be a builder so a hit builds nothing.
+- ``cache(df, slot)`` — ``df.cache()`` under a rotating slot, reused
+  while the plan computes the same result.
+- ``_truncate(df, held)`` — the hop cut of an iterative loop
+  (apsp, connected components, BPE, Lloyd). The loop owns ``held``:
+  it materializes a hop before releasing its ancestors (the store
+  releases a predecessor BEFORE it builds, so a self-referential
+  chain on one slot would recompute from scratch), and ``_keep``
+  hands its final survivor to a store slot.
+
+Releasing is a storage decision, never a correctness one: a frame
+whose cut was released recomputes from its lineage on demand.
+(Spark's local checkpoint has no such fallback: unpersisting it loses
+the blocks — CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND on re-read.)
 
 Deliberately a LEAF module (imports nothing from tcrd_spark but the
 leaf `session`): corpus connected-components, BPE training, and graph
@@ -11,15 +31,16 @@ query's closure, so any graph edit would invalidate their cached PASSes.
 from __future__ import annotations
 
 from py4j.protocol import Py4JError
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
 from tcrd_spark.session import memo
 
 
 def _truncate(
-    df: DataFrame, _caches: list | None = None, cache: bool = True
+    df: DataFrame, held: list | None = None, cache: bool = True
 ) -> DataFrame:
-    """Cut the logical plan at this point (RDD round-trip, cached).
+    """Cut the logical plan at this point (RDD round-trip, cached; the
+    RDD handle is appended to ``held``).
 
     Iterative algorithms build self-referential union/join chains whose
     Catalyst analysis cost grows EXPONENTIALLY with depth — by hop 5 the
@@ -33,80 +54,66 @@ def _truncate(
     back (guide §4: every Python crossing pays transpose+serialize both
     ways); measured on a 100k-row window-derived cut this was 1.65s vs
     0.34s warm, and it tripled corpus/CC loop wall time.
-    (localCheckpoint is NOT equivalent: unpersisting a local checkpoint
-    loses the blocks permanently — CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND on
-    re-read — while this cut's lineage survives unpersist.)
 
-    The cached RDD is appended to ``_caches`` when given so the caller
-    can unpersist it once a later cut is fully materialized (ADVICE r6:
-    loops that never release superseded hop caches pin ~2 RDDs per hop
-    for the whole session). Unpersisting is a perf decision, never a
-    correctness one — the RDD lineage survives and recomputes on
-    demand.
-
-    ``cache=False`` skips persisting the cut RDD: right for strictly
-    LINEAR chains (pagerank's per-iteration cut) where every cut is
-    read exactly once by the single terminal action — caching there
-    only costs storage-memory bookkeeping per hop.
+    ``cache=False`` skips persisting the cut RDD (``held`` unused):
+    right for strictly LINEAR chains (pagerank's per-iteration cut)
+    where every cut is read exactly once by the single terminal
+    action — caching there only costs storage-memory bookkeeping.
     """
     spark = df.sparkSession
     jrdd = df._jdf.javaRDD()
     if cache:
         jrdd = jrdd.cache()
-        if _caches is not None:
-            _caches.append(jrdd)
+        held.append(jrdd)
     return DataFrame(
         spark._jsparkSession.createDataFrame(jrdd, df._jdf.schema()), spark
     )
 
 
-def _truncate_rotating(
-    df: DataFrame, slot: str, _caches: list | None = None
-) -> DataFrame:
-    """``_truncate`` with BOUNDED session storage for callers that have
-    no terminal action of their own (registered queries return lazy
-    frames, so they can never unpersist "after the action"): when
-    ``_caches`` is None, the previous cut cached under the same slot is
-    unpersisted first — repeated invocations pin at most ONE cut per
-    slot instead of one per call (ADVICE r11: video/image_near_dup_pairs
-    accumulated a cached RDD per invocation for the session lifetime).
-    Unpersisting the predecessor is a perf decision, never a correctness
-    one: its lineage survives and recomputes on demand if a stale frame
-    is still referenced. With ``_caches`` given, identical to
-    ``_truncate(df, _caches)`` — the caller owns cleanup."""
-    if _caches is not None:
-        return _truncate(df, _caches)
-    held: list = []
-    # a fresh key per call: the slot always rotates; the entry holds
-    # the cut RDD handle (what the store releases) next to the frame
-    return memo(
-        df.sparkSession, slot, object(), lambda: (_truncate(df, held), held[0])
-    )[0]
+def cut(df, slot: str, key=None) -> DataFrame:
+    """``_truncate`` owned by the session store under ``slot``: the
+    entry holds (frame, cut RDD). ``key=None`` rotates the slot on
+    every call — registered queries return lazy frames and can never
+    unpersist "after the action", so each call releases the previous
+    call's cut (ADVICE r11: one cached RDD per invocation otherwise
+    accumulated for the session). With a key the live cut is reused,
+    and ``df`` may be a zero-argument builder of the frame; a reused cut
+    is also DataFrame-cached, since every later call scans it and a
+    columnar scan beats re-encoding the cached rows (measured warm at
+    sf0.1, 4 cores: web_pipeline 0.99s → 0.21s, corpus_pipeline_v2
+    15.2s → 11.9s, semantic_dedup 2.56s → 1.99s)."""
+    def build():
+        held: list = []
+        out = _truncate(df() if callable(df) else df, held)
+        return (out if key is None else out.cache()), held[0]
+
+    spark = df.sparkSession if isinstance(df, DataFrame) else SparkSession.active()
+    return memo(spark, slot, object() if key is None else key, build)[0]
 
 
-def _cache_rotating(df, slot: str, _caches: list | None = None):
-    """``df.cache()`` with BOUNDED session storage (r12; the DataFrame
-    twin of ``_truncate_rotating``): registered queries re-invoke
-    operators that cache reused sub-frames, and a plain ``.cache()``
-    with no terminal-action cleanup pins one materialized frame per
-    invocation for the session lifetime (bench: 3 reps × several
-    queries ≈ dozens of dead cached frames of shingle arrays). When
-    ``_caches`` is None the previous frame cached under the same slot
-    is unpersisted first — at most ONE live cache per slot — UNLESS
-    the new frame's plan is the same (``sameResult``): Spark's
-    CacheManager dedups identical canonicalized plans into one cached
-    relation, so re-invocations of an unchanged query legitimately
-    share it (zero extra storage), and unpersisting it would force a
-    full recompute per invocation for nothing (measured: the jaccard
-    family regressed 2-4× under unconditional rotation). Unpersisting
-    is a perf decision, never a correctness one: a stale plan still
-    referencing the old frame recomputes on demand. With ``_caches``
-    given, the caller owns cleanup and this is ``df.cache()`` +
-    append."""
-    if _caches is not None:
-        out = df.cache()
-        _caches.append(out)
-        return out
+def _keep(df: DataFrame, rdd, held: list, slot: str) -> DataFrame:
+    """End of an iterative loop: release every hop cut in ``held`` but
+    ``rdd`` (``df``'s own cut, already materialized) and hand ``df`` with
+    it to a rotating store slot."""
+    for r in held:
+        if r is not rdd:
+            r.unpersist()
+    held.clear()
+    return memo(df.sparkSession, slot, object(), lambda: (df, rdd))[0]
+
+
+def cache(df: DataFrame, slot: str) -> DataFrame:
+    """``df.cache()`` with at most ONE live cache per slot: registered
+    queries re-invoke operators that cache reused sub-frames, and a
+    plain ``.cache()`` pins one materialized frame per invocation for
+    the session (bench: 3 reps × several queries ≈ dozens of dead
+    cached frames of shingle arrays). The previous frame under the slot
+    is unpersisted first UNLESS the new plan computes the same result
+    (``sameResult``): Spark's CacheManager dedups identical
+    canonicalized plans into one cached relation, so re-invocations of
+    an unchanged query share it, and unpersisting it would force a full
+    recompute per invocation (measured: the jaccard family regressed
+    2-4× under unconditional rotation)."""
     out = memo(df.sparkSession, slot, _SamePlan(df), df.cache)
     # a plan match returns the slot's frame; hand back the caller's own
     # frame (its column ids), cached onto the shared relation

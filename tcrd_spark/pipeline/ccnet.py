@@ -55,21 +55,19 @@ def lang_nll(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
 def ccnet_buckets(
     docs: DataFrame, id_col: str, text_col: str,
     _labeled: DataFrame | None = None,
-    _caches: list | None = None,
 ) -> DataFrame:
     """(id, pred_lang, nll, bucket): bucket ∈ {head, middle, tail,
     unscored} by per-language NLL tertiles (lower NLL = head, the
     CCNet convention: fluent text scores low perplexity).
 
     ``_labeled`` accepts a pre-materialized lang_nll frame; otherwise
-    one is built and cached here (recorded in ``_caches`` under the
-    incremental_near_dups unpersist convention)."""
-    if _labeled is not None:
-        labeled = _labeled
-    else:
-        labeled = lang_nll(docs, id_col, text_col).cache()
-        if _caches is not None:
-            _caches.append(labeled)
+    one is built and cached here under a rotating store slot."""
+    from tcrd_spark.operators.lineage import cache
+
+    labeled = (
+        _labeled if _labeled is not None
+        else cache(lang_nll(docs, id_col, text_col), "ccnet-nll")
+    )
     edges = labeled.filter(F.col("nll").isNotNull()).groupBy(
         "pred_lang"
     ).agg(

@@ -20,28 +20,25 @@ built scale-first:
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from tcrd_spark.functions.hashing import hash60
-from tcrd_spark.operators.lineage import _truncate
+from tcrd_spark.operators.lineage import _keep, _truncate, cache
 
 # Size-adaptive threshold for the connected-components driver fast
 # path (see connected_components below) — the CC analogue of
 # spark.sql.autoBroadcastJoinThreshold: edge sets at or below this
 # count (~3 MB of longs at the default) are resolved by driver
-# union-find instead of the O(log n)-round distributed star loop.
-# Parameterised for the cluster regime; 0 disables the fast path.
-_CC_DRIVER_MAX = int(os.environ.get("TCRD_CC_DRIVER_MAX", "200000"))
+# union-find instead of the O(log n)-round distributed star loop
+# (tests set 0 to force the loop).
+_CC_DRIVER_MAX = 200_000
 
 
 # ------------------------------------------------------- connected components
 
 def connected_components(
     edges: DataFrame, src: str, dst: str, max_iter: int = 25,
-    _caches: list | None = None,
 ) -> DataFrame:
     """Undirected edge list → (node, component), component = min node
     id reachable. Only nodes that appear in ``edges`` are returned
@@ -146,8 +143,8 @@ def connected_components(
         )
     # superseded round cuts are unpersisted as the loop advances
     # (ADVICE r6: these previously pinned one RDD per round for the
-    # session); only the final cut stays pinned — the returned plan
-    # reads it — handed to ``_caches`` when given.
+    # session); the final cut — the returned plan reads it — goes to
+    # the rotating "cc" store slot.
     held: list = [e]
     e = _truncate(e, held)
     prev = _sig(e)
@@ -197,8 +194,6 @@ def connected_components(
             break
         prev = cur
         e = ss
-    if _caches is not None:
-        _caches.extend(held)
     if not converged:
         # alternating stars converge in O(log n) rounds (Kiveris §4);
         # exhausting max_iter means labels may be split mid-merge —
@@ -207,12 +202,13 @@ def connected_components(
             f"connected_components: no fixpoint after {max_iter} rounds; "
             "raise max_iter"
         )
+    e = _keep(e, held[0], held, "cc")
     return e.select(F.col("u").alias("node"), F.col("v").alias("component"))
 
 
 def dedup_groups(
     docs: DataFrame, pairs: DataFrame, id_col: str = "doc_id",
-    rep_by: str | None = None, _caches: list | None = None,
+    rep_by: str | None = None,
 ) -> DataFrame:
     """Resolve near-dup PAIRS into transitive GROUPS, one row per doc:
     (doc_id, group_id, group_sz). group_id = min doc id of the group
@@ -231,7 +227,7 @@ def dedup_groups(
     a viral million-member group costs its partitions a merge of
     partial maxima, never a single-task sort.
     """
-    cc = connected_components(pairs, "id_a", "id_b", _caches=_caches)
+    cc = connected_components(pairs, "id_a", "id_b")
     labeled = (
         docs.select(
             F.col(id_col).cast("long").alias(id_col),
@@ -267,7 +263,7 @@ def dedup_groups(
 
 def dedup_group_reps(
     docs: DataFrame, pairs: DataFrame, id_col: str = "doc_id",
-    rep_by: str | None = None, _caches: list | None = None,
+    rep_by: str | None = None,
 ) -> DataFrame:
     """The REPRESENTATIVE ids only — exactly the set
     ``dedup_groups(...).filter(id == rep_id)`` (or ``== group_id`` when
@@ -281,7 +277,7 @@ def dedup_group_reps(
     aggregate dedup_groups runs, minus sizes and join-backs — 3 fewer
     exchanges per gate in the composed pipelines' plans.
     """
-    cc = connected_components(pairs, "id_a", "id_b", _caches=_caches)
+    cc = connected_components(pairs, "id_a", "id_b")
     labeled = (
         docs.select(
             F.col(id_col).cast("long").alias(id_col),
@@ -322,7 +318,6 @@ def incremental_near_dups(
     text_col: str,
     n: int = 3,
     threshold: float = 0.3,
-    _caches: list | None = None,
 ) -> DataFrame:
     """Dedup an incoming BATCH against an existing CORPUS without
     re-pairing the corpus with itself — the production shape: the
@@ -338,10 +333,9 @@ def incremental_near_dups(
     Jaccard on candidates only.
 
     The shingle frames are cached (each feeds both the inverted index
-    and the verify join). Callers that invoke this repeatedly — the
-    streaming ingest sink runs it once per micro-batch — pass a
-    ``_caches`` list and unpersist after their terminal action, so
-    cached partitions don't accumulate in executor storage.
+    and the verify join) under rotating store slots, so repeated
+    calls — the streaming ingest sink runs one per micro-batch — hold
+    at most one cached frame per side.
     """
     from tcrd_spark.pipeline.dedup import hashed_shingles
 
@@ -357,20 +351,15 @@ def incremental_near_dups(
         .agg(F.min("c_id").alias("exact_src"))
     )
 
-    from tcrd_spark.operators.lineage import _cache_rotating
-
-    # rotating cache slots (r12): registered queries pass no _caches,
-    # and a plain .cache() pinned two shingle frames per invocation
-    # for the session lifetime
-    b_sh = _cache_rotating(
+    b_sh = cache(
         hashed_shingles(batch, id_col, text_col, n).select(
             F.col(id_col).alias("b_id"), F.col("hs").alias("hs_b")
-        ), "incr-bsh", _caches,
+        ), "incr-bsh",
     )
-    c_sh = _cache_rotating(
+    c_sh = cache(
         hashed_shingles(corpus, id_col, text_col, n).select(
             F.col(id_col).alias("c_id"), F.col("hs").alias("hs_c")
-        ), "incr-csh", _caches,
+        ), "incr-csh",
     )
     b_inv = b_sh.select("b_id", F.explode("hs_b").alias("g"))
     c_inv = c_sh.select("c_id", F.explode("hs_c").alias("g"))
@@ -460,12 +449,11 @@ def incremental_near_dups_indexed(
     text_col: str,
     n: int = 3,
     threshold: float = 0.3,
-    _caches: list | None = None,
 ) -> DataFrame:
     """incremental_near_dups against a persisted build_dedup_index —
     identical results; the difference is the corpus side is read, not
     recomputed, and its bucketing keeps every probe join's exchange on
-    the batch side only. ``_caches`` as in incremental_near_dups."""
+    the batch side only."""
     from tcrd_spark.pipeline.dedup import hashed_shingles
 
     spark = batch.sparkSession
@@ -481,12 +469,10 @@ def incremental_near_dups_indexed(
         .groupBy("b_id")
         .agg(F.min("c_id").alias("exact_src"))
     )
-    from tcrd_spark.operators.lineage import _cache_rotating
-
-    b_sh = _cache_rotating(
+    b_sh = cache(
         hashed_shingles(batch, id_col, text_col, n).select(
             F.col(id_col).alias("b_id"), F.col("hs").alias("hs_b")
-        ), "incridx-bsh", _caches,
+        ), "incridx-bsh",
     )
     cand = (
         b_sh.select("b_id", F.explode("hs_b").alias("g"))
@@ -538,7 +524,6 @@ def incremental_near_dups_lsh(
     n_perms: int = 32,
     bands: int = 16,
     threshold: float = 0.3,
-    _caches: list | None = None,
 ) -> DataFrame:
     """incremental_near_dups with MinHash-LSH candidate generation:
     instead of probing EVERY shared shingle's postings (exact recall,
@@ -560,13 +545,11 @@ def incremental_near_dups_lsh(
     r = n_perms // bands
 
     def _sig_and_buckets(df: DataFrame, out_id: str):
-        from tcrd_spark.operators.lineage import _cache_rotating
-
-        sh = _cache_rotating(
+        sh = cache(
             hashed_shingles(df, id_col, text_col, n)
             .filter(F.size("hs") > 0)
             .select(F.col(id_col).alias(out_id), "hs"),
-            f"incrlsh-{out_id}", _caches,
+            f"incrlsh-{out_id}",
         )
         # one F.expr parse per frame instead of n_perms Column-API
         # transform lambdas — tree-identical (hashing.minhash_sig_expr)

@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tcrd_spark.functions.hashing import sql_hash60
+from tcrd_spark.operators.lineage import cache
 from tcrd_spark.pipeline import corpus, dedup, text
 from tcrd_spark.pipeline.testdata_queries import (
     _BEST,
@@ -261,11 +262,11 @@ def q_corpus_pipeline(
             F.round(text.quality_score(F.col("text")), 6).alias("quality"),
         )
         .filter(F.col("pred_lang") == "en")
-        # quantile_filter reads survivors twice (threshold agg + the
-        # gate); without the cache the whole dedup/CC/decon lineage
-        # above would execute twice
-        .cache()
     )
+    # quantile_filter reads survivors twice (threshold agg + the gate);
+    # without the cache the whole dedup/CC/decon lineage above would
+    # execute twice
+    survivors = cache(survivors, "corpus-survivors")
     kept = corpus.quantile_filter(survivors, "doc_id", "quality", 0.25)
     # 5: write layout
     return corpus.shard_assign(kept, "doc_id", PACK_SHARDS).select(

@@ -67,7 +67,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tcrd_spark.functions.hashing import sql_hash60
-from tcrd_spark.operators.lineage import _truncate
+from tcrd_spark.operators.lineage import cut
 from tcrd_spark.pipeline import corpus, dedup, gopher, text
 from tcrd_spark.pipeline.ccnet import ccnet_buckets, lang_nll
 from tcrd_spark.pipeline.dsir import (
@@ -79,7 +79,6 @@ from tcrd_spark.pipeline.dsir import (
 )
 from tcrd_spark.pipeline.semdedup import _EMB_DIM, semantic_dedup_reps
 from tcrd_spark.pipeline.substring import _split_docs, excise_duplicate_spans
-from tcrd_spark.session import memo
 from tcrd_spark.sources.lake import load_table
 
 EXCISE_K, EXCISE_MIN_OCC = 8, 2
@@ -113,25 +112,22 @@ def _docs2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The excised corpus (doc_id, text=clean, lang, source) —
     memoized per (session, sf_dir): three invocations (bench reps, the
     sweep) and five stages read it."""
+    # lineage-cut the memoized frame: .cache() alone does NOT bound
+    # Catalyst analysis (substitution happens after it), so without the
+    # cut every downstream stage re-analyzes the whole excision tree —
+    # measured 15.4s of the warm 18.4s run was analysis, not execution
     def build():
         docs = _split_docs(spark, sf_dir)
         ex = excise_duplicate_spans(
             docs, "doc_id", "text", k=EXCISE_K,
             min_occurrences=EXCISE_MIN_OCC,
         )
-        # lineage-cut the memoized frame: .cache() alone does NOT bound
-        # Catalyst analysis (substitution happens after it), so without
-        # the cut every downstream stage re-analyzes the whole excision
-        # tree — measured 15.4s of the warm 18.4s run was analysis, not
-        # execution
-        return _truncate(
-            docs.select("doc_id", "lang", "source").join(
-                ex.select("doc_id", F.col("clean_text").alias("text")),
-                "doc_id",
-            )
+        return docs.select("doc_id", "lang", "source").join(
+            ex.select("doc_id", F.col("clean_text").alias("text")),
+            "doc_id",
         )
 
-    return memo(spark, "v2-docs2", sf_dir, lambda: build().cache())
+    return cut(build, "v2-docs2", sf_dir)
 
 
 def corpus_pipeline_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -143,7 +139,7 @@ def corpus_pipeline_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pair join alone stalled for minutes at sf0.001; cut, it runs in
     # ~2s. Each cut frame is gate-survivor-sized (hundreds of rows
     # here, corpus/n at scale). At 100 TB the same boundary would be a
-    # persisted table or localCheckpoint.
+    # persisted table.
     d2 = _docs2(spark, sf_dir)
 
     # 2. Gopher structural/repetition gate over the excised text.
@@ -162,18 +158,17 @@ def corpus_pipeline_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     # trained on the survivors — self-contained, like the standalone
     # query trains on its corpus). labeled is memoized: the edge pass
     # and the label pass both read the full LM lineage.
-    labeled = memo(
-        spark, "v2-labeled", sf_dir,
+    labeled = cut(
         # cut for the same reason as _docs2: the LM train+score tree is
         # re-analyzed by both the edge pass and the label pass otherwise
-        lambda: _truncate(lang_nll(b, "doc_id", "text")).cache(),
+        lambda: lang_nll(b, "doc_id", "text"), "v2-labeled", sf_dir,
     )
     buckets = ccnet_buckets(b, "doc_id", "text", _labeled=labeled)
-    c = _truncate(b.join(
+    c = cut(b.join(
         buckets.filter(F.col("bucket").isin("head", "middle"))
         .select("doc_id"),
         "doc_id", "semi",
-    ))
+    ), "v2-c")
 
     # 4. near-dup CC with quality-elected reps + exact-hash reps
     pairs = dedup.ngram_jaccard_pairs(
@@ -190,9 +185,10 @@ def corpus_pipeline_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact_reps = dedup.exact_dedup(c, "doc_id", "text").select(
         F.col("keep_id").alias("doc_id")
     )
-    d = _truncate(
+    d = cut(
         c.join(cc_reps, "doc_id", "semi")
-        .join(exact_reps, "doc_id", "semi")
+        .join(exact_reps, "doc_id", "semi"),
+        "v2-d",
     )
 
     # 5. SemDeDup over the survivors' embeddings (first-8 global
@@ -240,7 +236,7 @@ def corpus_pipeline_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("contaminated") == 0)
         .select("doc_id")
     )
-    f = _truncate(corpus_side.join(decon_keep, "doc_id", "semi"))
+    f = cut(corpus_side.join(decon_keep, "doc_id", "semi"), "v2-f")
 
     # 7. DSIR gate: importance ratio trained target-vs-survivors,
     # Gumbel-perturbed weights, keep >= the survivor median (one-row

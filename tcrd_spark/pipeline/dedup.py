@@ -167,13 +167,13 @@ def ngram_jaccard_pairs(
 
     max_df additionally drops ultra-common shingles from consideration
     entirely (changes results; off by default)."""
-    from tcrd_spark.operators.lineage import _cache_rotating
+    from tcrd_spark.operators.lineage import cache
 
     # sh feeds both the df-frequency agg and the canonical-order join
     # below; cache so tokenize→md5 runs once (one row per doc).
     # Rotating slots (r12): no caller unpersists, and every invocation
     # previously pinned a new materialized frame for the session
-    sh = _cache_rotating(
+    sh = cache(
         hashed_shingles(df, id_col, text_col, n), "jaccard-sh"
     )
     inv = sh.select(id_col, F.explode("hs").alias("g"))
@@ -202,7 +202,7 @@ def ngram_jaccard_pairs(
     # sides); without this the tokenize→md5→sort lineage re-executes
     # per branch — 5× wall on the bench corpus. One row per doc
     # (id + sorted hash array), so the cache is small at any SF.
-    grouped = _cache_rotating(grouped, "jaccard-grouped")
+    grouped = cache(grouped, "jaccard-grouped")
     prefix_len = (F.col("n_sh") - F.ceil(F.lit(threshold) * F.col("n_sh")) + 1).cast("int")
     # prefix inverted index WITH positions: PPJoin's positional filter
     # (Xiao et al. '08) prunes a g-match at 1-based positions (pa, pb)
@@ -288,9 +288,9 @@ def minhash_lsh_pairs(
     # docs (< n tokens) are excluded: they cannot be near-dups, and
     # their all-null signatures would otherwise co-bucket every such
     # doc and divide 0/0 in the Jaccard verify.
-    from tcrd_spark.operators.lineage import _cache_rotating
+    from tcrd_spark.operators.lineage import cache, cut
 
-    sh = _cache_rotating(
+    sh = cache(
         hashed_shingles(df, id_col, text_col, n).filter(F.size("hs") > 0),
         "minhash-sh",
     )
@@ -309,9 +309,7 @@ def minhash_lsh_pairs(
     # on both join sides, so it executed twice per action; the cut
     # materializes the bands-per-doc (id, bucket) table once. Rotating
     # slot bounds session storage.
-    from tcrd_spark.operators.lineage import _truncate_rotating
-
-    buckets = _truncate_rotating(
+    buckets = cut(
         sig.select(
             id_col,
             F.explode(band_hashes_expr("sig", bands, r)).alias("bucket"),
@@ -415,9 +413,9 @@ def simhash_pairs(
     # the full simhash bit-vote pipeline otherwise executes on BOTH
     # sides of the join (map-side work above any reusable exchange).
     # 4 rows per doc, two longs each — bounded; rotating slot.
-    from tcrd_spark.operators.lineage import _truncate_rotating
+    from tcrd_spark.operators.lineage import cut
 
-    chunks = _truncate_rotating(
+    chunks = cut(
         sig.select(
             id_col,
             "simhash",

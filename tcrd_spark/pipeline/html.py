@@ -179,18 +179,17 @@ def _web_stages(spark: SparkSession, sf_dir: str):
     each a lineage-cut, session-memoized DataFrame so the pipeline
     query, the funnel query, and bench reps share one materialization
     per (session, sf_dir)."""
-    from tcrd_spark.operators.lineage import _truncate
+    from tcrd_spark.operators.lineage import cut
     from tcrd_spark.pipeline import gopher
     from tcrd_spark.pipeline.ccnet import ccnet_buckets, lang_nll
     from tcrd_spark.session import memo
 
-    def build_w0():
-        ex = q_html_extract(spark, sf_dir)
-        return _truncate(
-            ex.select("doc_id", F.col("extracted").alias("text"))
-        ).cache()
-
-    w0 = memo(spark, "web-w0", sf_dir, build_w0)
+    w0 = cut(
+        lambda: q_html_extract(spark, sf_dir).select(
+            "doc_id", F.col("extracted").alias("text")
+        ),
+        "web-w0", sf_dir,
+    )
 
     def build_g():
         stats = gopher.gopher_stats(w0, "doc_id", "text")
@@ -205,13 +204,9 @@ def _web_stages(spark: SparkSession, sf_dir: str):
             keep = keep & (F.col(f"top{n}gram_frac") <= t)
         for n, t in gopher.DUP_NGRAM_MAX.items():
             keep = keep & (F.col(f"dup{n}gram_frac") <= t)
-        return _truncate(
-            w0.join(
-                stats.filter(keep).select("doc_id"), "doc_id", "semi"
-            )
-        ).cache()
+        return w0.join(stats.filter(keep).select("doc_id"), "doc_id", "semi")
 
-    g = memo(spark, "web-gopher", sf_dir, build_g)
+    g = cut(build_g, "web-gopher", sf_dir)
 
     def build_c():
         labeled = memo(
@@ -219,15 +214,13 @@ def _web_stages(spark: SparkSession, sf_dir: str):
             lambda: lang_nll(g, "doc_id", "text").cache(),
         )
         buck = ccnet_buckets(g, "doc_id", "text", _labeled=labeled)
-        return _truncate(
-            g.join(
-                buck.filter(F.col("bucket").isin("head", "middle"))
-                .select("doc_id"),
-                "doc_id", "semi",
-            )
-        ).cache()
+        return g.join(
+            buck.filter(F.col("bucket").isin("head", "middle"))
+            .select("doc_id"),
+            "doc_id", "semi",
+        )
 
-    c = memo(spark, "web-ccnet", sf_dir, build_c)
+    c = cut(build_c, "web-ccnet", sf_dir)
     return w0, g, c
 
 

@@ -224,7 +224,6 @@ def image_near_dup_pairs(
     id_col: str = "doc_id",
     max_hamming: int = MAX_HAMMING,
     max_band_freq: int | None = None,
-    _caches: list | None = None,
 ) -> DataFrame:
     """(id_a, id_b, hamming) with Hamming ≤ max_hamming over the
     64-bit dHash. Band-equality join (pigeonhole-complete for ≤ 3),
@@ -240,16 +239,15 @@ def image_near_dup_pairs(
     (members usually re-meet through their three other, rarer bands;
     exact mass-dup clusters belong to `pipeline/dedup.dedup_exact`).
     Default None = exact pigeonhole completeness (the adjudicated
-    path). ``_caches`` receives the fingerprint cut's cache handle for
-    callers that loop; without it the previous invocation's cut is
-    released (lineage._truncate_rotating)."""
-    from tcrd_spark.operators.lineage import _truncate_rotating
+    path). The fingerprint cut rotates one store slot: each call
+    releases the previous call's cut (lineage.cut)."""
+    from tcrd_spark.operators.lineage import cut
 
     # fp feeds both sides of the band self-join (plus the freq cap
     # when set); uncut, the 72-sample dHash expression re-executes per
     # branch — one JVM lineage cut computes it once (the videodup.py
     # change; measured 1.8s → 1.4s at sf0.1, hash-identical)
-    fp = _truncate_rotating(fp, "imagedup-fp", _caches)
+    fp = cut(fp, "imagedup-fp")
     bands = fp.select(
         id_col,
         *[f"b{j}" for j in range(BANDS)],

@@ -34,7 +34,8 @@ def train_nb(
     """Closed-form NB fit: token-label counts, per-label totals,
     label priors, vocabulary size. All bounded by vocab × labels.
 
-    The (label, tok, c) table is lineage-cut (JVM-side, guide §2.2):
+    The (label, tok, c) table is lineage-cut (JVM-side, guide §2.2;
+    one rotating store slot, so repeated training pins one cut):
     counts, totals and vocab previously sat in the scoring plan as
     three independent subtrees, each re-running the tokenize→join→agg
     lineage — three full corpus passes per classify (and in
@@ -44,13 +45,14 @@ def train_nb(
     cached rows. Vocab over ctl equals vocab over the raw token
     stream: the label join is on the document's own id, so every
     token row survives it (null labels form their own ctl group)."""
-    from tcrd_spark.operators.lineage import _truncate
+    from tcrd_spark.operators.lineage import cut
     from tcrd_spark.pipeline.lm import tokenize
 
     toks = tokenize(docs, id_col, text_col)
     labeled = toks.join(docs.select(id_col, label_col), id_col)
-    ctl = _truncate(
-        labeled.groupBy(label_col, "tok").agg(F.count("*").alias("c"))
+    ctl = cut(
+        labeled.groupBy(label_col, "tok").agg(F.count("*").alias("c")),
+        "nb-counts",
     )
     totals = ctl.groupBy(label_col).agg(F.sum("c").alias("tot"))
     priors = (

@@ -130,7 +130,7 @@ def pq_train_codebooks(
 
     sub = dim // m
     v = F.col("c_vec").cast("array<double>")
-    per = None
+    rows = []
     for j in range(m):
         cents = kmeans_centroids(
             corpus.select(
@@ -140,13 +140,16 @@ def pq_train_codebooks(
             k=ksub,
             n_iters=n_iters,
         )
-        # kmeans returns (cell_id, cell_vec); cell ids are dense 0-based
-        part = cents.select(
-            F.col("cell_id").cast("int").alias("code"),
-            F.lit(j).alias("j"),
-            F.col("cell_vec").alias("cv"),
-        )
-        per = part if per is None else per.unionByName(part)
+        # ksub × sub doubles, collected before the next subspace's
+        # kmeans takes over the store slot that holds these centroids;
+        # cell ids are dense 0-based
+        rows += [
+            (int(r["cell_id"]), j, list(r["cell_vec"]))
+            for r in cents.collect()
+        ]
+    per = corpus.sparkSession.createDataFrame(
+        rows, "code int, j int, cv array<double>"
+    )
     return _books_row(per, sub)
 
 

@@ -26,8 +26,6 @@ tests/test_semdedup.py.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -46,10 +44,8 @@ _EMB_DIM = 64
 # When the caller knows the corpus row count, blocks are sized so one
 # block holds ~this many vectors (hash-uniform, so the per-task bound
 # 2·ROWS_PER_BLOCK·dim·8 holds REGARDLESS of cell skew), capped at the
-# caller's n_blocks so the large-corpus plan is unchanged. Env-tunable
-# like TCRD_CC_DRIVER_MAX; production can raise it for bigger BLAS
-# tiles per task.
-_SEM_BLOCK_ROWS = int(os.environ.get("TCRD_SEM_BLOCK_ROWS", "2048"))
+# caller's n_blocks so the large-corpus plan is unchanged.
+_SEM_BLOCK_ROWS = 2048
 
 
 def _adaptive_blocks(n_rows: int, n_blocks: int) -> int:
@@ -244,10 +240,16 @@ def centroid_distance(
     )
 
 
+def _assign(corpus: DataFrame, centroids: DataFrame, dim: int) -> DataFrame:
+    from tcrd_spark.operators.lineage import cache
+    from tcrd_spark.pipeline.similarity import assign_cells
+
+    return cache(assign_cells(corpus, centroids, dim), "semdedup-assign")
+
+
 def semantic_dedup(
     corpus: DataFrame, centroids: DataFrame, dim: int,
     threshold: float = 0.4,
-    _caches: list | None = None,
     _assigned: DataFrame | None = None,
     n_rows: int | None = None,
 ) -> DataFrame:
@@ -256,20 +258,13 @@ def semantic_dedup(
     centroid (max dist, ties to smallest id). Keep `c_id == rep_id`
     to apply the dedup.
 
-    The assignment is computed ONCE and cached — three consumers read
-    it (both pair sides + the rep score); without the barrier the
-    64-dim argmax re-executes per consumer and per CC truncation.
-    ``_caches`` follows the incremental_near_dups unpersist
-    convention."""
+    The assignment is computed ONCE and cached (rotating store slot)
+    — three consumers read it (both pair sides + the rep score);
+    without the barrier the 64-dim argmax re-executes per consumer and
+    per CC truncation."""
     from tcrd_spark.pipeline.corpus import dedup_groups
-    from tcrd_spark.pipeline.similarity import assign_cells
 
-    if _assigned is not None:
-        a = _assigned
-    else:
-        a = assign_cells(corpus, centroids, dim).cache()
-        if _caches is not None:
-            _caches.append(a)
+    a = _assigned if _assigned is not None else _assign(corpus, centroids, dim)
     pairs = semantic_pairs_blocked(
         corpus, centroids, dim, threshold, _assigned=a, n_rows=n_rows
     )
@@ -282,7 +277,6 @@ def semantic_dedup(
 def semantic_dedup_reps(
     corpus: DataFrame, centroids: DataFrame, dim: int,
     threshold: float = 0.4,
-    _caches: list | None = None,
     _assigned: DataFrame | None = None,
     n_rows: int | None = None,
 ) -> DataFrame:
@@ -292,14 +286,8 @@ def semantic_dedup_reps(
     stage 5) don't need group ids/sizes per member, so the size
     aggregate and both join-backs drop out of the composed plan."""
     from tcrd_spark.pipeline.corpus import dedup_group_reps
-    from tcrd_spark.pipeline.similarity import assign_cells
 
-    if _assigned is not None:
-        a = _assigned
-    else:
-        a = assign_cells(corpus, centroids, dim).cache()
-        if _caches is not None:
-            _caches.append(a)
+    a = _assigned if _assigned is not None else _assign(corpus, centroids, dim)
     pairs = semantic_pairs_blocked(
         corpus, centroids, dim, threshold, _assigned=a, n_rows=n_rows
     )
@@ -330,19 +318,19 @@ def _assigned_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The cell assignment both registered queries read — memoized per
     sf_dir like the SQ/PQ code tables (one cached copy, shared by the
     pair sides, the rep score, and repeated bench/sweep invocations)."""
-    from tcrd_spark.operators.lineage import _truncate
+    from tcrd_spark.operators.lineage import cut
     from tcrd_spark.pipeline.similarity import assign_cells
 
-    corpus, cents = _panel(spark, sf_dir)
     # lineage-cut the memoized assignment: .cache() does not bound
     # Catalyst analysis, so the argmax-over-centroids tree (64-dim dot
     # products × 8 cells) was re-analyzed by every reader (pair sides,
     # rep score, both registered queries) — the cut makes each reader's
     # plan start from an opaque scan of the cached rows
-    return memo(
-        spark, "semassign", sf_dir,
-        lambda: _truncate(assign_cells(corpus, cents, _EMB_DIM)).cache(),
-    )
+    def build():
+        corpus, cents = _panel(spark, sf_dir)
+        return assign_cells(corpus, cents, _EMB_DIM)
+
+    return cut(build, "semassign", sf_dir)
 
 
 def _assigned_count_cached(spark: SparkSession, sf_dir: str) -> int:

@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from tcrd_spark.operators.lineage import _keep, _truncate
 from tcrd_spark.pipeline.dedup import dot
 
 
@@ -184,14 +185,16 @@ def kmeans_parallel_init(
     from tcrd_spark.functions.hashing import hash60
 
     l = l or 2 * k
-    c = _with_norm(
+    held: list = []  # hop cuts, all released before returning
+    c = _truncate(_with_norm(
         corpus.select(F.col(id_col).alias("c_id"), F.col(vec_col).alias("c_vec")),
         "c_id",
         "c_vec",
         dim,
-    ).localCheckpoint(eager=True)
+    ), held)
     first = c.orderBy("c_id").select("c_id", "c_vec").first()
     if first is None:
+        held.pop().unpersist()
         raise ValueError("kmeans_parallel_init: empty corpus")
     cand: dict[int, list[float]] = {first["c_id"]: list(first["c_vec"])}
 
@@ -218,10 +221,10 @@ def kmeans_parallel_init(
                 ),
             )
         )
-        costed = (
+        costed = _truncate(
             c.crossJoin(F.broadcast(cent_row))
-            .select("c_id", "c_vec", (F.lit(1.0) - best).alias("cost"))
-            .localCheckpoint(eager=False)
+            .select("c_id", "c_vec", (F.lit(1.0) - best).alias("cost")),
+            held,
         )
         tot_row = costed.agg(F.sum("cost").alias("tot"))
         # u(x) ∈ [0,1): 12 low decimal digits of hash60(id:round)
@@ -237,10 +240,12 @@ def kmeans_parallel_init(
             .select("c_id", "c_vec")
             .collect()
         )
+        held.pop().unpersist()  # this round's costed cut
         for r in picked:
             cand.setdefault(r["c_id"], list(r["c_vec"]))
 
     if len(cand) < k:
+        held.pop().unpersist()
         raise ValueError(
             f"kmeans_parallel_init: only {len(cand)} distinct candidates "
             f"for k={k}; corpus too small or raise l/rounds"
@@ -251,6 +256,7 @@ def kmeans_parallel_init(
         r["cell_id"]: r["n"]
         for r in assigned.groupBy("cell_id").agg(F.count("*").alias("n")).collect()
     }
+    held.pop().unpersist()  # the corpus cut
 
     # driver-side weighted farthest-first over the SMALL candidate set
     def cos(a, b):
@@ -307,39 +313,39 @@ def kmeans_centroids(
     Lloyd degeneracy handling). Cosine-space assignment matches
     ivf_topk's probe metric, so trained centroids drop straight in.
     """
-    c = _with_norm(
+    held: list = []  # hop cuts; _lloyd_iterate hands off the survivor
+    c = _truncate(_with_norm(
         corpus.select(
             F.col(id_col).alias("c_id"), F.col(vec_col).alias("c_vec")
         ),
         "c_id",
         "c_vec",
         dim,
-    ).localCheckpoint(eager=False)
+    ), held)
 
     if init_centroids is not None:
         # externally-supplied seeds (e.g. kmeans_parallel_init — the
         # distributed k-means|| oversampling path); skip farthest-first
         cents = init_centroids.select(
             "cell_id", F.col("cell_vec").cast("array<double>").alias("cell_vec")
-        ).localCheckpoint(eager=True)
-        return _lloyd_iterate(c, cents, dim, n_iters)
+        )
+        return _lloyd_iterate(c, cents, dim, n_iters, held)
 
     # Farthest-first init runs k sequential passes — bound them to a
     # deterministic sample pool of the max(200·k, 1000) smallest-id
     # rows (i.e. the whole corpus when it is smaller than that) so
     # init cost is k scans of a bounded pool, not k full-corpus scans.
     # Lloyd itself then refines against the whole corpus.
-    pool = (
-        c.orderBy("c_id").limit(max(200 * k, 1000)).localCheckpoint(eager=True)
-    )
+    pool = _truncate(c.orderBy("c_id").limit(max(200 * k, 1000)), held)
     n_pool = pool.count()
-    if n_pool == 0:
-        raise ValueError("kmeans_centroids: empty corpus")
-    if k > n_pool:
+    if n_pool == 0 or k > n_pool:
+        for r in held:
+            r.unpersist()
         # fewer distinct points than requested cells — farthest-first
         # would re-pick exhausted seeds and emit duplicate centroids
         raise ValueError(
-            f"kmeans_centroids: k={k} exceeds corpus size {n_pool}"
+            "kmeans_centroids: empty corpus" if n_pool == 0
+            else f"kmeans_centroids: k={k} exceeds corpus size {n_pool}"
         )
     seeds = [pool.orderBy("c_id").select("c_id", "c_vec").first()]
     for _ in range(k - 1):
@@ -381,13 +387,16 @@ def kmeans_centroids(
         [(i, list(s["c_vec"])) for i, s in enumerate(seeds)],
         "cell_id long, cell_vec array<double>",
     )
-    return _lloyd_iterate(c, cents, dim, n_iters)
+    return _lloyd_iterate(c, cents, dim, n_iters, held)
 
 
 def _lloyd_iterate(
-    c: DataFrame, cents: DataFrame, dim: int, n_iters: int
+    c: DataFrame, cents: DataFrame, dim: int, n_iters: int, held: list
 ) -> DataFrame:
-    """The Lloyd refinement loop shared by both init paths."""
+    """The Lloyd refinement loop shared by both init paths; releases
+    every cut in ``held`` and hands the final centroids to the rotating
+    "kmeans" store slot."""
+    rdd = None
     for _ in range(n_iters):
         assigned = assign_cells(
             c.select("c_id", "c_vec"), cents, dim
@@ -402,9 +411,12 @@ def _lloyd_iterate(
                 F.coalesce(F.col("cell_vec"), F.col("prev")).alias("cell_vec"),
             )
         )
-        # cut lineage: the loop otherwise nests k assignment plans
-        cents = cents.localCheckpoint(eager=True)
-    return cents
+        # cut lineage: the loop otherwise nests k assignment plans;
+        # materialized now — the next hop reads it twice
+        cents = _truncate(cents, held)
+        rdd = held[-1]
+        rdd.count()
+    return _keep(cents, rdd, held, "kmeans")
 
 
 def ivf_topk(

@@ -152,16 +152,11 @@ def sq_dequant_frame(corpus: DataFrame, dim: int) -> DataFrame:
 
 def sq_topk(
     queries: DataFrame, corpus: DataFrame, dim: int, k: int,
-    _caches: list | None = None,
 ) -> DataFrame:
     """Asymmetric SQ8 top-k: full-precision queries (q_id, q_vec) vs
     the quantize→dequantize corpus (c_id, c_vec). Same output shape as
-    the exact baseline: (q_id, c_id, score, rank).
-
-    Callers that invoke repeatedly pass ``_caches`` and unpersist after
-    the terminal action (the incremental_near_dups convention — ADVICE
-    r5 #3: an untracked per-call cache() accumulates executor storage
-    across bench reps / the threaded oracle sweep)."""
+    the exact baseline: (q_id, c_id, score, rank)."""
+    from tcrd_spark.operators.lineage import cache
     from tcrd_spark.pipeline.similarity import brute_force_topk
 
     deq = sq_dequant_frame(corpus, dim)
@@ -170,10 +165,10 @@ def sq_topk(
     # codes from disk); cache() is the single-session stand-in. It
     # also stops the optimizer from substituting the center expression
     # into every dot term (the blowup above) — the top-k reads stored
-    # arrays exactly like it would read the persisted index.
-    deq = deq.cache()
-    if _caches is not None:
-        _caches.append(deq)
+    # arrays exactly like it would read the persisted index. One
+    # rotating store slot: an untracked per-call cache() accumulated
+    # executor storage across repeated calls (ADVICE r5 #3).
+    deq = cache(deq, "sq-deq")
     return brute_force_topk(queries, deq, dim, k)
 
 

@@ -46,28 +46,11 @@ Reference: no TCRD analogue (LLM-data-pipeline extension surface).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from tcrd_spark.functions.hashing import hash60, sql_hash60
 from tcrd_spark.pipeline.text import ws_tokens
-
-# Skew posture for the corpus-wide duplicate test (ADVICE r11 /
-# guide §2.4-§2.5): the count(*)-over-partitionBy(gh) window funnels
-# every occurrence of a mega-hot gram (mass-pasted boilerplate) into
-# ONE window task — AQE skew-split applies to joins, not windows, and
-# a window aggregate cannot map-side combine. Setting
-# TCRD_SUBSTR_SKEWSAFE=1 switches to the combinable shape: the gram
-# frame is lineage-cut once (one gram pass, like the window), counted
-# with a map-side-combinable groupBy, and the hits come from a
-# left-semi join AQE's skew-join splitting can break up. Identical
-# spans (tests pin both shapes equal on a hot-gram fixture); ~0.3s
-# slower per query at sf0.1 (the cut wave), which is why the local
-# default stays on the window — a 100 TB deployment flips the flag.
-_SKEWSAFE = os.environ.get("TCRD_SUBSTR_SKEWSAFE", "") == "1"
-
 
 def _gram_hashes(
     df: DataFrame, id_col: str, text_col: str, k: int,
@@ -113,7 +96,6 @@ def duplicate_spans(
     text_col: str,
     k: int = 8,
     min_occurrences: int = 2,
-    skew_safe: bool | None = None,
 ) -> DataFrame:
     """Maximal duplicated token spans: one row per (doc, span) where
     every k-gram inside the span occurs ≥ min_occurrences times in the
@@ -129,23 +111,12 @@ def duplicate_spans(
     stage on BOTH sides of the join (guide §2.2: shuffle/scan once,
     not twice); at 100 TB the window's sort-by-gh is the same work the
     sort-merge semi join did on the probe side, with one fewer
-    exchange and half the gram hashing. ``skew_safe`` (or
-    TCRD_SUBSTR_SKEWSAFE=1) selects the hot-gram-robust shape instead
-    — see the module-level note.
+    exchange and half the gram hashing. A mega-hot gram (mass-pasted
+    boilerplate) lands in ONE window task; the groupBy+semi-join shape
+    that AQE skew-splits was measured slower here (1.04s vs 0.70s) and
+    removed.
     """
     g = _gram_hashes(df, id_col, text_col, k)
-    if skew_safe if skew_safe is not None else _SKEWSAFE:
-        from tcrd_spark.operators.lineage import _truncate_rotating
-
-        gc = _truncate_rotating(g, "substr-grams")
-        dup = (
-            gc.groupBy("gh")
-            .agg(F.count("*").alias("_n"))
-            .filter(F.col("_n") >= min_occurrences)
-            .select("gh")
-        )
-        hits = gc.join(dup, "gh", "left_semi").select(id_col, "pos")
-        return _merge_hit_spans(hits, id_col, k)
     w = Window.partitionBy("gh")
     hits = (
         g.withColumn("_n", F.count("*").over(w))

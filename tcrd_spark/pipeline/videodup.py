@@ -231,7 +231,6 @@ def video_near_dup_pairs(
     min_overlap: float = MIN_OVERLAP,
     max_band_freq: int | None = None,
     unaligned_max_band_freq: int | None = UNALIGNED_MAX_BAND_FREQ,
-    _caches: list | None = None,
 ) -> DataFrame:
     """(id_a, id_b, n_close, frame_overlap): video pairs whose
     close-frame fraction reaches min_overlap. Two candidate tiers —
@@ -243,11 +242,10 @@ def video_near_dup_pairs(
     video's frames), so `n_close` counts close frames wherever they
     sit in the clip. Hot-bucket caps drop buckets seen in more than
     that many videos before the self-join (bounded fan-out on
-    degenerate corpora; recall note in the module docstring).
-    ``_caches`` receives the fingerprint cut's cache handle for callers
-    that loop; without it the previous invocation's cut is released
-    (lineage._truncate_rotating)."""
-    from tcrd_spark.operators.lineage import _truncate_rotating
+    degenerate corpora; recall note in the module docstring). The
+    fingerprint cut rotates one store slot: each call releases the
+    previous call's cut (lineage.cut)."""
+    from tcrd_spark.operators.lineage import cut
 
     # the fingerprint frame feeds SIX plan branches (aligned bands ×2
     # via the self-join, the unaligned tier + its freq cap, fa, fb);
@@ -255,7 +253,7 @@ def video_near_dup_pairs(
     # comparisons per frame) re-executes once per branch. One JVM
     # lineage cut of the (id, frame_idx, b0..b3) ints computes it once
     # (guide §2.2; measured 5.4s → 2.7s at sf0.1, hash-identical).
-    fp = _truncate_rotating(fp, "videodup-fp", _caches)
+    fp = cut(fp, "videodup-fp")
     bands = fp.select(
         id_col,
         F.explode(

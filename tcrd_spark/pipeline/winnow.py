@@ -202,9 +202,9 @@ def fingerprint_pairs(
     # write below it, so the hashing executed twice per action. The cut
     # materializes the df-capped (fp, id) table once; the rotating slot
     # bounds session storage to one cached cut (ADVICE r11 discipline).
-    from tcrd_spark.operators.lineage import _truncate_rotating
+    from tcrd_spark.operators.lineage import cut
 
-    dd = _truncate_rotating(d.join(df_ok, "fp"), "winnow-dd")
+    dd = cut(d.join(df_ok, "fp"), "winnow-dd")
     a = dd.select(F.col("fp"), F.col(id_col).alias("id_a"))
     b = dd.select(F.col("fp"), F.col(id_col).alias("id_b"))
     return (

@@ -96,7 +96,12 @@ def memo(spark: SparkSession, slot: str, key, build):
     when its key matches (``==``), else ``build()`` after releasing the
     predecessor. Builds run under a per-slot lock — the oracle sweep
     calls queries from a thread pool, and one build per key is the
-    point."""
+    point.
+
+    The store is the one owner of cached session storage: lineage cuts
+    enter as (frame, cut RDD handle) — unpersisting the frame alone
+    would leave the RDD under it pinned — and cached frames enter as
+    themselves (operators/lineage.py ``cut`` / ``cache``)."""
     full = (spark.sparkContext.applicationId, key)
     with _LOCKS.setdefault(slot, threading.Lock()):
         held = _SESSION_MEMO.get(slot)
@@ -112,8 +117,8 @@ def memo(spark: SparkSession, slot: str, key, build):
 
 def clear(spark: SparkSession) -> None:
     """Release every memo entry, then every cached DataFrame and
-    persistent RDD of the session (cut RDDs a caller never handed to
-    the store included)."""
+    persistent RDD of the session (a loop's hop cuts left by an
+    interrupted build included)."""
     for slot in list(_SESSION_MEMO):
         with _LOCKS.setdefault(slot, threading.Lock()):
             held = _SESSION_MEMO.pop(slot, None)

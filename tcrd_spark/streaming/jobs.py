@@ -386,23 +386,17 @@ def dedup_probe_batch(
     foreachBatch after a mid-commit crash) overwrites the same
     directory with the same rows. Readers see the sink as one
     partitioned parquet tree (``batch_id`` is a partition column).
-    The probe's shingle caches are unpersisted after the write so
-    long-running streams don't accumulate executor storage.
+    The probe's shingle caches rotate one store slot per side, so
+    long-running streams hold one batch's worth of executor storage.
     """
     import os
 
     from tcrd_spark.pipeline.corpus import incremental_near_dups
 
-    caches: list[DataFrame] = []
-    try:
-        (
-            incremental_near_dups(
-                batch_df, corpus, id_col, text_col,
-                n=n, threshold=threshold, _caches=caches,
-            )
-            .write.mode("overwrite")
-            .parquet(os.path.join(out_path, f"batch_id={batch_id}"))
+    (
+        incremental_near_dups(
+            batch_df, corpus, id_col, text_col, n=n, threshold=threshold,
         )
-    finally:
-        for c in caches:
-            c.unpersist()
+        .write.mode("overwrite")
+        .parquet(os.path.join(out_path, f"batch_id={batch_id}"))
+    )

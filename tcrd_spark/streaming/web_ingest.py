@@ -69,25 +69,17 @@ def web_ingest_batch(
             & (quality_score(F.col("text")) >= min_quality)
         )
     )
-    caches: list[DataFrame] = []
-    try:
-        verdicts = incremental_near_dups(
-            gated, corpus, id_col, "text",
-            n=n, threshold=threshold, _caches=caches,
+    verdicts = incremental_near_dups(
+        gated, corpus, id_col, "text", n=n, threshold=threshold,
+    )
+    (
+        gated.join(
+            verdicts.select(id_col, "exact_src", "near_src", "verdict"),
+            id_col,
         )
-        (
-            gated.join(
-                verdicts.select(
-                    id_col, "exact_src", "near_src", "verdict"
-                ),
-                id_col,
-            )
-            .write.mode("overwrite")
-            .parquet(os.path.join(out_path, f"batch_id={batch_id}"))
-        )
-    finally:
-        for c in caches:
-            c.unpersist()
+        .write.mode("overwrite")
+        .parquet(os.path.join(out_path, f"batch_id={batch_id}"))
+    )
 
 
 def streaming_web_ingest(

@@ -28,7 +28,7 @@ def test_shingle_hashes_sql_matches_column_form(spark, sf_dir):
 
 def test_jaccard_cache_storage_bounded_across_invocations(spark):
     """r12: repeated pair-builds must not accumulate one cached shingle
-    frame per invocation — _cache_rotating releases the predecessor
+    frame per invocation — lineage.cache releases the predecessor
     (the DataFrame twin of the r11 videodup rotating-cut discipline)."""
     from tcrd_spark.pipeline.dedup import ngram_jaccard_pairs
     from tcrd_spark.session import _SESSION_MEMO

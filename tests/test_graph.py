@@ -74,45 +74,31 @@ def test_nearest_flagged_keeps_ties(spark):
     assert got == [(1, 100, 2), (1, 200, 2), (2, 100, 1)]
 
 
-def test_iterative_loops_release_hop_caches(spark):
-    """ADVICE r6: _truncate hop caches must be unpersisted as loops
-    advance — only the FINAL cut may stay pinned (1 per call), and a
-    threaded _caches list releases even that."""
+def test_iterative_loops_release_hop_cuts(spark, monkeypatch):
+    """ADVICE r6: loops release superseded hop cuts and hand the final
+    one to a rotating store slot, so repeated apsp/CC calls pin a
+    constant number of RDDs and the store's clear leaves none."""
     from tcrd_spark.operators.graph import apsp_iterative
-    from tcrd_spark.pipeline.corpus import connected_components
+    from tcrd_spark.pipeline import corpus
+    from tcrd_spark.session import clear
 
-    sc = spark.sparkContext
+    monkeypatch.setattr(corpus, "_CC_DRIVER_MAX", 0)  # the star loop
 
     def pinned() -> int:
-        return sc._jsc.getPersistentRDDs().size()
+        return spark.sparkContext._jsc.getPersistentRDDs().size()
 
     edges = spark.createDataFrame(
         [(1, a, b) for a, b in [(1, 2), (2, 3), (3, 4), (4, 5), (5, 6)]],
         "g long, src long, dst long",
     )
-    base = pinned()
-    apsp_iterative(edges, "g", "src", "dst", max_hops=8).collect()
-    assert pinned() - base <= 1, "apsp left more than the final cut pinned"
-
-    caches: list = []
-    out = apsp_iterative(
-        edges, "g", "src", "dst", max_hops=8, _caches=caches
-    )
-    out.collect()
-    for r in caches:
-        r.unpersist()
-    # the _caches path releases its own pin; only the first call's
-    # final cut may remain from this test
-    assert pinned() - base <= 1
-
     e = spark.createDataFrame(
         [(1, 2), (2, 3), (10, 11), (11, 12), (12, 13)], "u long, v long"
     )
-    base2 = pinned()
-    caches2: list = []
-    cc = connected_components(e, "u", "v", _caches=caches2)
-    cc.collect()
-    assert pinned() - base2 <= 1, "CC left more than the final cut pinned"
-    for r in caches2:
-        r.unpersist()
-    assert pinned() - base2 <= 0
+    counts = []
+    for _ in range(3):
+        apsp_iterative(edges, "g", "src", "dst", max_hops=8).collect()
+        corpus.connected_components(e, "u", "v").collect()
+        counts.append(pinned())
+    assert counts[0] == counts[1] == counts[2], counts
+    clear(spark)
+    assert pinned() == 0

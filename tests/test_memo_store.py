@@ -124,3 +124,68 @@ def test_clear_releases_every_kind_of_entry(spark, sf_dir):
     assert n_persistent() == 0
     assert not index_tables()
     assert not any(os.path.exists(p) for p in dirs)
+
+
+def test_registered_queries_pin_bounded_storage(spark, sf_dir, tmp_path):
+    """Every cut and cache a query makes has one owner, the store: the
+    persistent-RDD count stops growing once each slot holds its entry,
+    at one sf_dir and with sf_dirs alternating (a symlink of sf_dir
+    is a second key without a second scale factor)."""
+    from tcrd_spark.registry import all_queries
+
+    q = all_queries()
+    alias = str(tmp_path / "sf_alias")
+    os.symlink(sf_dir, alias)
+
+    def pinned_after(name, keys) -> list[int]:
+        out = []
+        for key in keys:
+            q[name](spark, key).collect()
+            out.append(spark.sparkContext._jsc.sc().getPersistentRDDs().size())
+        return out
+
+    n = pinned_after("nb_classify", [sf_dir] * 3)
+    assert n[2] == n[0], n
+    for name in ("web_pipeline", "semantic_dedup"):
+        n = pinned_after(name, [sf_dir, alias] * 2)
+        assert n[3] == n[1], (name, n)
+
+
+def _sources():
+    root = os.path.dirname(tcrd_spark.__file__)
+    for dirpath, _, files in os.walk(root):
+        for f in sorted(files):
+            if f.endswith(".py"):
+                path = os.path.join(dirpath, f)
+                with open(path) as fh:
+                    yield os.path.relpath(path, root), fh.read()
+
+
+def test_one_way_to_cut_and_cache():
+    """Lineage cuts and session caches go through operators/lineage.py
+    (cut / cache, or a loop's _truncate hops), owned by the store."""
+    banned = re.compile(
+        r"localCheckpoint|_caches|_truncate_rotating|_cache_rotating"
+    )
+    hits = [
+        f"{rel}:{i}"
+        for rel, text in _sources()
+        for i, line in enumerate(text.splitlines(), 1)
+        if banned.search(line)
+    ]
+    assert not hits, hits
+
+
+def test_no_env_knobs_outside_deployment_settings():
+    """The process environment is read only for session.py's deployment
+    settings — never as an operator knob."""
+    allowed = {"SPARK_GRAFT_CPUS", "SPARK_DRIVER_MEM",
+               "SPARK_GRAFT_DEFAULT_PARALLELISM"}
+    env = re.compile(r"os\.environ|getenv")
+    for rel, text in _sources():
+        reads = env.findall(text)
+        if rel == "session.py":
+            keys = re.findall(r'os\.environ\.get\("([A-Z_]+)"', text)
+            assert len(keys) == len(reads) and set(keys) <= allowed, keys
+        else:
+            assert not reads, rel

@@ -30,7 +30,7 @@ def test_every_oracle_has_a_query():
     assert set(o) <= set(q)
 
 
-def test_clear_session_memos_resets_caches(spark):
+def test_clear_session_memos_resets_the_store(spark):
     """SPARK_GRAFT_BENCH_ISOLATE support (VERDICT r11 #5/#8): the reset
     hook empties the session memo store and unpersists cached data so
     per-query bench numbers are attributable."""

@@ -133,12 +133,7 @@ def test_trained_centroids_path(spark, sf_dir):
 
     corpus, _ = _panel(spark, sf_dir)
     cents = kmeans_centroids(corpus, _EMB_DIM, k=8, n_iters=2)
-    caches: list = []
-    rows = semantic_dedup(
-        corpus, cents, _EMB_DIM, 0.4, _caches=caches
-    ).collect()
+    rows = semantic_dedup(corpus, cents, _EMB_DIM, 0.4).collect()
     assert len(rows) == corpus.count()
     dup_groups = [r for r in rows if r["group_sz"] > 1]
     assert dup_groups, "trained clusters found no near-dups at 0.4"
-    for c in caches:
-        c.unpersist()
