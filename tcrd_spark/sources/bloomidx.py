@@ -54,11 +54,12 @@ for unindexed files, exactly the zone-map fallback discipline.
 coherence); a probe after that degrades to must-scan — still exact,
 rebuild the index to restore pruning.
 
-Schema evolution: if a column added after the admitted files were
-written exists in NONE of them, the pruned read can't surface it —
-the lookup falls back to the full snapshot read (Catalyst still
-pushes the equality into every file's row groups), instead of the
-r8 AnalysisException.
+Lookups read the admitted files through the snapshot scan
+(`snapshots._scan`): deletion vectors applied, and a column added
+after the admitted files were written reads as a typed NULL. The
+index itself covers each file's RAW rows, DV-marked ones included —
+files are immutable, so a bitset stays valid under any later DV state
+(a RESTORE can resurrect marked rows).
 
 Reference parity: none (lakehouse extension; the reference's MySQL
 relies on B-tree indexes, `SQL/create-TCRDv7.sql` KEY clauses — this
@@ -73,9 +74,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from tcrd_spark.sources.snapshots import (
-    _data_dir, _read_manifest, versions,
-)
+from tcrd_spark.sources.snapshots import _data_dir, _head, _scan
 
 K_HASHES = 4
 BITS_PER_KEY = 10  # ~1% fp at k=4
@@ -143,66 +142,47 @@ def build_bloom_index(
     value blooms can't prune. Auto-sizing then budgets
     ~TOKENS_PER_ROW distinct tokens per row; pass m_bits for corpora
     with much longer documents."""
-    vs = versions(table_dir)
-    if not vs:
-        raise FileNotFoundError(f"no versions at {table_dir}")
-    v = vs[-1] if version is None else version
-    m = _read_manifest(table_dir, v)
-    base = _data_dir(table_dir)
-    paths = [os.path.join(base, rel) for rel in m["files"]]
+    m = _head(table_dir, version)
+    v = m["version"]
     if m_bits is None:
-        m_bits = _auto_m_bits(paths)
+        base = _data_dir(table_dir)
+        m_bits = _auto_m_bits([os.path.join(base, f) for f in m["files"]])
         if tokenize:
             target = m_bits * TOKENS_PER_ROW
             while m_bits < target and m_bits < M_MAX:
                 m_bits <<= 1
-    src = (
-        spark.read.option("basePath", base)
-        .option("mergeSchema", "true")
-        .parquet(*paths)
-    )
+    # every RAW row of the files (no DV applied): see the module doc
+    src = _scan(spark, table_dir, {**m, "dv": []}, m["files"],
+                positions=True)
     dtype = "string" if tokenize else src.schema[col].dataType.simpleString()
-    # basename → manifest-relative path, joined broadcast below: the
-    # staging scheme (v{version}-{uuid}-{seq}.parquet) makes basenames
-    # unique, and parsing a basename off input_file_name() sidesteps
-    # the URI percent-encoding that relativizing a full path hits
-    names = [(os.path.basename(rel), rel) for rel in m["files"]]
-    if len({n for n, _ in names}) != len(names):
-        raise ValueError(f"non-unique data file basenames in {table_dir}")
-    relmap = spark.createDataFrame(names, "fname string, file string")
-    keyed = src.select(
-        F.element_at(F.split(F.input_file_name(), "/"), -1).alias("fname"),
-        F.col(col).alias("_v"),
-    )
+    keyed = src.select(F.col("_rf").alias("file"), F.col(col).alias("_v"))
     if tokenize:
         keyed = keyed.select(
-            "fname", F.explode(F.split("_v", r"\s+")).alias("_v")
+            "file", F.explode(F.split("_v", r"\s+")).alias("_v")
         )
     sidecar = (
         keyed.select(
-            "fname",
+            "file",
             F.explode(_bit_positions(F.col("_v"), m_bits, k)).alias("_p"),
         )
         # sparse bitset words: position → (word, mask), OR-folded per
         # (file, word) then packed into one map row per file — both
         # aggregations map-side combinable, output ∝ set bits
         .select(
-            "fname",
+            "file",
             F.expr("CAST(_p DIV 64 AS INT)").alias("w"),
             F.expr(
                 "shiftleft(CAST(1 AS BIGINT), CAST(pmod(_p, 64) AS INT))"
             ).alias("mask"),
         )
-        .groupBy("fname", "w")
+        .groupBy("file", "w")
         .agg(F.expr("bit_or(mask)").alias("bits"))
-        .groupBy("fname")
+        .groupBy("file")
         .agg(
             F.map_from_entries(
                 F.collect_list(F.struct("w", "bits"))
             ).alias("words")
         )
-        .join(F.broadcast(relmap), "fname")
-        .select("file", "words")
     )
     out = _index_dir(table_dir, col, v)
     sidecar.write.mode("overwrite").parquet(out)
@@ -268,11 +248,8 @@ def bloom_candidate_files(
     probing a token against a value index or vice versa — would
     silently FALSE-NEGATIVE (the bits were hashed from different
     keys), so the probe degrades to must-scan instead."""
-    vs = versions(table_dir)
-    if not vs:
-        raise FileNotFoundError(f"no versions at {table_dir}")
-    v = vs[-1] if version is None else version
-    m = _read_manifest(table_dir, v)
+    m = _head(table_dir, version)
+    v = m["version"]
     idx = _find_index(table_dir, col, v)
     if idx is not None and tokenize is not None and (
         bool(idx.get("tokenize", False)) != tokenize
@@ -326,36 +303,14 @@ def _pruned_read(
     spark: SparkSession, table_dir: str, col: str, value, pred, version,
     tokenize: bool,
 ) -> DataFrame:
-    """Shared pruned-read path: bloom-admitted files, exact predicate
-    re-applied; degrades to the full snapshot read when the kept
-    subset can't type a schema-evolution column, nothing is kept, or
-    the resolved index is the wrong KIND for this lookup."""
-    from tcrd_spark.sources.snapshots import read_version
-
-    vs = versions(table_dir)
-    if not vs:
-        raise FileNotFoundError(f"no versions at {table_dir}")
-    v = vs[-1] if version is None else version
+    """Shared pruned-read path: the bloom-admitted files through the
+    snapshot scan, exact predicate re-applied (a wrong-KIND index
+    admits every file)."""
+    m = _head(table_dir, version)
     kept, _total = bloom_candidate_files(
-        spark, table_dir, col, value, v, tokenize=tokenize
+        spark, table_dir, col, value, m["version"], tokenize=tokenize
     )
-    if not kept:
-        return read_version(spark, table_dir, v).where(pred).limit(0)
-    base = _data_dir(table_dir)
-    cols = _read_manifest(table_dir, v)["columns"]
-    df = (
-        spark.read.option("basePath", base)
-        .option("mergeSchema", "true")
-        .parquet(*[os.path.join(base, rel) for rel in kept])
-        .where(pred)
-    )
-    if any(c not in df.columns for c in cols):
-        # a schema-evolution column exists in none of the admitted
-        # files: the pruned subset can't type it — degrade to the
-        # full snapshot read (exact, just unpruned) instead of the
-        # r8 AnalysisException
-        return read_version(spark, table_dir, v).where(pred)
-    return df.select(*cols)  # manifest column order, as read_version
+    return _scan(spark, table_dir, m, kept).where(pred)
 
 
 def point_lookup(

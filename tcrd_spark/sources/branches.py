@@ -61,6 +61,7 @@ from tcrd_spark.sources.metastore import get_store
 from tcrd_spark.sources.snapshots import (
     _commit,
     _data_dir,
+    _head,
     _manifest_dir,
     _manifest_path,
     _publish_exclusive,
@@ -118,12 +119,8 @@ def create_branch(
     branch data path through that prefix mapping. The manifest math
     is identical in both modes (manifests list files relative to the
     data dir either way)."""
-    vs = versions(table_dir)
-    if not vs:
-        raise FileNotFoundError(f"no versions at {table_dir}")
-    v = vs[-1] if version is None else version
-    if v not in vs:
-        raise FileNotFoundError(f"no version {v} at {table_dir}")
+    m = _head(table_dir, version)
+    v = m["version"]
     store = get_store()
     bdir = _branch_dir(table_dir, name)
     if os.path.exists(bdir) or store.exists(bdir):
@@ -148,7 +145,6 @@ def create_branch(
             except OSError:
                 # symlink-less filesystem: fall back to the prefix map
                 meta["data_dir"] = os.path.abspath(_data_dir(table_dir))
-        m = _read_manifest(table_dir, v)
         _publish_exclusive(
             _manifest_path(bdir, v), m,
             f"branch seed v{v} already exists",
@@ -291,12 +287,8 @@ def clone_table(
     the clone still reads. Dropping that tag (`delete_tag`) is the
     operator's declaration that the clone is abandoned — the same
     caveat Delta documents for shallow clones."""
-    vs = versions(table_dir)
-    if not vs:
-        raise FileNotFoundError(f"no versions at {table_dir}")
-    v = vs[-1] if version is None else version
-    if v not in vs:
-        raise FileNotFoundError(f"no version {v} at {table_dir}")
+    m = _head(table_dir, version)
+    v = m["version"]
     store = get_store()
     if os.path.exists(dest_dir) or store.exists(dest_dir):
         raise FileExistsError(f"clone destination exists: {dest_dir}")
@@ -304,7 +296,6 @@ def clone_table(
     tag_version(table_dir, tag, v)
     try:
         store.claim_dir(_manifest_dir(dest_dir))
-        m = _read_manifest(table_dir, v)
         _publish_exclusive(
             _manifest_path(dest_dir, v), m,
             f"clone seed v{v} already exists",

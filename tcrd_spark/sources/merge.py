@@ -13,14 +13,10 @@ operation:
 row-local CASE arms — no windows, no second pass. SCD-1 semantics
 (matched rows take the source's non-key columns).
 
-`merge_partitioned_write` is the 100 TB deployment: a merge must NOT
-rewrite the table. The affected-partition set is computed from the
-source (distinct partition values — small, collected as a pruning
-predicate), the target is read WITH that partition filter (pruned
-scan), merged, and written back in dynamic partition-overwrite mode —
-so bytes touched scale with the CHANGE, not the table. Unaffected
-partition files are untouched on disk (mtime-asserted in
-tests/test_merge.py).
+The versioned lake's copy-on-write MERGE (`snapshots.merge_version`)
+runs `merge_frames` over only the files a source can match and
+commits the result as new files, so bytes touched scale with the
+CHANGE, not the table.
 
 Oracle-adjudicated as `merge_upsert` (full-outer-join CASE twin).
 """
@@ -72,45 +68,6 @@ def merge_frames(
         (matched & F.expr(delete_condition or "false")).alias("_del"),
     )
     return out.where(~F.col("_del")).drop("_del")
-
-
-def affected_partitions(source: DataFrame, part_col: str) -> list:
-    """Distinct partition values present in the source — small by the
-    merge contract (a merge touches few partitions); collected to
-    build the target's pruning predicate."""
-    return [
-        r[part_col]
-        for r in source.select(part_col).distinct().collect()
-    ]
-
-
-def merge_partitioned_write(
-    spark: SparkSession,
-    table_dir: str,
-    source: DataFrame,
-    keys: list[str],
-    part_col: str,
-    delete_condition: str | None = None,
-) -> list:
-    """Partition-pruned MERGE into a partitioned parquet table:
-    reads ONLY the partitions the source touches, merges, overwrites
-    ONLY those partitions (dynamic partitionOverwriteMode). Returns
-    the affected partition values."""
-    parts = affected_partitions(source, part_col)
-    target = spark.read.parquet(table_dir).where(
-        F.col(part_col).isin(parts)
-    )
-    merged = merge_frames(
-        target.select(source.columns), source, keys, delete_condition
-    )
-    (
-        merged.repartition(part_col)
-        .write.partitionBy(part_col)
-        .option("partitionOverwriteMode", "dynamic")
-        .mode("overwrite")
-        .parquet(table_dir)
-    )
-    return parts
 
 
 # ------------------------------------------------- registered queries

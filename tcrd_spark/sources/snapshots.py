@@ -19,12 +19,17 @@ Minimal honest design, the same shape the real formats use:
   (``read_version``): old versions stay byte-identically readable
   after any number of later commits, and at scale the read never
   pays an object-store LIST;
-- ``merge_version`` is copy-on-write at PARTITION granularity: the
-  source's affected partitions are read from the current snapshot
-  (pruned), merged (`merge_frames`), and written as NEW files; the
-  next manifest carries the untouched partitions' OLD files forward
-  by reference. Bytes written ∝ change, exactly like
-  `merge_partitioned_write` — but the previous version survives.
+- ``merge_version`` is copy-on-write at FILE granularity: the files
+  of the source's partitions whose key zone map overlaps that
+  partition's source key range are read from the current snapshot,
+  merged (`merge_frames`), and written as NEW files; the next
+  manifest carries every other file forward by reference. Bytes
+  written ∝ change, and the previous version survives;
+- every verb reads through one scan (`_scan`: manifest columns in
+  order, deletion vectors applied, evolved columns typed NULL),
+  plans merge candidates through one zone-map planner
+  (`_candidate_files`) and publishes deletion vectors through one
+  commit (`_publish_marks`).
 
 Commit protocol: every metadata object (manifest, tag, branch meta)
 publishes through the active store's atomic PUT-IF-ABSENT
@@ -51,7 +56,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from tcrd_spark.sources.merge import affected_partitions, merge_frames
+from tcrd_spark.sources.merge import merge_frames
 from tcrd_spark.sources.metastore import (  # metadata-plane seam
     _WIP_TIMEOUT,  # noqa: F401  (tests pin the posix protocol via here)
     _fallback_publish,  # noqa: F401
@@ -119,66 +124,75 @@ def _dv_dir(table_dir: str) -> str:
     return os.path.join(os.path.dirname(base), "_dv")
 
 
-def _dv_df(spark: SparkSession, table_dir: str, m: dict):
-    """The manifest's deletion-vector index as a ('file','pos')
-    DataFrame, or None when the snapshot has no DVs."""
-    names = m.get("dv") or []
+def _dv_df(spark: SparkSession, table_dir: str, names: list[str] | None):
+    """The named DV sidecars as one ('_rf', '_ri') DataFrame — the
+    (file, row index) pair `_scan` tags each row with — or None when
+    there are none."""
     if not names:
         return None
     return spark.read.parquet(
         *[os.path.join(_dv_dir(table_dir), n) for n in names]
-    )
+    ).select(F.col("file").alias("_rf"), F.col("pos").alias("_ri"))
 
 
 def _rel_file():
     """'part=val/vNNNNN-xxx.parquet' from the scan's file metadata —
-    the manifest-relative path (one hive level, the layout contract)."""
-    return F.regexp_extract(
+    the manifest-relative path (one hive level, the layout contract).
+    `_metadata.file_path` is a URI: percent-decode it so a partition
+    value Spark escapes ('a b' is 'a%20b' there) matches its manifest
+    name; '+' is literal in a URI path, so it is protected first."""
+    rel = F.regexp_extract(
         F.col("_metadata.file_path"), r"([^/]+/[^/]+)$", 1
     )
+    return F.url_decode(F.regexp_replace(rel, r"\+", "%2B"))
 
 
-def _dv_marked_rows(
-    spark: SparkSession, base: str, files: list[str], dvdf: DataFrame
+def _scan(
+    spark: SparkSession,
+    table_dir: str,
+    m: dict,
+    files: list[str],
+    positions: bool = False,
 ) -> DataFrame:
-    """The full rows a DV frame marks inside `files` — inner join of
-    the file scan with the (file, pos) set (read_changes' CDC delta
-    materialization)."""
-    marked = dvdf.select(
-        F.col("file").alias("_dv_file"), F.col("pos").alias("_dv_pos")
-    )
-    rows = (
-        spark.read.option("basePath", base)
-        .option("mergeSchema", "true")  # pre-evolution files read NULL
-        .parquet(*[os.path.join(base, f) for f in files])
-        .withColumn("_rf", _rel_file())
-        .withColumn("_ri", F.col("_metadata.row_index"))
-    )
-    return rows.join(
-        F.broadcast(marked),
-        (F.col("_rf") == F.col("_dv_file"))
-        & (F.col("_ri") == F.col("_dv_pos")),
-    )
+    """The VISIBLE rows of `files` under manifest `m`, columns in
+    manifest order — the one read every snapshot verb plans through.
 
+    mergeSchema lets files from before an additive evolution
+    (append_version(merge_schema=True)) read the new column as NULL; a
+    manifest column that NO file in the subset holds comes back as a
+    NULL typed from the snapshot's footer schema (footers only, no
+    data read). The manifest's DV index is anti-joined on (relative
+    file, parquet row index) — broadcast, small by the mode's
+    contract. `positions=True` carries that pair as `_rf`/`_ri`,
+    captured as plain columns on the raw scan before any join
+    (metadata columns don't survive arbitrary plan shapes). An empty
+    `files` is the snapshot's empty frame."""
+    if not files and m["files"]:
+        return _scan(spark, table_dir, m, m["files"], positions).limit(0)
+    base = _data_dir(table_dir)
 
-def _apply_dv(df: DataFrame, dvdf: DataFrame) -> DataFrame:
-    """Drop DV-marked rows from a RAW FILE SCAN (the frame must still
-    carry `_metadata`; apply before any select). Broadcast anti-join:
-    the DV index is small by the mode's contract. Join columns are
-    materialized first — the sidecar is itself a parquet scan, so
-    referencing `_metadata` inside the join condition is ambiguous."""
-    marked = dvdf.select(
-        F.col("file").alias("_dv_file"), F.col("pos").alias("_dv_pos")
-    )
-    tagged = df.withColumn("_rf", _rel_file()).withColumn(
-        "_ri", F.col("_metadata.row_index")
-    )
-    return tagged.join(
-        F.broadcast(marked),
-        (F.col("_rf") == F.col("_dv_file"))
-        & (F.col("_ri") == F.col("_dv_pos")),
-        "left_anti",
-    ).drop("_rf", "_ri")
+    def read(fs: list[str]) -> DataFrame:
+        return (
+            spark.read.option("basePath", base)
+            .option("mergeSchema", "true")
+            .parquet(*[os.path.join(base, f) for f in fs])
+        )
+
+    df = read(files)
+    dv = _dv_df(spark, table_dir, m.get("dv"))
+    if positions or dv is not None:
+        df = df.withColumn("_rf", _rel_file()).withColumn(
+            "_ri", F.col("_metadata.row_index")
+        )
+    if dv is not None:
+        df = df.join(F.broadcast(dv), ["_rf", "_ri"], "left_anti")
+    missing = [c for c in m["columns"] if c not in df.columns]
+    if missing:
+        typed = read(m["files"]).schema
+        df = df.select("*", *[
+            F.lit(None).cast(typed[c].dataType).alias(c) for c in missing
+        ])
+    return df.select(*m["columns"], *(["_rf", "_ri"] if positions else []))
 
 
 def versions(table_dir: str) -> list[int]:
@@ -210,6 +224,25 @@ def _read_manifest_opt(table_dir: str, version: int) -> dict | None:
         return _read_manifest(table_dir, version)
     except FileNotFoundError:
         return None
+
+
+def _head(table_dir: str, version: int | None = None) -> dict:
+    """The manifest of `version` (default: the newest) — the prologue
+    of every verb. Raises FileNotFoundError when the table has no
+    versions or lacks the named one. The listed head can be repaired
+    away between listing and read (an aborted fallback commit), so an
+    unnamed head re-resolves once."""
+    vs = versions(table_dir)
+    if not vs:
+        raise FileNotFoundError(f"no versions at {table_dir}")
+    if version is None:
+        m = _read_manifest_opt(table_dir, vs[-1])
+        if m is not None:
+            return m
+        version = (versions(table_dir) or vs)[-1]
+    elif version not in vs:
+        raise FileNotFoundError(f"no version {version} at {table_dir}")
+    return _read_manifest(table_dir, version)
 
 
 def _publish_exclusive(final: str, obj: dict, errmsg: str) -> None:
@@ -364,29 +397,8 @@ def read_version(
     """The table exactly as of `version` (default: latest). Plans
     from the manifest's file list — no directory listing, and later
     commits never change what this returns."""
-    vs = versions(table_dir)
-    if not vs:
-        raise FileNotFoundError(f"no versions at {table_dir}")
-    v = vs[-1] if version is None else version
-    m = _read_manifest(table_dir, v)
-    base = _data_dir(table_dir)
-    paths = [os.path.join(base, rel) for rel in m["files"]]
-    # mergeSchema: files from before a column was added (schema
-    # evolution via append_version(merge_schema=True)) surface the
-    # missing column as NULL. A production manifest would persist the
-    # full schema and skip the footer merge; the semantics are the
-    # same.
-    df = (
-        spark.read.option("basePath", base)
-        .option("mergeSchema", "true")
-        .parquet(*paths)
-    )
-    dv = _dv_df(spark, table_dir, m)
-    if dv is not None:
-        df = _apply_dv(df, dv)
-    # hive reads surface the partition column last; restore the
-    # committed column order so a snapshot read is schema-stable
-    return df.select(*m["columns"])
+    m = _head(table_dir, version)
+    return _scan(spark, table_dir, m, m["files"])
 
 
 # ------------------------------------------------ walk checkpoints
@@ -467,10 +479,7 @@ def checkpoint_manifests(table_dir: str) -> int:
     reads per commit under the auto-checkpoint cadence. Idempotent
     per head version (exclusive publish; a concurrent writer's
     identical checkpoint wins harmlessly)."""
-    vs = versions(table_dir)
-    if not vs:
-        raise FileNotFoundError(f"no versions at {table_dir}")
-    head = vs[-1]
+    head = _head(table_dir)["version"]
     entries = {
         str(v): e for v, e in _walk_headers(table_dir).items()
     }
@@ -564,23 +573,10 @@ def read_version_pruned(
     """`read_version` + `col BETWEEN lo AND hi`, planning ONLY the
     files the zone maps admit; the exact predicate is re-applied so
     results equal the unpruned filter exactly (pytest-pinned)."""
-    vs = versions(table_dir)
-    if not vs:
-        raise FileNotFoundError(f"no versions at {table_dir}")
-    v = vs[-1] if version is None else version
-    m = _read_manifest(table_dir, v)
-    kept, _total = plan_files(table_dir, v, col, lo, hi)
+    m = _head(table_dir, version)
+    kept, _total = plan_files(table_dir, m["version"], col, lo, hi)
     pred = (F.col(col) >= F.lit(lo)) & (F.col(col) <= F.lit(hi))
-    if not kept:
-        return read_version(spark, table_dir, v).where(pred).limit(0)
-    base = _data_dir(table_dir)
-    df = spark.read.option("basePath", base).parquet(
-        *[os.path.join(base, f) for f in kept]
-    )
-    dv = _dv_df(spark, table_dir, m)
-    if dv is not None:
-        df = _apply_dv(df, dv)
-    return df.select(*m["columns"]).where(pred)
+    return _scan(spark, table_dir, m, kept).where(pred)
 
 
 def append_version(
@@ -601,13 +597,10 @@ def append_version(
     mergeSchema): the frame may carry NEW columns (it must still hold
     every existing one); they append to the committed column order,
     and snapshots containing pre-evolution files read them as NULL."""
-    vs = versions(table_dir)
-    if not vs:
-        raise FileNotFoundError(f"no versions at {table_dir}")
+    m = _head(table_dir)
     if txn_id is not None and txn_seen(table_dir, txn_id):
         return None  # already committed: replay is a no-op
-    cur_v = vs[-1]
-    m = _read_manifest(table_dir, cur_v)
+    cur_v = m["version"]
     cols = m["columns"]
     extra = [c for c in df.columns if c not in cols]
     if extra and not merge_schema:
@@ -773,6 +766,102 @@ def txn_seen(table_dir: str, txn_id) -> bool:
     return False
 
 
+def _candidate_files(
+    m: dict, source: DataFrame, key: str, by_partition: bool
+) -> list[str]:
+    """The files of snapshot `m` that a MERGE source could match — one
+    zone-map planner on the first merge key (a match needs equality
+    on every key, so the first alone is sound), one aggregate job.
+
+    `by_partition` (the copy-on-write merge) takes the source's key
+    [min, max] per partition value and keeps only files in the
+    source's partitions whose key range overlaps it — sound under
+    merge_version's contract that a key's partition never changes.
+    Otherwise (the merge-on-read merge, which finds matches by key
+    wherever they live) one table-wide range. A file without stats
+    for the key is always kept."""
+    part_col = m["part_col"]
+    groups = [part_col] if by_partition else []
+    ranges = {
+        (f"{part_col}={r[part_col]}" if by_partition else None):
+            (r["_lo"], r["_hi"])
+        for r in source.groupBy(*groups).agg(
+            F.min(key).alias("_lo"), F.max(key).alias("_hi")
+        ).collect()
+    }
+    stats = m.get("stats", {})
+    out = []
+    for f in m["files"]:
+        rng = ranges.get(_partition_of(f) if by_partition else None)
+        if rng is None:
+            continue
+        s = stats.get(f, {}).get(key)
+        if s is None or (
+            rng[0] is not None and s[0] <= rng[1] and rng[0] <= s[1]
+        ):
+            out.append(f)
+    return out
+
+
+def _rewrite_commit(
+    table_dir: str, m: dict, df: DataFrame, touched: list[str],
+    header: dict,
+) -> int:
+    """The copy-on-write commit: `df` staged as new files replaces
+    `touched`; every other file carries forward by reference with its
+    zone map. Carried files keep their live DV entries; entries for
+    the rewritten files just became inert (names left the list), so a
+    commit that carries nothing clears the list."""
+    v, part_col = m["version"] + 1, m["part_col"]
+    new_files, new_stats = _stage_files(
+        df.repartition(part_col), table_dir, part_col, v
+    )
+    gone = set(touched)
+    keep = [f for f in m["files"] if f not in gone]
+    stats = m.get("stats", {})
+    _commit(table_dir, {
+        "version": v, "parent": m["version"], **header,
+        "part_col": part_col, "columns": m["columns"],
+        "files": sorted(keep + new_files),
+        "stats": {**{f: stats[f] for f in keep if f in stats}, **new_stats},
+        "dv": m.get("dv", []) if keep else [],
+    })
+    return v
+
+
+def _publish_marks(
+    table_dir: str, m: dict, marks: DataFrame | None, header: dict,
+    new_files: list[str] | None = None, new_stats: dict | None = None,
+) -> int:
+    """The one deletion-vector commit: write `marks` ((file, pos)
+    rows; None marks nothing) as a sidecar under `_dv/`, then publish
+    the next manifest — `m`'s files plus `new_files`, its dv list
+    plus the sidecar. A lost CAS reclaims the sidecar before
+    re-raising; staged data files are unreferenced orphans
+    `remove_orphans` sweeps."""
+    v = m["version"] + 1
+    dv, out = list(m.get("dv", [])), None
+    if marks is not None:
+        name = f"v{v:05d}-{uuid.uuid4().hex[:8]}"
+        out = os.path.join(_dv_dir(table_dir), name)
+        # positions, not data: kilobytes for a targeted change
+        marks.coalesce(1).write.parquet(out)
+        dv.append(name)
+    try:
+        _commit(table_dir, {
+            "version": v, "parent": m["version"], **header, "mode": "dv",
+            "part_col": m["part_col"], "columns": m["columns"],
+            "files": sorted(m["files"] + (new_files or [])),
+            "stats": {**m.get("stats", {}), **(new_stats or {})},
+            "dv": dv,
+        })
+    except FileExistsError:
+        if out is not None:
+            shutil.rmtree(out, ignore_errors=True)
+        raise
+    return v
+
+
 def merge_version(
     spark: SparkSession,
     table_dir: str,
@@ -783,27 +872,27 @@ def merge_version(
     granularity: str = "partition",
     txn_id: int | str | None = None,
 ) -> int | None:
-    """Copy-on-write MERGE commit. The previous version stays
-    readable byte-identically; untouched files carry forward by
-    reference.
+    """MERGE commit. The previous version stays readable
+    byte-identically; untouched files carry forward by reference.
 
-    ``granularity="partition"`` (default): rewrite the partitions the
-    source touches — sound with no stats, but a coarse partition
-    scheme rewrites (and later CDC-scans) far more than the change.
+    ``granularity="partition"`` (default) is copy-on-write: it
+    rewrites ONLY the files of the source's partitions whose key zone
+    map overlaps that partition's source key range (`_candidate_files`;
+    a file with no stats for the key is rewritten). Contract: a key's
+    partition value never changes. With a key-clustered layout
+    (OPTIMIZE ZORDER) a narrow-key batch touches a handful of files,
+    and an insert-only batch of keys above every file's range
+    rewrites none; the CDC feed's cost follows.
 
-    ``granularity="file"``: the Delta MERGE shape — rewrite ONLY the
-    files whose key ZONE MAP intersects a source key (zone maps are
-    sound: a file that could contain a matched key is always
-    rewritten; a file with no stats for the key is conservatively
-    rewritten). With a key-clustered layout (OPTIMIZE ZORDER), a
-    narrow-key batch touches a handful of files regardless of the
-    partition scheme, and the CDC feed's cost follows. The match is
-    distributed: the kilobyte file-range frame broadcast-semi-joins
-    the source's distinct keys — no driver-side key list. Single-key
-    tables only (composite keys fall back to partition granularity)."""
-    vs = versions(table_dir)
-    if not vs:
-        raise FileNotFoundError(f"no versions at {table_dir}")
+    ``granularity="dv"`` is merge-on-read (`_merge_dv`): matched rows
+    are position-marked, the source's effect appended, no file
+    rewritten. Any other value raises ValueError."""
+    if granularity not in ("partition", "dv"):
+        raise ValueError(
+            f"merge granularity must be 'partition' or 'dv': "
+            f"{granularity!r}"
+        )
+    m = _head(table_dir)
     if txn_id is not None and txn_seen(table_dir, txn_id):
         # the append_version idempotence contract (Delta txnAppId):
         # an at-least-once streaming sink re-offering a replayed
@@ -811,73 +900,18 @@ def merge_version(
         return None
     if expectations:
         _enforce_expectations(source, expectations)
-    cur_v = vs[-1]
-    m = _read_manifest(table_dir, cur_v)
-    part_col = m["part_col"]
     if granularity == "dv":
         return _merge_dv(
             spark, table_dir, m, source, keys, delete_condition, txn_id
         )
-    if granularity == "file" and len(keys) == 1:
-        key = keys[0]
-        stats = m.get("stats", {})
-        no_stats = [
-            f for f in m["files"] if stats.get(f, {}).get(key) is None
-        ]
-        ranged = [
-            (f, stats[f][key][0], stats[f][key][1])
-            for f in m["files"]
-            if stats.get(f, {}).get(key) is not None
-        ]
-        hit: set[str] = set()
-        if ranged:
-            rng = spark.createDataFrame(ranged, ["_f", "_lo", "_hi"])
-            hit = {
-                r["_f"]
-                for r in rng.join(
-                    F.broadcast(source.select(key).distinct()),
-                    (F.col(key) >= F.col("_lo"))
-                    & (F.col(key) <= F.col("_hi")),
-                    "left_semi",
-                ).collect()
-            }
-        touched = sorted(hit | set(no_stats))
-        keep = [f for f in m["files"] if f not in set(touched)]
-    else:
-        parts = affected_partitions(source, part_col)
-        hive = {f"{part_col}={p}" for p in parts}
-        keep = [f for f in m["files"] if _partition_of(f) not in hive]
-        touched = [f for f in m["files"] if _partition_of(f) in hive]
-    base = _data_dir(table_dir)
-    if touched:
-        target = spark.read.option("basePath", base).parquet(
-            *[os.path.join(base, f) for f in touched]
-        )
-        dv = _dv_df(spark, table_dir, m)
-        if dv is not None:  # rewrite from the DV-APPLIED state
-            target = _apply_dv(target, dv)
-    else:  # merge into partitions the table has never seen
-        target = read_version(spark, table_dir, cur_v).limit(0)
+    touched = _candidate_files(m, source, keys[0], by_partition=True)
     merged = merge_frames(
-        target.select(source.columns), source, keys, delete_condition
+        _scan(spark, table_dir, m, touched).select(source.columns),
+        source, keys, delete_condition,
     )
-    new_files, new_stats = _stage_files(
-        merged.repartition(part_col), table_dir, part_col, cur_v + 1
+    return _rewrite_commit(
+        table_dir, m, merged, touched, {"op": "merge", "txn_id": txn_id}
     )
-    kept_stats = {
-        f: s for f, s in m.get("stats", {}).items() if f in set(keep)
-    }
-    _commit(table_dir, {
-        "version": cur_v + 1, "parent": cur_v, "op": "merge",
-        "part_col": part_col, "columns": m["columns"],
-        "txn_id": txn_id,
-        "files": sorted(keep + new_files),
-        "stats": {**kept_stats, **new_stats},
-        # carried files keep their live DV entries; entries for the
-        # rewritten files just became inert (names left the list)
-        "dv": m.get("dv", []) if keep else [],
-    })
-    return cur_v + 1
 
 
 def _merge_dv(
@@ -897,91 +931,39 @@ def _merge_dv(
     ever rewritten: bytes moved ∝ source size, so a narrow CDC batch
     against a 100 TB table costs kilobytes of sidecar plus the batch
     itself — regardless of partition scheme OR clustering (the
-    rewrite granularities need zone-map luck to touch few files; this
+    rewrite granularity needs zone-map luck to touch few files; this
     needs none). Semantics mirror `merge_frames` exactly (SCD-1:
     update matched, insert unmatched-source, keep unmatched-target;
     `delete_condition` is SQL over the s-aliased source columns) —
     pytest-pinned row-identical to the partition-rewrite merge. One
-    contract RELAXATION vs the rewrite modes: matches are found by
+    contract RELAXATION vs the rewrite mode: matches are found by
     key across the whole table (zone-map-scoped, not
     partition-scoped) and old copies are position-marked, so CDC
     tombstones and partition-moving updates whose source rows carry a
     different partition value apply correctly instead of stranding
     the old copy."""
-    cur_v = m["version"]
-    base = _data_dir(table_dir)
-    part_col = m["part_col"]
     if source.columns != m["columns"]:
         raise ValueError(
             f"merge schemas differ: {source.columns} vs {m['columns']}"
         )
     # candidate scope is an OPTIMIZATION only (nothing here is
     # rewritten, so an over-wide scan costs read time, never
-    # correctness): single-key merges prune by the key zone maps;
-    # otherwise scan everything. Deliberately NOT partition-scoped —
-    # the COW merge's "a key's partition never changes" contract does
-    # not bind here, because matches are found by KEY wherever they
-    # live and old copies are position-marked (a CDC tombstone or
-    # partition-moving update whose source row carries a different
-    # partition value still finds and kills the old copy).
-    if len(keys) == 1:
-        key = keys[0]
-        stats = m.get("stats", {})
-        no_stats = [
-            f for f in m["files"] if stats.get(f, {}).get(key) is None
-        ]
-        ranged = [
-            (f, stats[f][key][0], stats[f][key][1])
-            for f in m["files"]
-            if stats.get(f, {}).get(key) is not None
-        ]
-        hit: set[str] = set()
-        if ranged:
-            rng = spark.createDataFrame(ranged, ["_f", "_lo", "_hi"])
-            hit = {
-                r["_f"]
-                for r in rng.join(
-                    F.broadcast(source.select(key).distinct()),
-                    (F.col(key) >= F.col("_lo"))
-                    & (F.col(key) <= F.col("_hi")),
-                    "left_semi",
-                ).collect()
-            }
-        touched = sorted(hit | set(no_stats))
-    else:
-        touched = list(m["files"])
+    # correctness) and deliberately NOT partition-scoped: matches are
+    # found by KEY wherever they live
+    touched = _candidate_files(m, source, keys[0], by_partition=False)
     marks = None
     if touched:
-        target = (
-            spark.read.option("basePath", base)
-            .option("mergeSchema", "true")
-            .parquet(*[os.path.join(base, f) for f in touched])
-        )
-        dv = _dv_df(spark, table_dir, m)
-        if dv is not None:  # only VISIBLE rows can match
-            target = _apply_dv(target, dv)
-        # meta captured as plain columns BEFORE the join (metadata
-        # columns don't survive arbitrary plan shapes)
-        t = (
-            target.withColumn("_rf", _rel_file())
-            .withColumn("_ri", F.col("_metadata.row_index"))
-            .alias("t")
-        )
+        # only VISIBLE rows can match
+        t = _scan(spark, table_dir, m, touched, positions=True).alias("t")
         cond = None
         for k in keys:
             c = F.col(f"t.{k}") == F.col(f"s.{k}")
             cond = c if cond is None else (cond & c)
-        marks = (
-            t.join(source.alias("s"), cond, "left_semi")
-            .select(
-                F.col("_rf").alias("file"), F.col("_ri").alias("pos")
-            )
+        matched = t.join(source.alias("s"), cond, "left_semi")
+        marks = matched.select(
+            F.col("_rf").alias("file"), F.col("_ri").alias("pos")
         )
-        matched_keys = (
-            t.join(source.alias("s"), cond, "left_semi")
-            .select(*keys)
-            .distinct()
-        )
+        matched_keys = matched.select(*keys).distinct()
     else:
         matched_keys = source.select(*keys).limit(0)
     # the source's effect: matched rows update (append the SOURCE
@@ -1000,27 +982,17 @@ def _merge_dv(
             & F.expr(delete_condition or "false")
         )
     ).select(*[F.col(f"s.{c}") for c in m["columns"]])
+    part_col = m["part_col"]
     new_files, new_stats = _stage_files(
-        appends.repartition(part_col), table_dir, part_col, cur_v + 1
+        appends.repartition(part_col), table_dir, part_col,
+        m["version"] + 1,
     )
-    dv_list = list(m.get("dv", []))
-    if marks is not None:
-        name = f"v{cur_v + 1:05d}-{uuid.uuid4().hex[:8]}"
-        out = os.path.join(_dv_dir(table_dir), name)
-        marks.coalesce(1).write.parquet(out)
-        # an all-unmatched source writes an EMPTY sidecar — keep it
-        # (referencing it is harmless; pruning would need a count)
-        dv_list.append(name)
-    _commit(table_dir, {
-        "version": cur_v + 1, "parent": cur_v, "op": "merge",
-        "mode": "dv",
-        "part_col": part_col, "columns": m["columns"],
-        "txn_id": txn_id,
-        "files": sorted(m["files"] + new_files),
-        "stats": {**m.get("stats", {}), **new_stats},
-        "dv": dv_list,
-    })
-    return cur_v + 1
+    # an all-unmatched source writes an EMPTY sidecar — kept
+    # (referencing it is harmless; pruning would need a count)
+    return _publish_marks(
+        table_dir, m, marks, {"op": "merge", "txn_id": txn_id},
+        new_files, new_stats,
+    )
 
 
 def _sql_lit(v) -> str:
@@ -1077,81 +1049,62 @@ def delete_version(
     deletes are LOGICAL-only until a rewrite materializes them, so
     physical GDPR erasure under dv mode additionally needs a later
     optimize/merge + vacuum."""
-    vs = versions(table_dir)
-    if not vs:
-        raise FileNotFoundError(f"no versions at {table_dir}")
-    cur_v = vs[-1]
-    m = _read_manifest(table_dir, cur_v)
-    base = _data_dir(table_dir)
-    if prune is not None:
-        pcol, lo, hi = prune
-        # the range becomes part of the delete's semantics, so the
-        # file-level prune below is implied by the predicate — the
-        # read_version_pruned discipline (predicate IS the range)
-        predicate = (
-            f"(({predicate}) AND {pcol} >= {_sql_lit(lo)} "
-            f"AND {pcol} <= {_sql_lit(hi)})"
-        )
-        cand, _total = plan_files(table_dir, cur_v, pcol, lo, hi)
-    else:
-        cand = list(m["files"])
+    if mode not in ("rewrite", "dv"):
+        raise ValueError(f"delete mode must be 'rewrite' or 'dv': {mode!r}")
+    m = _head(table_dir)
+    cur_v = m["version"]
+    predicate, cand = _scoped(table_dir, m, predicate, prune)
     if not cand:
         return cur_v, 0
+    # only still-VISIBLE rows count as matches (which also keeps dv
+    # sidecars DISJOINT)
+    src = _scan(spark, table_dir, m, cand, positions=True)
     if mode == "dv":
-        return _delete_dv(spark, table_dir, m, cand, predicate)
-    if mode != "rewrite":
-        raise ValueError(f"delete mode must be 'rewrite' or 'dv': {mode!r}")
-    dv = _dv_df(spark, table_dir, m)
-    src = (
-        spark.read.option("basePath", base)
-        .option("mergeSchema", "true")
-        .parquet(*[os.path.join(base, f) for f in cand])
-        # manifest-relative path captured from the scan's metadata
-        # BEFORE any join — input_file_name() refuses plans with a
-        # second source (the DV anti-join adds one), and the metadata
-        # column already speaks relative paths (no URI parsing)
-        .withColumn("_f", _rel_file())
+        hits = src.where(predicate).select(
+            F.col("_rf").alias("file"), F.col("_ri").alias("pos")
+        )
+        hits.persist()
+        try:
+            n_deleted = hits.count()
+            if n_deleted == 0:
+                return cur_v, 0
+            header = {"op": "delete", "predicate": predicate}
+            return _publish_marks(table_dir, m, hits, header), n_deleted
+        finally:
+            hits.unpersist()
+    touched = sorted(
+        r._rf for r in src.where(predicate).select("_rf").distinct().collect()
     )
-    if dv is not None:  # only still-VISIBLE rows count as matches
-        src = _apply_dv(src, dv)
-    hits = {
-        r._f
-        for r in src.where(predicate).select("_f").distinct().collect()
-    }
-    if not hits:
+    if not touched:
         return cur_v, 0
-    touched = sorted(hits)
-    keep = [f for f in m["files"] if f not in hits]
-    tdf = (
-        spark.read.option("basePath", base)
-        .option("mergeSchema", "true")
-        .parquet(*[os.path.join(base, f) for f in touched])
-    )
-    if dv is not None:  # rewrite from the DV-APPLIED state
-        tdf = _apply_dv(tdf, dv)
-    n_before = tdf.count()
+    tdf = _scan(spark, table_dir, m, touched)
     # NOT(pred) is NULL for NULL-pred rows and would drop them too —
     # survivors are rows where the predicate is not TRUE
-    survivors = tdf.where(f"NOT coalesce(({predicate}), false)").select(
-        *m["columns"]
+    n_deleted = tdf.where(f"coalesce(({predicate}), false)").count()
+    survivors = tdf.where(f"NOT coalesce(({predicate}), false)")
+    return _rewrite_commit(
+        table_dir, m, survivors, touched,
+        {"op": "delete", "predicate": predicate},
+    ), n_deleted
+
+
+def _scoped(
+    table_dir: str, m: dict, predicate: str,
+    prune: tuple[str, object, object] | None,
+) -> tuple[str, list[str]]:
+    """(effective predicate, candidate files) of a predicate verb.
+    `prune=(col, lo, hi)` CONJOINS the range into the predicate, which
+    makes the zone-map prune of the candidates sound by construction
+    (the read_version_pruned discipline: the predicate IS the
+    range)."""
+    if prune is None:
+        return predicate, list(m["files"])
+    pcol, lo, hi = prune
+    predicate = (
+        f"(({predicate}) AND {pcol} >= {_sql_lit(lo)} "
+        f"AND {pcol} <= {_sql_lit(hi)})"
     )
-    part_col = m["part_col"]
-    n_deleted = n_before - survivors.count()
-    new_files, new_stats = _stage_files(
-        survivors.repartition(part_col), table_dir, part_col, cur_v + 1
-    )
-    kept_stats = {
-        f: s for f, s in m.get("stats", {}).items() if f in set(keep)
-    }
-    _commit(table_dir, {
-        "version": cur_v + 1, "parent": cur_v, "op": "delete",
-        "predicate": predicate,
-        "part_col": part_col, "columns": m["columns"],
-        "files": sorted(keep + new_files),
-        "stats": {**kept_stats, **new_stats},
-        "dv": m.get("dv", []) if keep else [],
-    })
-    return cur_v + 1, n_deleted
+    return predicate, plan_files(table_dir, m["version"], pcol, lo, hi)[0]
 
 
 def update_version(
@@ -1177,39 +1130,15 @@ def update_version(
     update_pre/update_post pair, so incremental maintenance folds it
     identically. Returns (version, n_updated); no commit when nothing
     matches. Bulk updates belong to merge_version (COW)."""
-    vs = versions(table_dir)
-    if not vs:
-        raise FileNotFoundError(f"no versions at {table_dir}")
-    cur_v = vs[-1]
-    m = _read_manifest(table_dir, cur_v)
+    m = _head(table_dir)
+    cur_v = m["version"]
     unknown = [c for c in set_exprs if c not in m["columns"]]
     if unknown:
         raise ValueError(f"set columns not in table: {unknown}")
-    base = _data_dir(table_dir)
-    if prune is not None:
-        pcol, lo, hi = prune
-        condition = (
-            f"(({condition}) AND {pcol} >= {_sql_lit(lo)} "
-            f"AND {pcol} <= {_sql_lit(hi)})"
-        )
-        cand, _total = plan_files(table_dir, cur_v, pcol, lo, hi)
-    else:
-        cand = list(m["files"])
+    condition, cand = _scoped(table_dir, m, condition, prune)
     if not cand:
         return cur_v, 0
-    src = (
-        spark.read.option("basePath", base)
-        .option("mergeSchema", "true")
-        .parquet(*[os.path.join(base, f) for f in cand])
-    )
-    dv = _dv_df(spark, table_dir, m)
-    if dv is not None:
-        src = _apply_dv(src, dv)
-    hits = src.where(condition).select(
-        _rel_file().alias("_dv_mark_file"),
-        F.col("_metadata.row_index").alias("_dv_mark_pos"),
-        *m["columns"],
-    )
+    hits = _scan(spark, table_dir, m, cand, positions=True).where(condition)
     hits.persist()
     try:
         n_updated = hits.count()
@@ -1223,77 +1152,14 @@ def update_version(
             updated.repartition(part_col), table_dir, part_col,
             cur_v + 1,
         )
-        name = f"v{cur_v + 1:05d}-{uuid.uuid4().hex[:8]}"
-        out = os.path.join(_dv_dir(table_dir), name)
-        hits.select(
-            F.col("_dv_mark_file").alias("file"),
-            F.col("_dv_mark_pos").alias("pos"),
-        ).coalesce(1).write.parquet(out)
-        try:
-            _commit(table_dir, {
-                "version": cur_v + 1, "parent": cur_v, "op": "update",
-                "mode": "dv", "predicate": condition,
-                "set": dict(set_exprs),
-                "part_col": part_col, "columns": m["columns"],
-                "files": sorted(m["files"] + new_files),
-                "stats": {**m.get("stats", {}), **new_stats},
-                "dv": m.get("dv", []) + [name],
-            })
-        except FileExistsError:
-            # lost the CAS: reclaim the sidecar now; the staged data
-            # files are unreferenced orphans remove_orphans sweeps
-            shutil.rmtree(out, ignore_errors=True)
-            raise
-        return cur_v + 1, n_updated
-    finally:
-        hits.unpersist()
-
-
-def _delete_dv(
-    spark: SparkSession,
-    table_dir: str,
-    m: dict,
-    cand: list[str],
-    predicate: str,
-) -> tuple[int, int]:
-    """The merge-on-read delete body: mark matching VISIBLE rows in a
-    (file, pos) sidecar; the manifest's file list never changes."""
-    cur_v = m["version"]
-    base = _data_dir(table_dir)
-    src = (
-        spark.read.option("basePath", base)
-        .option("mergeSchema", "true")
-        .parquet(*[os.path.join(base, f) for f in cand])
-    )
-    dv = _dv_df(spark, table_dir, m)
-    if dv is not None:  # sidecars stay DISJOINT: mark visible rows only
-        src = _apply_dv(src, dv)
-    hits = src.where(predicate).select(
-        _rel_file().alias("file"),
-        F.col("_metadata.row_index").alias("pos"),
-    )
-    hits.persist()
-    try:
-        n_deleted = hits.count()
-        if n_deleted == 0:
-            return cur_v, 0
-        name = f"v{cur_v + 1:05d}-{uuid.uuid4().hex[:8]}"
-        out = os.path.join(_dv_dir(table_dir), name)
-        # positions, not data: kilobytes for a targeted erasure
-        hits.coalesce(1).write.parquet(out)
-        try:
-            _commit(table_dir, {
-                "version": cur_v + 1, "parent": cur_v, "op": "delete",
-                "mode": "dv", "predicate": predicate,
-                "part_col": m["part_col"], "columns": m["columns"],
-                "files": m["files"],
-                "stats": m.get("stats", {}),
-                "dv": m.get("dv", []) + [name],
-            })
-        except FileExistsError:
-            shutil.rmtree(out, ignore_errors=True)  # lost the CAS
-            raise
-        return cur_v + 1, n_deleted
+        marks = hits.select(
+            F.col("_rf").alias("file"), F.col("_ri").alias("pos")
+        )
+        header = {"op": "update", "predicate": condition,
+                  "set": dict(set_exprs)}
+        return _publish_marks(
+            table_dir, m, marks, header, new_files, new_stats
+        ), n_updated
     finally:
         hits.unpersist()
 
@@ -1314,11 +1180,8 @@ def optimize_version(
     periodic maintenance loop; `vacuum` reclaims the small files once
     retention passes. Data is bit-identical by construction
     (pytest-pinned)."""
-    vs = versions(table_dir)
-    if not vs:
-        raise FileNotFoundError(f"no versions at {table_dir}")
-    cur_v = vs[-1]
-    m = _read_manifest(table_dir, cur_v)
+    m = _head(table_dir)
+    cur_v = m["version"]
     cur = read_version(spark, table_dir, cur_v)
     if cluster_by:
         # OPTIMIZE ZORDER BY: the compaction commit lays rows along
@@ -1383,11 +1246,8 @@ def repartition_table(
     history, tags, CDC continuity, consumers' table paths) carries
     forward — Iceberg ships exactly this because re-creating a
     100 TB table to change its partition key is an outage."""
-    vs = versions(table_dir)
-    if not vs:
-        raise FileNotFoundError(f"no versions at {table_dir}")
-    cur_v = vs[-1]
-    m = _read_manifest(table_dir, cur_v)
+    m = _head(table_dir)
+    cur_v = m["version"]
     if new_part_col not in m["columns"]:
         raise ValueError(
             f"new partition column {new_part_col!r} is not a table "
@@ -1475,27 +1335,11 @@ def read_changes(
     cols = mb["columns"]
     val_cols = [c for c in cols if c not in keys]
     d = manifest_diff(table_dir, v_from, v_to)
-    base = _data_dir(table_dir)
-
-    def _rd(files: list[str], m: dict) -> DataFrame:
-        if not files:
-            return read_version(spark, table_dir, v_to).limit(0)
-        df = (
-            spark.read.option("basePath", base)
-            # a carried pre-evolution file inside a touched set must
-            # read the evolved columns as NULL, not fail the select
-            .option("mergeSchema", "true")
-            .parquet(*[os.path.join(base, f) for f in files])
-        )
-        dv = _dv_df(spark, table_dir, m)
-        if dv is not None:  # each side reflects ITS snapshot's view
-            df = _apply_dv(df, dv)
-        return df.select(*cols)
-
-    old = _rd(d["removed"], ma).withColumn(
+    # each side reflects ITS snapshot's view (DV-applied)
+    old = _scan(spark, table_dir, ma, d["removed"]).withColumn(
         "_t_present", F.lit(1)
     ).alias("t")
-    new = _rd(d["added"], mb).withColumn(
+    new = _scan(spark, table_dir, mb, d["added"]).withColumn(
         "_s_present", F.lit(1)
     ).alias("s")
     cond = None
@@ -1542,32 +1386,28 @@ def read_changes(
     # through the removed-vs-added comparison (double-count hazard).
     # Sidecar disjointness guarantees each delta row was visible at
     # v_from.
-    new_dvs = [n for n in mb.get("dv", []) if n not in set(ma.get("dv", []))]
-    if new_dvs:
-        delta = spark.read.parquet(
-            *[os.path.join(_dv_dir(table_dir), n) for n in new_dvs]
-        )
-        carried = sorted(set(ma["files"]) & set(mb["files"]))
-        if carried:
-            dv_del = _dv_marked_rows(
-                spark, base, carried, delta
-            ).select(F.lit("delete").alias("change_type"), *cols)
-            feed = feed.unionByName(dv_del)
-    # the mirror image: a RESTORE inside the window can DROP dv
-    # entries, resurrecting their rows in carried files — surface
-    # them as inserts (file-rewritten resurrections already show
-    # through the file diff)
-    gone_dvs = [n for n in ma.get("dv", []) if n not in set(mb.get("dv", []))]
-    if gone_dvs:
-        delta = spark.read.parquet(
-            *[os.path.join(_dv_dir(table_dir), n) for n in gone_dvs]
-        )
-        carried = sorted(set(ma["files"]) & set(mb["files"]))
-        if carried:
-            dv_ins = _dv_marked_rows(
-                spark, base, carried, delta
-            ).select(F.lit("insert").alias("change_type"), *cols)
-            feed = feed.unionByName(dv_ins)
+    # The mirror image: a RESTORE inside the window can DROP dv
+    # entries, resurrecting their rows in carried files — surfaced as
+    # inserts (file-rewritten resurrections already show through the
+    # file diff).
+    carried = sorted(set(ma["files"]) & set(mb["files"]))
+    dva, dvb = ma.get("dv", []), mb.get("dv", [])
+    for typ, names in (
+        ("delete", [n for n in dvb if n not in dva]),
+        ("insert", [n for n in dva if n not in dvb]),
+    ):
+        if names and carried:
+            # the RAW rows of carried files at the delta's positions
+            raw = _scan(
+                spark, table_dir, {**mb, "dv": []}, carried, positions=True
+            )
+            marked = raw.join(
+                F.broadcast(_dv_df(spark, table_dir, names)),
+                ["_rf", "_ri"],
+            )
+            feed = feed.unionByName(
+                marked.select(F.lit(typ).alias("change_type"), *cols)
+            )
     return feed
 
 
@@ -1588,11 +1428,7 @@ def restore_version(table_dir: str, version: int) -> int:
     doesn't protect); a vacuum that listed tags before the pin landed
     can still race — run maintenance and restores from one scheduler,
     the same single-maintainer assumption vacuum itself documents."""
-    vs = versions(table_dir)
-    if not vs:
-        raise FileNotFoundError(f"no versions at {table_dir}")
-    if version not in vs:
-        raise FileNotFoundError(f"no version {version} at {table_dir}")
+    cur = _head(table_dir)["version"]
     pin = f"restoring-{uuid.uuid4().hex[:8]}"
     tag_version(table_dir, pin, version)
     try:
@@ -1619,7 +1455,6 @@ def restore_version(table_dir: str, version: int) -> int:
                 f"cannot restore v{version}: its deletion-vector "
                 f"sidecars {gone_dv[:3]} were vacuumed"
             )
-        cur = vs[-1]
         try:
             _commit(table_dir, {
                 "version": cur + 1, "parent": cur, "op": "restore",
@@ -1648,9 +1483,7 @@ def history_df(spark: SparkSession, table_dir: str) -> DataFrame:
     parent, op, ts, n_files, txn_id, merged_from/restored_from when
     present). The checkpointed prefix answers from the walk
     checkpoint; only the tail reads manifest JSONs."""
-    vs = versions(table_dir)
-    if not vs:
-        raise FileNotFoundError(f"no versions at {table_dir}")
+    _head(table_dir)
     rows = []
     for v, e in sorted(_walk_headers(table_dir).items()):
         rows.append((
@@ -1674,23 +1507,7 @@ def files_df(
     hive partition value, on-disk bytes, per-column zone-map bounds as
     a JSON string) — the Iceberg `.files` metadata table; what an
     operator SELECTs to plan compaction or audit skew."""
-    vs = versions(table_dir)
-    if not vs:
-        raise FileNotFoundError(f"no versions at {table_dir}")
-    v = vs[-1] if version is None else version
-    if version is None:
-        # the listed head can be repaired away between listing and
-        # read (aborted fallback commit) — re-resolve once; an
-        # EXPLICITLY named version keeps the loud FileNotFoundError
-        m = _read_manifest_opt(table_dir, v)
-        if m is None:
-            vs = versions(table_dir)
-            if not vs:
-                raise FileNotFoundError(f"no versions at {table_dir}")
-            v = vs[-1]
-            m = _read_manifest(table_dir, v)
-    else:
-        m = _read_manifest(table_dir, v)
+    m = _head(table_dir, version)
     base = _data_dir(table_dir)
     stats = m.get("stats", {})
     rows = []
@@ -1724,12 +1541,7 @@ def tag_version(
     commits land after it — the reproducible-training-set handle.
     Tags are immutable (link(2)-CAS publish, same as manifests);
     delete and re-create to move one. Returns the pinned version."""
-    vs = versions(table_dir)
-    if not vs:
-        raise FileNotFoundError(f"no versions at {table_dir}")
-    v = vs[-1] if version is None else version
-    if v not in vs:
-        raise FileNotFoundError(f"no version {v} at {table_dir}")
+    v = _head(table_dir, version)["version"]
     import time
 
     get_store().makedirs(_tags_dir(table_dir))

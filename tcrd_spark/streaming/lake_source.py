@@ -51,7 +51,6 @@ sources/snapshots.py).
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql.datasource import (
@@ -59,6 +58,9 @@ from pyspark.sql.datasource import (
     DataSourceStreamReader,
     InputPartition,
 )
+
+from tcrd_spark.sources.snapshots import _data_dir, versions
+from tcrd_spark.sources.snapshots import _read_manifest as _manifest
 
 
 class _FilePartition(InputPartition):
@@ -70,45 +72,13 @@ class _FilePartition(InputPartition):
         self.columns = columns
 
 
-def _manifest(table_dir: str, version: int) -> dict:
-    p = os.path.join(table_dir, "_manifests", f"v{version:05d}.json")
-    with open(p) as f:
-        return json.load(f)
-
-
-def _data_dir(table_dir: str) -> str:
-    """Mirror of snapshots._data_dir (kept local — the datasource
-    stays dependency-free): a symlink-less branch records its shared
-    source data dir in _branch.json, and paths resolve through it."""
-    d = os.path.join(table_dir, "data")
-    if not os.path.exists(d):
-        bj = os.path.join(table_dir, "_branch.json")
-        if os.path.exists(bj):
-            with open(bj) as f:
-                mapped = json.load(f).get("data_dir")
-            if mapped:
-                return mapped
-    return d
-
-
-def _versions(table_dir: str) -> list[int]:
-    import glob
-
-    return sorted(
-        int(os.path.basename(q)[1:-5])
-        for q in glob.glob(
-            os.path.join(table_dir, "_manifests", "v*.json")
-        )
-    )
-
-
 def _arrow_ddl(table_dir: str) -> str:
     """Schema DDL from the newest manifest's column order + a data
     file's footer types; the hive partition column surfaces as
     STRING (its value lives in the path, not the file)."""
     import pyarrow.parquet as pq
 
-    vs = _versions(table_dir)
+    vs = versions(table_dir)
     m = _manifest(table_dir, vs[-1])
     # sample the NEWEST file (version-tagged basenames sort by
     # commit): after additive schema evolution, only files from the
@@ -164,7 +134,7 @@ class LakeCommitsStreamReader(DataSourceStreamReader):
         # commit() (running/restarted query); None until then
         self._cursor: int | None = None
         self._added_cache: dict[int, int] = {}
-        vs = _versions(self._table)
+        vs = versions(self._table)
         # the stream's schema is fixed at start (the latest manifest);
         # a commit with different columns is a schema-evolution
         # boundary the fixed-schema stream cannot cross
@@ -190,7 +160,7 @@ class LakeCommitsStreamReader(DataSourceStreamReader):
         return sum(1 for f in m["files"] if f not in prev)
 
     def latestOffset(self) -> dict:
-        vs = _versions(self._table)
+        vs = versions(self._table)
         latest = vs[-1] if vs else self._start
         if self._max_v is None and self._max_f is None:
             return {"version": latest}

@@ -91,6 +91,26 @@ def test_post_index_appends_degrade_to_scan(spark, sf_dir, tmp_path):
     assert got == want >= 1
 
 
+def test_point_lookup_applies_deletion_vectors(spark, sf_dir, tmp_path):
+    """A dv-deleted key is gone from the lookup exactly as from
+    read_version; the index keeps covering the file's RAW rows, so a
+    restore that resurrects the row finds it again."""
+    table, orders = _build(spark, sf_dir, tmp_path, n_appends=1)
+    bloomidx.build_bloom_index(spark, table, "o_orderkey")
+    key = orders.where("o_orderkey % 4 = 1").head().o_orderkey
+    v, n = snap.delete_version(
+        spark, table, f"o_orderkey = {key}", mode="dv"
+    )
+    assert n == 1
+    assert bloomidx.point_lookup(spark, table, "o_orderkey", key).count() == 0
+    assert bloomidx.point_lookup(
+        spark, table, "o_orderkey", key, version=v - 1
+    ).count() == 1
+    bloomidx.build_bloom_index(spark, table, "o_orderkey")
+    snap.restore_version(table, v - 1)
+    assert bloomidx.point_lookup(spark, table, "o_orderkey", key).count() == 1
+
+
 def test_no_index_returns_all_files(spark, sf_dir, tmp_path):
     table, _ = _build(spark, sf_dir, tmp_path, n_appends=1)
     kept, total = bloomidx.bloom_candidate_files(
@@ -190,8 +210,8 @@ def test_schema_evolution_column_missing_from_kept_files(
 ):
     """r8 ADVICE: a column added after the admitted files were written
     (present in NO kept file) made point_lookup throw AnalysisException
-    where read_version surfaced NULLs. The lookup now degrades to the
-    full snapshot read — exact, just unpruned."""
+    where read_version surfaced NULLs. The pruned read now types the
+    column from the snapshot's footer schema and reads it as NULL."""
     table, orders = _build(spark, sf_dir, tmp_path, n_appends=1)
     bloomidx.build_bloom_index(spark, table, "o_orderkey")
     key = orders.where("o_orderkey % 4 = 0").head().o_orderkey

@@ -55,6 +55,61 @@ def test_dv_delete_equals_rewrite_delete(spark, sf_dir, tmp_path):
     assert snap._read_manifest(tb, 2)["files"] != ma1["files"]
 
 
+@pytest.mark.parametrize("verb", ["delete", "update", "merge"])
+def test_mark_verbs_reclaim_sidecar_on_lost_cas(
+    spark, sf_dir, tmp_path, monkeypatch, verb
+):
+    """Every deletion-vector commit that loses the manifest CAS raises
+    and leaves no sidecar behind under `_dv/`."""
+    table, seed = _mk(spark, sf_dir, tmp_path)
+    pred = "o_orderkey % 10 = 0"
+    run = {
+        "delete": lambda: snap.delete_version(spark, table, pred, mode="dv"),
+        "update": lambda: snap.update_version(
+            spark, table, pred, {"o_totalprice": "o_totalprice + 1.0"}
+        ),
+        "merge": lambda: snap.merge_version(
+            spark, table, seed.where(pred), ["o_orderkey"],
+            granularity="dv",
+        ),
+    }[verb]
+
+    def lost(table_dir, manifest):
+        raise FileExistsError("lost the CAS")
+
+    dv_dir = snap._dv_dir(table)
+    monkeypatch.setattr(snap, "_commit", lost)
+    with pytest.raises(FileExistsError):
+        run()
+    assert not os.path.isdir(dv_dir) or os.listdir(dv_dir) == []
+    assert snap.versions(table) == [1]
+
+
+def test_escaped_partition_values_match_manifest_names(spark, tmp_path):
+    """Partition values Spark escapes in file URIs ('a b', 'x%y') or
+    that URL decoding would mangle ('p+q'): dv marks, the rewrite
+    delete's touched files and the bloom index all name files exactly
+    as the manifest does."""
+    from tcrd_spark.sources import bloomidx
+
+    table = str(tmp_path / "t")
+    parts = ["a b", "x%y", "p+q"]
+    df = spark.createDataFrame(
+        [(i, parts[i % 3], float(i)) for i in range(60)],
+        "id int, part string, val double",
+    )
+    snap.create_table(df.repartition(4), table, "part")
+    _v, n = snap.delete_version(spark, table, "id % 5 = 0", mode="dv")
+    assert n == 12
+    _v, n = snap.delete_version(spark, table, "id % 7 = 0")
+    assert n == 7
+    want = _rows(df.where("id % 5 != 0 AND id % 7 != 0"))
+    assert _rows(snap.read_version(spark, table)) == want
+    bloomidx.build_bloom_index(spark, table, "id")
+    kept, total = bloomidx.bloom_candidate_files(spark, table, "id", 1)
+    assert len(kept) < total
+
+
 def test_dv_composition_time_travel_and_no_match(spark, sf_dir, tmp_path):
     """Sidecars compose (disjoint by construction), every prior
     version re-reads exactly, and a no-match dv delete commits

@@ -1,19 +1,11 @@
-"""MERGE into the lake (sources/merge.py): frame semantics (update /
-insert / delete / keep), and the partition-pruned write — unaffected
-partition files must be byte-untouched on disk."""
+"""MERGE frame semantics (sources/merge.py): update / insert / delete /
+keep."""
 
 from __future__ import annotations
 
-import glob
-import os
-
 import pytest
-from pyspark.sql import functions as F
 
-from tcrd_spark.sources.merge import (
-    merge_frames,
-    merge_partitioned_write,
-)
+from tcrd_spark.sources.merge import merge_frames
 
 
 def test_merge_frames_four_arm_semantics(spark):
@@ -86,46 +78,3 @@ def test_merge_frames_rejects_schema_drift(spark):
     s = spark.createDataFrame([(1,)], ["id"])
     with pytest.raises(ValueError, match="schemas differ"):
         merge_frames(t, s, ["id"])
-
-
-def test_partitioned_merge_touches_only_affected_partitions(
-    spark, tmp_path
-):
-    table = str(tmp_path / "tbl")
-    base = spark.createDataFrame(
-        [(i, f"u{i}", i % 4) for i in range(100)],
-        ["id", "name", "bucket"],
-    )
-    base.repartition("bucket").write.partitionBy("bucket").parquet(table)
-
-    untouched_before = {
-        p: os.path.getmtime(p)
-        for p in glob.glob(f"{table}/bucket=1/*.parquet")
-        + glob.glob(f"{table}/bucket=3/*.parquet")
-    }
-    assert untouched_before
-
-    # source touches buckets 0 and 2 only
-    source = spark.createDataFrame(
-        [(0, "UPDATED", 0), (202, "NEW", 2)], ["id", "name", "bucket"]
-    )
-    parts = merge_partitioned_write(
-        spark, table, source, ["id"], "bucket"
-    )
-    assert sorted(parts) == [0, 2]
-
-    # unaffected partitions: same files, same mtimes
-    untouched_after = {
-        p: os.path.getmtime(p)
-        for p in glob.glob(f"{table}/bucket=1/*.parquet")
-        + glob.glob(f"{table}/bucket=3/*.parquet")
-    }
-    assert untouched_after == untouched_before
-
-    final = spark.read.parquet(table)
-    assert final.count() == 101  # one insert, no deletes
-    got = {
-        r["id"]: r["name"]
-        for r in final.where(F.col("id").isin([0, 202, 1])).collect()
-    }
-    assert got == {0: "UPDATED", 202: "NEW", 1: "u1"}

@@ -486,6 +486,36 @@ def test_additive_schema_evolution(spark, sf_dir, tmp_path):
         snap.read_changes(spark, table, 1, v, ["o_orderkey"])
 
 
+def test_evolved_column_in_pruned_read_and_merge(spark, sf_dir, tmp_path):
+    """After additive evolution, a pruned read whose range only
+    pre-evolution files hold still types the new column (NULL), and a
+    MERGE whose batch carries the column commits and reads back."""
+    table = str(tmp_path / "t")
+    orders = _orders(spark, sf_dir)
+    snap.create_table(orders, table, "o_orderstatus")
+    evolved = orders.limit(3).select(
+        (F.col("o_orderkey") + 10**9).alias("o_orderkey"),
+        "o_orderstatus", "o_totalprice",
+        F.lit("round8").alias("batch_tag"),
+    )
+    v = snap.append_version(table, evolved, merge_schema=True)
+    got = snap.read_version_pruned(spark, table, "o_orderkey", 1, 200, v)
+    want = snap.read_version(spark, table, v).where(
+        "o_orderkey BETWEEN 1 AND 200"
+    )
+    assert got.columns == want.columns
+    assert _rows(got) == _rows(want) and _rows(got)
+    assert got.where(F.col("batch_tag").isNotNull()).count() == 0
+    batch = orders.where("o_orderkey % 17 = 0").select(
+        "o_orderkey", "o_orderstatus", "o_totalprice",
+        F.lit("fix").alias("batch_tag"),
+    )
+    v2 = snap.merge_version(spark, table, batch, ["o_orderkey"])
+    latest = snap.read_version(spark, table, v2)
+    assert latest.count() == orders.count() + 3
+    assert _rows(latest.where("batch_tag = 'fix'")) == _rows(batch)
+
+
 def test_append_missing_column_is_refused(spark, sf_dir, tmp_path):
     import pytest
 
@@ -604,12 +634,10 @@ def test_commit_time_expectations_gate(spark, sf_dir, tmp_path):
     assert snap.append_version(table, good, expectations=suite) == 2
 
 
-def test_file_granular_merge_rewrites_only_intersecting_files(
-    spark, sf_dir, tmp_path
-):
+def test_merge_rewrites_only_intersecting_files(spark, sf_dir, tmp_path):
     """Delta-shape MERGE: with a key-clustered layout, a narrow-key
     source rewrites a handful of files — and the result equals the
-    partition-granular (and full merge_frames) answer exactly."""
+    full merge_frames answer exactly."""
     from tcrd_spark.sources.merge import merge_frames
 
     table = str(tmp_path / "t")
@@ -626,22 +654,20 @@ def test_file_granular_merge_rewrites_only_intersecting_files(
         "o_orderkey", "o_orderstatus",
         F.round(F.col("o_totalprice") + 3.0, 2).alias("o_totalprice"),
     )
-    v = snap.merge_version(
-        spark, table, src, ["o_orderkey"], granularity="file"
-    )
+    v = snap.merge_version(spark, table, src, ["o_orderkey"])
     d = snap.manifest_diff(table, 1, v)
     total = len(snap._read_manifest(table, 1)["files"])
     assert 0 < len(d["removed"]) <= total // 3, (len(d["removed"]), total)
     got = _rows(snap.read_version(spark, table, v))
     want = _rows(merge_frames(orders, src, ["o_orderkey"]))
     assert got == want
-    # CDC over the file-granular commit reports exactly the source keys
+    # CDC over the commit reports exactly the source keys
     feed = snap.read_changes(spark, table, 1, v, ["o_orderkey"])
     ks = {r["o_orderkey"] for r in feed.collect()}
     assert ks == {r["o_orderkey"] for r in src.collect()}
 
 
-def test_file_granular_merge_inserts_new_keys(spark, sf_dir, tmp_path):
+def test_merge_inserts_new_keys(spark, sf_dir, tmp_path):
     table = str(tmp_path / "t")
     orders = _orders(spark, sf_dir)
     snap.create_table(
@@ -651,12 +677,42 @@ def test_file_granular_merge_inserts_new_keys(spark, sf_dir, tmp_path):
         [(10**10 + 1, "O", 1.0), (10**10 + 2, "Z", 2.0)],
         "o_orderkey long, o_orderstatus string, o_totalprice double",
     )
-    v = snap.merge_version(
-        spark, table, novel, ["o_orderkey"], granularity="file"
-    )
+    v = snap.merge_version(spark, table, novel, ["o_orderkey"])
     latest = snap.read_version(spark, table, v)
     assert latest.count() == orders.count() + 2
     assert latest.where("o_orderstatus = 'Z'").count() == 1
+
+
+def test_merge_insert_only_batch_rewrites_no_file(spark, sf_dir, tmp_path):
+    """An insert-only batch whose keys lie above every file's zone map
+    carries every file forward, in every partition it spans."""
+    table = str(tmp_path / "t")
+    orders = _orders(spark, sf_dir)
+    snap.create_table(orders, table, "o_orderstatus")
+    top = orders.agg(F.max("o_orderkey")).head()[0]
+    batch = orders.where("o_orderkey % 50 = 1").select(
+        (F.col("o_orderkey") + top).alias("o_orderkey"),
+        "o_orderstatus", "o_totalprice",
+    )
+    assert batch.select("o_orderstatus").distinct().count() > 1
+    v = snap.merge_version(spark, table, batch, ["o_orderkey"])
+    assert snap.manifest_diff(table, 1, v)["removed"] == []
+    assert _rows(snap.read_version(spark, table, v)) == _rows(
+        orders.unionByName(batch)
+    )
+
+
+def test_merge_granularity_is_partition_or_dv(spark, sf_dir, tmp_path):
+    import pytest
+
+    table = str(tmp_path / "t")
+    orders = _orders(spark, sf_dir)
+    snap.create_table(orders, table, "o_orderstatus")
+    with pytest.raises(ValueError, match="granularity"):
+        snap.merge_version(
+            spark, table, orders.limit(1), ["o_orderkey"], granularity="file"
+        )
+    assert snap.versions(table) == [1]
 
 
 def test_concurrent_appends_both_land(spark, sf_dir, tmp_path):

@@ -2,7 +2,7 @@
 aggregate via the CDC feed vs recompute it from the full snapshot.
 
 Builds a key-clustered versioned orders lake, commits a
-FILE-GRANULAR merge over a narrow key band (~0.5% of rows — the
+copy-on-write merge (zone-map file planner) over a narrow key band (~0.5% of rows — the
 realistic shape: a batch of late corrections over recent keys), then
 times
 
@@ -52,9 +52,7 @@ def main() -> int:
         (F.col("o_orderkey") >= lo) & (F.col("o_orderkey") < lo + n // 200)
     ).withColumn("o_totalprice", F.col("o_totalprice") + 1.0)
     n_src = src.count()
-    snap.merge_version(
-        spark, table, src, ["o_orderkey"], granularity="file"
-    )
+    snap.merge_version(spark, table, src, ["o_orderkey"])
     d = snap.manifest_diff(table, 1, 2)
     m2 = snap._read_manifest(table, 2)
     touched = len(d["added"]) + len(d["removed"])
