@@ -7,12 +7,13 @@ super-shingle work distinguishes exactly these two measures; training
 pipelines use containment to drop subsumed fragments while keeping the
 container.
 
-100 TB shape: the same inverted-index discipline as the Jaccard path —
-one (doc, shingle-hash) explode, a document-frequency cap dropping
-stopword shingles BEFORE the self-join (quadratic fan-out, zero
-discrimination), map-side-combinable shared counts, set sizes joined
-back as a broadcast-sized dimension. Output is directional: one row
-per (contained, container) ordered pair over the threshold.
+100 TB shape: one (doc, shingle-hash) explode, the document-frequency
+cap of `operators/blocking.drop_hot_blocks` dropping stopword shingles
+BEFORE the pair join (quadratic fan-out, zero discrimination),
+map-side-combinable shared counts from `blocking.candidate_pairs`, set
+sizes joined back as a broadcast-sized dimension. Output is
+directional: one row per (contained, container) ordered pair over the
+threshold.
 """
 
 from __future__ import annotations
@@ -20,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from tcrd_spark.operators.blocking import candidate_pairs, drop_hot_blocks
 from tcrd_spark.pipeline.dedup import hashed_shingles
 
 N_SHINGLE = 3
@@ -41,8 +43,9 @@ def containment_pairs(
     Shingles with document frequency > max_df are dropped from
     CANDIDATE GENERATION only; the shared count uses the surviving
     shingles on both sides, so containment is exact over the capped
-    shingle universe (documented estimator semantics, same contract as
-    ngram_jaccard_pairs' max_df mode).
+    shingle universe (documented estimator semantics). The shared
+    count is symmetric, so it is computed once per unordered pair and
+    the pair is then emitted in both directions.
     """
     sh = hashed_shingles(df, id_col, text_col, n)
     # NO lineage cut of the exploded (id, g) list (r12, measured): it
@@ -51,22 +54,13 @@ def containment_pairs(
     # cut only pays for LOW-cardinality derived tables (winnow
     # fingerprints, LSH bands, simhash chunks), never for raw explode
     # output (same negative result as the LM token-row cut).
-    inv = sh.select(id_col, F.explode("hs").alias("g"))
-    rare = (
-        inv.groupBy("g")
-        .agg(F.count("*").alias("_df"))
-        .filter(F.col("_df") <= max_df)
-        .select("g")
+    inv = drop_hot_blocks(
+        sh.select(id_col, F.explode("hs").alias("g")), "g", max_df
     )
-    inv = inv.join(rare, "g")
     sizes = inv.groupBy(id_col).agg(F.count("*").alias("size_a"))
-    a = inv.select(F.col(id_col).alias("id_a"), "g")
-    b = inv.select(F.col(id_col).alias("id_b"), "g")
-    shared = (
-        a.join(b, "g")
-        .filter(F.col("id_a") != F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count("*").alias("shared"))
+    shared = candidate_pairs(inv, id_col, "g").selectExpr(
+        "inline(array(struct(id_a, id_b), struct(id_b AS id_a, id_a AS id_b)))",
+        "shared",
     )
     return (
         shared.join(

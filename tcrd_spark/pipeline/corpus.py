@@ -23,7 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from tcrd_spark.functions.hashing import hash60
+from tcrd_spark.functions.hashing import hash60, spark_hash60
+from tcrd_spark.operators.blocking import candidate_pairs
 from tcrd_spark.operators.lineage import _keep, _truncate, cache
 
 # Size-adaptive threshold for the connected-components driver fast
@@ -311,6 +312,67 @@ def dedup_group_reps(
 
 # ------------------------------------------------- incremental (batch) dedup
 
+def _text_hash(
+    df: DataFrame, id_col: str, text_col: str, out_id: str
+) -> DataFrame:
+    """(out_id, th): the exact-duplicate key of each document."""
+    return df.selectExpr(
+        f"`{id_col}` AS {out_id}", f"{spark_hash60(f'`{text_col}`')} AS th"
+    )
+
+
+def _postings(sh: DataFrame, id_col: str) -> DataFrame:
+    """(id, g): one row per distinct shingle hash of each document."""
+    return sh.selectExpr(f"`{id_col}`", "explode(hs) AS g")
+
+
+def _verdicts(
+    batch: DataFrame,
+    id_col: str,
+    text_col: str,
+    c_hash: DataFrame,
+    cand: DataFrame,
+    b_sets: DataFrame,
+    c_sets: DataFrame,
+    threshold: float,
+) -> DataFrame:
+    """The shared tail of the incremental trio: (doc_id, exact_src,
+    near_src, verdict) per batch doc. exact_src probes the batch's text
+    hashes against ``c_hash`` (c_id, th); near_src verifies the
+    candidate (id_a = batch, id_b = corpus) pairs with the UNROUNDED
+    Jaccard of the (id, hs) shingle-hash sets on each side. Built from
+    SQL strings: one parse per expression instead of ~10 py4j round
+    trips per Column operator, on every call."""
+    exact = (
+        _text_hash(batch, id_col, text_col, "b_id")
+        .join(c_hash, "th")
+        .groupBy("b_id")
+        .agg(F.expr("min(c_id) AS exact_src"))
+    )
+    inter = "size(array_intersect(hs_b, hs_c))"
+    near = (
+        cand.join(b_sets.selectExpr(f"`{id_col}` AS id_a", "hs AS hs_b"), "id_a")
+        .join(c_sets.selectExpr(f"`{id_col}` AS id_b", "hs AS hs_c"), "id_b")
+        .where(
+            F.expr(f"{inter} / (size(hs_b) + size(hs_c) - {inter})") >= threshold
+        )
+        .groupBy(F.expr("id_a AS b_id"))
+        .agg(F.expr("min(id_b) AS near_src"))
+    )
+    return (
+        batch.selectExpr(f"`{id_col}` AS b_id")
+        .join(exact, "b_id", "left")
+        .join(near, "b_id", "left")
+        .selectExpr(
+            f"b_id AS `{id_col}`",
+            "exact_src",
+            "near_src",
+            "CASE WHEN exact_src IS NOT NULL THEN 'exact' "
+            "WHEN near_src IS NOT NULL THEN 'near' ELSE 'new' END AS verdict",
+        )
+    )
+
+
 def incremental_near_dups(
     batch: DataFrame,
     corpus: DataFrame,
@@ -339,64 +401,13 @@ def incremental_near_dups(
     """
     from tcrd_spark.pipeline.dedup import hashed_shingles
 
-    b_hash = batch.select(
-        F.col(id_col).alias("b_id"), hash60(F.col(text_col)).alias("th")
+    b_sh = cache(hashed_shingles(batch, id_col, text_col, n), "incr-bsh")
+    c_sh = cache(hashed_shingles(corpus, id_col, text_col, n), "incr-csh")
+    cand = candidate_pairs(
+        _postings(b_sh, id_col), id_col, "g", other=_postings(c_sh, id_col)
     )
-    c_hash = corpus.select(
-        F.col(id_col).alias("c_id"), hash60(F.col(text_col)).alias("th")
-    )
-    exact = (
-        b_hash.join(c_hash, "th")
-        .groupBy("b_id")
-        .agg(F.min("c_id").alias("exact_src"))
-    )
-
-    b_sh = cache(
-        hashed_shingles(batch, id_col, text_col, n).select(
-            F.col(id_col).alias("b_id"), F.col("hs").alias("hs_b")
-        ), "incr-bsh",
-    )
-    c_sh = cache(
-        hashed_shingles(corpus, id_col, text_col, n).select(
-            F.col(id_col).alias("c_id"), F.col("hs").alias("hs_c")
-        ), "incr-csh",
-    )
-    b_inv = b_sh.select("b_id", F.explode("hs_b").alias("g"))
-    c_inv = c_sh.select("c_id", F.explode("hs_c").alias("g"))
-    cand = b_inv.join(c_inv, "g").select("b_id", "c_id").distinct()
-    near = (
-        cand.join(b_sh, "b_id")
-        .join(c_sh, "c_id")
-        .select(
-            "b_id",
-            "c_id",
-            (
-                F.size(F.array_intersect("hs_b", "hs_c"))
-                / (
-                    F.size("hs_b")
-                    + F.size("hs_c")
-                    - F.size(F.array_intersect("hs_b", "hs_c"))
-                )
-            ).alias("j"),
-        )
-        .filter(F.col("j") >= threshold)
-        .groupBy("b_id")
-        .agg(F.min("c_id").alias("near_src"))
-    )
-    return (
-        batch.select(F.col(id_col).alias("b_id"))
-        .join(exact, "b_id", "left")
-        .join(near, "b_id", "left")
-        .select(
-            F.col("b_id").alias(id_col),
-            "exact_src",
-            "near_src",
-            F.when(F.col("exact_src").isNotNull(), F.lit("exact"))
-            .when(F.col("near_src").isNotNull(), F.lit("near"))
-            .otherwise(F.lit("new"))
-            .alias("verdict"),
-        )
-    )
+    c_hash = _text_hash(corpus, id_col, text_col, "c_id")
+    return _verdicts(batch, id_col, text_col, c_hash, cand, b_sh, c_sh, threshold)
 
 
 def build_dedup_index(
@@ -425,10 +436,12 @@ def build_dedup_index(
     from tcrd_spark.pipeline.dedup import hashed_shingles
     from tcrd_spark.sources.lake import write_bucketed
 
-    hashes = corpus_df.select(
-        F.col(id_col).alias("c_id"), hash60(F.col(text_col)).alias("th")
+    write_bucketed(
+        _text_hash(corpus_df, id_col, text_col, "c_id"),
+        f"{table_prefix}_th",
+        "th",
+        n_buckets,
     )
-    write_bucketed(hashes, f"{table_prefix}_th", "th", n_buckets)
     sh = hashed_shingles(corpus_df, id_col, text_col, n).select(
         F.col(id_col).alias("c_id"), F.col("hs")
     )
@@ -457,62 +470,12 @@ def incremental_near_dups_indexed(
     from tcrd_spark.pipeline.dedup import hashed_shingles
 
     spark = batch.sparkSession
+    c_inv = spark.table(f"{table_prefix}_inv").withColumnRenamed("c_id", id_col)
+    c_sets = spark.table(f"{table_prefix}_sets").withColumnRenamed("c_id", id_col)
+    b_sh = cache(hashed_shingles(batch, id_col, text_col, n), "incridx-bsh")
+    cand = candidate_pairs(_postings(b_sh, id_col), id_col, "g", other=c_inv)
     c_hash = spark.table(f"{table_prefix}_th")
-    c_inv = spark.table(f"{table_prefix}_inv")
-    c_sets = spark.table(f"{table_prefix}_sets").withColumnRenamed("hs", "hs_c")
-
-    b_hash = batch.select(
-        F.col(id_col).alias("b_id"), hash60(F.col(text_col)).alias("th")
-    )
-    exact = (
-        b_hash.join(c_hash, "th")
-        .groupBy("b_id")
-        .agg(F.min("c_id").alias("exact_src"))
-    )
-    b_sh = cache(
-        hashed_shingles(batch, id_col, text_col, n).select(
-            F.col(id_col).alias("b_id"), F.col("hs").alias("hs_b")
-        ), "incridx-bsh",
-    )
-    cand = (
-        b_sh.select("b_id", F.explode("hs_b").alias("g"))
-        .join(c_inv, "g")
-        .select("b_id", "c_id")
-        .distinct()
-    )
-    near = (
-        cand.join(b_sh, "b_id")
-        .join(c_sets, "c_id")
-        .select(
-            "b_id",
-            "c_id",
-            (
-                F.size(F.array_intersect("hs_b", "hs_c"))
-                / (
-                    F.size("hs_b")
-                    + F.size("hs_c")
-                    - F.size(F.array_intersect("hs_b", "hs_c"))
-                )
-            ).alias("j"),
-        )
-        .filter(F.col("j") >= threshold)
-        .groupBy("b_id")
-        .agg(F.min("c_id").alias("near_src"))
-    )
-    return (
-        batch.select(F.col(id_col).alias("b_id"))
-        .join(exact, "b_id", "left")
-        .join(near, "b_id", "left")
-        .select(
-            F.col("b_id").alias(id_col),
-            "exact_src",
-            "near_src",
-            F.when(F.col("exact_src").isNotNull(), F.lit("exact"))
-            .when(F.col("near_src").isNotNull(), F.lit("near"))
-            .otherwise(F.lit("new"))
-            .alias("verdict"),
-        )
-    )
+    return _verdicts(batch, id_col, text_col, c_hash, cand, b_sh, c_sets, threshold)
 
 
 def incremental_near_dups_lsh(
@@ -535,85 +498,23 @@ def incremental_near_dups_lsh(
     Exact-hash duplicates are still caught exactly (hash join).
     Returns the same (doc_id, exact_src, near_src, verdict) shape.
     """
-    from tcrd_spark.functions.hashing import (
-        band_hashes_expr,
-        minhash_sig_expr,
-    )
-    from tcrd_spark.pipeline.dedup import hashed_shingles
+    from tcrd_spark.pipeline.dedup import hashed_shingles, minhash_buckets
 
-    assert n_perms % bands == 0
-    r = n_perms // bands
+    def sets(df: DataFrame, slot: str) -> DataFrame:
+        return cache(
+            hashed_shingles(df, id_col, text_col, n).filter(F.size("hs") > 0),
+            slot,
+        )
 
-    def _sig_and_buckets(df: DataFrame, out_id: str):
-        sh = cache(
-            hashed_shingles(df, id_col, text_col, n)
-            .filter(F.size("hs") > 0)
-            .select(F.col(id_col).alias(out_id), "hs"),
-            f"incrlsh-{out_id}",
-        )
-        # one F.expr parse per frame instead of n_perms Column-API
-        # transform lambdas — tree-identical (hashing.minhash_sig_expr)
-        sig = sh.select(
-            out_id, minhash_sig_expr("hs", n_perms).alias("sig")
-        )
-        buckets = sig.select(
-            out_id,
-            F.explode(band_hashes_expr("sig", bands, r)).alias("bucket"),
-        )
-        return sh, buckets
-
-    b_sh, b_buckets = _sig_and_buckets(batch, "b_id")
-    c_sh, c_buckets = _sig_and_buckets(corpus, "c_id")
-
-    b_hash = batch.select(
-        F.col(id_col).alias("b_id"), hash60(F.col(text_col)).alias("th")
+    b_sh, c_sh = sets(batch, "incrlsh-b_id"), sets(corpus, "incrlsh-c_id")
+    cand = candidate_pairs(
+        minhash_buckets(b_sh, id_col, n_perms, bands),
+        id_col,
+        "bucket",
+        other=minhash_buckets(c_sh, id_col, n_perms, bands),
     )
-    c_hash = corpus.select(
-        F.col(id_col).alias("c_id"), hash60(F.col(text_col)).alias("th")
-    )
-    exact = (
-        b_hash.join(c_hash, "th")
-        .groupBy("b_id")
-        .agg(F.min("c_id").alias("exact_src"))
-    )
-    cand = (
-        b_buckets.join(c_buckets, "bucket")
-        .select("b_id", "c_id")
-        .distinct()
-    )
-    near = (
-        cand.join(b_sh.withColumnRenamed("hs", "hs_b"), "b_id")
-        .join(c_sh.withColumnRenamed("hs", "hs_c"), "c_id")
-        .select(
-            "b_id",
-            "c_id",
-            (
-                F.size(F.array_intersect("hs_b", "hs_c"))
-                / (
-                    F.size("hs_b")
-                    + F.size("hs_c")
-                    - F.size(F.array_intersect("hs_b", "hs_c"))
-                )
-            ).alias("j"),
-        )
-        .filter(F.col("j") >= threshold)
-        .groupBy("b_id")
-        .agg(F.min("c_id").alias("near_src"))
-    )
-    return (
-        batch.select(F.col(id_col).alias("b_id"))
-        .join(exact, "b_id", "left")
-        .join(near, "b_id", "left")
-        .select(
-            F.col("b_id").alias(id_col),
-            "exact_src",
-            "near_src",
-            F.when(F.col("exact_src").isNotNull(), F.lit("exact"))
-            .when(F.col("near_src").isNotNull(), F.lit("near"))
-            .otherwise(F.lit("new"))
-            .alias("verdict"),
-        )
-    )
+    c_hash = _text_hash(corpus, id_col, text_col, "c_id")
+    return _verdicts(batch, id_col, text_col, c_hash, cand, b_sh, c_sh, threshold)
 
 
 # ------------------------------------------------------- vocab / contamination

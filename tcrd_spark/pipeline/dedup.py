@@ -11,8 +11,8 @@ Scale design notes (100 TB documents):
   (deterministic, unlike dropDuplicates' partition-order "first").
 - The shingle inverted index (ngram_jaccard) explodes to one row per
   (doc, distinct shingle). Ultra-common shingles create k² candidate
-  blowup; `max_df` drops shingles whose document frequency exceeds it
-  (the standard stop-shingle mitigation) — at SF-test scale we keep all.
+  blowup; PPJoin's prefix filter keeps them out of the index (they
+  sort last), so the result stays exact.
 - MinHash+LSH replaces the all-pairs O(n²) verify with per-band bucket
   joins: only same-bucket docs meet, and the final Jaccard verify runs
   on the candidate set alone. Bands/rows tune the S-curve.
@@ -30,6 +30,7 @@ from tcrd_spark.functions.hashing import (
     hash60,
     minhash_sig_expr,
 )
+from tcrd_spark.operators.blocking import candidate_pairs
 from tcrd_spark.pipeline.text import ws_tokens
 
 
@@ -112,47 +113,12 @@ def hashed_shingles(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFr
     )
 
 
-def _pair_jaccard(sh: DataFrame, id_col: str, min_shared: int = 1) -> DataFrame:
-    """Shared-shingle inverted-index join → exact Jaccard per doc pair.
-
-    sh: (id, hs: array<long>) → (id_a, id_b, jaccard), id_a < id_b.
-    The per-shingle self-join is the classic SSJoin plan; skewed
-    (ultra-common) shingles are the k² hazard — AQE skew-join splits
-    them, and max_df pruning (ngram_jaccard_pairs) removes them.
-    """
-    sizes = sh.select(F.col(id_col).alias("sid"), F.size("hs").alias("n_sh"))
-    inv = sh.select(F.col(id_col), F.explode("hs").alias("g"))
-    pairs = (
-        inv.alias("a")
-        .join(inv.alias("b"), "g")
-        .where(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-        .groupBy(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-        )
-        .agg(F.count("*").alias("inter"))
-        .filter(F.col("inter") >= min_shared)
-    )
-    return (
-        pairs.join(sizes.withColumnRenamed("sid", "id_a").withColumnRenamed("n_sh", "na"), "id_a")
-        .join(sizes.withColumnRenamed("sid", "id_b").withColumnRenamed("n_sh", "nb"), "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            F.round(
-                F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter")), 6
-            ).alias("jaccard"),
-        )
-    )
-
-
 def ngram_jaccard_pairs(
     df: DataFrame,
     id_col: str,
     text_col: str,
     n: int = 3,
     threshold: float = 0.3,
-    max_df: int | None = None,
 ) -> DataFrame:
     """Exact n-gram Jaccard near-dup pairs ≥ threshold, via prefix
     filtering (Bayardo et al. '07 / PPJoin): shingles get a global
@@ -165,8 +131,10 @@ def ngram_jaccard_pairs(
     candidates only. Result is EXACT; 20× fewer candidate pairs than
     the naive plan on the high-overlap bench corpus.
 
-    max_df additionally drops ultra-common shingles from consideration
-    entirely (changes results; off by default)."""
+    The one pair join here that does not go through
+    `operators/blocking.candidate_pairs`: the positional filter prunes
+    each matching prefix KEY (its positions on both sides), which a
+    per-pair join cannot express."""
     from tcrd_spark.operators.lineage import cache
 
     # sh feeds both the df-frequency agg and the canonical-order join
@@ -177,11 +145,6 @@ def ngram_jaccard_pairs(
         hashed_shingles(df, id_col, text_col, n), "jaccard-sh"
     )
     inv = sh.select(id_col, F.explode("hs").alias("g"))
-    if max_df is not None:
-        common = (
-            inv.groupBy("g").count().filter(F.col("count") > max_df).select("g")
-        )
-        inv = inv.join(F.broadcast(common), "g", "left_anti")
     dfreq = inv.groupBy("g").agg(F.count("*").alias("dfc"))
     # per-doc shingles in canonical (dfc, g) order + the full set
     grouped = (
@@ -242,26 +205,58 @@ def ngram_jaccard_pairs(
         )
         .distinct()
     )
-    a = grouped.select(F.col(id_col).alias("id_a"), F.col("hs").alias("hs_a"))
-    b = grouped.select(F.col(id_col).alias("id_b"), F.col("hs").alias("hs_b"))
+    return jaccard_verify(cand, grouped, id_col, threshold)
+
+
+def jaccard_verify(
+    cand: DataFrame, sets: DataFrame, id_col: str, threshold: float
+) -> DataFrame:
+    """(id_a, id_b, jaccard): the candidate pairs whose exact Jaccard
+    over the (id, hs) shingle-hash sets, rounded to 6, is ≥ threshold —
+    array_intersect on the CANDIDATE pairs only, never all pairs. SQL
+    strings: one parse each, not ~10 py4j round trips per Column
+    operator."""
+    a = sets.selectExpr(f"`{id_col}` AS id_a", "hs AS hs_a")
+    b = sets.selectExpr(f"`{id_col}` AS id_b", "hs AS hs_b")
     return (
         cand.join(a, "id_a")
         .join(b, "id_b")
-        .select(
+        .selectExpr(
             "id_a",
             "id_b",
-            F.size(F.array_intersect("hs_a", "hs_b")).alias("inter"),
-            F.size("hs_a").alias("na"),
-            F.size("hs_b").alias("nb"),
+            "size(array_intersect(hs_a, hs_b)) AS inter",
+            "size(hs_a) AS na",
+            "size(hs_b) AS nb",
         )
-        .select(
-            "id_a",
-            "id_b",
-            F.round(
-                F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter")), 6
-            ).alias("jaccard"),
+        .selectExpr(
+            "id_a", "id_b", "round(inter / (na + nb - inter), 6) AS jaccard"
         )
         .filter(F.col("jaccard") >= threshold)
+    )
+
+
+def minhash_buckets(
+    sh: DataFrame, id_col: str, n_perms: int, bands: int
+) -> DataFrame:
+    """(id, bucket): one row per LSH band of each document's MinHash
+    signature over its (id, hs) shingle-hash set. The signature is pure
+    arithmetic over the pre-hashed shingles (the md5 runs once per
+    shingle, not once per permutation), and both the signature and the
+    band keys are ONE F.expr parse each (minhash_sig_expr,
+    band_hashes_expr): n_perms Column-API transform lambdas cost ~10
+    py4j calls each per invocation, the parse is tree-identical. A band
+    count that does not divide n_perms raises: the bands would drop
+    signature rows."""
+    if bands <= 0 or n_perms % bands:
+        raise ValueError(
+            f"n_perms ({n_perms}) must divide evenly into bands ({bands})"
+        )
+    sig = sh.select(id_col, minhash_sig_expr("hs", n_perms).alias("sig"))
+    return sig.select(
+        id_col,
+        F.explode(band_hashes_expr("sig", bands, n_perms // bands)).alias(
+            "bucket"
+        ),
     )
 
 
@@ -281,73 +276,25 @@ def minhash_lsh_pairs(
     follows the (1-(1-s^r)^b) S-curve; the verify step removes false
     positives entirely, so output ⊆ ngram_jaccard_pairs output.
     """
-    assert n_perms % bands == 0
-    r = n_perms // bands
+    from tcrd_spark.operators.lineage import cache, cut
+
     # reused by the signature branch and both verify sides — cache so
     # the tokenize→md5 lineage runs once (one row per doc). Shingle-less
     # docs (< n tokens) are excluded: they cannot be near-dups, and
     # their all-null signatures would otherwise co-bucket every such
     # doc and divide 0/0 in the Jaccard verify.
-    from tcrd_spark.operators.lineage import cache, cut
-
     sh = cache(
         hashed_shingles(df, id_col, text_col, n).filter(F.size("hs") > 0),
         "minhash-sh",
-    )
-    # signature from the pre-hashed shingle array: each perm is pure
-    # arithmetic over h — the md5 is computed ONCE per shingle, not
-    # once per (shingle, permutation). Built as ONE F.expr parse
-    # (minhash_sig_expr): n_perms Column-API transform lambdas cost
-    # ~10 py4j calls each per invocation, the parse is tree-identical
-    sig = sh.select(
-        id_col,
-        "hs",
-        minhash_sig_expr("hs", n_perms).alias("sig"),
     )
     # cut before the bucket self-join (r12 — the winnow/video lesson):
     # the signature + band-hash arithmetic sits ABOVE the shingle cache
     # on both join sides, so it executed twice per action; the cut
     # materializes the bands-per-doc (id, bucket) table once. Rotating
     # slot bounds session storage.
-    buckets = cut(
-        sig.select(
-            id_col,
-            F.explode(band_hashes_expr("sig", bands, r)).alias("bucket"),
-        ),
-        "minhash-buckets",
-    )
-    cand = (
-        buckets.alias("a")
-        .join(buckets.alias("b"), "bucket")
-        .where(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-        )
-        .distinct()
-    )
-    # exact-Jaccard verify on the CANDIDATE pairs only (array_intersect
-    # of the two shingle-hash sets) — never the all-pairs join
-    a = sh.select(F.col(id_col).alias("id_a"), F.col("hs").alias("hs_a"))
-    b = sh.select(F.col(id_col).alias("id_b"), F.col("hs").alias("hs_b"))
-    return (
-        cand.join(a, "id_a")
-        .join(b, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            F.size(F.array_intersect("hs_a", "hs_b")).alias("inter"),
-            F.size("hs_a").alias("na"),
-            F.size("hs_b").alias("nb"),
-        )
-        .select(
-            "id_a",
-            "id_b",
-            F.round(
-                F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter")), 6
-            ).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
+    buckets = cut(minhash_buckets(sh, id_col, n_perms, bands), "minhash-buckets")
+    return jaccard_verify(
+        candidate_pairs(buckets, id_col, "bucket"), sh, id_col, threshold
     )
 
 
@@ -436,22 +383,13 @@ def simhash_pairs(
         ),
         "simhash-chunks",
     )
-    cand = (
-        chunks.alias("a")
-        .join(chunks.alias("b"), "chunk")
-        .where(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            F.col("a.simhash").alias("sh_a"),
-            F.col("b.simhash").alias("sh_b"),
-        )
-        .distinct()
-    )
-    return cand.select(
+    pairs = candidate_pairs(chunks, id_col, "chunk", carry=("simhash",))
+    return pairs.select(
         "id_a",
         "id_b",
-        F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b"))).alias("hamming"),
+        F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b"))).alias(
+            "hamming"
+        ),
     ).filter(F.col("hamming") <= max_hamming)
 
 
@@ -765,14 +703,6 @@ def embedding_near_dups_lsh(
             "bkey"
         ),
     )
-    a = bands.withColumnRenamed("_id", "id_a")
-    b = bands.withColumnRenamed("_id", "id_b")
-    candidates = (
-        a.join(b, "bkey")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
     va = vecs.select(
         F.col("_id").alias("id_a"),
         F.col("v").alias("va"),
@@ -784,7 +714,8 @@ def embedding_near_dups_lsh(
         F.sqrt(dot("v", "v", dim)).alias("nb"),
     )
     return (
-        candidates.join(va, "id_a")
+        candidate_pairs(bands, "_id", "bkey")
+        .join(va, "id_a")
         .join(vb, "id_b")
         .select(
             "id_a",

@@ -229,8 +229,8 @@ def image_near_dup_pairs(
     64-bit dHash. Band-equality join (pigeonhole-complete for ≤ 3),
     bit_count(xor) verification on candidates only.
 
-    `max_band_freq` is the hot-bucket cap (the df-cap discipline of
-    `pipeline/containment`/`pipeline/winnow`): a degenerate corpus —
+    `max_band_freq` is the hot-bucket cap
+    (`operators/blocking.drop_hot_blocks`): a degenerate corpus —
     mass-duplicated or near-black images — funnels into one
     (band, value) bucket and makes the self-join quadratic, so buckets
     seen in more than max_band_freq fingerprints are DROPPED before
@@ -241,6 +241,7 @@ def image_near_dup_pairs(
     Default None = exact pigeonhole completeness (the adjudicated
     path). The fingerprint cut rotates one store slot: each call
     releases the previous call's cut (lineage.cut)."""
+    from tcrd_spark.operators.blocking import candidate_pairs, drop_hot_blocks
     from tcrd_spark.operators.lineage import cut
 
     # fp feeds both sides of the band self-join (plus the freq cap
@@ -262,28 +263,15 @@ def image_near_dup_pairs(
             )
         ).alias("band"),
     )
-    if max_band_freq is not None:
-        freq = (
-            bands.groupBy("band")
-            .agg(F.count(F.lit(1)).alias("_bf"))
-            .filter(F.col("_bf") <= max_band_freq)
-        )
-        bands = bands.join(freq.select("band"), "band")
-    cand = (
-        bands.alias("a")
-        .join(bands.alias("b"), "band")
-        .where(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            *[F.col(f"a.b{j}").alias(f"ab{j}") for j in range(BANDS)],
-            *[F.col(f"b.b{j}").alias(f"bb{j}") for j in range(BANDS)],
-        )
-        .distinct()
+    cand = candidate_pairs(
+        drop_hot_blocks(bands, "band", max_band_freq),
+        id_col,
+        "band",
+        carry=tuple(f"b{j}" for j in range(BANDS)),
     )
     hamming = None
     for j in range(BANDS):
-        t = F.bit_count(F.col(f"ab{j}").bitwiseXOR(F.col(f"bb{j}")))
+        t = F.bit_count(F.col(f"b{j}_a").bitwiseXOR(F.col(f"b{j}_b")))
         hamming = t if hamming is None else hamming + t
     return (
         cand.select("id_a", "id_b", hamming.alias("hamming"))

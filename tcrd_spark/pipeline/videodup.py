@@ -25,10 +25,10 @@ tier):
   which never share a frame index with their source and were
   structurally invisible to the aligned join. Folding frame indices
   makes buckets up to N_FRAMES× hotter, so this tier is ALWAYS
-  capped (``unaligned_max_band_freq``, default 24 videos/bucket —
-  the df-cap discipline): members of a hotter bucket lose candidacy
-  through it, keeping degenerate corpora bounded at a documented
-  recall cost (pass None to disable the tier).
+  capped (``unaligned_max_band_freq``, default 24 videos/bucket, by
+  `operators/blocking.drop_hot_blocks`): members of a hotter bucket
+  lose candidacy through it, keeping degenerate corpora bounded at a
+  documented recall cost (pass None to disable the tier).
 
 Verification joins the full fingerprint sets back per candidate pair
 and scores BEST-ALIGNMENT Hamming: for each frame of the lower-id
@@ -64,8 +64,8 @@ band ints per video do). The banded join shuffles (frame_idx, band,
 value) keys; temporal alignment multiplies the distinct key space by
 N_FRAMES, so buckets are strictly SMALLER than image banding over the
 same corpus. A degenerate corpus (mass-duplicated clips) is bounded
-by `max_band_freq` — the df-cap discipline of `pipeline/containment`
-/ `pipeline/winnow` — at a documented recall cost: members of a
+by `max_band_freq` — the one cap rule, `operators/blocking.
+drop_hot_blocks` — at a documented recall cost: members of a
 bucket larger than the cap lose candidacy THROUGH that bucket (they
 usually re-meet through rarer bands; exact mass-dup clusters are
 exact-hash territory, `pipeline/dedup.dedup_exact`).
@@ -245,6 +245,7 @@ def video_near_dup_pairs(
     degenerate corpora; recall note in the module docstring). The
     fingerprint cut rotates one store slot: each call releases the
     previous call's cut (lineage.cut)."""
+    from tcrd_spark.operators.blocking import candidate_pairs, drop_hot_blocks
     from tcrd_spark.operators.lineage import cut
 
     # the fingerprint frame feeds SIX plan branches (aligned bands ×2
@@ -270,11 +271,7 @@ def video_near_dup_pairs(
             )
         ).alias("band"),
     )
-    if max_band_freq is not None:
-        freq = bands.groupBy("band").agg(
-            F.count(F.lit(1)).alias("_bf")
-        ).filter(F.col("_bf") <= max_band_freq)
-        bands = bands.join(freq.select("band"), "band")
+    bands = drop_hot_blocks(bands, "band", max_band_freq)
     if unaligned_max_band_freq is not None:
         # fallback tier: same band VALUES, frame index folded away —
         # one distinct (video, band) row per video so the freq count
@@ -295,20 +292,10 @@ def video_near_dup_pairs(
                 )
             ).alias("band"),
         ).distinct()
-        ufreq = ubands.groupBy("band").agg(
-            F.count(F.lit(1)).alias("_bf")
-        ).filter(F.col("_bf") <= unaligned_max_band_freq)
-        bands = bands.unionByName(ubands.join(ufreq.select("band"), "band"))
-    cand = (
-        bands.alias("a")
-        .join(bands.alias("b"), "band")
-        .where(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
+        bands = bands.unionByName(
+            drop_hot_blocks(ubands, "band", unaligned_max_band_freq)
         )
-        .distinct()
-    )
+    cand = candidate_pairs(bands, id_col, "band")
     fa = fp.select(
         F.col(id_col).alias("id_a"),
         F.col("frame_idx").alias("fa_idx"),

@@ -17,10 +17,10 @@ window minima happen in one whole-stage-codegen'd expression per
 document; only the selected (doc, pos, fp) rows (≈ 2/(w+1) of grams,
 8-byte hashes, never text) reach the fingerprint table. The candidate
 pair join blocks on the fingerprint value with a document-frequency
-cap first (the PPJoin discipline `pipeline/dedup.py` uses): a
-fingerprint shared by more than max_df documents is a stopword-gram
-and generates quadratic pairs for no discrimination — drop it before
-the self-join, so pair fan-out is bounded by max_df² per fingerprint.
+cap first (`operators/blocking.drop_hot_blocks`): a fingerprint shared
+by more than max_df documents is a stopword-gram and generates
+quadratic pairs for no discrimination — drop it before the self-join,
+so pair fan-out is bounded by max_df² per fingerprint.
 
 Reference parity: the reference fingerprints nothing; this extends the
 text-analysis family (SURVEY.md §2, document fingerprinting) next to
@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tcrd_spark.functions.hashing import hash60, sql_hash60
+from tcrd_spark.operators.blocking import candidate_pairs, drop_hot_blocks
 from tcrd_spark.pipeline.text import ws_tokens
 
 GRAM_K = 4  # tokens per k-gram
@@ -161,7 +162,7 @@ def winnow_fp_values(
     row-locally (r12, guide §2.4): the per-doc value set is
     array_distinct over the window minima's hashes, and ids are unique
     per exploded group, so the global distinct exchange the pair join
-    paid disappears. Feed it to ``fingerprint_pairs(pre_distinct=True)``."""
+    paid disappears. It is the form ``fingerprint_pairs`` takes."""
     s = _winnow_sel(docs, id_col, text_col, k, w, spread)
     return s.select(
         F.col(id_col),
@@ -172,30 +173,17 @@ def winnow_fp_values(
 
 
 def fingerprint_pairs(
-    fps: DataFrame, id_col: str, max_df: int = MAX_DF,
-    pre_distinct: bool = False,
+    fps: DataFrame, id_col: str, max_df: int = MAX_DF
 ) -> DataFrame:
     """(id_a, id_b, shared): candidate pairs by shared fingerprint
-    VALUES, rare-fingerprint blocked.
+    VALUES, rare-fingerprint blocked. ``fps`` holds ONE row per
+    (id, fp), the `winnow_fp_values` form.
 
-    Distinct (id, fp) first; fingerprints seen in more than max_df
-    documents are dropped before the self-join (stopword grams —
-    quadratic fan-out, zero discrimination), bounding the join output
-    at max_df² rows per fingerprint. ``pre_distinct`` skips the
-    distinct when the input is already one row per (id, fp) — the
-    `winnow_fp_values` row-local form.
+    Fingerprints seen in more than max_df documents are dropped before
+    the self-join (stopword grams — quadratic fan-out, zero
+    discrimination), bounding the join output at max_df² rows per
+    fingerprint.
     """
-    d = (
-        fps.select(id_col, "fp")
-        if pre_distinct
-        else fps.select(id_col, "fp").distinct()
-    )
-    df_ok = (
-        d.groupBy("fp")
-        .agg(F.count("*").alias("_df"))
-        .filter(F.col("_df") <= max_df)
-        .select("fp")
-    )
     # Cut before the self-join (r12 — the video_near_dups lesson): both
     # join sides carry the md5-heavy fingerprint pipeline ABOVE its
     # repartition exchange, and exchange reuse only dedups the shuffle
@@ -204,15 +192,8 @@ def fingerprint_pairs(
     # bounds session storage to one cached cut (ADVICE r11 discipline).
     from tcrd_spark.operators.lineage import cut
 
-    dd = cut(d.join(df_ok, "fp"), "winnow-dd")
-    a = dd.select(F.col("fp"), F.col(id_col).alias("id_a"))
-    b = dd.select(F.col("fp"), F.col(id_col).alias("id_b"))
-    return (
-        a.join(b, "fp")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count("*").alias("shared"))
-    )
+    dd = cut(drop_hot_blocks(fps.select(id_col, "fp"), "fp", max_df), "winnow-dd")
+    return candidate_pairs(dd, id_col, "fp")
 
 
 # ------------------------------------------------- registered queries
@@ -238,7 +219,7 @@ def q_winnow_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     par = spark.sparkContext.defaultParallelism
     fps = winnow_fp_values(docs, "doc_id", "text", GRAM_K, WIN_W, spread=par)
-    pairs = fingerprint_pairs(fps, "doc_id", MAX_DF, pre_distinct=True)
+    pairs = fingerprint_pairs(fps, "doc_id", MAX_DF)
     return pairs.orderBy(
         F.desc("shared"), F.asc("id_a"), F.asc("id_b")
     ).limit(TOP_PAIRS)

@@ -140,7 +140,14 @@ def _rel_file():
     the manifest-relative path (one hive level, the layout contract).
     `_metadata.file_path` is a URI: percent-decode it so a partition
     value Spark escapes ('a b' is 'a%20b' there) matches its manifest
-    name; '+' is literal in a URI path, so it is protected first."""
+    name; '+' is literal in a URI path, so it is protected first.
+
+    DV sidecars written before this decode, by code that took the path
+    raw, hold URI-encoded names for a partition with an escaped value;
+    they do not match and are not read-compatible (no lake in the repo
+    has one). They are not decoded on read: that would mangle a current
+    name holding a literal '%', such as 'x%y' (pinned in
+    tests/test_dv.py)."""
     rel = F.regexp_extract(
         F.col("_metadata.file_path"), r"([^/]+/[^/]+)$", 1
     )

@@ -58,3 +58,23 @@ def test_jaccard_cache_storage_bounded_across_invocations(spark):
     held = _SESSION_MEMO["jaccard-sh"][1]
     ngram_jaccard_pairs(other, "doc_id", "text", n=3, threshold=0.3).collect()
     assert _SESSION_MEMO["jaccard-sh"][1] is held and held.is_cached
+
+
+def test_band_count_must_divide_perms(spark):
+    """A band count that does not divide n_perms raises ValueError at
+    build time, through both MinHash-LSH entry points (an assert would
+    vanish under `python -O` and silently drop signature rows)."""
+    import pytest
+
+    from tcrd_spark.pipeline.corpus import incremental_near_dups_lsh
+    from tcrd_spark.pipeline.dedup import minhash_lsh_pairs
+
+    docs = spark.createDataFrame(
+        [(1, "alpha beta gamma delta")], "doc_id long, text string"
+    )
+    with pytest.raises(ValueError, match="divide evenly"):
+        minhash_lsh_pairs(docs, "doc_id", "text", n_perms=32, bands=5)
+    with pytest.raises(ValueError, match="divide evenly"):
+        incremental_near_dups_lsh(
+            docs, docs, "doc_id", "text", n_perms=32, bands=5
+        )

@@ -176,6 +176,56 @@ def test_one_way_to_cut_and_cache():
     assert not hits, hits
 
 
+# An ordered self-join written in the Column API: `a.<id> < b.<id>` on
+# aliased sides, or `id_a < id_b` on renamed ones.
+ORDERED_SELF_JOIN = re.compile(
+    r'F\.col\(f?"a\.[^"]*"\)\s*<\s*F\.col\(f?"b\.'
+    r'|F\.col\("id_a"\)\s*<\s*F\.col\("id_b"\)'
+)
+# pipeline functions that keep their own ordered pair join, and why
+OWN_PAIR_JOIN = {
+    "dedup.py::ngram_jaccard_pairs": "PPJoin's positional filter prunes "
+    "each matching prefix key (its positions on both sides), which a "
+    "per-pair join cannot express",
+    "editdist.py::edit_distance_pairs": "a band join of each doc against "
+    "the neighbour length buckets of the other side, not a self-join of "
+    "one key frame; each pair meets once and verifies in the join",
+    "semdedup.py::semantic_pairs": "one cluster per id, so each pair "
+    "meets once and is scored in the join; a per-pair grouping would add "
+    "an exchange and two verify joins",
+}
+
+
+def test_one_way_to_pair_candidates():
+    """Near-dup candidate pairs come from operators/blocking.py
+    (`candidate_pairs`): no pipeline module writes its own ordered
+    self-join outside OWN_PAIR_JOIN, and every entry there still
+    exists."""
+    import ast
+
+    root = os.path.join(os.path.dirname(tcrd_spark.__file__), "pipeline")
+    found = set()
+    for f in sorted(os.listdir(root)):
+        if not f.endswith(".py"):
+            continue
+        with open(os.path.join(root, f)) as fh:
+            text = fh.read()
+        funcs = [
+            n for n in ast.walk(ast.parse(text))
+            if isinstance(n, ast.FunctionDef)
+        ]
+        for i, line in enumerate(text.splitlines(), 1):
+            if ORDERED_SELF_JOIN.search(line):
+                # the innermost function holding the line, else the module
+                owner = min(
+                    (n for n in funcs if n.lineno <= i <= n.end_lineno),
+                    key=lambda n: n.end_lineno - n.lineno,
+                    default=None,
+                )
+                found.add(f"{f}::{owner.name if owner else '<module>'}")
+    assert found == set(OWN_PAIR_JOIN), found ^ set(OWN_PAIR_JOIN)
+
+
 def test_no_env_knobs_outside_deployment_settings():
     """The process environment is read only for session.py's deployment
     settings — never as an operator knob."""

@@ -84,7 +84,7 @@ def test_pair_join_is_df_capped(spark, sf_dir):
         .agg(F.countDistinct("doc_id").alias("df"))
         .filter(F.col("df") <= winnow.MAX_DF)
     )
-    pairs = winnow.fingerprint_pairs(fps, "doc_id")
+    pairs = winnow.fingerprint_pairs(d, "doc_id")
     # shared count per pair can never exceed the number of kept fps
     assert pairs.agg(F.max("shared")).collect()[0][0] <= kept.count()
 
@@ -108,12 +108,8 @@ def test_fp_values_matches_fingerprints_distinct(spark, sf_dir):
     assert sorted(map(tuple, via_rows.collect())) == sorted(
         map(tuple, via_values.collect())
     )
-    p_old = fingerprint_pairs(
-        winnow_fingerprints(docs, "doc_id", "text", GRAM_K, WIN_W),
-        "doc_id", MAX_DF,
-    )
-    p_new = fingerprint_pairs(via_values, "doc_id", MAX_DF,
-                              pre_distinct=True)
+    p_old = fingerprint_pairs(via_rows, "doc_id", MAX_DF)
+    p_new = fingerprint_pairs(via_values, "doc_id", MAX_DF)
     assert sorted(map(tuple, p_old.collect())) == sorted(
         map(tuple, p_new.collect())
     )
