@@ -38,6 +38,8 @@ questions; correlated FORM is an extension.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame, SparkSession
 
 Q17_SQL = """
@@ -174,10 +176,15 @@ Q11_SQL = """
 
 
 def run_sql(spark: SparkSession, sf_dir: str, sql: str) -> DataFrame:
-    """Register the lake views and run one ANSI text through Catalyst."""
-    from tcrd_spark.sources.lake import register_views
+    """Register the lake views ``sql`` names and run the ANSI text
+    through Catalyst. Only the tables whose names appear as words in
+    the text are (re-)registered for ``sf_dir``: every parquet read
+    fires a footer-schema job, and a query reads 3 of the 10 tables.
+    A table the text does not name cannot be read by it."""
+    from tcrd_spark.sources.lake import TABLES, register_views
 
-    register_views(spark, sf_dir)
+    words = set(re.findall(r"\w+", sql.lower()))
+    register_views(spark, sf_dir, tuple(t for t in TABLES if t in words))
     return spark.sql(sql)
 
 

@@ -68,10 +68,10 @@ def connected_components(
         return (row["n"], row["s"])
 
     e = (
-        edges.select(
-            F.col(src).cast("long").alias("u"), F.col(dst).cast("long").alias("v")
+        edges.selectExpr(
+            f"CAST(`{src}` AS BIGINT) AS u", f"CAST(`{dst}` AS BIGINT) AS v"
         )
-        .where(F.col("u") != F.col("v"))
+        .where("u != v")
         .distinct()
     )
     # Size-adaptive fast path (r11 optimization, the broadcast-join-
@@ -207,6 +207,25 @@ def connected_components(
     return e.select(F.col("u").alias("node"), F.col("v").alias("component"))
 
 
+def group_labels(
+    docs: DataFrame, pairs: DataFrame, id_col: str = "doc_id",
+    rep_by: str | None = None,
+) -> DataFrame:
+    """(doc_id, group_id[, rep_by]): every doc of ``docs`` labelled with
+    its near-dup GROUP, group_id = the min doc id the (id_a, id_b)
+    ``pairs`` connect it to (isolated docs label themselves). The one
+    labelling step of ``dedup_groups``, ``dedup_group_reps`` and the
+    leakage-safe split; ids come back as bigint."""
+    cc = connected_components(pairs, "id_a", "id_b")
+    i = f"`{id_col}`"
+    score = [f"`{rep_by}`"] if rep_by else []
+    return (
+        docs.selectExpr(f"CAST({i} AS BIGINT) AS {i}", *score)
+        .join(cc.withColumnRenamed("node", id_col), id_col, "left")
+        .selectExpr(i, f"coalesce(component, {i}) AS group_id", *score)
+    )
+
+
 def dedup_groups(
     docs: DataFrame, pairs: DataFrame, id_col: str = "doc_id",
     rep_by: str | None = None,
@@ -228,37 +247,25 @@ def dedup_groups(
     a viral million-member group costs its partitions a merge of
     partial maxima, never a single-task sort.
     """
-    cc = connected_components(pairs, "id_a", "id_b")
-    labeled = (
-        docs.select(
-            F.col(id_col).cast("long").alias(id_col),
-            *([F.col(rep_by)] if rep_by else []),
-        )
-        .join(cc.withColumnRenamed("node", id_col), id_col, "left")
-        .select(
-            id_col,
-            F.coalesce("component", F.col(id_col)).alias("group_id"),
-            *([rep_by] if rep_by else []),
-        )
-    )
-    sizes = labeled.groupBy("group_id").agg(F.count("*").alias("group_sz"))
-    out = labeled.join(sizes, "group_id").select(
-        id_col, "group_id", "group_sz"
-    )
+    labeled = group_labels(docs, pairs, id_col, rep_by)
+    i = f"`{id_col}`"
+    sizes = labeled.groupBy("group_id").agg(F.expr("count(1) AS group_sz"))
+    out = labeled.join(sizes, "group_id").selectExpr(i, "group_id", "group_sz")
     if rep_by is None:
         return out
-    # max of (score, -id) ⇒ highest score, then smallest id — an
-    # order-independent aggregate, engine-reproducible
-    reps = labeled.groupBy("group_id").agg(
-        F.max(
-            F.struct(
-                F.col(rep_by).alias("s"),
-                (-F.col(id_col)).alias("negid"),
-            )
-        ).alias("m")
-    ).select("group_id", (-F.col("m.negid")).alias("rep_id"))
-    return out.join(reps, "group_id").select(
-        id_col, "group_id", "group_sz", "rep_id"
+    return out.join(_rep_ids(labeled, id_col, rep_by), "group_id").selectExpr(
+        i, "group_id", "group_sz", "rep_id"
+    )
+
+
+def _rep_ids(labeled: DataFrame, id_col: str, rep_by: str) -> DataFrame:
+    """(group_id, rep_id): each group's elected representative. Max of
+    (score, -id) ⇒ highest score, then smallest id — an
+    order-independent aggregate, engine-reproducible."""
+    return (
+        labeled.groupBy("group_id")
+        .agg(F.expr(f"max(struct(`{rep_by}` AS s, -`{id_col}` AS negid)) AS m"))
+        .selectExpr("group_id", "-m.negid AS rep_id")
     )
 
 
@@ -278,36 +285,11 @@ def dedup_group_reps(
     aggregate dedup_groups runs, minus sizes and join-backs — 3 fewer
     exchanges per gate in the composed pipelines' plans.
     """
-    cc = connected_components(pairs, "id_a", "id_b")
-    labeled = (
-        docs.select(
-            F.col(id_col).cast("long").alias(id_col),
-            *([F.col(rep_by)] if rep_by else []),
-        )
-        .join(cc.withColumnRenamed("node", id_col), id_col, "left")
-        .select(
-            id_col,
-            F.coalesce("component", F.col(id_col)).alias("group_id"),
-            *([rep_by] if rep_by else []),
-        )
-    )
+    labeled = group_labels(docs, pairs, id_col, rep_by)
     if rep_by is None:
         # the min-id representative IS the group label
-        return labeled.select(
-            F.col("group_id").alias(id_col)
-        ).distinct()
-    return (
-        labeled.groupBy("group_id")
-        .agg(
-            F.max(
-                F.struct(
-                    F.col(rep_by).alias("s"),
-                    (-F.col(id_col)).alias("negid"),
-                )
-            ).alias("m")
-        )
-        .select((-F.col("m.negid")).alias(id_col))
-    )
+        return labeled.selectExpr(f"group_id AS `{id_col}`").distinct()
+    return _rep_ids(labeled, id_col, rep_by).selectExpr(f"rep_id AS `{id_col}`")
 
 
 # ------------------------------------------------- incremental (batch) dedup

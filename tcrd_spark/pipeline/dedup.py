@@ -29,6 +29,7 @@ from tcrd_spark.functions.hashing import (
     band_hashes_expr,
     hash60,
     minhash_sig_expr,
+    spark_hash60,
 )
 from tcrd_spark.operators.blocking import candidate_pairs
 from tcrd_spark.pipeline.text import ws_tokens
@@ -138,35 +139,31 @@ def ngram_jaccard_pairs(
     from tcrd_spark.operators.lineage import cache
 
     # sh feeds both the df-frequency agg and the canonical-order join
-    # below; cache so tokenize→md5 runs once (one row per doc).
-    # Rotating slots (r12): no caller unpersists, and every invocation
-    # previously pinned a new materialized frame for the session
+    # below; cache so tokenize→md5 runs once (one row per doc, so AQE
+    # sizes the cache's partitions from its bytes). The store's slot
+    # keeps one live cache across invocations.
+    i = f"`{id_col}`"
     sh = cache(
         hashed_shingles(df, id_col, text_col, n), "jaccard-sh"
     )
-    inv = sh.select(id_col, F.explode("hs").alias("g"))
-    dfreq = inv.groupBy("g").agg(F.count("*").alias("dfc"))
-    # per-doc shingles in canonical (dfc, g) order + the full set
+    inv = sh.selectExpr(i, "explode(hs) AS g")
+    dfreq = inv.groupBy("g").agg(F.expr("count(1) AS dfc"))
+    # per-doc shingles in canonical (dfc, g) order + the full set.
+    # SQL strings throughout: one parse each, where the Column form's
+    # lambdas and filter trees cost ~800 py4j round trips per call
     grouped = (
         inv.join(dfreq, "g")
         .groupBy(id_col)
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct(F.col("dfc"), F.col("g")))
-            ).alias("sarr")
-        )
-        .select(
-            id_col,
-            F.transform(F.col("sarr"), lambda x: x["g"]).alias("hs"),
-            F.size("sarr").alias("n_sh"),
-        )
+        .agg(F.expr("array_sort(collect_list(struct(dfc, g))) AS sarr"))
+        .selectExpr(i, "transform(sarr, x -> x.g) AS hs", "size(sarr) AS n_sh")
     )
     # referenced by 3 branches below (prefix index + both verify
     # sides); without this the tokenize→md5→sort lineage re-executes
     # per branch — 5× wall on the bench corpus. One row per doc
-    # (id + sorted hash array), so the cache is small at any SF.
+    # (id + sorted hash array): small at any SF, and AQE coalesces the
+    # 32 shuffle partitions it is grouped into to what its bytes need,
+    # so each of the three reads runs a task or a few, not 32.
     grouped = cache(grouped, "jaccard-grouped")
-    prefix_len = (F.col("n_sh") - F.ceil(F.lit(threshold) * F.col("n_sh")) + 1).cast("int")
     # prefix inverted index WITH positions: PPJoin's positional filter
     # (Xiao et al. '08) prunes a g-match at 1-based positions (pa, pb)
     # when 1 + min(|a|-pa, |b|-pb) — the best still-possible overlap —
@@ -175,34 +172,26 @@ def ngram_jaccard_pairs(
     # Both are exactness-preserving; together they cut the candidate
     # set the verify join must ship arrays for — the dominant cost at
     # scale once the per-doc array table outgrows broadcast range.
-    pinv = grouped.select(
-        id_col,
+    # Thresholds enter as DOUBLE literals (`D`): a bare 0.3 parses as
+    # DECIMAL.
+    tau = f"{float(threshold)!r}D"
+    alpha = f"{threshold / (1.0 + threshold)!r}D"
+    pinv = grouped.selectExpr(
+        i,
         "n_sh",
-        F.posexplode(F.slice(F.col("hs"), 1, prefix_len)).alias("pos", "g"),
-    )
-    alpha = F.ceil(
-        F.lit(threshold / (1.0 + threshold))
-        * (F.col("a.n_sh") + F.col("b.n_sh"))
-    )
-    ubound = 1 + F.least(
-        F.col("a.n_sh") - F.col("a.pos") - 1,
-        F.col("b.n_sh") - F.col("b.pos") - 1,
+        f"posexplode(slice(hs, 1, CAST(n_sh - ceil({tau} * n_sh) + 1 AS INT)))"
+        " AS (pos, g)",
     )
     cand = (
         pinv.alias("a")
         .join(pinv.alias("b"), "g")
         .where(
-            (F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-            & (
-                F.least("a.n_sh", "b.n_sh")
-                >= F.lit(threshold) * F.greatest("a.n_sh", "b.n_sh")
-            )
-            & (ubound >= alpha)
+            f"a.{i} < b.{i}"
+            f" AND least(a.n_sh, b.n_sh) >= {tau} * greatest(a.n_sh, b.n_sh)"
+            f" AND 1 + least(a.n_sh - a.pos - 1, b.n_sh - b.pos - 1)"
+            f" >= ceil({alpha} * (a.n_sh + b.n_sh))"
         )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-        )
+        .selectExpr(f"a.{i} AS id_a", f"b.{i} AS id_b")
         .distinct()
     )
     return jaccard_verify(cand, grouped, id_col, threshold)
@@ -311,37 +300,36 @@ def simhash_signatures(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     Implemented as explode(token)×explode(bit) → two aggregations —
     all built-in, identically expressible in the oracle SQL. At scale
     the 32× bit fan-out stays map-local until the (id, bit) partial agg.
+    SQL strings, one parse each: the Column form's 32 mask structs and
+    CASE trees cost ~1,650 py4j round trips per call, these ~90 (same
+    expressions; tests/test_build_cost.py pins equal rows and schema).
     """
-    tok_ct = (
-        df.select(F.col(id_col), F.explode(ws_tokens(F.col(text_col))).alias("t"))
-        .groupBy(id_col, "t")
-        .agg(F.count("*").alias("ct"))
-        .withColumn("h", hash60(F.col("t")))
+    i = f"`{id_col}`"
+    masks = ", ".join(
+        f"named_struct('bit', {b}, 'mask', {1 << b})" for b in range(SIMHASH_BITS)
     )
-    bits = F.explode(
-        F.array(
-            *[
-                F.struct(F.lit(i).alias("bit"), F.lit(1 << i).alias("mask"))
-                for i in range(SIMHASH_BITS)
-            ]
-        )
-    ).alias("bm")
+    # h is projected BEFORE the bit explode: a column beside a generator
+    # in one select is evaluated above the Generate, i.e. one md5 per
+    # (token, bit) instead of one per token
+    tok_ct = (
+        df.selectExpr(i, f"explode(split(`{text_col}`, '\\\\s+')) AS t")
+        .groupBy(id_col, "t")
+        .agg(F.expr("count(1) AS ct"))
+        .selectExpr(i, "ct", f"{spark_hash60('t')} AS h")
+    )
     per_bit = (
-        tok_ct.select(id_col, "ct", "h", bits)
-        .select(
-            id_col,
-            F.col("bm.bit").alias("bit"),
-            F.col("bm.mask").alias("mask"),
-            (
-                F.col("ct")
-                * F.when((F.col("h").bitwiseAND(F.col("bm.mask"))) != 0, 1).otherwise(-1)
-            ).alias("signed"),
+        tok_ct.selectExpr(i, "ct", "h", f"explode(array({masks})) AS bm")
+        .selectExpr(
+            i,
+            "bm.bit AS bit",
+            "bm.mask AS mask",
+            "ct * CASE WHEN (h & bm.mask) != 0 THEN 1 ELSE -1 END AS signed",
         )
         .groupBy(id_col, "bit", "mask")
-        .agg(F.sum("signed").alias("s"))
+        .agg(F.expr("sum(signed) AS s"))
     )
     return per_bit.groupBy(id_col).agg(
-        F.sum(F.when(F.col("s") >= 0, F.col("mask")).otherwise(0)).alias("simhash")
+        F.expr("sum(CASE WHEN s >= 0 THEN mask ELSE 0 END) AS simhash")
     )
 
 
@@ -362,35 +350,18 @@ def simhash_pairs(
     # 4 rows per doc, two longs each — bounded; rotating slot.
     from tcrd_spark.operators.lineage import cut
 
+    chunks = ", ".join(
+        f"concat_ws(':', '{j}', CAST(shiftright(simhash, {8 * j}) & 255 AS STRING))"
+        for j in range(4)
+    )
     chunks = cut(
-        sig.select(
-            id_col,
-            "simhash",
-            F.explode(
-                F.array(
-                    *[
-                        F.concat_ws(
-                            ":",
-                            F.lit(str(j)),
-                            F.shiftright(F.col("simhash"), 8 * j)
-                            .bitwiseAND(F.lit(255))
-                            .cast("string"),
-                        )
-                        for j in range(4)
-                    ]
-                )
-            ).alias("chunk"),
-        ),
+        sig.selectExpr(f"`{id_col}`", "simhash", f"explode(array({chunks})) AS chunk"),
         "simhash-chunks",
     )
     pairs = candidate_pairs(chunks, id_col, "chunk", carry=("simhash",))
-    return pairs.select(
-        "id_a",
-        "id_b",
-        F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b"))).alias(
-            "hamming"
-        ),
-    ).filter(F.col("hamming") <= max_hamming)
+    return pairs.selectExpr(
+        "id_a", "id_b", "bit_count(simhash_a ^ simhash_b) AS hamming"
+    ).where(f"hamming <= {int(max_hamming)}")
 
 
 # --- Embedding near-dup ------------------------------------------------------

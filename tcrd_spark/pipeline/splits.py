@@ -10,7 +10,9 @@ no RNG state, and stable under re-runs/appends of unrelated docs
 
 100 TB shape: the CC resolution is the existing alternating-star
 (pipeline/corpus.py); the assignment itself is one row-local hash +
-CASE on the labeled frame. One extra shuffle beyond the CC.
+CASE on the labeled frame (``corpus.group_labels``: the group sizes
+``dedup_groups`` adds are never read here, so their aggregate and
+join-back are not built). No shuffle beyond the CC's label join.
 
 Reference parity: none (extension; the canonical companion to the
 dedup family in SURVEY §2.3).
@@ -19,10 +21,9 @@ dedup family in SURVEY §2.3).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from tcrd_spark.functions.hashing import hash60, sql_hash60
-from tcrd_spark.pipeline.corpus import dedup_groups
+from tcrd_spark.functions.hashing import spark_hash60, sql_hash60
+from tcrd_spark.pipeline.corpus import group_labels
 
 FRACTIONS = (0.8, 0.1, 0.1)  # train / val / test
 _DEN = float(1 << 60)
@@ -37,15 +38,15 @@ def leakage_safe_split(
     """(doc_id, group_id, split): every doc labeled train/val/test,
     with all members of a near-dup group in the SAME split."""
     train, val, _ = fractions
-    groups = dedup_groups(docs, pairs, id_col)
-    u = hash60(F.concat(F.lit("split|"), F.col("group_id").cast("string"))) / F.lit(_DEN)
-    return groups.select(
-        id_col,
+    # one parse instead of a py4j round trip per Column operator;
+    # DOUBLE literals (`D`) keep the thresholds the Python floats
+    h = spark_hash60("concat('split|', CAST(group_id AS STRING))")
+    u = f"{h} / {_DEN!r}D"
+    return group_labels(docs, pairs, id_col).selectExpr(
+        f"`{id_col}`",
         "group_id",
-        F.when(u < train, F.lit("train"))
-        .when(u < train + val, F.lit("val"))
-        .otherwise(F.lit("test"))
-        .alias("split"),
+        f"CASE WHEN {u} < {train!r}D THEN 'train'"
+        f" WHEN {u} < {train + val!r}D THEN 'val' ELSE 'test' END AS split",
     )
 
 

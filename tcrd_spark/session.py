@@ -6,6 +6,17 @@ runtime re-planning + skew-join splitting, Arrow for the few pandas_udf
 paths, and a broadcast threshold that lets every dimension table
 (region/nation/supplier/type-dictionaries) broadcast instead of shuffle.
 
+AQE also re-plans cached frames (``canChangeCachedPlanOutputPartitioning``):
+a ``.cache()`` of a shuffled plan is sized by its runtime bytes, not
+pinned at ``spark.sql.shuffle.partitions``. Caches far smaller than
+32 × the advisory partition size (the memo store's shingle arrays,
+edge lists, code tables: every one at test and bench scale) are the
+regime that wins: each stage reading one ran 32 tasks over a few KB
+and now runs one or a few. Pinned partitioning wins only where a cache
+is joined or grouped on the key it was shuffled by: the cache then no
+longer reports that hash partitioning, so the join plans one more
+Exchange. No registered query's plan has that shape today.
+
 Also home of the session memo store (`memo` / `clear`): the one
 mechanism by which query families reuse intermediates across queries.
 """
@@ -34,6 +45,11 @@ def get_spark(app_name: str = "tcrd_spark", master: str | None = None) -> SparkS
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.shuffle.partitions", "32")
+        # let AQE coalesce a cached plan too (off by default, so a cache
+        # keeps all 32 shuffle partitions however small it is). Wins for
+        # small caches; costs an Exchange where a cache is joined on its
+        # own shuffle key (module docstring).
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         # Dimension tables (≤25 rows here; ≤20k targets in the reference)
         # must broadcast — never shuffle a fact table to join a dim.
         .config("spark.sql.autoBroadcastJoinThreshold", "64MB")

@@ -73,9 +73,12 @@ def split_for_scan(spark: SparkSession, df: DataFrame) -> DataFrame:
     return df
 
 
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every lake table as a temp view for the SQL surface."""
-    for name in TABLES:
+def register_views(
+    spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES
+) -> None:
+    """Register the lake tables ``names`` (default: every table) that
+    exist under ``sf_dir`` as temp views for the SQL surface."""
+    for name in names:
         path = os.path.join(sf_dir, f"{name}.parquet")
         if os.path.exists(path):
             load_table(spark, sf_dir, name).createOrReplaceTempView(name)

@@ -151,6 +151,23 @@ def test_registered_queries_pin_bounded_storage(spark, sf_dir, tmp_path):
         assert n[3] == n[1], (name, n)
 
 
+def test_small_cache_is_not_pinned_at_shuffle_partitions(spark):
+    """AQE may re-plan a cached frame (session.py): a materialized
+    cache of a tiny aggregate, grouped into spark.sql.shuffle.partitions
+    (32) partitions, is scanned in fewer."""
+    from tcrd_spark.operators.lineage import cache
+    from tcrd_spark.session import _SESSION_MEMO, _release
+
+    agg = spark.range(1000).selectExpr("id % 7 AS k").groupBy("k").count()
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "32"
+    try:
+        c = cache(agg, "test-aqe-cache")
+        assert c.count() == 7
+        assert c.rdd.getNumPartitions() < 32
+    finally:
+        _release(spark, _SESSION_MEMO.pop("test-aqe-cache")[1])
+
+
 def _sources():
     root = os.path.dirname(tcrd_spark.__file__)
     for dirpath, _, files in os.walk(root):
@@ -176,10 +193,12 @@ def test_one_way_to_cut_and_cache():
     assert not hits, hits
 
 
-# An ordered self-join written in the Column API: `a.<id> < b.<id>` on
-# aliased sides, or `id_a < id_b` on renamed ones.
+# An ordered self-join: `a.<id> < b.<id>` on aliased sides, in the
+# Column API or as an f-string SQL condition, or `id_a < id_b` on
+# renamed ones.
 ORDERED_SELF_JOIN = re.compile(
     r'F\.col\(f?"a\.[^"]*"\)\s*<\s*F\.col\(f?"b\.'
+    r'|f"a\.\S*\s*<\s*b\.'
     r'|F\.col\("id_a"\)\s*<\s*F\.col\("id_b"\)'
 )
 # pipeline functions that keep their own ordered pair join, and why
