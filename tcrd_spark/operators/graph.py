@@ -356,6 +356,13 @@ PR_DAMPING = 0.85
 # below runs unchanged.
 _PR_DRIVER_MAX = 500_000
 
+# The distributed loop cuts lineage every _PR_CUT_EVERY iterations (and
+# after the last). Each cut spends a job wave; fusing iterations between
+# cuts trades that against Catalyst analysis of the deeper chain.
+# Measured bit-identical at sf0.1: every-1 5.69s, every-2 4.25s, every-3
+# 4.18s; every-6 regressed to 4.67s (the analysis cost crossing over).
+_PR_CUT_EVERY = 3
+
 
 def _pagerank_driver(spark, src_vals, dst_vals, node_type, iters, damping):
     """Driver-side PageRank over a BOUNDED edge list, replicating the
@@ -437,9 +444,7 @@ def pagerank(
     iters: int = PR_ITERS,
     damping: float = PR_DAMPING,
     exact_fold: bool = True,
-    cache_inputs: bool = True,
     prebuilt: tuple | None = None,
-    cut_every: int = 3,
     n_nodes: int | None = None,
 ) -> DataFrame:
     """Fixed-iteration PageRank over a directed edge list → (node,
@@ -453,24 +458,24 @@ def pagerank(
     output is plan-cut through an (uncached) RDD round-trip: the chain
     is strictly linear so every cut is computed exactly once, and
     without the cut Catalyst re-analysis cost grows superlinearly with
-    depth (the apsp lesson above). Node count is ONE bounded driver long
+    depth (the apsp lesson above); it cuts every _PR_CUT_EVERY
+    iterations. Node count is ONE bounded driver long
     (r11: folded into the rank expressions as a literal — the
     per-iteration count-aggregate + broadcast-exchange pair it
     replaces was 2 jobs × iters for the same scalar).
 
-    ``cut_every`` (r11/r12, measured): cutting every iteration spends
-    a job wave per cut; letting iterations fuse into one cut trades
-    that against Catalyst analysis of the deeper chain. Measured
-    bit-identical at sf0.1: every-1 5.69s → every-2 4.25s (r11) →
-    every-3 4.18s (r12, the new default); every-6 regressed to 4.67s
-    (the analysis cost crossing over).
-
     ``exact_fold=True`` sums each node's incoming contributions by a
     sorted fold (collect_list → array_sort → aggregate) so Spark and
     the DuckDB oracle add doubles in the identical order — bit-exact
-    adjudication, same trade TIN-X makes. Production flag is
-    ``exact_fold=False`` (plain map-side-combinable sum; a power-law
-    in-degree hub then never materializes its contribution list).
+    adjudication, same trade TIN-X makes. ``exact_fold=False`` is a
+    plain map-side-combinable sum, so a power-law in-degree hub never
+    materializes its contribution list; its values agree to 1e-6, and
+    no registered query uses it. It always takes the distributed loop.
+
+    Up to _PR_DRIVER_MAX distinct edges (with exact_fold and no NULL
+    endpoint) the iterations run driver-side instead, bit-identical
+    (_pagerank_driver); above that the distributed loop is the only
+    path.
     """
     spark = edges.sparkSession
     if prebuilt is not None:
@@ -503,14 +508,13 @@ def pagerank(
                     damping,
                 )
     if prebuilt is None:
-        if cache_inputs:
-            # e/deg/nodes appear in EVERY iteration's plan; uncached
-            # they re-run the upstream scan+window+distinct once per
-            # iteration (measured 9.9s → warm 3s at sf0.1). One
-            # rotating store slot each bounds session storage.
-            e = cache(e, "pagerank-e")
-            deg = cache(deg, "pagerank-deg")
-            nodes = cache(nodes, "pagerank-nodes")
+        # e/deg/nodes appear in EVERY iteration's plan; uncached they
+        # re-run the upstream scan+window+distinct once per iteration
+        # (measured 9.9s → warm 3s at sf0.1). One rotating store slot
+        # each bounds session storage.
+        e = cache(e, "pagerank-e")
+        deg = cache(deg, "pagerank-deg")
+        nodes = cache(nodes, "pagerank-nodes")
     # one bounded driver long; the literals below reproduce the exact
     # IEEE doubles the old per-iteration aggregate produced (division
     # of the same operands is correctly rounded either way). Callers
@@ -550,7 +554,7 @@ def pagerank(
         )
         # uncached JVM-side cut: the chain is strictly linear, every
         # cut is computed exactly once by the terminal action
-        if (i + 1) % cut_every == 0 or i == iters - 1:
+        if (i + 1) % _PR_CUT_EVERY == 0 or i == iters - 1:
             ranks = _truncate(ranks, cache=False)
     return ranks.select("node", F.round("pr", 6).alias("pagerank"))
 

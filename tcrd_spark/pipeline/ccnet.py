@@ -96,10 +96,10 @@ def q_ccnet_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     the documents corpus. The (lang, nll) frame is memoized per
     session like the SQ/PQ code tables, so the LM lineage runs once
     across the edge pass, the label pass, and repeated invocations."""
-    from tcrd_spark.pipeline.lm import _docs
     from tcrd_spark.session import memo
+    from tcrd_spark.sources.lake import load_table
 
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     labeled = memo(
         spark, "ccnet-labeled", sf_dir,
         lambda: lang_nll(docs, "doc_id", "text").cache(),

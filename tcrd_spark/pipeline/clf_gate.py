@@ -64,10 +64,10 @@ def q_classifier_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """NB quality gate over the corpus, weak labels from the CCNet
     perplexity tertiles (shares the standalone query's session memo)."""
     from tcrd_spark.pipeline.ccnet import ccnet_buckets, lang_nll
-    from tcrd_spark.pipeline.lm import _docs
     from tcrd_spark.session import memo
+    from tcrd_spark.sources.lake import load_table
 
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     labeled = memo(
         spark, "ccnet-labeled", sf_dir,
         lambda: lang_nll(docs, "doc_id", "text").cache(),

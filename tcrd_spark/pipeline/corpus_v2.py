@@ -78,8 +78,8 @@ from tcrd_spark.pipeline.dsir import (
     gumbel_key,
 )
 from tcrd_spark.pipeline.semdedup import _EMB_DIM, semantic_dedup_reps
-from tcrd_spark.pipeline.substring import _split_docs, excise_duplicate_spans
-from tcrd_spark.sources.lake import load_table
+from tcrd_spark.pipeline.substring import excise_duplicate_spans
+from tcrd_spark.sources.lake import load_table, split_for_scan
 
 EXCISE_K, EXCISE_MIN_OCC = 8, 2
 JACCARD_N, JACCARD_T = 3, 0.3
@@ -117,7 +117,7 @@ def _docs2(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cut every downstream stage re-analyzes the whole excision tree —
     # measured 15.4s of the warm 18.4s run was analysis, not execution
     def build():
-        docs = _split_docs(spark, sf_dir)
+        docs = split_for_scan(spark, load_table(spark, sf_dir, "documents"))
         ex = excise_duplicate_spans(
             docs, "doc_id", "text", k=EXCISE_K,
             min_occurrences=EXCISE_MIN_OCC,

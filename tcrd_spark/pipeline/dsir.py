@@ -150,15 +150,10 @@ def dsir_sample(weights: DataFrame, id_col: str, k: int) -> DataFrame:
 
 
 def _weights(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tcrd_spark.sources.lake import load_table
+    from tcrd_spark.sources.lake import load_table, split_for_scan
 
-    # the test corpus arrives as ONE scan split; spread the md5-heavy
-    # gram hashing across tasks (at 100 TB the scan's own splits do
-    # this and the repartition would be dead weight — measured here:
-    # 4.4s → 1.7s warm at sf0.1)
-    docs = load_table(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism, "doc_id"
-    )
+    # spread the md5-heavy gram hashing across tasks
+    docs = split_for_scan(spark, load_table(spark, sf_dir, "documents"))
     target = docs.filter(F.col("source").isin(*TARGET_SOURCES))
     ratio = bucket_log_ratio(target, docs, "doc_id", "text")
     return dsir_log_weights(docs, ratio, "doc_id", "text")

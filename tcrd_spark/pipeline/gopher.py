@@ -294,16 +294,18 @@ def gopher_filter(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
 
 def q_gopher_repetition(spark, sf_dir):
     """Per-document Gopher repetition statistics over the corpus."""
-    from tcrd_spark.pipeline.substring import _split_docs
+    from tcrd_spark.sources.lake import load_table, split_for_scan
 
-    return gopher_stats(_split_docs(spark, sf_dir), "doc_id", "text")
+    docs = split_for_scan(spark, load_table(spark, sf_dir, "documents"))
+    return gopher_stats(docs, "doc_id", "text")
 
 
 def q_gopher_quality_filter(spark, sf_dir):
     """The composed Gopher keep/drop verdict per document."""
-    from tcrd_spark.pipeline.substring import _split_docs
+    from tcrd_spark.sources.lake import load_table, split_for_scan
 
-    return gopher_filter(_split_docs(spark, sf_dir), "doc_id", "text")
+    docs = split_for_scan(spark, load_table(spark, sf_dir, "documents"))
+    return gopher_filter(docs, "doc_id", "text")
 
 
 QUERIES = {

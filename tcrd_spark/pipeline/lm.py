@@ -149,25 +149,12 @@ def score_perplexity(
 # ------------------------------------------------- registered queries
 
 
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents with a full-width scan (the token stage is CPU-bound
-    and the test-scale table is one parquet split; at 100 TB inputs
-    are pre-split and the guard makes this a no-op)."""
-    from tcrd_spark.sources.lake import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    want = spark.sparkContext.defaultParallelism
-    # inputFiles() is metadata-only; .rdd.getNumPartitions() would
-    # force an RDD conversion of the scan on every invocation
-    if len(docs.inputFiles()) < want:
-        docs = docs.repartition(want)
-    return docs
-
-
 def q_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Self-scored corpus perplexity: train the bigram LM on documents
     and score every document; all 500 rows survive via a left join."""
-    docs = _docs(spark, sf_dir)
+    from tcrd_spark.sources.lake import load_table
+
+    docs = load_table(spark, sf_dir, "documents")
     toks = tokenize(docs, "doc_id", "text")
     lm = train_bigram_lm(toks, "doc_id")
     scored = score_perplexity(toks, lm, "doc_id")
@@ -182,7 +169,9 @@ def q_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_lm_top_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The 50 most frequent bigrams with their smoothed conditional
     log-probability — the model head a pipeline would eyeball."""
-    toks = tokenize(_docs(spark, sf_dir), "doc_id", "text")
+    from tcrd_spark.sources.lake import load_table
+
+    toks = tokenize(load_table(spark, sf_dir, "documents"), "doc_id", "text")
     lm = train_bigram_lm(toks, "doc_id")
     return (
         lm["bigrams"]

@@ -40,7 +40,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from tcrd_spark.pipeline.lm import MIN_COUNT, _docs, tokenize
+from tcrd_spark.pipeline.lm import MIN_COUNT, tokenize
 
 L3, L2, L1 = 0.5, 0.3, 0.2
 
@@ -204,7 +204,9 @@ def q_lm_trigram_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Self-scored corpus perplexity under the interpolated trigram;
     all 500 documents survive via a left join (docs too short for a
     trigram carry NULL nll)."""
-    docs = _docs(spark, sf_dir)
+    from tcrd_spark.sources.lake import load_table
+
+    docs = load_table(spark, sf_dir, "documents")
     toks = tokenize(docs, "doc_id", "text")
     lm = train_trigram_lm(toks, "doc_id")
     scored = score_trigram_perplexity(

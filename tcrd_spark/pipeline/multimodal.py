@@ -46,12 +46,19 @@ def attach_fake_payload(docs: DataFrame, id_col: str, text_col: str) -> DataFram
     )
 
 
-def _fake_decode(payload: bytes) -> tuple[int, int]:
-    """Deterministic stand-in for an image decode: derive WxH from the
-    first bytes. Replace with PIL/libvips in a real deployment."""
-    w = 16 + (payload[0] % 64) if payload else 16
-    h = 16 + (payload[-1] % 64) if payload else 16
-    return w, h
+def _fake_decoder():
+    """The deterministic stand-in for an image decode: derive WxH from
+    the first and last bytes. Replace with PIL/libvips in a real
+    deployment. It is built here, not defined at module level, so
+    cloudpickle ships it by value: a worker running the fake decode
+    then needs no import of this package."""
+
+    def decode(payload: bytes) -> tuple[int, int]:
+        w = 16 + (payload[0] % 64) if payload else 16
+        h = 16 + (payload[-1] % 64) if payload else 16
+        return w, h
+
+    return decode
 
 
 def _have_pil() -> bool:
@@ -113,8 +120,9 @@ def extract_features(
     """
     import hashlib
 
+    decode = _real_decode if real_decode else _fake_decoder()
+
     def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        decode = _real_decode if real_decode else _fake_decode
         for pdf in batches:
             dims = [decode(p) for p in pdf["payload"]]
             yield pd.DataFrame(
@@ -153,6 +161,7 @@ def resize_images(
     pure-Python PNG codec (functions/png.py, nearest-neighbor);
     real_decode=False keeps the deterministic fake (payload
     truncated/repeated to the byte budget) for plumbing tests."""
+    fake_decode = _fake_decoder()
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         budget = max(1, width * height // 8)
@@ -192,7 +201,7 @@ def resize_images(
                         src.append((sw, sh))
                         out.append(resized)
             else:
-                src = [_fake_decode(p) for p in pdf["payload"]]
+                src = [fake_decode(p) for p in pdf["payload"]]
                 out = [
                     bytes((p * (budget // max(1, len(p)) + 1))[:budget])
                     for p in pdf["payload"]

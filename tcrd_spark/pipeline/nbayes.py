@@ -112,9 +112,9 @@ def classify(
 def q_nb_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Self-classification of documents by source: fit on the corpus,
     predict every document, report truth vs prediction."""
-    from tcrd_spark.pipeline.lm import _docs
+    from tcrd_spark.sources.lake import load_table, split_for_scan
 
-    docs = _docs(spark, sf_dir)
+    docs = split_for_scan(spark, load_table(spark, sf_dir, "documents"))
     model = train_nb(docs, "doc_id", "text", "source")
     pred = classify(docs, model, "doc_id", "text")
     return docs.select("doc_id", "source").join(pred, "doc_id").select(

@@ -29,28 +29,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from tcrd_spark.pipeline.dedup import dot
+from tcrd_spark.pipeline.dedup import dot, embedding_near_dups_blocked
 from tcrd_spark.session import memo
 
 _EMB_DIM = 64
-
-# Adaptive block sizing for the BLAS pair scorer (r12, guide §2.6/§4):
-# n_blocks exists to bound one applyInPandas task at ~2 blocks of
-# ROWS_PER_BLOCK vectors — but a FIXED n_blocks=16 means a tiny corpus
-# (the gated survivors inside corpus_pipeline_v2 are ~10² docs) pays
-# 16·17/2 = 136 block-pair Python-task launches per cell for matmuls of
-# a few rows: measured 7.2s vs 1.2s at 100 survivors, 1.5s vs 0.6s at
-# the full 2000-vector panel (min-of-5, pair sets asserted identical).
-# When the caller knows the corpus row count, blocks are sized so one
-# block holds ~this many vectors (hash-uniform, so the per-task bound
-# 2·ROWS_PER_BLOCK·dim·8 holds REGARDLESS of cell skew), capped at the
-# caller's n_blocks so the large-corpus plan is unchanged.
-_SEM_BLOCK_ROWS = 2048
-
-
-def _adaptive_blocks(n_rows: int, n_blocks: int) -> int:
-    return max(1, min(n_blocks, -(-int(n_rows) // _SEM_BLOCK_ROWS)))
-
 
 def semantic_pairs(
     corpus: DataFrame, centroids: DataFrame, dim: int,
@@ -94,7 +76,7 @@ def semantic_pairs(
 
 def semantic_pairs_blocked(
     corpus: DataFrame, centroids: DataFrame, dim: int,
-    threshold: float = 0.4, n_blocks: int = 16,
+    threshold: float = 0.4,
     _assigned: DataFrame | None = None,
     n_rows: int | None = None,
 ) -> DataFrame:
@@ -102,31 +84,18 @@ def semantic_pairs_blocked(
     execution. The plain equi-join scores each candidate with an
     interpreted 128-term expression and, worse, lands every pair of a
     hot cluster on ONE shuffle partition (a cell is a single join
-    key): measured ×93 for ×10 data at sf1. This form is the
-    `dedup.embedding_near_dups_blocked` plan scoped per cell: vectors
-    hash into n_blocks, the B(B+1)/2 block-pair grid broadcasts, and
-    one applyInPandas task per (cell, block-pair) runs a numpy matmul
-    — task memory is bounded by 2·(cell_n/B)·dim·8 REGARDLESS of
-    cluster skew, every pair meets in exactly one task, and
-    cross-cluster pairs still cannot exist (cell_id is in the grouping
-    key). Rounded cosines are bit-identical to the join scorer and the
-    DuckDB oracle (the dedup_embedding_cosine precedent).
+    key): measured ×93 for ×10 data at sf1. This form is
+    `dedup.embedding_near_dups_blocked` grouped by cell_id: one
+    applyInPandas task per (cell, block-pair) runs a numpy matmul, so
+    task memory is bounded REGARDLESS of cluster skew, every pair meets
+    in exactly one task, and cross-cluster pairs cannot exist. Rounded
+    cosines are bit-identical to the join scorer and the DuckDB oracle.
 
-    ``n_rows`` (r12): the corpus row count when the caller knows it —
-    blocks are then sized to ~TCRD_SEM_BLOCK_ROWS vectors each (capped
-    at ``n_blocks``), so a small corpus doesn't pay n_blocks²/2
-    Python-task launches per cell for tiny matmuls; see
-    _adaptive_blocks. Output is identical for every block count by
-    construction (every pair meets in exactly one task)."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
+    ``n_rows``: the corpus row count when the caller knows it; the
+    scorer then sizes its block count from it (dedup._adaptive_blocks),
+    so a small corpus does not pay the full grid of Python-task
+    launches per cell for tiny matmuls. Output is identical for every
+    block count."""
     from tcrd_spark.pipeline.similarity import assign_cells
 
     a = (
@@ -134,83 +103,10 @@ def semantic_pairs_blocked(
         if _assigned is not None
         else assign_cells(corpus, centroids, dim)
     )
-    if n_rows is not None:
-        n_blocks = _adaptive_blocks(n_rows, n_blocks)
-    spark = corpus.sparkSession
-    vecs = a.select(
-        "cell_id",
-        F.col("c_id").alias("_id"),
-        F.col("c_vec").cast("array<double>").alias("v"),
-        F.pmod(F.hash("c_id"), F.lit(n_blocks)).alias("blk"),
-    )
-    r = spark.range(n_blocks)
-    grid = F.broadcast(
-        r.toDF("bi").crossJoin(r.toDF("bj")).filter(
-            F.col("bi") <= F.col("bj")
-        )
-    )
-    left = vecs.join(grid, vecs.blk == grid.bi).select(
-        "cell_id", "bi", "bj", F.lit("L").alias("role"), "_id", "v"
-    )
-    right = (
-        vecs.join(grid, vecs.blk == grid.bj)
-        .filter(F.col("bi") != F.col("bj"))
-        .select("cell_id", "bi", "bj", F.lit("R").alias("role"), "_id", "v")
-    )
-    tagged = left.unionByName(right)
-
-    out_schema = StructType(
-        [
-            StructField("cell_id", LongType()),
-            StructField("id_a", LongType()),
-            StructField("id_b", LongType()),
-            StructField("score", DoubleType()),
-        ]
-    )
-    empty = pd.DataFrame(
-        {"cell_id": [], "id_a": [], "id_b": [], "score": []}
-    )
-
-    def cell(pdf: pd.DataFrame) -> pd.DataFrame:
-        lpdf = pdf[pdf["role"] == "L"]
-        rpdf = pdf[pdf["role"] == "R"]
-        is_diag = pdf["bi"].iat[0] == pdf["bj"].iat[0]
-        if len(lpdf) == 0 or (not is_diag and len(rpdf) == 0):
-            return empty
-        cid = int(pdf["cell_id"].iat[0])
-        a_ids = lpdf["_id"].to_numpy()
-        a_mat = np.stack(lpdf["v"].to_numpy())
-        a_nrm = np.sqrt((a_mat * a_mat).sum(axis=1))
-        if is_diag:
-            b_ids, b_mat, b_nrm = a_ids, a_mat, a_nrm
-        else:
-            b_ids = rpdf["_id"].to_numpy()
-            b_mat = np.stack(rpdf["v"].to_numpy())
-            b_nrm = np.sqrt((b_mat * b_mat).sum(axis=1))
-        sims = np.round((a_mat @ b_mat.T) / np.outer(a_nrm, b_nrm), 6)
-        keep = sims >= threshold
-        ai, bi_ = np.nonzero(keep)
-        id_a, id_b = a_ids[ai], b_ids[bi_]
-        if is_diag:
-            # the self-matmul is symmetric: keep the strict upper
-            # triangle only, or every pair is emitted twice
-            lo, hi = id_a, id_b
-            mask = id_a < id_b
-        else:
-            lo, hi = np.minimum(id_a, id_b), np.maximum(id_a, id_b)
-            mask = lo < hi
-        return pd.DataFrame(
-            {
-                "cell_id": cid,
-                "id_a": lo[mask],
-                "id_b": hi[mask],
-                "score": sims[ai, bi_][mask],
-            }
-        )
-
-    return tagged.groupBy("cell_id", "bi", "bj").applyInPandas(
-        cell, schema=out_schema
-    )
+    return embedding_near_dups_blocked(
+        a, "c_id", "c_vec", dim, threshold, group_col="cell_id",
+        n_rows=n_rows,
+    ).withColumnRenamed("cos_sim", "score")
 
 
 def centroid_distance(

@@ -264,41 +264,30 @@ def excise_duplicate_spans(
 _K, _MIN_OCC = 8, 2
 
 
-def _split_docs(spark, sf_dir):
-    """documents with enough input splits for the gram stage: the
-    row-local k-gram hashing is the CPU-heavy stage (k string builds +
-    one md5 per token), and the test-scale documents table arrives as
-    a single small parquet split, which would serialize it on one
-    core. At 100 TB inputs come pre-split and this repartition is a
-    no-op by the guard; here one up-front exchange of the text buys a
-    full-width map stage (measured 6.0s → ~1s at sf0.1)."""
-    from tcrd_spark.sources.lake import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    want = spark.sparkContext.defaultParallelism
-    # inputFiles() is metadata-only; .rdd.getNumPartitions() would
-    # force an RDD conversion of the scan on every invocation
-    if len(docs.inputFiles()) < want:
-        docs = docs.repartition(want)
-    return docs
-
-
 def q_substring_dedup(spark, sf_dir):
     """Maximal duplicated ≥8-token spans over the documents corpus."""
-    return duplicate_spans(_split_docs(spark, sf_dir), "doc_id", "text",
+    from tcrd_spark.sources.lake import load_table, split_for_scan
+
+    docs = split_for_scan(spark, load_table(spark, sf_dir, "documents"))
+    return duplicate_spans(docs, "doc_id", "text",
                            k=_K, min_occurrences=_MIN_OCC)
 
 
 def q_substring_excise(spark, sf_dir):
     """Documents with duplicated ≥8-token spans excised."""
-    return excise_duplicate_spans(_split_docs(spark, sf_dir), "doc_id",
-                                  "text", k=_K, min_occurrences=_MIN_OCC)
+    from tcrd_spark.sources.lake import load_table, split_for_scan
+
+    docs = split_for_scan(spark, load_table(spark, sf_dir, "documents"))
+    return excise_duplicate_spans(docs, "doc_id", "text",
+                                  k=_K, min_occurrences=_MIN_OCC)
 
 
 def q_substring_dedup_incremental(spark, sf_dir):
     """Spans of the ingest batch (doc_id % 5 == 0, the corpus_queries
     split) duplicating standing-corpus content."""
-    docs = _split_docs(spark, sf_dir)
+    from tcrd_spark.sources.lake import load_table, split_for_scan
+
+    docs = split_for_scan(spark, load_table(spark, sf_dir, "documents"))
     return incremental_duplicate_spans(
         docs.filter(F.col("doc_id") % 5 == 0),
         docs.filter(F.col("doc_id") % 5 != 0),

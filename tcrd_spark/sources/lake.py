@@ -58,15 +58,18 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 def split_for_scan(spark: SparkSession, df: DataFrame) -> DataFrame:
-    """Scale-adaptive input-split guard (r12; the substring._split_docs
-    pattern promoted to a shared helper, guide §2.5/§6): the test-scale
-    documents table arrives as ONE parquet row group, which pins every
-    md5-heavy gram/shingle stage to a single task. When the scan has
-    fewer files than cores, one up-front round-robin exchange buys a
-    full-width map stage (measured: decontaminate 3.08 → 1.49s,
-    dedup_containment 2.17 → 1.52s at sf0.1, rows identical). At 100 TB
-    inputs come pre-split and the guard is a no-op — inputFiles() is
-    metadata-only."""
+    """The input-split guard, the one copy of this rule: when the scan
+    has fewer files than the session's default parallelism, one
+    round-robin exchange spreads its rows over that many tasks. The
+    test-scale lake stores each table as one parquet file with one row
+    group, which pins every row-local stage (md5 gram hashing,
+    tokenizing, regex) to a single task. At 100 TB inputs come
+    pre-split and the guard is a no-op; inputFiles() is metadata-only.
+
+    A query calls it only where an interleaved A/B at sf0.1 on
+    local[4] showed the guard winning (rows identical); where it tied
+    or lost, the query loads plainly. CHANGES.md has the per-site
+    table."""
     want = spark.sparkContext.defaultParallelism
     if len(df.inputFiles()) < want:
         return df.repartition(want)

@@ -480,27 +480,15 @@ def test_connected_components_raises_on_no_convergence(spark, monkeypatch):
         corpus.connected_components(edges, "id_a", "id_b", max_iter=1)
 
 
-def test_connected_components_fast_path_matches_star_loop(spark, monkeypatch):
+def test_connected_components_fast_path_matches_star_loop(spark, sf_dir):
     """r11: the size-adaptive driver union-find fast path must emit
     exactly the star loop's rows (same nodes, same labels, roots
-    absent) — the two paths are interchangeable by size threshold."""
-    rng = random.Random(23)
-    n = 80
-    edges = [(rng.randrange(n), rng.randrange(n)) for _ in range(60)]
-    edges = [(u, v) for u, v in edges if u != v]
-    df = spark.createDataFrame(edges, ["id_a", "id_b"])
+    absent) — the two paths are interchangeable by size threshold.
+    The case (60 random edges over 80 nodes) is the harness's
+    ``cc/random`` fixture."""
+    from tests.dual_path import assert_paths_agree
 
-    monkeypatch.setattr(corpus, "_CC_DRIVER_MAX", 0)
-    slow = {
-        (r["node"], r["component"])
-        for r in corpus.connected_components(df, "id_a", "id_b").collect()
-    }
-    monkeypatch.setattr(corpus, "_CC_DRIVER_MAX", 10**9)
-    fast = {
-        (r["node"], r["component"])
-        for r in corpus.connected_components(df, "id_a", "id_b").collect()
-    }
-    assert fast == slow
+    assert assert_paths_agree(spark, sf_dir, "cc", ("random",))["random"]
 
 
 def test_dedup_group_reps_matches_filter_form(spark):

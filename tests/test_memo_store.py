@@ -245,6 +245,46 @@ def test_one_way_to_pair_candidates():
     assert found == set(OWN_PAIR_JOIN), found ^ set(OWN_PAIR_JOIN)
 
 
+SPLIT_RULE = re.compile(r"inputFiles\(\)|repartition\([^)]*defaultParallelism")
+SIZE_PROBE = re.compile(r"\.limit\(\s*[A-Za-z_][\w.]*\s*\+\s*1\s*\)")
+# size probes that bound a resource instead of choosing between paths
+PROBE_NOT_A_FORK = {
+    "pipeline/dedup.py::embedding_near_dups": "max_vectors bounds the "
+    "driver-broadcast matrix: past it the function raises instead of "
+    "taking another path, so there is no second path to compare",
+}
+
+
+def test_one_split_rule_and_every_size_fork_in_the_harness():
+    """The input-split guard lives only in sources/lake.py
+    (`split_for_scan`), and every `.limit(N + 1)` size probe sits in a
+    function that tests/dual_path.py's fork table names (each path of
+    it then runs on the shared fixtures) or in PROBE_NOT_A_FORK."""
+    import ast
+
+    from tests.dual_path import FORKS
+
+    owners = {fork.owner for fork in FORKS.values()}
+    probes = set()
+    for rel, text in _sources():
+        if rel != os.path.join("sources", "lake.py"):
+            assert not SPLIT_RULE.search(text), rel
+        funcs = [
+            n for n in ast.walk(ast.parse(text))
+            if isinstance(n, ast.FunctionDef)
+        ]
+        for i, line in enumerate(text.splitlines(), 1):
+            if SIZE_PROBE.search(line):
+                owner = min(
+                    (n for n in funcs if n.lineno <= i <= n.end_lineno),
+                    key=lambda n: n.end_lineno - n.lineno,
+                    default=None,
+                )
+                probes.add(f"{rel}::{owner.name if owner else '<module>'}")
+    assert probes <= owners | set(PROBE_NOT_A_FORK), probes
+    assert set(PROBE_NOT_A_FORK) <= probes, probes
+
+
 def test_no_env_knobs_outside_deployment_settings():
     """The process environment is read only for session.py's deployment
     settings — never as an operator knob."""

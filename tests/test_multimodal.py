@@ -39,6 +39,41 @@ def test_fake_features_deterministic(spark):
     assert out[2].n_bytes == 6
 
 
+def test_feature_closure_runs_without_the_package(tmp_path):
+    """The registered query's mapInPandas closure is self-contained: a
+    worker whose sys.path lacks this repo can unpickle and run it (a
+    closure reaching a module-level decode helper is pickled by
+    reference and fails there with ModuleNotFoundError)."""
+    import subprocess
+    import sys
+
+    from pyspark import cloudpickle
+
+    from tcrd_spark.pipeline.multimodal import extract_features
+
+    class Media:  # stands in for the DataFrame: hands back the closure
+        def mapInPandas(self, fn, schema):
+            return fn
+
+    blob = cloudpickle.dumps(extract_features(Media(), "doc_id"))
+    probe = (
+        "import pickle, sys\n"
+        "import pandas as pd\n"
+        "fn = pickle.loads(sys.stdin.buffer.read())\n"
+        "pdf = pd.DataFrame({'doc_id': [1], 'payload': [b'abc']})\n"
+        "out = next(iter(fn(iter([pdf]))))\n"
+        "print(out['width'][0], out['height'][0])\n"
+    )
+    run = subprocess.run(
+        [sys.executable, "-I", "-c", probe],
+        input=blob, capture_output=True, cwd=tmp_path,
+    )
+    assert run.returncode == 0, run.stderr.decode()
+    assert run.stdout.split() == [
+        str(16 + ord("a") % 64).encode(), str(16 + ord("c") % 64).encode()
+    ]
+
+
 def test_payload_binary_roundtrip(spark):
     """binary column survives parquet write/read and stays out of the
     feature shuffle (features only carry scalars)."""

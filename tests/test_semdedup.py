@@ -69,16 +69,19 @@ def test_blocked_scorer_matches_join_scorer(spark, sf_dir):
     the join scorer's pairs with bit-identical rounded scores, and its
     grouping key must include cell_id (cross-cluster pairs cannot
     exist by construction)."""
+    from tests.dual_path import assert_paths_agree
     from tests.test_plans import plan_of
     from tcrd_spark.pipeline.semdedup import semantic_pairs_blocked
 
+    # the case is the harness's semdedup/panel fixture: the sf0.001
+    # panel with the first-8 centroid contract at the default 16
+    # blocks; the shared fixtures cover every block count
+    # (tests/test_dual_path.py)
+    assert assert_paths_agree(
+        spark, sf_dir, "semdedup", ("panel",), paths=("join", "blocks-16")
+    )["panel"]
     corpus, cents = _panel(spark, sf_dir)
     blocked = semantic_pairs_blocked(corpus, cents, _EMB_DIM, 0.4)
-    join_form = semantic_pairs(corpus, cents, _EMB_DIM, 0.4)
-    as_set = lambda rows: {  # noqa: E731
-        (r["cell_id"], r["id_a"], r["id_b"], r["score"]) for r in rows
-    }
-    assert as_set(blocked.collect()) == as_set(join_form.collect())
     plan = plan_of(blocked)
     assert "FlatMapGroupsInPandas" in plan, plan
     # the grouping keys surface in the node's Arguments line
