@@ -11,26 +11,78 @@ Reference semantics (`loaders/load-TDLs.py:77-129`):
 
 The reference runs an N+1 per-target fan-out (~20,412 get_target
 calls, 10m06s, `doc/README_v6.txt:430-436`); here it is a single
-when-chain over a pre-joined feature DataFrame — no UDF, pure
+CASE chain over a pre-joined feature DataFrame — no UDF, pure
 whole-stage codegen, one pass at any scale.
+
+Every frame is built from SQL text, one parse each, not a py4j round
+trip per Column node. Spark's rule chain (`_TDL`, `_BUMP`) is its own
+text, kept apart from `sql_tdl_case`, the DuckDB oracle's: a slip in
+one then shows as a mismatch against the other.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 PMS_THRESHOLD = 5.0
 GENERIF_THRESHOLD = 3
 AB_THRESHOLD = 50
 
+_DARK = (
+    f"(CASE WHEN pms < {PMS_THRESHOLD}D THEN 1 ELSE 0 END"
+    f" + CASE WHEN rif_ct <= {GENERIF_THRESHOLD} THEN 1 ELSE 0 END"
+    f" + CASE WHEN ab_ct <= {AB_THRESHOLD} THEN 1 ELSE 0 END)"
+)
+_TDL = (
+    "CASE WHEN moa_drug_ct > 0 THEN 'Tclin'"
+    " WHEN drug_ct > 0 THEN 'Tchem'"
+    " WHEN cmpd_ct > 0 THEN 'Tchem'"
+    f" WHEN {_DARK} >= 2 AND NOT efl_goa THEN 'Tdark'"
+    " ELSE 'Tbio' END"
+)
+_BUMP = (
+    "moa_drug_ct = 0 AND drug_ct = 0 AND cmpd_ct = 0"
+    f" AND {_DARK} >= 2 AND efl_goa"
+)
 
-def dark_points(pms: Column, rif_ct: Column, ab_ct: Column) -> Column:
-    return (
-        F.when(pms < PMS_THRESHOLD, 1).otherwise(0)
-        + F.when(rif_ct <= GENERIF_THRESHOLD, 1).otherwise(0)
-        + F.when(ab_ct <= AB_THRESHOLD, 1).otherwise(0)
-    )
+_FEATURES = """
+    WITH info AS (SELECT * FROM {info})
+    SELECT target_id, protein_id,
+           coalesce(moa_drug_ct, 0) AS moa_drug_ct,
+           coalesce(drug_ct, 0) AS drug_ct,
+           coalesce(cmpd_ct, 0) AS cmpd_ct,
+           coalesce(pms, 0.0D) AS pms,
+           coalesce(rif_ct, 0) AS rif_ct,
+           coalesce(ab_ct, 0) AS ab_ct,
+           coalesce(efl_goa, false) AS efl_goa
+    FROM (SELECT target_id, protein_id FROM {ent})
+    LEFT JOIN (
+      SELECT target_id,
+             sum(CASE WHEN has_moa THEN 1 ELSE 0 END) AS moa_drug_ct,
+             count(*) AS drug_ct
+      FROM {drug} GROUP BY target_id
+    ) USING (target_id)
+    LEFT JOIN (
+      SELECT target_id, count(*) AS cmpd_ct FROM {cmpd} GROUP BY target_id
+    ) USING (target_id)
+    LEFT JOIN (
+      SELECT protein_id, number_value AS pms FROM info
+      WHERE itype = 'JensenLab PubMed Score'
+    ) USING (protein_id)
+    LEFT JOIN (
+      SELECT protein_id, integer_value AS ab_ct FROM info
+      WHERE itype = 'Ab Count'
+    ) USING (protein_id)
+    LEFT JOIN (
+      SELECT DISTINCT protein_id, true AS efl_goa FROM info
+      WHERE itype = 'Experimental MF/BP Leaf Term GOA'
+    ) USING (protein_id)
+    LEFT JOIN (
+      SELECT protein_id, count(*) AS rif_ct FROM {generif}
+      GROUP BY protein_id
+    ) USING (protein_id)
+"""
 
 
 def features_from_lake(lake: dict[str, DataFrame]) -> DataFrame:
@@ -41,72 +93,19 @@ def features_from_lake(lake: dict[str, DataFrame]) -> DataFrame:
     """
     from tcrd_spark.api.adaptor import entity
 
-    ent = entity(lake).select("target_id", "protein_id")
-    drug = lake["drug_activity"].groupBy("target_id").agg(
-        F.sum(F.when(F.col("has_moa"), 1).otherwise(0)).alias("moa_drug_ct"),
-        F.count("*").alias("drug_ct"),
-    )
-    cmpd = lake["cmpd_activity"].groupBy("target_id").agg(
-        F.count("*").alias("cmpd_ct")
-    )
-    info = lake["tdl_info"]
-    pms = (
-        info.filter(F.col("itype") == "JensenLab PubMed Score")
-        .select("protein_id", F.col("number_value").alias("pms"))
-    )
-    ab = (
-        info.filter(F.col("itype") == "Ab Count")
-        .select("protein_id", F.col("integer_value").alias("ab_ct"))
-    )
-    efl = (
-        info.filter(F.col("itype") == "Experimental MF/BP Leaf Term GOA")
-        .select("protein_id", F.lit(True).alias("efl_goa"))
-        .distinct()
-    )
-    rif = lake["generif"].groupBy("protein_id").agg(
-        F.count("*").alias("rif_ct")
-    )
-    return (
-        ent.join(drug, "target_id", "left")
-        .join(cmpd, "target_id", "left")
-        .join(pms, "protein_id", "left")
-        .join(ab, "protein_id", "left")
-        .join(efl, "protein_id", "left")
-        .join(rif, "protein_id", "left")
-        .select(
-            "target_id",
-            "protein_id",
-            F.coalesce("moa_drug_ct", F.lit(0)).alias("moa_drug_ct"),
-            F.coalesce("drug_ct", F.lit(0)).alias("drug_ct"),
-            F.coalesce("cmpd_ct", F.lit(0)).alias("cmpd_ct"),
-            F.coalesce("pms", F.lit(0.0)).alias("pms"),
-            F.coalesce("rif_ct", F.lit(0)).alias("rif_ct"),
-            F.coalesce("ab_ct", F.lit(0)).alias("ab_ct"),
-            F.coalesce("efl_goa", F.lit(False)).alias("efl_goa"),
-        )
+    return lake["target"].sparkSession.sql(
+        _FEATURES, ent=entity(lake), drug=lake["drug_activity"],
+        cmpd=lake["cmpd_activity"], info=lake["tdl_info"],
+        generif=lake["generif"],
     )
 
 
 def compute_tdl(features: DataFrame) -> DataFrame:
     """features columns: moa_drug_ct, drug_ct, cmpd_ct, pms, rif_ct,
     ab_ct, efl_goa (boolean). Adds (tdl, bump_flag)."""
-    pts = dark_points(F.col("pms"), F.col("rif_ct"), F.col("ab_ct"))
-    is_dark = pts >= 2
-    tdl = (
-        F.when(F.col("moa_drug_ct") > 0, "Tclin")
-        .when(F.col("drug_ct") > 0, "Tchem")
-        .when(F.col("cmpd_ct") > 0, "Tchem")
-        .when(is_dark & ~F.col("efl_goa"), "Tdark")
-        .otherwise("Tbio")
+    return features.withColumns(
+        {"tdl": F.expr(_TDL), "bump_flag": F.expr(_BUMP)}
     )
-    bump = (
-        (F.col("moa_drug_ct") == 0)
-        & (F.col("drug_ct") == 0)
-        & (F.col("cmpd_ct") == 0)
-        & is_dark
-        & F.col("efl_goa")
-    )
-    return features.withColumn("tdl", tdl).withColumn("bump_flag", bump)
 
 
 def tdl_refresh(
@@ -129,50 +128,54 @@ def tdl_refresh(
     — the timestamp keeps ids unique when a target repeats the same
     transition in a later cycle — and `asof` (the log timestamp) is
     injectable for reproducible runs.
-    """
-    from tcrd_spark.schema.tables import surrogate_id
 
-    new = compute_tdl(features_from_lake(lake)).select(
-        F.col("target_id").alias("nid"),
-        F.col("tdl").alias("_new_tdl"),
-        "bump_flag",
+    All three read one classification: the per-target frame is cached
+    in the session store's "tdl_refresh" slot, so the counts, the log,
+    and a commit of the target are one computation of the feature
+    pipeline instead of one each. The slot rotates on every call: a
+    lake rewritten in place at the same paths plans the same as
+    before, so reusing a matching entry would serve the old data's
+    classes. The previous call's frames recompute on demand."""
+    from pyspark.sql.utils import get_lit_sql_str
+
+    from tcrd_spark.schema.tables import surrogate_id_sql
+    from tcrd_spark.session import memo
+
+    new = compute_tdl(features_from_lake(lake)).selectExpr(
+        "target_id AS nid", "tdl AS _new_tdl", "bump_flag"
     )
+    new = memo(new.sparkSession, "tdl_refresh", object(), new.cache)
     # `new` derives FROM lake["target"] (entity join), so this is a
-    # self-join — qualify explicitly to dodge ambiguous-column analysis
+    # self-join — qualify explicitly to dodge ambiguous-column analysis.
+    # Joined as DataFrames: the cache serves a frame's own plan, not
+    # a SQL view over it
     joined = (
-        lake["target"]
-        .alias("t")
-        .join(new.alias("n"), F.col("t.id") == F.col("n.nid"), "left")
-        .select("t.*", "n._new_tdl", "n.bump_flag")
+        lake["target"].alias("t")
+        .join(new.alias("n"), F.expr("t.id = n.nid"), "left")
     )
-    target = joined.withColumn(
-        "tdl", F.coalesce("_new_tdl", "tdl")
-    ).drop("_new_tdl", "bump_flag")
-    changed = joined.filter(
-        ~F.col("_new_tdl").eqNullSafe(F.col("tdl"))
-        & F.col("_new_tdl").isNotNull()
-    )
+    target = joined.selectExpr(*[
+        "coalesce(n._new_tdl, t.tdl) AS tdl" if c == "tdl" else f"t.`{c}`"
+        for c in lake["target"].columns
+    ])
     # the refresh timestamp folds into the surrogate so a target
     # repeating the same transition across refresh cycles (A→B, B→A,
     # A→B) gets DISTINCT log ids in the append-only log
     stamp = (
-        F.date_format(F.current_timestamp(), "yyyy-MM-dd HH:mm:ss")
-        if asof is None
-        else F.lit(asof)
+        "date_format(current_timestamp(), 'yyyy-MM-dd HH:mm:ss')"
+        if asof is None else get_lit_sql_str(asof)
     )
-    log_rows = changed.select(
-        surrogate_id(
-            F.concat_ws("|", F.col("id"), F.coalesce("tdl", F.lit("")),
-                        F.col("_new_tdl"), stamp)
-        ).alias("id"),
-        F.col("id").alias("target_id"),
-        F.col("tdl").alias("old_tdl"),
-        F.col("_new_tdl").alias("new_tdl"),
-        F.lit(person).alias("person"),
-        stamp.alias("datetime"),
-        F.lit(None).cast("string").alias("explanation"),
-        F.lit(application).alias("application"),
-        F.lit(app_version).cast("string").alias("app_version"),
+    version = "NULL" if app_version is None else get_lit_sql_str(app_version)
+    log_rows = joined.where(
+        "NOT (n._new_tdl <=> t.tdl) AND n._new_tdl IS NOT NULL"
+    ).selectExpr(
+        surrogate_id_sql(
+            f"concat_ws('|', t.id, coalesce(t.tdl, ''), n._new_tdl, {stamp})"
+        ) + " AS id",
+        "t.id AS target_id", "t.tdl AS old_tdl", "n._new_tdl AS new_tdl",
+        f"{get_lit_sql_str(person)} AS person", f"{stamp} AS datetime",
+        "CAST(NULL AS STRING) AS explanation",
+        f"{get_lit_sql_str(application)} AS application",
+        f"CAST({version} AS STRING) AS app_version",
     )
     log = lake["tdl_update_log"].unionByName(
         log_rows, allowMissingColumns=True
@@ -180,10 +183,8 @@ def tdl_refresh(
     counts = (
         new.groupBy(F.col("_new_tdl").alias("tdl"))
         .agg(
-            F.count("*").alias("ct"),
-            F.sum(F.when(F.col("bump_flag"), 1).otherwise(0)).alias(
-                "bumped_ct"
-            ),
+            F.expr("count(*) AS ct"),
+            F.expr("sum(CASE WHEN bump_flag THEN 1 ELSE 0 END) AS bumped_ct"),
         )
         .orderBy("tdl")
     )

@@ -35,53 +35,51 @@ _SQL_LEVEL = (
 
 # ------------------------------------------------------------------ TDL
 
+_TDL_RAW = (
+    "sum(CASE WHEN l_quantity >= 49 AND l_returnflag = 'R'"
+    " THEN 1 ELSE 0 END) AS moa_raw",
+    "sum(CASE WHEN l_quantity >= 49 THEN 1 ELSE 0 END) AS drug_raw",
+    "sum(CASE WHEN l_discount >= 0.09D AND l_quantity <= 2"
+    " THEN 1 ELSE 0 END) AS cmpd_raw",
+    "sum(CASE WHEN l_linenumber = 1 AND l_quantity <= 10"
+    " THEN 1 ELSE 0 END) AS pms_raw",
+    "sum(CASE WHEN l_linestatus = 'F' AND l_quantity <= 5"
+    " THEN 1 ELSE 0 END) AS rif_raw",
+    "sum(CASE WHEN l_tax >= 0.07D THEN 1 ELSE 0 END) AS ab_raw",
+    "count(*) AS n_li",
+)
+# activity presence gated by key modulo so every TDL branch appears
+# at every SF; dark-point features are rates (scale-stable)
+_TDL_FEATS = (
+    "suppkey",
+    "CASE WHEN suppkey % 11 = 0 THEN moa_raw ELSE 0 END AS moa_drug_ct",
+    "CASE WHEN suppkey % 7 = 0 THEN drug_raw ELSE 0 END AS drug_ct",
+    "CASE WHEN suppkey % 5 = 0 THEN cmpd_raw ELSE 0 END AS cmpd_ct",
+    "round(pms_raw * 100.0D / n_li, 6) AS pms",
+    "floor(rif_raw * 100 / n_li) AS rif_ct",
+    "floor(ab_raw * 400 / n_li) AS ab_ct",
+)
+
+
 def _tdl_features(
     spark: SparkSession, sf_dir: str, ship_before: str | None = None
 ) -> DataFrame:
+    """Per-supplier TDL features, built from SQL strings (one parse
+    each, not a py4j round trip per Column node)."""
+    from pyspark.sql.utils import get_lit_sql_str
+
     li = load_table(spark, sf_dir, "lineitem")
     if ship_before is not None:
         # "previous load" snapshot: only evidence shipped before the
         # cutoff existed at last refresh (incremental-cycle replay)
-        li = li.filter(F.col("l_shipdate") < F.lit(ship_before))
+        li = li.where(f"l_shipdate < {get_lit_sql_str(ship_before)}")
     sup = load_table(spark, sf_dir, "supplier")
-    raw = li.groupBy(F.col("l_suppkey").alias("suppkey")).agg(
-        F.sum(
-            F.when((F.col("l_quantity") >= 49) & (F.col("l_returnflag") == "R"), 1)
-            .otherwise(0)
-        ).alias("moa_raw"),
-        F.sum(F.when(F.col("l_quantity") >= 49, 1).otherwise(0)).alias("drug_raw"),
-        F.sum(
-            F.when((F.col("l_discount") >= 0.09) & (F.col("l_quantity") <= 2), 1)
-            .otherwise(0)
-        ).alias("cmpd_raw"),
-        F.sum(
-            F.when((F.col("l_linenumber") == 1) & (F.col("l_quantity") <= 10), 1)
-            .otherwise(0)
-        ).alias("pms_raw"),
-        F.sum(
-            F.when((F.col("l_linestatus") == "F") & (F.col("l_quantity") <= 5), 1)
-            .otherwise(0)
-        ).alias("rif_raw"),
-        F.sum(F.when(F.col("l_tax") >= 0.07, 1).otherwise(0)).alias("ab_raw"),
-        F.count("*").alias("n_li"),
-    )
-    # activity presence gated by key modulo so every TDL branch appears
-    # at every SF; dark-point features are rates (scale-stable)
-    feats = raw.select(
-        "suppkey",
-        F.when(F.col("suppkey") % 11 == 0, F.col("moa_raw")).otherwise(0)
-        .alias("moa_drug_ct"),
-        F.when(F.col("suppkey") % 7 == 0, F.col("drug_raw")).otherwise(0)
-        .alias("drug_ct"),
-        F.when(F.col("suppkey") % 5 == 0, F.col("cmpd_raw")).otherwise(0)
-        .alias("cmpd_ct"),
-        F.round(F.col("pms_raw") * 100.0 / F.col("n_li"), 6).alias("pms"),
-        F.floor(F.col("rif_raw") * 100 / F.col("n_li")).alias("rif_ct"),
-        F.floor(F.col("ab_raw") * 400 / F.col("n_li")).alias("ab_ct"),
-    )
+    feats = li.groupBy(F.col("l_suppkey").alias("suppkey")).agg(
+        *[F.expr(e) for e in _TDL_RAW]
+    ).selectExpr(*_TDL_FEATS)
     return feats.join(
-        F.broadcast(sup.select(F.col("s_suppkey").alias("suppkey"))), "suppkey"
-    ).withColumn("efl_goa", F.col("suppkey") % 3 == 0)
+        F.broadcast(sup.selectExpr("s_suppkey AS suppkey")), "suppkey"
+    ).selectExpr("*", "suppkey % 3 = 0 AS efl_goa")
 
 
 def q_tdl_refresh_delta(spark: SparkSession, sf_dir: str) -> DataFrame:

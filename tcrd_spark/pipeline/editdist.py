@@ -23,9 +23,10 @@ first. Each document carries a fixed ~28-slot character-count vector
 computed ONCE at scan time; each edit operation changes that bag by at
 most 2, so dist ≥ L1(bag_a, bag_b)/2, and any pair with L1 > 2T is
 pruned by a ~28-integer zip_with — ~100× cheaper than the DP it
-avoids. Together with spreading the probe side across tasks (below)
-and the T=24 setting, the registered query went 181s → 2.3s wall at
-sf0.1 and scales 4.1× for 10× data (SCALE.md).
+avoids. Together with spreading the input across tasks (the registered
+query's `lake.split_for_scan`) and the T=24 setting, the registered
+query went 181s → 2.3s wall at sf0.1 and scales 4.1× for 10× data
+(SCALE.md).
 Survivors hit the THRESHOLD-banded DP (`F.levenshtein(l, r, T)`:
 O(len·T) cells with early-exit, -1 above T — Spark 3.5+), never the
 full O(len²) matrix. The blocking key composes with any equality
@@ -105,13 +106,12 @@ def edit_distance_pairs(
         _char_bag(F.col(text_col)).alias("_bag"),
         *[F.col(c) for c in block_cols],
     ).withColumn("_bk", F.floor(F.col("_len") / bucket))
-    # the probe side must be spread across tasks: a small parquet input
+    # the probe side keeps the input's splits: a small parquet input
     # arrives as ONE partition, and with the dimension side broadcast
     # the whole candidate × filter × DP pipeline would run in a single
-    # task (measured 14x at sf0.1). Hash on id — even spread, and
-    # the broadcast join makes probe-side partitioning semantically free
-    par = docs.sparkSession.sparkContext.defaultParallelism
-    left = base.repartition(par, "_id").select(
+    # task (measured 14x at sf0.1), so the registered query spreads its
+    # input with `lake.split_for_scan`
+    left = base.select(
         F.col("_id").alias("id_a"),
         F.col("_text").alias("text_a"),
         F.col("_len").alias("len_a"),
@@ -162,9 +162,9 @@ def edit_distance_pairs(
 def q_dedup_edit_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact Levenshtein near-dup pairs (T=24) over the documents
     table, length-bucket blocked, per-language blocks."""
-    from tcrd_spark.sources.lake import load_table
+    from tcrd_spark.sources.lake import load_table, split_for_scan
 
-    docs = load_table(spark, sf_dir, "documents")
+    docs = split_for_scan(spark, load_table(spark, sf_dir, "documents"))
     return edit_distance_pairs(
         docs, "doc_id", "text", MAX_DIST, BUCKET, block_cols=("lang",)
     )

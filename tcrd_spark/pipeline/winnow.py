@@ -75,20 +75,17 @@ def _winnow_sel(
     text_col: str,
     k: int,
     w: int,
-    spread: int | None,
 ) -> DataFrame:
     """(id, _sel): per-document array of winnowed per-window (h, p)
     minima, BEFORE dedup — the shared row-local core of
     `winnow_fingerprints` and `winnow_fp_values`."""
-    if spread:
-        docs = docs.repartition(spread, F.col(id_col))
     # explode(array(...)) wraps each materialization in a Generate node:
     # CollapseProject happily merges plain Projects back together, which
     # re-inlines the tokenize/gram expressions into downstream lambda
     # bodies where interpreted evaluation re-runs them PER ELEMENT —
     # tokenization went O(tokens²) per doc and window minima O(grams²·w)
     # (measured 13.6s → 1.1s warm at sf0.1 for the registered query,
-    # combined with `spread`).
+    # combined with spreading its input over tasks).
     # A generator's output is an attribute no rule inlines through.
     toked = docs.select(
         F.col(id_col),
@@ -129,7 +126,6 @@ def winnow_fingerprints(
     text_col: str,
     k: int = GRAM_K,
     w: int = WIN_W,
-    spread: int | None = None,
 ) -> DataFrame:
     """(id, pos, fp): the winnowed fingerprint set of each document.
 
@@ -137,13 +133,12 @@ def winnow_fingerprints(
     with fewer than k tokens emit nothing; documents with fewer than w
     grams emit the minimum of what they have (one degenerate window).
 
-    ``spread``: repartition the input to N tasks first. The operator
-    itself is exchange-free (plan-tested) and at 100 TB the scan's own
-    splits provide the parallelism — but a SMALL corpus arrives as one
-    split, serializing the md5-heavy gram hashing into a single task
-    Leave None when the scan is already split.
+    The operator itself is exchange-free (plan-tested): its parallelism
+    is the input's splits, which the registered queries spread with
+    `lake.split_for_scan` (a small corpus arrives as one split, and
+    the md5-heavy gram hashing would run in a single task).
     """
-    s = _winnow_sel(docs, id_col, text_col, k, w, spread)
+    s = _winnow_sel(docs, id_col, text_col, k, w)
     return s.select(
         F.col(id_col), F.explode(F.array_distinct("_sel")).alias("_f")
     ).select(id_col, F.col("_f.p").alias("pos"), F.col("_f.h").alias("fp"))
@@ -155,7 +150,6 @@ def winnow_fp_values(
     text_col: str,
     k: int = GRAM_K,
     w: int = WIN_W,
-    spread: int | None = None,
 ) -> DataFrame:
     """(id, fp): each document's DISTINCT fingerprint values — exactly
     ``winnow_fingerprints(...).select(id, fp).distinct()``, computed
@@ -163,7 +157,7 @@ def winnow_fp_values(
     array_distinct over the window minima's hashes, and ids are unique
     per exploded group, so the global distinct exchange the pair join
     paid disappears. It is the form ``fingerprint_pairs`` takes."""
-    s = _winnow_sel(docs, id_col, text_col, k, w, spread)
+    s = _winnow_sel(docs, id_col, text_col, k, w)
     return s.select(
         F.col(id_col),
         F.explode(
@@ -203,22 +197,20 @@ def q_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Winnowed (doc_id, pos, fp) over the documents table (k=4 token
     grams, w=5 windows, rightmost ties — MOSS parameters scaled to the
     corpus)."""
-    from tcrd_spark.sources.lake import load_table
+    from tcrd_spark.sources.lake import load_table, split_for_scan
 
-    docs = load_table(spark, sf_dir, "documents")
     # the test corpus arrives as one split; spread the row-local hashing
-    par = spark.sparkContext.defaultParallelism
-    return winnow_fingerprints(docs, "doc_id", "text", GRAM_K, WIN_W, spread=par)
+    docs = split_for_scan(spark, load_table(spark, sf_dir, "documents"))
+    return winnow_fingerprints(docs, "doc_id", "text", GRAM_K, WIN_W)
 
 
 def q_winnow_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-50 candidate near-match pairs by shared winnowed
     fingerprints (df-capped blocking join)."""
-    from tcrd_spark.sources.lake import load_table
+    from tcrd_spark.sources.lake import load_table, split_for_scan
 
-    docs = load_table(spark, sf_dir, "documents")
-    par = spark.sparkContext.defaultParallelism
-    fps = winnow_fp_values(docs, "doc_id", "text", GRAM_K, WIN_W, spread=par)
+    docs = split_for_scan(spark, load_table(spark, sf_dir, "documents"))
+    fps = winnow_fp_values(docs, "doc_id", "text", GRAM_K, WIN_W)
     pairs = fingerprint_pairs(fps, "doc_id", MAX_DF)
     return pairs.orderBy(
         F.desc("shared"), F.asc("id_a"), F.asc("id_b")

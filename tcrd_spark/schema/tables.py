@@ -800,6 +800,12 @@ def surrogate_id(natural_key: Column) -> Column:
     return F.conv(F.substring(F.md5(natural_key), 1, 15), 16, 10).cast("long")
 
 
+def surrogate_id_sql(natural_key: str) -> str:
+    """`surrogate_id` as SQL text, over the SQL expression
+    `natural_key` — for builds that are one parse."""
+    return f"CAST(conv(substring(md5({natural_key}), 1, 15), 16, 10) AS BIGINT)"
+
+
 def validate_enum(df: DataFrame, col: str, domain: tuple[str, ...]) -> DataFrame:
     """Loader-side CHECK for enum columns: any out-of-domain value
     raises at action time (the reference relied on MySQL enum)."""

@@ -62,6 +62,7 @@ from tcrd_spark.sources.snapshots import (
     _commit,
     _data_dir,
     _head,
+    _layout,
     _manifest_dir,
     _manifest_path,
     _publish_exclusive,
@@ -214,8 +215,14 @@ def merge_branch(
                     _commit(table_dir, {
                         "version": cur + 1, "parent": cur,
                         "op": "append", "merged_from": name,
-                        "part_col": cm["part_col"],
-                        "columns": cm["columns"],
+                        # the branch files were staged under the
+                        # branch's schema: a source whose schema
+                        # differs reads the merged head by inference
+                        **_layout(cm, schema=(
+                            cm.get("schema")
+                            if cm.get("schema") == bm.get("schema")
+                            else None
+                        )),
                         "files": sorted(set(cm["files"]) | set(added)),
                         "stats": {**cm.get("stats", {}), **added_stats},
                         # the SOURCE head's dv state — append-only
@@ -250,8 +257,7 @@ def merge_branch(
         _commit(table_dir, {
             "version": src_head + 1, "parent": src_head,
             "op": "merge_branch", "merged_from": name,
-            "part_col": head_m["part_col"],
-            "columns": head_m["columns"],
+            **_layout(head_m),
             "files": head_m["files"],
             "stats": head_m.get("stats", {}),
             # the branch head's dv state (fork-inherited + its own dv

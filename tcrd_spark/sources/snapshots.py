@@ -25,11 +25,21 @@ Minimal honest design, the same shape the real formats use:
   merged (`merge_frames`), and written as NEW files; the next
   manifest carries every other file forward by reference. Bytes
   written ∝ change, and the previous version survives;
-- every verb reads through one scan (`_scan`: manifest columns in
-  order, deletion vectors applied, evolved columns typed NULL),
-  plans merge candidates through one zone-map planner
-  (`_candidate_files`) and publishes deletion vectors through one
-  commit (`_publish_marks`).
+- every manifest records the table's ``schema`` (the StructType
+  JSON of its columns: footer types, and the partition column as
+  Spark types its path values). Commits that define the columns
+  (`create_table`, `append_version(merge_schema=True)`,
+  `repartition_table`) infer it once over their files; every other
+  commit carries its parent's (`_layout`), re-inferring only when
+  the files it stages would not read back under it;
+- every verb reads through one scan (`_scan`: the manifest's schema
+  handed to the reader, so no footer is opened to plan it; manifest
+  columns in order; deletion vectors applied; a column a file lacks
+  reads as NULL), plans merge candidates through one zone-map
+  planner (`_candidate_files`) and publishes deletion vectors
+  through one commit (`_publish_marks`). A manifest written before
+  schemas were recorded reads with the schema inferred from its
+  files' footers (`_infer_schema`), one job per read.
 
 Commit protocol: every metadata object (manifest, tag, branch meta)
 publishes through the active store's atomic PUT-IF-ABSENT
@@ -55,6 +65,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructType
 
 from tcrd_spark.sources.merge import merge_frames
 from tcrd_spark.sources.metastore import (  # metadata-plane seam
@@ -124,13 +135,19 @@ def _dv_dir(table_dir: str) -> str:
     return os.path.join(os.path.dirname(base), "_dv")
 
 
+# every sidecar holds exactly these columns (`_publish_marks` writes
+# the scan's `_rf` string and `_metadata.row_index` long)
+_DV_SCHEMA = "file STRING, pos BIGINT"
+
+
 def _dv_df(spark: SparkSession, table_dir: str, names: list[str] | None):
     """The named DV sidecars as one ('_rf', '_ri') DataFrame — the
     (file, row index) pair `_scan` tags each row with — or None when
-    there are none."""
+    there are none. Read with the sidecars' fixed schema: no footer
+    job."""
     if not names:
         return None
-    return spark.read.parquet(
+    return spark.read.schema(_DV_SCHEMA).parquet(
         *[os.path.join(_dv_dir(table_dir), n) for n in names]
     ).select(F.col("file").alias("_rf"), F.col("pos").alias("_ri"))
 
@@ -154,6 +171,90 @@ def _rel_file():
     return F.url_decode(F.regexp_replace(rel, r"\+", "%2B"))
 
 
+def _infer_schema(
+    spark: SparkSession, table_dir: str, files: list[str]
+) -> dict | None:
+    """The schema Spark infers for `files`: their footers merged
+    (mergeSchema) and the partition column typed from its path
+    values, as StructType JSON. One footer job. It is the schema's
+    source for commits that define the columns, for a commit whose
+    staged files do not fit its parent's schema, and for reads of a
+    manifest written before schemas were recorded. None for no
+    files."""
+    if not files:
+        return None
+    base = _data_dir(table_dir)
+    return (
+        spark.read.option("basePath", base)
+        .option("mergeSchema", "true")
+        .parquet(*[os.path.join(base, f) for f in files])
+        .schema.jsonValue()
+    )
+
+
+def _fits(
+    schema: dict, table_dir: str, staged: DataFrame, part_col: str,
+    new_files: list[str],
+) -> bool:
+    """Whether `new_files`, staged from `staged`, read back under the
+    recorded `schema` exactly as inference over them would type them:
+    every staged data column has its recorded type, and a non-string
+    partition column's new path values infer as the recorded type
+    (a driver-side path parse: the reader is handed the data columns,
+    so it opens no footer)."""
+    if not new_files:
+        return True
+    want = StructType.fromJson(schema)
+    types = {f.name: f.dataType for f in want.fields}
+    if any(
+        types.get(f.name) != f.dataType
+        for f in staged.schema.fields if f.name != part_col
+    ):
+        return False
+    if isinstance(types.get(part_col), StringType):
+        return True
+    base = _data_dir(table_dir)
+    got = (
+        staged.sparkSession.read.schema(
+            StructType([f for f in want.fields if f.name != part_col])
+        )
+        .option("basePath", base)
+        .parquet(*[os.path.join(base, f) for f in new_files])
+        .schema
+    )
+    return part_col in got.names and got[part_col].dataType == types.get(
+        part_col
+    )
+
+
+def _next_schema(
+    table_dir: str, m: dict, staged: DataFrame, part_col: str,
+    new_files: list[str], files: list[str],
+) -> dict | None:
+    """The schema of a commit that stages `new_files` from `staged`
+    on top of parent manifest `m` and lists `files`: the parent's
+    when the new files fit it (`_fits`), else the one inference over
+    `files` (a parent written before schemas were recorded upgrades
+    here)."""
+    parent = m.get("schema")
+    if parent is not None and _fits(
+        parent, table_dir, staged, part_col, new_files
+    ):
+        return parent
+    return _infer_schema(staged.sparkSession, table_dir, files)
+
+
+def _layout(m: dict, **changes) -> dict:
+    """The table-shape fields a manifest carries from its parent `m`:
+    partition column, column order and schema, with `changes`
+    applied. Every commit builds its manifest through this, so no
+    verb can drop a field."""
+    return {
+        "part_col": m["part_col"], "columns": m["columns"],
+        "schema": m.get("schema"), **changes,
+    }
+
+
 def _scan(
     spark: SparkSession,
     table_dir: str,
@@ -164,28 +265,27 @@ def _scan(
     """The VISIBLE rows of `files` under manifest `m`, columns in
     manifest order — the one read every snapshot verb plans through.
 
-    mergeSchema lets files from before an additive evolution
-    (append_version(merge_schema=True)) read the new column as NULL; a
-    manifest column that NO file in the subset holds comes back as a
-    NULL typed from the snapshot's footer schema (footers only, no
-    data read). The manifest's DV index is anti-joined on (relative
-    file, parquet row index) — broadcast, small by the mode's
-    contract. `positions=True` carries that pair as `_rf`/`_ri`,
-    captured as plain columns on the raw scan before any join
-    (metadata columns don't survive arbitrary plan shapes). An empty
-    `files` is the snapshot's empty frame."""
+    The reader is handed the manifest's schema, so planning opens no
+    footer and fires no job, and every subset of the snapshot reads
+    with the snapshot's types: a column a file lacks (written before
+    an additive evolution, append_version(merge_schema=True)) reads as
+    NULL of its recorded type. A manifest without a schema (written
+    before schemas were recorded) takes it from `_infer_schema` over
+    its files — one footer job. The manifest's DV index is
+    anti-joined on (relative file, parquet row index) — broadcast,
+    small by the mode's contract. `positions=True` carries that pair
+    as `_rf`/`_ri`, captured as plain columns on the raw scan before
+    any join (metadata columns don't survive arbitrary plan shapes).
+    An empty `files` is the snapshot's empty frame."""
     if not files and m["files"]:
         return _scan(spark, table_dir, m, m["files"], positions).limit(0)
     base = _data_dir(table_dir)
-
-    def read(fs: list[str]) -> DataFrame:
-        return (
-            spark.read.option("basePath", base)
-            .option("mergeSchema", "true")
-            .parquet(*[os.path.join(base, f) for f in fs])
-        )
-
-    df = read(files)
+    schema = m.get("schema") or _infer_schema(spark, table_dir, m["files"])
+    df = (
+        spark.read.schema(StructType.fromJson(schema))
+        .option("basePath", base)
+        .parquet(*[os.path.join(base, f) for f in files])
+    )
     dv = _dv_df(spark, table_dir, m.get("dv"))
     if positions or dv is not None:
         df = df.withColumn("_rf", _rel_file()).withColumn(
@@ -193,12 +293,6 @@ def _scan(
         )
     if dv is not None:
         df = df.join(F.broadcast(dv), ["_rf", "_ri"], "left_anti")
-    missing = [c for c in m["columns"] if c not in df.columns]
-    if missing:
-        typed = read(m["files"]).schema
-        df = df.select("*", *[
-            F.lit(None).cast(typed[c].dataType).alias(c) for c in missing
-        ])
     return df.select(*m["columns"], *(["_rf", "_ri"] if positions else []))
 
 
@@ -392,8 +486,9 @@ def create_table(
     files, stats = _stage_files(df, table_dir, part_col, 1)
     _commit(table_dir, {
         "version": 1, "parent": None, "op": "create",
-        "part_col": part_col, "columns": df.columns, "files": files,
-        "stats": stats,
+        "part_col": part_col, "columns": df.columns,
+        "schema": _infer_schema(df.sparkSession, table_dir, files),
+        "files": files, "stats": stats,
     })
     return 1
 
@@ -601,9 +696,10 @@ def append_version(
     re-offers the same txn_id and is skipped instead of duplicated.
 
     ``merge_schema=True`` is additive schema evolution (Delta's
-    mergeSchema): the frame may carry NEW columns (it must still hold
-    every existing one); they append to the committed column order,
-    and snapshots containing pre-evolution files read them as NULL."""
+    schema-merging write): the frame may carry NEW columns (it must
+    still hold every existing one); they append to the committed
+    column order, and snapshots containing pre-evolution files read
+    them as NULL."""
     m = _head(table_dir)
     if txn_id is not None and txn_seen(table_dir, txn_id):
         return None  # already committed: replay is a no-op
@@ -621,8 +717,9 @@ def append_version(
     if expectations:
         _enforce_expectations(df, expectations)
     cols = cols + extra if merge_schema else cols
+    staged = df.select(*cols)
     new_files, new_stats = _stage_files(
-        df.select(*cols), table_dir, m["part_col"], cur_v + 1
+        staged, table_dir, m["part_col"], cur_v + 1
     )
     # Optimistic concurrency (the Delta conflict-resolution rule for
     # blind appends): if another writer commits first, an append
@@ -641,14 +738,21 @@ def append_version(
         v_next = base_m["version"] + 1
         if txn_id is not None and txn_seen(table_dir, txn_id):
             return None  # the race was with our own replay
+        files = sorted(base_m["files"] + new_files)
+        # an evolving append infers over the whole new file list, so
+        # its schema is the one a read of it inferred before
+        schema = (
+            _infer_schema(df.sparkSession, table_dir, files) if extra
+            else _next_schema(table_dir, base_m, staged,
+                              base_m["part_col"], new_files, files)
+        )
         try:
             _commit(table_dir, {
                 "version": v_next, "parent": base_m["version"],
                 "op": "append",
-                "part_col": base_m["part_col"],
-                "columns": cols if merge_schema else base_m["columns"],
+                **_layout(base_m, columns=cols, schema=schema),
                 "txn_id": txn_id,
-                "files": sorted(base_m["files"] + new_files),
+                "files": files,
                 "stats": {**base_m.get("stats", {}), **new_stats},
                 "dv": base_m.get("dv", []),  # deletes stay applied
             })
@@ -826,10 +930,13 @@ def _rewrite_commit(
     gone = set(touched)
     keep = [f for f in m["files"] if f not in gone]
     stats = m.get("stats", {})
+    files = sorted(keep + new_files)
     _commit(table_dir, {
         "version": v, "parent": m["version"], **header,
-        "part_col": part_col, "columns": m["columns"],
-        "files": sorted(keep + new_files),
+        **_layout(m, schema=_next_schema(
+            table_dir, m, df, part_col, new_files, files
+        )),
+        "files": files,
         "stats": {**{f: stats[f] for f in keep if f in stats}, **new_stats},
         "dv": m.get("dv", []) if keep else [],
     })
@@ -839,14 +946,19 @@ def _rewrite_commit(
 def _publish_marks(
     table_dir: str, m: dict, marks: DataFrame | None, header: dict,
     new_files: list[str] | None = None, new_stats: dict | None = None,
+    staged: DataFrame | None = None,
 ) -> int:
     """The one deletion-vector commit: write `marks` ((file, pos)
     rows; None marks nothing) as a sidecar under `_dv/`, then publish
-    the next manifest — `m`'s files plus `new_files`, its dv list
-    plus the sidecar. A lost CAS reclaims the sidecar before
-    re-raising; staged data files are unreferenced orphans
-    `remove_orphans` sweeps."""
+    the next manifest — `m`'s files plus `new_files` (staged from
+    `staged`), its dv list plus the sidecar. A lost CAS reclaims the
+    sidecar before re-raising; staged data files are unreferenced
+    orphans `remove_orphans` sweeps."""
     v = m["version"] + 1
+    files = sorted(m["files"] + (new_files or []))
+    schema = m.get("schema") if staged is None else _next_schema(
+        table_dir, m, staged, m["part_col"], new_files or [], files
+    )
     dv, out = list(m.get("dv", [])), None
     if marks is not None:
         name = f"v{v:05d}-{uuid.uuid4().hex[:8]}"
@@ -857,8 +969,8 @@ def _publish_marks(
     try:
         _commit(table_dir, {
             "version": v, "parent": m["version"], **header, "mode": "dv",
-            "part_col": m["part_col"], "columns": m["columns"],
-            "files": sorted(m["files"] + (new_files or [])),
+            **_layout(m, schema=schema),
+            "files": files,
             "stats": {**m.get("stats", {}), **(new_stats or {})},
             "dv": dv,
         })
@@ -998,7 +1110,7 @@ def _merge_dv(
     # (referencing it is harmless; pruning would need a count)
     return _publish_marks(
         table_dir, m, marks, {"op": "merge", "txn_id": txn_id},
-        new_files, new_stats,
+        new_files, new_stats, appends,
     )
 
 
@@ -1165,7 +1277,7 @@ def update_version(
         header = {"op": "update", "predicate": condition,
                   "set": dict(set_exprs)}
         return _publish_marks(
-            table_dir, m, marks, header, new_files, new_stats
+            table_dir, m, marks, header, new_files, new_stats, updated
         ), n_updated
     finally:
         hits.unpersist()
@@ -1222,7 +1334,9 @@ def optimize_version(
     )
     _commit(table_dir, {
         "version": cur_v + 1, "parent": cur_v, "op": "optimize",
-        "part_col": m["part_col"], "columns": m["columns"],
+        **_layout(m, schema=_next_schema(
+            table_dir, m, packed, m["part_col"], new_files, new_files
+        )),
         "files": new_files,
         "stats": new_stats,
         "dv": [],  # full rewrite: every DV delete is materialized
@@ -1279,8 +1393,10 @@ def repartition_table(
     )
     _commit(table_dir, {
         "version": cur_v + 1, "parent": cur_v, "op": "repartition",
-        "part_col": new_part_col, "prev_part_col": m["part_col"],
-        "columns": m["columns"],
+        **_layout(m, part_col=new_part_col, schema=_infer_schema(
+            spark, table_dir, new_files
+        )),
+        "prev_part_col": m["part_col"],
         "files": new_files,
         "stats": new_stats,
         "dv": [],  # full rewrite: every DV delete is materialized
@@ -1466,7 +1582,7 @@ def restore_version(table_dir: str, version: int) -> int:
             _commit(table_dir, {
                 "version": cur + 1, "parent": cur, "op": "restore",
                 "restored_from": version,
-                "part_col": m["part_col"], "columns": m["columns"],
+                **_layout(m),
                 "files": m["files"], "stats": m.get("stats", {}),
                 "dv": m.get("dv", []),  # the snapshot's OWN dv state
             })

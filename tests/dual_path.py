@@ -287,6 +287,9 @@ SPLIT_SITES = {
     "dsir_weights": "documents",
     "dsir_sample": "documents",
     "corpus_pipeline_v2": "documents",
+    "winnow_fingerprints": "documents",
+    "winnow_candidate_pairs": "documents",
+    "dedup_edit_distance": "documents",
 }
 
 

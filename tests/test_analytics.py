@@ -240,3 +240,98 @@ def test_tdl_refresh_repeated_transition_unique_ids(spark):
     ids_b = {r.id for r in b.filter("datetime = '2026-02-01 00:00:00'").collect()}
     assert len(ids_a) == len(ids_b) == 6
     assert ids_a.isdisjoint(ids_b)
+
+
+# versioned table -> partition column, the shape of a lake refresh
+REFRESH_TABLES = {"target": "ttype", "tdl_info": "itype",
+                  "drug_activity": "drug", "tdl_update_log": "application"}
+# the consumers' jobs: 29 with one classification, 69 when each
+# consumer runs the feature pipeline again
+CYCLE_JOBS = 40
+
+
+def test_refresh_cycle_computes_each_frame_once(spark, tmp_path):
+    """One refresh cycle over a small versioned lake: the snapshot
+    reads and the refresh build fire no job, and the four consumers of
+    the classification (counts, change log, target commit, log append)
+    share one run of the feature pipeline — each of the three after the
+    first reads the cached frame, and the cycle stays under a fixed job
+    count (run four times over, the pipeline alone exceeds it)."""
+    from tests.tcrd_fixtures import build_lake
+    from tests.test_manifest_schema import _jobs
+
+    from tcrd_spark.analytics.tdl import tdl_refresh
+    from tcrd_spark.sources import snapshots
+
+    base = build_lake(spark)
+    dirs = {t: str(tmp_path / t) for t in REFRESH_TABLES}
+    for t, part in REFRESH_TABLES.items():
+        snapshots.create_table(base[t], dirs[t], part)
+    lake = dict(base)
+    for t, d in dirs.items():
+        lake[t], n = _jobs(spark, lambda: snapshots.read_version(spark, d))
+        assert n == 0, (t, n)
+    stamp = "2026-01-01 00:00:00"
+    out, n = _jobs(spark, lambda: tdl_refresh(lake, asof=stamp))
+    assert n == 0
+    log = out["tdl_update_log"].filter(F.col("datetime") == stamp)
+
+    def consumers():
+        counts = out["tdl_counts"].collect()
+        changes = log.select("target_id", "new_tdl").collect()
+        changed = sorted(r.target_id for r in changes)
+        snapshots.merge_version(
+            spark, dirs["target"],
+            out["target"].filter(F.col("id").isin(changed)), ["id"],
+        )
+        snapshots.append_version(dirs["tdl_update_log"], log)
+        return counts, changes
+
+    (counts, changes), n = _jobs(spark, consumers)
+    assert {r.tdl: r.ct for r in counts} == {
+        "Tclin": 1, "Tchem": 2, "Tbio": 2, "Tdark": 1}
+    assert len(changes) == 6
+    assert n <= CYCLE_JOBS, n
+    for df in (out["target"], log, out["tdl_counts"]):
+        assert "InMemoryTableScan" in (
+            df._jdf.queryExecution().executedPlan().toString()
+        )
+    tdls = {r.id: r.tdl for r in
+            snapshots.read_version(spark, dirs["target"]).collect()}
+    assert tdls == {1: "Tclin", 2: "Tchem", 3: "Tchem", 4: "Tdark",
+                    5: "Tbio", 6: "Tbio"}
+
+
+def test_tdl_refresh_reclassifies_a_lake_rewritten_in_place(spark, tmp_path):
+    """A lake rewritten at the same paths by another writer (Spark's
+    own overwrite re-caches plans over the path; pyarrow's does not)
+    plans exactly as before, so a cache matched by plan would serve
+    the old classes: the refresh's slot rotates, and the second call
+    classifies the new data."""
+    import glob
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from tests.tcrd_fixtures import build_lake
+
+    from tcrd_spark.analytics.tdl import tdl_refresh
+
+    base = build_lake(spark)
+    path = str(tmp_path / "drug_activity.parquet")
+    base["drug_activity"].coalesce(1).write.parquet(path)
+    lake = {**base, "drug_activity": spark.read.parquet(path)}
+    counts = {r.tdl: r.ct for r in tdl_refresh(lake)["tdl_counts"].collect()}
+    assert counts["Tclin"] == 1
+    # every drug row becomes an MoA row: target 2 turns Tclin
+    (old,) = glob.glob(os.path.join(path, "*.parquet"))
+    t = pq.read_table(old)
+    i = t.schema.get_field_index("has_moa")
+    t = t.set_column(i, t.schema.field(i), pa.array([True] * t.num_rows))
+    os.remove(old)
+    # Hadoop's checksum of the old bytes would fail the new file
+    os.remove(os.path.join(path, f".{os.path.basename(old)}.crc"))
+    pq.write_table(t, old)
+    lake = {**base, "drug_activity": spark.read.parquet(path)}
+    counts = {r.tdl: r.ct for r in tdl_refresh(lake)["tdl_counts"].collect()}
+    assert counts["Tclin"] == 2 and counts["Tchem"] == 1

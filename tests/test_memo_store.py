@@ -150,6 +150,19 @@ def test_registered_queries_pin_bounded_storage(spark, sf_dir, tmp_path):
         n = pinned_after(name, [sf_dir, alias] * 2)
         assert n[3] == n[1], (name, n)
 
+    # the refresh caches its classification in one rotating slot
+    from tests.tcrd_fixtures import build_lake
+
+    from tcrd_spark.analytics.tdl import tdl_refresh
+
+    lake = build_lake(spark)
+    other = {**lake, "generif": lake["generif"].limit(1)}
+    n = []
+    for x in (lake, other, lake):
+        tdl_refresh(x)["tdl_counts"].collect()
+        n.append(spark.sparkContext._jsc.sc().getPersistentRDDs().size())
+    assert n[0] == n[1] == n[2], n
+
 
 def test_small_cache_is_not_pinned_at_shuffle_partitions(spark):
     """AQE may re-plan a cached frame (session.py): a materialized

@@ -62,7 +62,7 @@ def test_sub_k_doc_emits_nothing(spark):
 
 def test_fingerprints_plan_has_no_shuffle(spark, sf_dir):
     # selection is row-local: scan -> generate barriers -> explode, no
-    # Exchange (the registered query adds ONE spread repartition only
+    # Exchange (the registered query's input split guard adds one only
     # because the test corpus arrives as a single scan split)
     from tcrd_spark.sources.lake import load_table
 
