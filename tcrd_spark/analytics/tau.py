@@ -17,6 +17,10 @@ values share a bin; we use ntile(10) over a totally-ordered sort
 SQL uses the identical ntile + tie-break so both engines agree; a
 bit-exact cut2 reimplementation would need a per-gene quantile-edge
 pass (noted as future work).
+
+Both continuous variants build from one SQL text each and share the
+tau step (`_tau_over_bins`); `tau_ordinal` has no all-NA short-circuit
+and keeps its own.
 """
 
 from __future__ import annotations
@@ -47,44 +51,47 @@ def tau_ordinal(df: DataFrame, entity: str, tissue: str, level: str) -> DataFram
     )
 
 
+def _tau_over_bins(
+    df: DataFrame, entity: str, tissue: str, value: str, binned: str
+) -> DataFrame:
+    """(entity, n_tissues, tau) of the bins the SQL `binned` assigns
+    over `lg` (entity, tissue, and lm: the log10 of positive values,
+    else NULL), built from one SQL text: tau = Σ(1 − bin/max_bin) /
+    (n − 1), and 0.0 for an all-NA entity (every bin 0), matching the
+    reference tau()'s explicit all-NA short-circuit
+    (R/gtex_process.R). `binned` refers to the entity and tissue
+    columns as {e} and {t}."""
+    e, t, v = (f"`{c}`" for c in (entity, tissue, value))
+    return df.sparkSession.sql(
+        f"""
+        WITH lg AS (
+          SELECT {e}, {t}, CASE WHEN {v} > 0 THEN log10({v}) END AS lm
+          FROM {{df}}
+        )
+        SELECT {e}, count(*) AS n_tissues,
+               CASE WHEN max(mx) = 0 THEN 0.0D
+                    ELSE round(sum(CASE WHEN mx > 0 THEN 1 - bin / mx END)
+                               / (count(*) - 1), 6) END AS tau
+        FROM (SELECT *, max(bin) OVER (PARTITION BY {e}) AS mx
+              FROM ({binned.format(e=e, t=t)}))
+        GROUP BY {e}
+        """,
+        df=df,
+    )
+
+
 def tau_continuous(
     df: DataFrame, entity: str, tissue: str, value: str
 ) -> DataFrame:
     """df: (entity, tissue, value) one row per (entity, tissue) →
     (entity, n_tissues, tau). Pipeline per gtex_process.R: log10 of
     positive values (else NULL → bin 0), decile bin, tau over bins."""
-    lg = df.select(
-        entity,
-        tissue,
-        F.when(F.col(value) > 0, F.log10(value)).alias("lm"),
-    )
-    nn = lg.filter(F.col("lm").isNotNull())
-    w = Window.partitionBy(entity).orderBy("lm", tissue)
-    binned = nn.withColumn("bin", F.ntile(10).over(w)).unionByName(
-        lg.filter(F.col("lm").isNull()).withColumn("bin", F.lit(0))
-    )
-    wmax = Window.partitionBy(entity)
-    return (
-        binned.withColumn("mx", F.max("bin").over(wmax))
-        .groupBy(entity)
-        .agg(
-            F.count("*").alias("n_tissues"),
-            # all-NA entity (every bin 0, mx 0) → 0.0, matching the
-            # reference tau()'s explicit all-NA short-circuit
-            # (R/gtex_process.R)
-            F.when(F.max("mx") == 0, F.lit(0.0))
-            .otherwise(
-                F.round(
-                    F.sum(
-                        F.when(F.col("mx") > 0, 1 - F.col("bin") / F.col("mx"))
-                    )
-                    / (F.count("*") - 1),
-                    6,
-                )
-            )
-            .alias("tau"),
-        )
-    )
+    return _tau_over_bins(df, entity, tissue, value, """
+        SELECT *, ntile(10) OVER (PARTITION BY {e} ORDER BY lm, {t}) AS bin
+        FROM lg WHERE lm IS NOT NULL
+        UNION ALL
+        SELECT *, 0 AS bin FROM lg WHERE lm IS NULL
+    """)
 
 
 def tau_continuous_cut2(
@@ -97,60 +104,18 @@ def tau_continuous_cut2(
     where ntile's tie-splitting yields 0.5). Edges are rounded to 9 dp
     before the ≥ comparison so Spark and the DuckDB oracle make
     identical binary decisions on interpolated edges."""
-    lg = df.select(
-        entity,
-        tissue,
-        F.when(F.col(value) > 0, F.log10(value)).alias("lm"),
-    )
-    probs = [i / g for i in range(1, g)]
-    edges = (
-        lg.filter(F.col("lm").isNotNull())
-        .groupBy(entity)
-        .agg(
-            F.array_distinct(
-                F.transform(
-                    F.percentile("lm", F.array(*[F.lit(p) for p in probs])),
-                    lambda e: F.round(e, 9),
-                )
-            ).alias("edges")
-        )
-    )
-    binned = (
-        lg.join(edges, entity, "left")
-        .withColumn(
-            "bin",
-            F.when(
-                F.col("lm").isNotNull(),
-                1
-                + F.size(
-                    F.filter(
-                        F.col("edges"),
-                        lambda e: F.round(F.col("lm"), 9) >= e,
-                    )
-                ),
-            ).otherwise(0),
-        )
-    )
-    wmax = Window.partitionBy(entity)
-    return (
-        binned.withColumn("mx", F.max("bin").over(wmax))
-        .groupBy(entity)
-        .agg(
-            F.count("*").alias("n_tissues"),
-            # all-NA → 0.0 (reference tau() short-circuit), as above
-            F.when(F.max("mx") == 0, F.lit(0.0))
-            .otherwise(
-                F.round(
-                    F.sum(
-                        F.when(F.col("mx") > 0, 1 - F.col("bin") / F.col("mx"))
-                    )
-                    / (F.count("*") - 1),
-                    6,
-                )
-            )
-            .alias("tau"),
-        )
-    )
+    probs = ", ".join(f"{i / g!r}D" for i in range(1, g))
+    return _tau_over_bins(df, entity, tissue, value, f"""
+        SELECT *, CASE WHEN lm IS NOT NULL
+                       THEN 1 + size(filter(edges, x -> round(lm, 9) >= x))
+                       ELSE 0 END AS bin
+        FROM lg LEFT JOIN (
+          SELECT {{e}}, array_distinct(transform(
+                   percentile(lm, array({probs}), 1), x -> round(x, 9)
+                 )) AS edges
+          FROM lg WHERE lm IS NOT NULL GROUP BY {{e}}
+        ) USING ({{e}})
+    """)
 
 
 def qualitative_levels(

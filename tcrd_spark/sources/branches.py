@@ -24,9 +24,15 @@ source's DATA:
   source manifest ever references. (An object-store deployment maps
   the two prefixes instead of symlinking; the manifest math is
   identical.)
-- the fork version is pinned by an automatic TAG (`branch-<name>`),
-  so `vacuum` on the source can never reclaim files the branch still
-  reads — the tag IS the branch's GC root, dropped with the branch.
+- garbage collection has one rule (`snapshots._sweep`): a data file
+  or DV sidecar lives while a live manifest of any root the source
+  reaches references it — the source, its branches (`_branches/*`),
+  its registered clones (`_clones/*.json`), recursively. So `vacuum`
+  on the source never reclaims a file a branch or a clone still
+  reads, including files a branch merged that the source later
+  rewrote away. The automatic `branch-<name>` tag pins the fork
+  version for retention and reading (`read_tag`); it is not what
+  keeps the branch's files alive.
 - `vacuum` on a branch directory is REFUSED (snapshots.vacuum checks
   `_branch.json`): a branch's dropped manifests reference shared
   source files, so per-branch retention GC could delete data live in
@@ -40,8 +46,11 @@ source's DATA:
   table state, so replaying them onto a moved head would silently
   drop the source's newer rows; otherwise the merge raises a
   conflict and the caller re-forks.
-- `delete_branch` removes the branch's own files (those in branch
-  manifests but no source manifest), its directory, and the fork tag.
+- `delete_branch` removes the branch's directory and fork tag, then
+  sweeps the files and sidecars its subtree (nested branches
+  included) referenced that no other root still references. It
+  refuses while a registered clone of the branch exists: a clone
+  records its data dir through the branch's path.
 
 100 TB shape: fork is O(1) (one manifest copy + one symlink + one
 tag) — no data moves, ever; merge moves manifests, not bytes; the
@@ -67,6 +76,9 @@ from tcrd_spark.sources.snapshots import (
     _manifest_path,
     _publish_exclusive,
     _read_manifest,
+    _referenced,
+    _roots,
+    _sweep,
     delete_tag,
     tag_version,
     versions,
@@ -91,13 +103,14 @@ def _fork_tag(name: str) -> str:
 
 def list_branches(table_dir: str) -> dict[str, dict]:
     """{name: {fork_version, head}} for every live branch."""
-    root = os.path.join(table_dir, "_branches")
+    root = os.path.join(os.path.abspath(table_dir), "_branches")
     out = {}
-    for name in get_store().listdir(root):
-        bdir = os.path.join(root, name)
-        if get_store().exists(os.path.join(bdir, "_branch.json")):
+    for bdir in _roots(table_dir):
+        if os.path.dirname(bdir) == root and get_store().exists(
+            os.path.join(bdir, "_branch.json")
+        ):
             meta = _branch_meta(bdir)
-            out[name] = {
+            out[os.path.basename(bdir)] = {
                 "fork_version": meta["fork_version"],
                 "head": versions(bdir)[-1],
             }
@@ -126,9 +139,8 @@ def create_branch(
     bdir = _branch_dir(table_dir, name)
     if os.path.exists(bdir) or store.exists(bdir):
         raise FileExistsError(f"branch {name!r} exists at {table_dir}")
-    # the fork tag is the branch's GC root: source vacuum retains the
-    # fork version (and so every file the branch inherited) while the
-    # branch lives
+    # the fork tag keeps the fork version readable on the source
+    # (retention); the branch's files live by the GC walk, not the tag
     tag_version(table_dir, _fork_tag(name), v)
     meta = {"name": name, "source": os.path.abspath(table_dir),
             "fork_version": v}
@@ -288,11 +300,13 @@ def clone_table(
     source manifest references; vacuum on the clone refuses — its
     dropped manifests reference shared files).
 
-    GC root: the source gets an automatic `clone-<basename>` tag
-    pinning the fork version, so source vacuum never reclaims files
-    the clone still reads. Dropping that tag (`delete_tag`) is the
-    operator's declaration that the clone is abandoned — the same
-    caveat Delta documents for shallow clones."""
+    GC: the clone is registered on the source (`_clones/`), so the
+    source's GC walk (`snapshots._roots`) reaches its manifests and
+    no GC verb reclaims a file the clone still reads. The clone is
+    abandoned once its directory is gone; the source's walk then
+    skips it. The automatic `clone-<basename>` tag pins the fork
+    version on the source for retention; dropping it does not
+    abandon the clone."""
     m = _head(table_dir, version)
     v = m["version"]
     store = get_store()
@@ -339,9 +353,9 @@ def clone_tag(dest_dir: str) -> str:
     """The GC tag a clone at `dest_dir` pins on its source. Keyed on
     the ABSOLUTE destination path (hashed), not the basename — two
     clones whose paths share a leaf name must not collide (dropping
-    one basename-keyed tag would un-pin the OTHER clone's fork and
-    expose its files to vacuum). Also recorded in the clone's
-    _branch.json as `gc_tag`."""
+    one basename-keyed tag would un-pin the OTHER clone's fork
+    version). Also recorded in the clone's _branch.json as `gc_tag`
+    and in the source's clone registry entry name."""
     import hashlib
 
     p = os.path.abspath(dest_dir)
@@ -350,44 +364,25 @@ def clone_tag(dest_dir: str) -> str:
 
 
 def delete_branch(table_dir: str, name: str) -> list[str]:
-    """Retire a branch: remove the files only IT references (staged
-    on the branch, never merged), its directory, and the fork tag.
-    Returns the removed file names."""
-    bdir = _branch_dir(table_dir, name)
+    """Retire a branch: remove its directory (nested branches
+    included) and the fork tag, then sweep the data files and DV
+    sidecars its subtree referenced that no other root of the table
+    still references. Refuses while a registered clone of the branch,
+    or of a branch nested under it, still exists. Returns the removed
+    data files."""
+    bdir = os.path.abspath(_branch_dir(table_dir, name))
     if not get_store().exists(os.path.join(bdir, "_branch.json")):
         raise FileNotFoundError(f"no branch {name!r} at {table_dir}")
-    branch_files = {
-        f for v in versions(bdir) for f in _read_manifest(bdir, v)["files"]
-    }
-    source_files = {
-        f
-        for v in versions(table_dir)
-        for f in _read_manifest(table_dir, v)["files"]
-    }
-    base = _data_dir(table_dir)
-    removed = []
-    for f in sorted(branch_files - source_files):
-        p = os.path.join(base, f)
-        if os.path.exists(p):
-            os.remove(p)
-            removed.append(f)
-    # dv sidecars only the branch references (its own dv deletes,
-    # never merged) — same shared-namespace cleanup as staged files
-    from tcrd_spark.sources.snapshots import _dv_dir
-
-    branch_dv = {
-        n for v in versions(bdir)
-        for n in (_read_manifest(bdir, v).get("dv") or [])
-    }
-    source_dv = {
-        n for v in versions(table_dir)
-        for n in (_read_manifest(table_dir, v).get("dv") or [])
-    }
-    for n in sorted(branch_dv - source_dv):
-        shutil.rmtree(
-            os.path.join(_dv_dir(table_dir), n), ignore_errors=True
+    clones = [
+        r for r in _roots(bdir) if os.path.commonpath([r, bdir]) != bdir
+    ]
+    if clones:
+        raise ValueError(
+            f"delete_branch refused: branch {name!r} has live clones "
+            f"{clones} that read through it — remove them first"
         )
+    files, dv = _referenced(bdir)
     shutil.rmtree(bdir, ignore_errors=True)
     get_store().remove_tree(bdir)
     delete_tag(table_dir, _fork_tag(name))
-    return removed
+    return _sweep(table_dir, files, dv)

@@ -539,14 +539,43 @@ def _walk_entry(m: dict) -> dict:
     return e
 
 
-_CKPT_CACHE: dict[tuple, tuple] = {}  # identity-keyed, like _TXN_CACHE
+_PARSE_CACHE: dict[tuple, object] = {}
+_PARSE_CACHE_MAX = 65536  # entries; cleared wholesale when full
+_ABSENT = object()  # file vanished mid-walk (repaired/vacuumed)
+
+
+def _parsed(path: str, parse):
+    """`parse(json)` of the immutable metadata file at `path` (a
+    manifest, a walk checkpoint), cached on the FILE'S IDENTITY (path
+    + the store's identity token: inode + mtime_ns + size on posix),
+    not on its name: a table dropped and recreated at the same path
+    within one driver process must never resolve to the OLD table's
+    content — that made txn_seen wrongly report a fresh batch as
+    already applied and the write verbs silently no-op it (ADVICE
+    r10, data loss). A file that is absent or vanishes mid-read (an
+    aborted/torn commit repaired away, a vacuumed version) is _ABSENT
+    and never cached; the size bound stops unbounded growth across
+    many tables."""
+    ident = get_store().ident(path)
+    if ident is None:
+        return _ABSENT
+    key = (os.path.abspath(path), ident)
+    if key not in _PARSE_CACHE:
+        try:
+            got = parse(get_store().read_json(path))
+        except FileNotFoundError:
+            return _ABSENT
+        if len(_PARSE_CACHE) >= _PARSE_CACHE_MAX:
+            _PARSE_CACHE.clear()
+        _PARSE_CACHE[key] = got
+    return _PARSE_CACHE[key]
 
 
 def _latest_ckpt(table_dir: str):
     """(through_version, entries) of the newest checkpoint, or None.
-    The parse is cached on the checkpoint FILE'S identity token —
-    checkpoints are immutable once published, and a streaming sink
-    calls the txn guard every trigger."""
+    The parse is identity-cached (`_parsed`): checkpoints are
+    immutable once published, and a streaming sink calls the txn
+    guard every trigger."""
     names = [
         n for n in get_store().listdir(_manifest_dir(table_dir))
         if n.startswith("_ckpt-v") and n.endswith(".json")
@@ -555,23 +584,10 @@ def _latest_ckpt(table_dir: str):
     if not names:
         return None
     v = max(int(n[7:-5]) for n in names)
-    path = _ckpt_path(table_dir, v)
-    ident = get_store().ident(path)
-    if ident is None:
-        return None
-    key = (os.path.abspath(path), ident)
-    if key not in _CKPT_CACHE:
-        try:
-            c = get_store().read_json(path)
-        except FileNotFoundError:
-            return None
-        if len(_CKPT_CACHE) >= _TXN_CACHE_MAX:
-            _CKPT_CACHE.clear()
-        _CKPT_CACHE[key] = (
-            c["through"],
-            {int(k): e for k, e in c["entries"].items()},
-        )
-    return _CKPT_CACHE[key]
+    got = _parsed(_ckpt_path(table_dir, v), lambda c: (
+        c["through"], {int(k): e for k, e in c["entries"].items()}
+    ))
+    return None if got is _ABSENT else got
 
 
 def checkpoint_manifests(table_dir: str) -> int:
@@ -823,39 +839,14 @@ def streaming_snapshot_append(
     )
 
 
-_TXN_CACHE: dict[tuple, object] = {}
-_TXN_CACHE_MAX = 65536  # entries; cleared wholesale when full
-_ABSENT = object()  # version vanished mid-walk (repaired/vacuumed)
-
-
 def _txn_of(table_dir: str, v: int):
-    """Memoized manifest txn_id lookup — manifests are immutable, so a
-    committed version's txn_id never changes; without the cache every
-    txn-guarded commit re-parses the FULL manifest history (O(N) JSON
-    reads per trigger, O(N²) over a stream's life — the lake_source
-    _added_count pathology). The cache key is the manifest FILE'S
-    IDENTITY (path + inode + mtime_ns + size), not (table_dir, v):
-    a table dropped and recreated at the same path within one driver
-    process must never resolve to the OLD table's txn_id — that made
-    txn_seen wrongly report a fresh batch as already applied and the
-    write verbs silently no-op it (ADVICE r10, data loss). Aborted/
-    torn manifests never parse, so they never poison the cache; a
-    version that vanishes mid-walk reads as _ABSENT (never equal to
-    any txn_id); the size bound stops unbounded growth across many
-    tables."""
-    path = _manifest_path(table_dir, v)
-    ident = get_store().ident(path)
-    if ident is None:
-        return _ABSENT
-    key = (os.path.abspath(path), ident)
-    if key not in _TXN_CACHE:
-        m = _read_manifest_opt(table_dir, v)
-        if m is None:
-            return _ABSENT
-        if len(_TXN_CACHE) >= _TXN_CACHE_MAX:
-            _TXN_CACHE.clear()
-        _TXN_CACHE[key] = m.get("txn_id")
-    return _TXN_CACHE[key]
+    """Memoized manifest txn_id lookup (`_parsed`) — manifests are
+    immutable, so a committed version's txn_id never changes; without
+    the cache every txn-guarded commit re-parses the FULL manifest
+    history (O(N) JSON reads per trigger, O(N²) over a stream's
+    life). A version that vanishes mid-walk reads as _ABSENT (never
+    equal to any txn_id)."""
+    return _parsed(_manifest_path(table_dir, v), lambda m: m.get("txn_id"))
 
 
 def txn_seen(table_dir: str, txn_id) -> bool:
@@ -1300,48 +1291,59 @@ def optimize_version(
     retention passes. Data is bit-identical by construction
     (pytest-pinned)."""
     m = _head(table_dir)
-    cur_v = m["version"]
-    cur = read_version(spark, table_dir, cur_v)
-    if cluster_by:
-        # OPTIMIZE ZORDER BY: the compaction commit lays rows along
-        # the Morton curve of `cluster_by`, so the freshly-harvested
-        # zone maps turn selective on every clustered column — the
-        # compaction pass is when clustering is cheapest, exactly
-        # Delta's pairing of the two
-        from tcrd_spark.sources.zorder import zorder_layout
+    n = max(1, target_files_per_partition)
 
-        packed = zorder_layout(
-            cur, cluster_by,
-            max(1, target_files_per_partition) * 8,
-        )
-    else:
-        n = max(1, target_files_per_partition)
+    def layout(cur: DataFrame) -> DataFrame:
+        if cluster_by:
+            # OPTIMIZE ZORDER BY: the compaction commit lays rows along
+            # the Morton curve of `cluster_by`, so the freshly-harvested
+            # zone maps turn selective on every clustered column — the
+            # compaction pass is when clustering is cheapest, exactly
+            # Delta's pairing of the two
+            from tcrd_spark.sources.zorder import zorder_layout
+
+            return zorder_layout(cur, cluster_by, 8 * n)
         if n == 1:
-            packed = cur.repartition(1, m["part_col"])
-        else:
-            # same salt discipline as repartition_table: hash routing
-            # alone sends each partition value wholly into one task,
-            # so target > 1 would never split a hot partition, and AQE
-            # coalesces a salted exchange without an explicit count
-            salt = F.pmod(
-                F.xxhash64(*[F.col(c) for c in m["columns"]]), F.lit(n)
-            )
-            packed = cur.repartition(
-                max(64, 8 * n), F.col(m["part_col"]), salt.alias("_s")
-            )
-    new_files, new_stats = _stage_files(
-        packed, table_dir, m["part_col"], cur_v + 1
+            return cur.repartition(1, m["part_col"])
+        return _salted(cur, m, m["part_col"], n)
+
+    return _rewrite_all(
+        spark, table_dir, m, layout, m["part_col"], {"op": "optimize"},
+        lambda packed, files: _next_schema(
+            table_dir, m, packed, m["part_col"], files, files
+        ),
     )
+
+
+def _salted(df: DataFrame, m: dict, part_col: str, n: int) -> DataFrame:
+    """`df` routed by `part_col` and a deterministic row-hash salt in
+    [0, n), so each partition value splits into ≤ n files: routing on
+    the value alone sends it wholly into ONE task. The explicit
+    partition count keeps AQE from coalescing the small shuffle back
+    into one task, where the salt would split nothing."""
+    salt = F.pmod(F.xxhash64(*[F.col(c) for c in m["columns"]]), F.lit(n))
+    return df.repartition(max(64, 8 * n), F.col(part_col), salt)
+
+
+def _rewrite_all(
+    spark: SparkSession, table_dir: str, m: dict, layout, part_col: str,
+    header: dict, schema,
+) -> int:
+    """The full-rewrite commit of the layout verbs (optimize,
+    repartition): head manifest `m`'s visible rows, laid out by
+    `layout(rows)`, staged partitioned by `part_col` as the next
+    version's only files and published with the verb's
+    `schema(staged, new_files)` and no deletion vectors (every DV
+    delete is materialized). Returns the new version."""
+    packed = layout(_scan(spark, table_dir, m, m["files"]))
+    v = m["version"] + 1
+    files, stats = _stage_files(packed, table_dir, part_col, v)
     _commit(table_dir, {
-        "version": cur_v + 1, "parent": cur_v, "op": "optimize",
-        **_layout(m, schema=_next_schema(
-            table_dir, m, packed, m["part_col"], new_files, new_files
-        )),
-        "files": new_files,
-        "stats": new_stats,
-        "dv": [],  # full rewrite: every DV delete is materialized
+        "version": v, "parent": m["version"], **header,
+        **_layout(m, part_col=part_col, schema=schema(packed, files)),
+        "files": files, "stats": stats, "dv": [],
     })
-    return cur_v + 1
+    return v
 
 
 def repartition_table(
@@ -1368,40 +1370,17 @@ def repartition_table(
     forward — Iceberg ships exactly this because re-creating a
     100 TB table to change its partition key is an outage."""
     m = _head(table_dir)
-    cur_v = m["version"]
     if new_part_col not in m["columns"]:
         raise ValueError(
             f"new partition column {new_part_col!r} is not a table "
             f"column {m['columns']}"
         )
-    cur = read_version(spark, table_dir, cur_v)
     n = max(1, target_files_per_partition)
-    # a deterministic row-hash SALT actually splits each partition
-    # value into ≤ n files: repartition(n, part_col) alone hash-routes
-    # every value wholly into ONE task, so the parameter would only
-    # change job parallelism, never files per partition (review catch)
-    salt = F.pmod(
-        F.xxhash64(*[F.col(c) for c in m["columns"]]), F.lit(n)
+    return _rewrite_all(
+        spark, table_dir, m, lambda cur: _salted(cur, m, new_part_col, n),
+        new_part_col, {"op": "repartition", "prev_part_col": m["part_col"]},
+        lambda _packed, files: _infer_schema(spark, table_dir, files),
     )
-    # explicit partition count: without it AQE coalesces the small
-    # shuffle back into one task and the salt splits nothing
-    packed = cur.repartition(
-        max(64, 8 * n), F.col(new_part_col), salt.alias("_salt")
-    )
-    new_files, new_stats = _stage_files(
-        packed, table_dir, new_part_col, cur_v + 1
-    )
-    _commit(table_dir, {
-        "version": cur_v + 1, "parent": cur_v, "op": "repartition",
-        **_layout(m, part_col=new_part_col, schema=_infer_schema(
-            spark, table_dir, new_files
-        )),
-        "prev_part_col": m["part_col"],
-        "files": new_files,
-        "stats": new_stats,
-        "dv": [],  # full rewrite: every DV delete is materialized
-    })
-    return cur_v + 1
 
 
 def manifest_diff(table_dir: str, v_from: int, v_to: int) -> dict:
@@ -1702,49 +1681,31 @@ def read_tag(
     return read_version(spark, table_dir, tags[name])
 
 
-def remove_orphans(
-    table_dir: str, grace_seconds: float = 259200.0
-) -> list[str]:
-    """Iceberg's remove_orphan_files: delete data files referenced by
-    NO live manifest — the leak `vacuum` cannot see (vacuum removes
-    files of DROPPED manifests; a writer that staged files and died
-    before its manifest CAS leaves files no manifest ever referenced,
-    accumulating forever on a busy table).
+# ------------------------------------------------ garbage collection
+#
+# One reachability rule for every verb that deletes data files or DV
+# sidecars (`vacuum`, `remove_orphans`, `branches.delete_branch`): a
+# file or sidecar is live while a live manifest of any ROOT reachable
+# from the table references it. The roots are the table, its branches
+# (`_branches/*`) and its registered clones (`_clones/*.json`
+# destinations), and recursively theirs: all of them stage into the
+# table's shared data and `_dv` dirs. The walk is the GC root; tags
+# pin versions for retention, but no file lives only because a tag
+# names it. A registered clone whose directory is gone is abandoned.
 
-    Reference set = every manifest reachable TRANSITIVELY from the
-    table: the table's own, every branch's under `_branches/`, every
-    REGISTERED clone's (`clone_table` records destinations under
-    `_clones/`), and recursively THEIR branches and registered clones
-    (a branch of a clone stages into the same shared data dir). A
-    registered clone whose directory is gone is treated as abandoned;
-    an unparseable registry entry (a dead writer's torn publish) is
-    skipped, not fatal. An UNREGISTERED reader of the data dir must
-    never exist — the module contract since the registry landed;
-    clones created by hand-copying manifests are invisible here.
 
-    Files younger than `grace_seconds` are kept: an IN-FLIGHT commit
-    stages files before publishing its manifest, and deleting those
-    would corrupt the commit about to win its CAS. The window is
-    measured from each file's WRITE-TIME mtime (staging preserves it),
-    so it must exceed the longest plausible staging duration — the
-    default is 3 days (Iceberg's default); do not run this
-    concurrently with writers on a tighter window. Returns the
-    removed relative paths."""
-    import time
-
-    if os.path.exists(os.path.join(table_dir, "_branch.json")):
-        raise ValueError(
-            "remove_orphans on a branch/clone is refused — run it on "
-            "the source table (the data dir is shared)"
-        )
-    referenced: set[str] = set()
-    queue, seen_roots = [os.path.abspath(table_dir)], set()
+def _roots(table_dir: str) -> list[str]:
+    """`table_dir` (first) and every root reachable from it, as
+    absolute paths. A torn registry entry (a dead writer's publish) is
+    skipped, not fatal; clones made by hand-copying manifests are not
+    registered, so they are invisible here and must never exist."""
+    store = get_store()
+    out, queue = [], [os.path.abspath(table_dir)]
     while queue:
         root = queue.pop()
-        if root in seen_roots:
+        if root in out:
             continue
-        seen_roots.add(root)
-        store = get_store()
+        out.append(root)
         broot = os.path.join(root, "_branches")
         queue += [
             os.path.join(broot, n) for n in store.listdir(broot)
@@ -1761,34 +1722,92 @@ def remove_orphans(
                 continue  # torn registry entry: skip, never fatal
             if versions(dest):
                 queue.append(os.path.abspath(dest))
-    for root in seen_roots:
+    return out
+
+
+def _referenced(table_dir: str) -> tuple[set[str], set[str]]:
+    """(data files, DV sidecar names) referenced by a live manifest of
+    any root reachable from `table_dir`. A manifest repaired or
+    vacuumed away mid-walk references nothing."""
+    files: set[str] = set()
+    dv: set[str] = set()
+    for root in _roots(table_dir):
         for v in versions(root):
             m = _read_manifest_opt(root, v)
-            if m is not None:  # repaired/vacuumed mid-walk: no refs
-                referenced.update(m["files"])
+            if m is not None:
+                files.update(m["files"])
+                dv.update(m.get("dv") or [])
+    return files, dv
+
+
+def _sweep(table_dir: str, files, dv=()) -> list[str]:
+    """The one GC deletion: remove the candidate data `files` and DV
+    sidecars `dv` (names relative to the table's shared data and
+    `_dv` dirs) that no live manifest reachable from `table_dir`
+    references. Callers unpublish what they retire (manifests, a
+    branch directory) BEFORE sweeping, so a crash in between leaves
+    orphans for `remove_orphans`, never a manifest whose files are
+    gone. Returns the removed data files, sorted."""
+    live, live_dv = _referenced(table_dir)
+    base = _data_dir(table_dir)
+    removed = []
+    for f in sorted(set(files) - live):
+        p = os.path.join(base, f)
+        if os.path.exists(p):
+            os.remove(p)
+            removed.append(f)
+    for n in sorted(set(dv) - live_dv):
+        shutil.rmtree(os.path.join(_dv_dir(table_dir), n), ignore_errors=True)
+    return removed
+
+
+def remove_orphans(
+    table_dir: str, grace_seconds: float = 259200.0
+) -> list[str]:
+    """Iceberg's remove_orphan_files: delete data files referenced by
+    NO live manifest of any root the table reaches (`_roots`: the
+    table, its branches, its registered clones, recursively) — the
+    leak `vacuum` cannot see (vacuum removes files of DROPPED
+    manifests; a writer that staged files and died before its
+    manifest CAS leaves files no manifest ever referenced,
+    accumulating forever on a busy table). DV sidecars are not swept
+    here; `vacuum` and `delete_branch` reclaim those.
+
+    Files younger than `grace_seconds` are kept: an IN-FLIGHT commit
+    stages files before publishing its manifest, and deleting those
+    would corrupt the commit about to win its CAS. The window is
+    measured from each file's WRITE-TIME mtime (staging preserves it),
+    so it must exceed the longest plausible staging duration — the
+    default is 3 days (Iceberg's default); do not run this
+    concurrently with writers on a tighter window. Returns the
+    removed relative paths."""
+    import time
+
+    if get_store().exists(os.path.join(table_dir, "_branch.json")):
+        raise ValueError(
+            "remove_orphans on a branch/clone is refused — run it on "
+            "the source table (the data dir is shared)"
+        )
     base = _data_dir(table_dir)
     now = time.time()
-    removed = []
-    for dirpath, _dirs, files in os.walk(base):
-        for fn in files:
-            p = os.path.join(dirpath, fn)
-            rel = os.path.relpath(p, base)
-            if rel in referenced:
-                continue
-            if now - os.path.getmtime(p) < grace_seconds:
-                continue  # possibly an in-flight commit's staging
-            os.remove(p)
-            removed.append(rel)
-    return sorted(removed)
+    old = [
+        os.path.relpath(os.path.join(dirpath, fn), base)
+        for dirpath, _dirs, fns in os.walk(base)
+        for fn in fns
+        if now - os.path.getmtime(os.path.join(dirpath, fn))
+        >= grace_seconds  # younger: possibly an in-flight staging
+    ]
+    return _sweep(table_dir, old)
 
 
 def vacuum(table_dir: str, keep_versions: int = 2) -> list[str]:
-    """Retention GC: delete data files referenced ONLY by manifests
-    older than the newest `keep_versions` (and those manifests). The
-    bounded cleanup loop a deployment runs — never touches any file a
-    retained version references, and never a TAGGED version: a tag is
-    a promise that a training set stays reproducible, so its manifest
-    and files survive any retention window."""
+    """Retention GC: drop the manifests older than the newest
+    `keep_versions`, except TAGGED versions (a tag is a promise that a
+    training set stays reproducible, so its manifest survives any
+    retention window), then delete the data files and DV sidecars of
+    the dropped manifests that no live manifest of any root the table
+    reaches (`_roots`: retained versions, branches, registered clones)
+    still references. Returns the removed data files."""
     if get_store().exists(os.path.join(table_dir, "_branch.json")):
         # a branch's dropped manifests reference files shared with
         # (and possibly live in) its source — per-branch retention GC
@@ -1799,25 +1818,11 @@ def vacuum(table_dir: str, keep_versions: int = 2) -> list[str]:
             "first, then vacuum the source table"
         )
     vs = versions(table_dir)
-    tagged = set(list_tags(table_dir).values())
-    retain = set(vs[-keep_versions:]) | tagged
+    retain = set(vs[-keep_versions:]) | set(list_tags(table_dir).values())
     drop = [v for v in vs if v not in retain]
-    retain = sorted(retain)
-    live = {
-        f for v in retain for f in _read_manifest(table_dir, v)["files"]
-    }
-    # capture dropped manifests' dv lists BEFORE their files go away
-    dropped_dv = {
-        v: (_read_manifest(table_dir, v).get("dv") or []) for v in drop
-    }
-    removed = []
+    # capture the dropped manifests' references BEFORE they go away
+    dropped = [_read_manifest(table_dir, v) for v in drop]
     for v in drop:
-        for f in _read_manifest(table_dir, v)["files"]:
-            if f not in live:
-                p = os.path.join(_data_dir(table_dir), f)
-                if os.path.exists(p):
-                    os.remove(p)
-                    removed.append(f)
         get_store().unlink(_manifest_path(table_dir, v))
         # index sidecars (sources/bloomidx.py) GC with their version:
         # a sidecar outliving its manifest is a storage leak and lets
@@ -1831,22 +1836,11 @@ def vacuum(table_dir: str, keep_versions: int = 2) -> list[str]:
         hits = glob.glob(os.path.join(table_dir, "_index", f"*-v{v:05d}*"))
         for p in sorted(hits, key=os.path.isdir):
             shutil.rmtree(p) if os.path.isdir(p) else os.remove(p)
-    # DV sidecar GC, same containment rule as data files: a sidecar
-    # referenced by a dropped manifest and by NO retained one is
-    # unreachable from any surviving snapshot. Branch/clone-created
-    # sidecars never appear in source manifests, so this never
-    # touches them (their lifecycle is delete_branch / the fork tag).
-    live_dv = {
-        n for v in retain
-        for n in (_read_manifest(table_dir, v).get("dv") or [])
-    }
-    for v in drop:
-        for n in dropped_dv.get(v, []):
-            if n not in live_dv:
-                shutil.rmtree(
-                    os.path.join(_dv_dir(table_dir), n),
-                    ignore_errors=True,
-                )
+    removed = _sweep(
+        table_dir,
+        [f for m in dropped for f in m["files"]],
+        [n for m in dropped for n in m.get("dv") or []],
+    )
     # walk-checkpoint GC: keep only the newest (stale ones are dead
     # weight; the walks always intersect with live versions anyway)
     cks = sorted(
@@ -1859,7 +1853,7 @@ def vacuum(table_dir: str, keep_versions: int = 2) -> list[str]:
             get_store().unlink(os.path.join(_manifest_dir(table_dir), n))
         except FileNotFoundError:
             pass
-    return sorted(set(removed))
+    return removed
 
 
 # ------------------------------------------------- registered query

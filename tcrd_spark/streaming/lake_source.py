@@ -51,6 +51,7 @@ sources/snapshots.py).
 
 from __future__ import annotations
 
+import json
 import os
 
 from pyspark.sql.datasource import (
@@ -58,9 +59,12 @@ from pyspark.sql.datasource import (
     DataSourceStreamReader,
     InputPartition,
 )
+from pyspark.sql.types import StructType
 
 from tcrd_spark.sources.snapshots import _data_dir, versions
 from tcrd_spark.sources.snapshots import _read_manifest as _manifest
+
+_SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
 
 
 class _FilePartition(InputPartition):
@@ -72,42 +76,41 @@ class _FilePartition(InputPartition):
         self.columns = columns
 
 
-def _arrow_ddl(table_dir: str) -> str:
-    """Schema DDL from the newest manifest's column order + a data
-    file's footer types; the hive partition column surfaces as
-    STRING (its value lives in the path, not the file)."""
-    import pyarrow.parquet as pq
+def _schema(table_dir: str) -> StructType:
+    """The stream's schema: the newest manifest's recorded schema (the
+    one `snapshots._scan` reads with) in manifest column order, the
+    hive partition column as STRING (its value lives in the path, not
+    the file). A manifest written before schemas were recorded takes
+    its data columns' types from the schema Spark's parquet writer
+    stores in the newest file's footer (after additive evolution only
+    files from the evolving commit on carry every column):
+    `snapshots._infer_schema` needs a Spark session, and this runs in
+    the data source's Python worker, which has none."""
+    m = _manifest(table_dir, versions(table_dir)[-1])
+    recorded = m.get("schema")
+    if recorded is None:
+        import pyarrow.parquet as pq
 
-    vs = versions(table_dir)
-    m = _manifest(table_dir, vs[-1])
-    # sample the NEWEST file (version-tagged basenames sort by
-    # commit): after additive schema evolution, only files from the
-    # evolving commit onward carry every current column
-    newest = max(m["files"], key=os.path.basename)
-    sample = os.path.join(_data_dir(table_dir), newest)
-    sch = pq.ParquetFile(sample).schema_arrow
-    mapping = {}
-    for field in sch:
-        t = field.type
-        import pyarrow as pa
+        newest = max(m["files"], key=os.path.basename)
+        footer = pq.read_metadata(
+            os.path.join(_data_dir(table_dir), newest)
+        ).metadata
+        recorded = json.loads(footer[_SPARK_ROW_METADATA])
+    fields = {f["name"]: f for f in recorded["fields"]}
+    fields[m["part_col"]] = {
+        "name": m["part_col"], "type": "string", "nullable": True,
+        "metadata": {},
+    }
+    return StructType.fromJson(
+        {"type": "struct", "fields": [fields[c] for c in m["columns"]]}
+    )
 
-        if pa.types.is_int64(t):
-            ddl = "bigint"
-        elif pa.types.is_int32(t):
-            ddl = "int"
-        elif pa.types.is_float64(t):
-            ddl = "double"
-        elif pa.types.is_float32(t):
-            ddl = "float"
-        elif pa.types.is_boolean(t):
-            ddl = "boolean"
-        elif pa.types.is_timestamp(t):
-            ddl = "timestamp"
-        else:
-            ddl = "string"
-        mapping[field.name] = ddl
-    mapping[m["part_col"]] = "string"
-    return ", ".join(f"{c} {mapping[c]}" for c in m["columns"])
+
+def _added(table_dir: str, m: dict) -> list[str]:
+    """The data files commit `m` added: its files not in its parent's."""
+    parent = m.get("parent")
+    prev = set(_manifest(table_dir, parent)["files"]) if parent else set()
+    return [f for f in m["files"] if f not in prev]
 
 
 class LakeCommitsStreamReader(DataSourceStreamReader):
@@ -152,12 +155,7 @@ class LakeCommitsStreamReader(DataSourceStreamReader):
         m = _manifest(self._table, v)
         if m["op"] not in ("create", "append"):
             return 0
-        parent = m.get("parent")
-        prev = (
-            set(_manifest(self._table, parent)["files"])
-            if parent else set()
-        )
-        return sum(1 for f in m["files"] if f not in prev)
+        return len(_added(self._table, m))
 
     def latestOffset(self) -> dict:
         vs = versions(self._table)
@@ -228,13 +226,7 @@ class LakeCommitsStreamReader(DataSourceStreamReader):
                     "is not an append delta; set "
                     "skipChangeCommits=true to pass over it"
                 )
-            parent = m.get("parent")
-            prev = set(
-                _manifest(self._table, parent)["files"]
-            ) if parent else set()
-            for rel in m["files"]:
-                if rel in prev:
-                    continue
+            for rel in _added(self._table, m):
                 part_dir = os.path.dirname(rel)
                 val = part_dir.split("=", 1)[1]
                 parts.append(
@@ -279,8 +271,8 @@ class LakeCommitsDataSource(DataSource):
     def name(cls) -> str:
         return "tcrd_lake_commits"
 
-    def schema(self) -> str:
-        return _arrow_ddl(self.options["path"])
+    def schema(self) -> StructType:
+        return _schema(self.options["path"])
 
     def streamReader(self, schema):
         return LakeCommitsStreamReader(dict(self.options))

@@ -1,9 +1,11 @@
 """Branch pins (sources/branches.py): fork is O(1) and isolated
 (source readers never see branch commits), every existing verb works
 on a branch path, append-only branches merge onto a MOVED source
-head, rewrite branches fast-forward or raise a conflict, the fork
-tag makes source vacuum branch-safe, vacuum on a branch refuses, and
-delete_branch reclaims exactly the branch-only files."""
+head, rewrite branches fast-forward or raise a conflict, source
+vacuum keeps what a branch reads, vacuum on a branch refuses, and
+delete_branch reclaims exactly the branch-only files. The three GC
+verbs share one reachability walk: every root the source reaches
+stays readable at every live version after each of them."""
 
 from __future__ import annotations
 
@@ -147,7 +149,7 @@ def test_vacuum_safety_and_branch_gc(spark, sf_dir, tmp_path):
     table, seed = _mk(spark, sf_dir, tmp_path)
     bdir = br.create_branch(table, "wip")
     snap.append_version(bdir, _shift(seed.limit(3), 10**9))
-    # source advances twice, then vacuums hard — the fork tag keeps
+    # source advances twice, then vacuums hard — the GC walk keeps
     # the branch's inherited files alive
     snap.append_version(table, _shift(seed.limit(2), 2 * 10**9))
     snap.append_version(table, _shift(seed.limit(2), 3 * 10**9))
@@ -355,7 +357,8 @@ def test_shallow_clone_is_zero_copy_and_independent(
 
     with _pytest.raises(ValueError, match="vacuum on a branch"):
         snap.vacuum(dest)
-    # abandoning the clone = dropping its tag
+    # dropping the tag un-pins the fork version; the clone stays a GC
+    # root until its directory is gone
     snap.delete_tag(table, tag)
     assert tag not in snap.list_tags(table)
 
@@ -401,3 +404,90 @@ def test_squash_merge_carries_commit_ts(spark, sf_dir, tmp_path):
     assert snap.version_as_of(table, time.time() + 1) == head
     hist = {r.version: r.ts for r in snap.history_df(spark, table).collect()}
     assert hist[head] > 0.0
+
+
+def _rows(df) -> list[tuple]:
+    return sorted(tuple(r) for r in df.collect())
+
+
+def _gc_lake(spark, sf_dir, tmp_path) -> list[str]:
+    """[source, branch, clone of the source, clone of the branch]: the
+    branch's staged file is merged into the source and then rewritten
+    out of the source head, and each clone commits on its own."""
+    table, seed = _mk(spark, sf_dir, tmp_path)
+    bdir = br.create_branch(table, "exp")
+    staged = _shift(seed.limit(3), 10**9)
+    snap.append_version(bdir, staged)
+    br.merge_branch(spark, table, "exp")
+    snap.merge_version(
+        spark, table,
+        staged.withColumn("o_totalprice", F.col("o_totalprice") + 1),
+        ["o_orderkey"],
+    )
+    head = snap._read_manifest(table, 3)["files"]
+    assert not set(snap._read_manifest(bdir, 2)["files"]) <= set(head)
+    dest_s, dest_b = str(tmp_path / "cs"), str(tmp_path / "cb")
+    br.clone_table(table, dest_s)
+    snap.append_version(dest_s, _shift(seed.limit(2), 2 * 10**9))
+    br.clone_table(bdir, dest_b)
+    snap.append_version(dest_b, _shift(seed.limit(2), 3 * 10**9))
+    return [table, bdir, dest_s, dest_b]
+
+
+@pytest.mark.parametrize("verb", ["vacuum", "remove_orphans", "delete_branch"])
+def test_gc_verbs_keep_every_live_root_readable(
+    spark, sf_dir, tmp_path, verb
+):
+    """After each GC verb every surviving root reads its pre-GC rows at
+    every live version. vacuum must keep the branch's merged file that
+    only the branch (and its clone) still references; delete_branch
+    refuses while a clone reads through the branch, and once that
+    clone is gone it leaves the source and its clone intact."""
+    import shutil
+
+    roots = _gc_lake(spark, sf_dir, tmp_path)
+    table, bdir, _dest_s, dest_b = roots
+    before = {
+        r: {v: _rows(snap.read_version(spark, r, v))
+            for v in snap.versions(r)}
+        for r in roots
+    }
+
+    def check(live_roots):
+        for r in live_roots:
+            assert snap.versions(r), r
+            for v in snap.versions(r):
+                got = _rows(snap.read_version(spark, r, v))
+                assert got == before[r][v], (r, v)
+
+    if verb == "vacuum":
+        snap.vacuum(table, keep_versions=1)
+        assert 2 not in snap.versions(table)  # the merge commit dropped
+    elif verb == "remove_orphans":
+        snap.remove_orphans(table, grace_seconds=0)
+    else:
+        with pytest.raises(ValueError, match="delete_branch refused"):
+            br.delete_branch(table, "exp")
+        check(roots)
+        shutil.rmtree(dest_b)  # the clone of the branch is abandoned
+        br.delete_branch(table, "exp")
+        assert not os.path.exists(bdir)
+        roots = [r for r in roots if r not in (bdir, dest_b)]
+    check(roots)
+
+
+def test_delete_branch_reclaims_nested_branches(spark, sf_dir, tmp_path):
+    """A branch of a branch stages into the same shared data dir:
+    deleting the outer branch reclaims the nested branch's files."""
+    table, seed = _mk(spark, sf_dir, tmp_path)
+    bdir = br.create_branch(table, "wip")
+    inner = br.create_branch(bdir, "inner")
+    snap.append_version(inner, _shift(seed.limit(2), 10**9))
+    staged = set(snap._read_manifest(inner, 2)["files"]) - set(
+        snap._read_manifest(table, 1)["files"]
+    )
+    assert staged
+    assert set(br.delete_branch(table, "wip")) == staged
+    base = snap._data_dir(table)
+    assert not any(os.path.exists(os.path.join(base, f)) for f in staged)
+    assert _rows(snap.read_version(spark, table)) == _rows(seed)

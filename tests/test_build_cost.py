@@ -13,10 +13,11 @@ from pyspark.sql import functions as F
 
 # one-parse builds (warm session, local[4], sf0.001): dedup_simhash_pairs
 # 157 and leakage_safe_split 285, from 2,054 and 1,291 as Column trees;
-# tdl_classification 176 from 1,503, and tdl_refresh over the fixture
-# lake 247 from 1,698
+# tdl_classification 176 from 1,503, tdl_refresh over the fixture
+# lake 247 from 1,698, and tau_continuous 139 from 1,030
 CEILING = {"dedup_simhash_pairs": 200, "leakage_safe_split": 360,
-           "tdl_classification": 230, "tdl_refresh": 320}
+           "tdl_classification": 230, "tdl_refresh": 320,
+           "tau_continuous": 300}
 
 
 @contextmanager
@@ -292,3 +293,97 @@ def test_tdl_sql_builds_match_column_form(spark):
         want = _tdl_refresh_column_form(lake, *args)
         for k in want:
             _same(got[k], want[k])
+
+
+def _tau_tail_column_form(binned, entity):
+    from pyspark.sql.window import Window
+
+    return (
+        binned.withColumn("mx", F.max("bin").over(Window.partitionBy(entity)))
+        .groupBy(entity)
+        .agg(
+            F.count("*").alias("n_tissues"),
+            F.when(F.max("mx") == 0, F.lit(0.0))
+            .otherwise(
+                F.round(
+                    F.sum(
+                        F.when(F.col("mx") > 0, 1 - F.col("bin") / F.col("mx"))
+                    )
+                    / (F.count("*") - 1),
+                    6,
+                )
+            )
+            .alias("tau"),
+        )
+    )
+
+
+def _tau_continuous_column_form(df, entity, tissue, value):
+    from pyspark.sql.window import Window
+
+    lg = df.select(
+        entity, tissue, F.when(F.col(value) > 0, F.log10(value)).alias("lm")
+    )
+    w = Window.partitionBy(entity).orderBy("lm", tissue)
+    binned = (
+        lg.filter(F.col("lm").isNotNull())
+        .withColumn("bin", F.ntile(10).over(w))
+        .unionByName(lg.filter(F.col("lm").isNull()).withColumn("bin", F.lit(0)))
+    )
+    return _tau_tail_column_form(binned, entity)
+
+
+def _tau_cut2_column_form(df, entity, tissue, value, g=10):
+    lg = df.select(
+        entity, tissue, F.when(F.col(value) > 0, F.log10(value)).alias("lm")
+    )
+    probs = [i / g for i in range(1, g)]
+    edges = (
+        lg.filter(F.col("lm").isNotNull())
+        .groupBy(entity)
+        .agg(
+            F.array_distinct(
+                F.transform(
+                    F.percentile("lm", F.array(*[F.lit(p) for p in probs])),
+                    lambda e: F.round(e, 9),
+                )
+            ).alias("edges")
+        )
+    )
+    binned = lg.join(edges, entity, "left").withColumn(
+        "bin",
+        F.when(
+            F.col("lm").isNotNull(),
+            1 + F.size(
+                F.filter(F.col("edges"), lambda e: F.round(F.col("lm"), 9) >= e)
+            ),
+        ).otherwise(0),
+    )
+    return _tau_tail_column_form(binned, entity)
+
+
+def test_tau_sql_builds_match_column_form(spark):
+    """tau_continuous and tau_continuous_cut2 are their Column forms'
+    optimized plans, with identical rows and schema, over entities with
+    ties, non-positive values and an all-zero entity."""
+    from tcrd_spark.analytics.tau import tau_continuous, tau_continuous_cut2
+
+    df = spark.createDataFrame(
+        [(g, f"t{i:02d}", v)
+         for g, vals in {
+             "a": [float(i) for i in range(1, 16)],
+             "b": [5.0, 5.0, 5.0, 2.0, 0.0, -1.0, 7.5],
+             "c": [0.0, 0.0, 0.0],
+             "d o": [1.0, 10.0, 100.0, 1000.0],
+         }.items()
+         for i, v in enumerate(vals)],
+        "gene string, tissue string, v double",
+    )
+    for sql_form, column_form in (
+        (tau_continuous, _tau_continuous_column_form),
+        (tau_continuous_cut2, _tau_cut2_column_form),
+    ):
+        _same(
+            sql_form(df, "gene", "tissue", "v"),
+            column_form(df, "gene", "tissue", "v"),
+        )

@@ -335,3 +335,48 @@ def test_admission_control_manifest_read_cost(
     calls.clear()
     rf.latestOffset()  # same cursor: everything served from the cache
     assert calls == []
+
+
+def test_stream_schema_comes_from_the_manifest(spark, tmp_path):
+    """DATE and DECIMAL columns stream with their own types (a schema
+    sampled from a footer by a hand-written type map made them
+    strings, and the stream died reading them), and a manifest
+    written before schemas were recorded streams with the same types
+    from the footer."""
+    import json
+
+    from pyspark.sql.types import DateType, DecimalType, StringType
+
+    table, ckpt = str(tmp_path / "t"), str(tmp_path / "ckpt")
+    seed = spark.sql(
+        "SELECT id AS k, date_add(DATE'2024-01-01', CAST(id AS INT)) AS d,"
+        " CAST(id * 1.25 AS DECIMAL(10,2)) AS amt,"
+        " CAST(id % 2 AS STRING) AS p FROM range(6)"
+    )
+    snap.create_table(seed, table, "p")
+    spark.dataSource.register(LakeCommitsDataSource)
+    got = []
+    q = (
+        spark.readStream.format("tcrd_lake_commits").option("path", table)
+        .load().writeStream
+        .foreachBatch(lambda df, _b: got.extend(tuple(r) for r in df.collect()))
+        .option("checkpointLocation", ckpt).start()
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    assert sorted(got) == sorted(tuple(r) for r in seed.collect())
+
+    want = [DecimalType(10, 2), DateType(), StringType()]
+    schema = LakeCommitsDataSource({"path": table}).schema()
+    assert [schema[c].dataType for c in ("amt", "d", "p")] == want
+    path = snap._manifest_path(table, 1)
+    with open(path) as f:
+        m = json.load(f)
+    del m["schema"]
+    with open(path, "w") as f:
+        json.dump(m, f)
+    legacy = LakeCommitsDataSource({"path": table}).schema()
+    assert [legacy[c].dataType for c in ("amt", "d", "p")] == want
+    assert legacy.names == seed.columns

@@ -20,8 +20,7 @@ MEMO_NAME = re.compile(r"^_[A-Z0-9_]*(CACHE|MEMO|ROTATING)[A-Z0-9_]*$")
 # parse caches of immutable lake files, keyed on file identity
 ALLOWED = {
     "tcrd_spark.session._SESSION_MEMO",
-    "tcrd_spark.sources.snapshots._TXN_CACHE",
-    "tcrd_spark.sources.snapshots._CKPT_CACHE",
+    "tcrd_spark.sources.snapshots._PARSE_CACHE",
 }
 
 
@@ -311,3 +310,94 @@ def test_no_env_knobs_outside_deployment_settings():
             assert len(keys) == len(reads) and set(keys) <= allowed, keys
         else:
             assert not reads, rel
+
+
+# The lake's one GC deletion and its one reachability walk
+# (sources/snapshots.py): every verb that reclaims data files or DV
+# sidecars goes through them, so no verb can keep its own rule of
+# what is still referenced.
+GC_SWEEP = "sources/snapshots.py::_sweep"
+GC_WALK = "sources/snapshots.py::_roots"
+# functions that delete a lake file of their own outside the sweep, and why
+OWN_CLEANUP = {
+    "sources/snapshots.py::_publish_marks": "reclaims the sidecar its "
+    "own lost manifest CAS wrote under a fresh uuid name: no manifest "
+    "references it, so there is nothing to walk",
+}
+LAKE_DIRS = {"_data_dir", "_dv_dir"}
+DELETES = {"remove", "unlink", "rmtree", "remove_tree", "rmdir"}
+GC_ROOT_DIRS = {"_branches", "_clones"}
+LISTS = {"listdir", "walk", "scandir", "glob", "iglob", "iterdir"}
+
+
+def _derived_calls(fn, seed, verbs) -> list[int]:
+    """Lines in `fn` calling one of `verbs` on an argument derived from
+    `seed`: a call of a function it names, a string constant in it,
+    or a local name assigned or looped over from such an expression."""
+    import ast
+
+    def name(f):
+        return getattr(f, "attr", getattr(f, "id", None))
+
+    tainted: set[str] = set()
+
+    def derives(node):
+        return any(
+            (isinstance(n, ast.Name) and n.id in tainted)
+            or (isinstance(n, ast.Constant) and n.value in seed)
+            or (isinstance(n, ast.Call) and name(n.func) in seed)
+            for n in ast.walk(node)
+        )
+
+    flows = []
+    for n in ast.walk(fn):
+        if isinstance(n, ast.Assign):
+            flows += [(t, n.value) for t in n.targets]
+        elif isinstance(n, (ast.AugAssign, ast.AnnAssign, ast.NamedExpr)):
+            if n.value is not None:
+                flows.append((n.target, n.value))
+        elif isinstance(n, (ast.For, ast.comprehension)):
+            flows.append((n.target, n.iter))
+    grew = True
+    while grew:
+        grew = False
+        for target, value in flows:
+            new = {
+                t.id for t in ast.walk(target) if isinstance(t, ast.Name)
+            } - tainted
+            if new and derives(value):
+                tainted |= new
+                grew = True
+    return [
+        n.lineno for n in ast.walk(fn)
+        if isinstance(n, ast.Call) and name(n.func) in verbs
+        and any(derives(a) for a in (*n.args, *(k.value for k in n.keywords)))
+    ]
+
+
+def test_one_gc_sweep_and_one_reachability_walk():
+    """In tcrd_spark/sources/ only the sweep deletes a data file or a
+    DV sidecar (apart from OWN_CLEANUP, whose entries still exist), and
+    only the walk lists `_branches` or `_clones`."""
+    import ast
+
+    found: dict[str, set[str]] = {"deletes": set(), "lists": set()}
+    for rel, text in _sources():
+        if not rel.startswith("sources" + os.sep):
+            continue
+        funcs = [
+            n for n in ast.walk(ast.parse(text))
+            if isinstance(n, ast.FunctionDef)
+        ]
+        for fn in funcs:
+            for kind, seed, verbs in (("deletes", LAKE_DIRS, DELETES),
+                                      ("lists", GC_ROOT_DIRS, LISTS)):
+                for i in _derived_calls(fn, seed, verbs):
+                    # the innermost function holding the line
+                    owner = min(
+                        (n for n in funcs if n.lineno <= i <= n.end_lineno),
+                        key=lambda n: n.end_lineno - n.lineno,
+                    )
+                    found[kind].add(f"{rel}::{owner.name}")
+    assert found["deletes"] == {GC_SWEEP, *OWN_CLEANUP}, found["deletes"]
+    assert found["lists"] == {GC_WALK}, found["lists"]
