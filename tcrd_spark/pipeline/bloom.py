@@ -168,7 +168,12 @@ def probe_bloom(
         f" + 1), cast(h % {BITS_PER_WORD} as int)) % 2), 1) = 1)"
         for i in range(1, K + 1)
     )
-    hit_count = f"cast(size(filter(hs, g -> {probes})) as bigint)"
+    # a NULL-text doc has no shingles and a NULL-id doc joins back to
+    # no id: both count 0 hits, as on the join path and in the oracle
+    hit_count = (
+        f"coalesce(CASE WHEN `{id_col}` IS NOT NULL THEN "
+        f"cast(size(filter(hs, g -> {probes})) as bigint) END, 0L)"
+    )
     # two projections: bloom_hits is referenced twice below, and
     # CollapseProject keeps non-cheap expressions single-evaluated
     return (

@@ -77,7 +77,8 @@ from tcrd_spark.pipeline.dsir import (
     dsir_log_weights,
     gumbel_key,
 )
-from tcrd_spark.pipeline.semdedup import _EMB_DIM, semantic_dedup_reps
+from tcrd_spark.pipeline.dedup import EMB_DIM
+from tcrd_spark.pipeline.semdedup import semantic_dedup_reps
 from tcrd_spark.pipeline.substring import excise_duplicate_spans
 from tcrd_spark.sources.lake import load_table, split_for_scan
 
@@ -209,7 +210,7 @@ def corpus_pipeline_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("cell_id"), F.col("embedding").alias("cell_vec")
     )
     sem_reps = semantic_dedup_reps(
-        corpus_vec, cents, _EMB_DIM, threshold=SEM_T, _assigned=assigned,
+        corpus_vec, cents, EMB_DIM, threshold=SEM_T, _assigned=assigned,
         # adaptive pair blocks sized from the FULL corpus count (a
         # memoized upper bound on the gated survivor count — block
         # memory only shrinks when n overestimates): the survivors
@@ -301,7 +302,7 @@ def _oracle() -> str:
         _STATS_CTES,
         _STATS_SELECT,
     )
-    from tcrd_spark.pipeline.semdedup import _sql_dot
+    from tcrd_spark.pipeline.dedup import oracle_dot
     from tcrd_spark.pipeline.substring import ORACLE as SUB_ORACLE
     from tcrd_spark.pipeline.testdata_queries import _JACCARD_PAIRS
 
@@ -377,21 +378,21 @@ def _oracle() -> str:
     ),
     se AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
     sc AS MATERIALIZED (
-      SELECT se.vec_id AS c_id, se.v, sqrt({_sql_dot("se.v", "se.v")}) AS nrm
+      SELECT se.vec_id AS c_id, se.v, sqrt({oracle_dot("se.v", "se.v")}) AS nrm
       FROM se JOIN dsurv ON se.vec_id = dsurv.doc_id
     ),
     scent AS (
-      SELECT vec_id AS cell_id, v, sqrt({_sql_dot("v", "v")}) AS nrm
+      SELECT vec_id AS cell_id, v, sqrt({oracle_dot("v", "v")}) AS nrm
       FROM se WHERE vec_id < 8
     ),
     san AS MATERIALIZED (
       SELECT c_id, cell_id, v, nrm, cdist FROM (
         SELECT sc.c_id, scent.cell_id, sc.v, sc.nrm,
-               round(1.0 - {_sql_dot("sc.v", "scent.v")}
+               round(1.0 - {oracle_dot("sc.v", "scent.v")}
                      / (sc.nrm * scent.nrm), 6) AS cdist,
                row_number() OVER (
                  PARTITION BY sc.c_id
-                 ORDER BY round({_sql_dot("sc.v", "scent.v")}
+                 ORDER BY round({oracle_dot("sc.v", "scent.v")}
                                 / (sc.nrm * scent.nrm), 6) DESC,
                           scent.cell_id ASC) AS rn
         FROM sc CROSS JOIN scent
@@ -401,7 +402,7 @@ def _oracle() -> str:
       SELECT a.c_id AS id_a, b.c_id AS id_b
       FROM san a JOIN san b
         ON a.cell_id = b.cell_id AND a.c_id < b.c_id
-      WHERE round({_sql_dot("a.v", "b.v")} / (a.nrm * b.nrm), 6) >= {SEM_T}
+      WHERE round({oracle_dot("a.v", "b.v")} / (a.nrm * b.nrm), 6) >= {SEM_T}
     ),
     sedges AS (
       SELECT id_a AS u, id_b AS v FROM spairs

@@ -366,6 +366,20 @@ def simhash_pairs(
 
 # --- Embedding near-dup ------------------------------------------------------
 
+# the synthetic embeddings table's vector width (TESTDATA.md)
+EMB_DIM = 64
+
+
+def oracle_dot(av: str, bv: str) -> str:
+    """The DuckDB oracles' unrolled dot product of two EMB_DIM-wide
+    lists: ``(a[1] * b[1] + ...)``, left-associative like `dot_sql`,
+    so both engines add in the same float order."""
+    return (
+        "("
+        + " + ".join(f"{av}[{i + 1}] * {bv}[{i + 1}]" for i in range(EMB_DIM))
+        + ")"
+    )
+
 
 def dot_sql(a: str, b: str, dim: int) -> str:
     """The unrolled dot product as ONE Spark-SQL fragment. `a`/`b` are

@@ -82,7 +82,7 @@ def q_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     against query vector 0 (vec_id aligns with doc_id in the lake)."""
     from tcrd_spark.pipeline.bm25 import bm25_scores
     from tcrd_spark.pipeline.similarity import brute_force_topk
-    from tcrd_spark.pipeline.testdata_queries import EMB_DIM
+    from tcrd_spark.pipeline.dedup import EMB_DIM
     from tcrd_spark.sources.lake import load_table
 
     docs = load_table(spark, sf_dir, "documents")

@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-EMB_DIM = 64
+from tcrd_spark.pipeline.dedup import EMB_DIM
 
 
 def covariance_pairs(

@@ -46,7 +46,7 @@ def _cand_frames(spark: SparkSession, sf_dir: str):
 
 
 def _build_cand_frames(spark: SparkSession, sf_dir: str):
-    from tcrd_spark.pipeline.testdata_queries import EMB_DIM
+    from tcrd_spark.pipeline.dedup import EMB_DIM
     from tcrd_spark.sources.lake import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")

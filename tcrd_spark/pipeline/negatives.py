@@ -165,19 +165,19 @@ QUERIES = {
 
 
 def _oracle() -> str:
-    from tcrd_spark.pipeline.semdedup import _sql_dot
+    from tcrd_spark.pipeline.dedup import oracle_dot
 
     return f"""
         WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v
                    FROM embeddings),
         c AS (SELECT vec_id AS c_id, v,
-                     sqrt({_sql_dot("v", "v")}) AS nrm FROM e),
+                     sqrt({oracle_dot("v", "v")}) AS nrm FROM e),
         q AS (SELECT vec_id AS q_id, v,
-                     sqrt({_sql_dot("v", "v")}) AS nrm
+                     sqrt({oracle_dot("v", "v")}) AS nrm
               FROM e WHERE vec_id < 5),
         scored AS (
           SELECT q.q_id, c.c_id,
-                 round({_sql_dot("q.v", "c.v")} / (q.nrm * c.nrm), 6)
+                 round({oracle_dot("q.v", "c.v")} / (q.nrm * c.nrm), 6)
                    AS score
           FROM c CROSS JOIN q
         )
@@ -196,17 +196,17 @@ def _oracle_shortlist() -> str:
     probed cells, exact cosine within probed lists, shortlist-50) and
     then the same negative filter + re-rank — identical arithmetic to
     the Spark path, so the adjudication is an exact hash match."""
-    from tcrd_spark.pipeline.semdedup import _sql_dot
+    from tcrd_spark.pipeline.dedup import oracle_dot
 
     def score(a: str, b: str) -> str:
         return (
-            f"round({_sql_dot(f'{a}.v', f'{b}.v')} / ({a}.nrm * {b}.nrm), 6)"
+            f"round({oracle_dot(f'{a}.v', f'{b}.v')} / ({a}.nrm * {b}.nrm), 6)"
         )
 
     return f"""
         WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v
                    FROM embeddings),
-        n AS (SELECT vec_id, v, sqrt({_sql_dot("v", "v")}) AS nrm FROM e),
+        n AS (SELECT vec_id, v, sqrt({oracle_dot("v", "v")}) AS nrm FROM e),
         q AS (SELECT vec_id AS q_id, v, nrm FROM n WHERE vec_id < 5),
         c AS (SELECT vec_id AS c_id, v, nrm FROM n),
         cent AS (SELECT vec_id AS cell_id, v, nrm FROM n WHERE vec_id < 8),

@@ -42,13 +42,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from tcrd_spark.pipeline.dedup import dot, dot_sql
+from tcrd_spark.pipeline.dedup import EMB_DIM, dot, dot_sql, oracle_dot
 from tcrd_spark.session import memo
 
 # m subspaces over the 64-dim synthetic embeddings (TESTDATA.md)
-_EMB_DIM = 64
 _M = 8
-_SUBDIM = _EMB_DIM // _M
+_SUBDIM = EMB_DIM // _M
 # deterministic codebook contract for the adjudicated queries:
 # codebook_j = j-th sub-vectors of vec_id < _KSUB (ann_ivf's first-k
 # convention). The trained path defaults to ksub=256 (1-byte codes).
@@ -406,12 +405,12 @@ def q_ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     first-16-by-id codebooks (the oracle contract), full-corpus scan
     of the 8-byte codes."""
     _, corpus, qs = _panel(spark, sf_dir)
-    cb_row = deterministic_codebooks(corpus, _EMB_DIM, _M, _KSUB)
+    cb_row = deterministic_codebooks(corpus, EMB_DIM, _M, _KSUB)
     coded = memo(
         spark, "pq", sf_dir,
-        lambda: pq_encode(corpus, cb_row, _EMB_DIM, _M).cache(),
+        lambda: pq_encode(corpus, cb_row, EMB_DIM, _M).cache(),
     )
-    return pq_topk(qs, coded, cb_row, _EMB_DIM, _M, k=10)
+    return pq_topk(qs, coded, cb_row, EMB_DIM, _M, k=10)
 
 
 def q_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -424,19 +423,19 @@ def q_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("cell_id"),
         F.col("embedding").alias("cell_vec"),
     )
-    cb_row = deterministic_codebooks(corpus, _EMB_DIM, _M, _KSUB)
+    cb_row = deterministic_codebooks(corpus, EMB_DIM, _M, _KSUB)
 
     def _build() -> DataFrame:
-        assigned = assign_cells(corpus, cents, _EMB_DIM).select(
+        assigned = assign_cells(corpus, cents, EMB_DIM).select(
             "c_id", "c_vec", "cell_id"
         )
         return pq_encode(
-            assigned, cb_row, _EMB_DIM, _M, extra_cols=("cell_id",)
+            assigned, cb_row, EMB_DIM, _M, extra_cols=("cell_id",)
         ).cache()
 
     coded = memo(spark, "ivfpq", sf_dir, _build)
     return ivf_pq_topk(
-        qs, coded, cb_row, cents, _EMB_DIM, _M, k=10, n_probe=2
+        qs, coded, cb_row, cents, EMB_DIM, _M, k=10, n_probe=2
     )
 
 
@@ -444,13 +443,13 @@ def q_ann_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ADC shortlist-50 + exact re-rank top-10 — the deployment
     composition (the exact pass touches 50 rows/query)."""
     _, corpus, qs = _panel(spark, sf_dir)
-    cb_row = deterministic_codebooks(corpus, _EMB_DIM, _M, _KSUB)
+    cb_row = deterministic_codebooks(corpus, EMB_DIM, _M, _KSUB)
     coded = memo(
         spark, "pq", sf_dir,
-        lambda: pq_encode(corpus, cb_row, _EMB_DIM, _M).cache(),
+        lambda: pq_encode(corpus, cb_row, EMB_DIM, _M).cache(),
     )
     return pq_rerank_topk(
-        qs, coded, cb_row, corpus, _EMB_DIM, _M, k=10, shortlist=50
+        qs, coded, cb_row, corpus, EMB_DIM, _M, k=10, shortlist=50
     )
 
 
@@ -462,14 +461,6 @@ QUERIES = {
 
 
 # ------------------------------------------------------ DuckDB oracle
-
-
-def _sql_dot64(av: str, bv: str) -> str:
-    return (
-        "("
-        + " + ".join(f"{av}[{i + 1}] * {bv}[{i + 1}]" for i in range(_EMB_DIM))
-        + ")"
-    )
 
 
 def _sql_subdot(qv: str, j: str, cv: str) -> str:
@@ -535,7 +526,7 @@ cnrm AS (
   FROM codes GROUP BY c_id
 ),
 qn AS (
-  SELECT vec_id AS q_id, v, sqrt({_sql_dot64("v", "v")}) AS nrm
+  SELECT vec_id AS q_id, v, sqrt({oracle_dot("v", "v")}) AS nrm
   FROM e WHERE vec_id < 5
 )
 """
@@ -584,12 +575,12 @@ ORACLE = {
           ) WHERE rn <= 50
         ),
         cfull AS (
-          SELECT vec_id AS c_id, v, sqrt({_sql_dot64("v", "v")}) AS nrm
+          SELECT vec_id AS c_id, v, sqrt({oracle_dot("v", "v")}) AS nrm
           FROM e
         ),
         rr AS (
           SELECT sl.q_id, sl.c_id,
-                 round({_sql_dot64("q.v", "c.v")} / (q.nrm * c.nrm), 6)
+                 round({oracle_dot("q.v", "c.v")} / (q.nrm * c.nrm), 6)
                    AS score
           FROM sl
           JOIN qn q USING (q_id)
@@ -606,7 +597,7 @@ ORACLE = {
     "ann_ivfpq": f"""
         WITH {_PQ_CTES},
         cent AS (
-          SELECT vec_id AS cell_id, v, sqrt({_sql_dot64("v", "v")}) AS nrm
+          SELECT vec_id AS cell_id, v, sqrt({oracle_dot("v", "v")}) AS nrm
           FROM e WHERE vec_id < 8
         ),
         assigned AS (
@@ -614,8 +605,8 @@ ORACLE = {
             SELECT c.vec_id AS c_id, cent.cell_id,
                    row_number() OVER (
                      PARTITION BY c.vec_id
-                     ORDER BY round({_sql_dot64("c.v", "cent.v")}
-                         / (sqrt({_sql_dot64("c.v", "c.v")}) * cent.nrm),
+                     ORDER BY round({oracle_dot("c.v", "cent.v")}
+                         / (sqrt({oracle_dot("c.v", "c.v")}) * cent.nrm),
                          6) DESC,
                               cent.cell_id ASC) AS rn
             FROM e c CROSS JOIN cent
@@ -626,7 +617,7 @@ ORACLE = {
             SELECT q.q_id, cent.cell_id,
                    row_number() OVER (
                      PARTITION BY q.q_id
-                     ORDER BY round({_sql_dot64("q.v", "cent.v")}
+                     ORDER BY round({oracle_dot("q.v", "cent.v")}
                                     / (q.nrm * cent.nrm), 6) DESC,
                               cent.cell_id ASC) AS rn
             FROM qn q CROSS JOIN cent

@@ -29,10 +29,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from tcrd_spark.pipeline.dedup import dot, embedding_near_dups_blocked
+from tcrd_spark.pipeline.dedup import (
+    EMB_DIM,
+    dot,
+    embedding_near_dups_blocked,
+    oracle_dot,
+)
 from tcrd_spark.session import memo
-
-_EMB_DIM = 64
 
 def semantic_pairs(
     corpus: DataFrame, centroids: DataFrame, dim: int,
@@ -224,7 +227,7 @@ def _assigned_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     # plan start from an opaque scan of the cached rows
     def build():
         corpus, cents = _panel(spark, sf_dir)
-        return assign_cells(corpus, cents, _EMB_DIM)
+        return assign_cells(corpus, cents, EMB_DIM)
 
     return cut(build, "semassign", sf_dir)
 
@@ -243,7 +246,7 @@ def q_semantic_dedup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (first-8 centroid contract), via the blocked BLAS scorer."""
     corpus, cents = _panel(spark, sf_dir)
     return semantic_pairs_blocked(
-        corpus, cents, _EMB_DIM, threshold=0.4,
+        corpus, cents, EMB_DIM, threshold=0.4,
         _assigned=_assigned_cached(spark, sf_dir),
         n_rows=_assigned_count_cached(spark, sf_dir),
     )
@@ -253,7 +256,7 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full SemDeDup: groups + farthest-from-centroid representatives."""
     corpus, cents = _panel(spark, sf_dir)
     return semantic_dedup(
-        corpus, cents, _EMB_DIM, threshold=0.4,
+        corpus, cents, EMB_DIM, threshold=0.4,
         _assigned=_assigned_cached(spark, sf_dir),
         n_rows=_assigned_count_cached(spark, sf_dir),
     )
@@ -268,29 +271,21 @@ QUERIES = {
 # ------------------------------------------------------ DuckDB oracle
 
 
-def _sql_dot(av: str, bv: str) -> str:
-    return (
-        "("
-        + " + ".join(f"{av}[{i + 1}] * {bv}[{i + 1}]" for i in range(_EMB_DIM))
-        + ")"
-    )
-
-
 _ASSIGN_CTES = f"""
 e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-c AS (SELECT vec_id AS c_id, v, sqrt({_sql_dot("v", "v")}) AS nrm FROM e),
+c AS (SELECT vec_id AS c_id, v, sqrt({oracle_dot("v", "v")}) AS nrm FROM e),
 cent AS (
-  SELECT vec_id AS cell_id, v, sqrt({_sql_dot("v", "v")}) AS nrm
+  SELECT vec_id AS cell_id, v, sqrt({oracle_dot("v", "v")}) AS nrm
   FROM e WHERE vec_id < 8
 ),
 an AS MATERIALIZED (
   SELECT c_id, cell_id, v, nrm, cdist FROM (
     SELECT c.c_id, cent.cell_id, c.v, c.nrm,
-           round(1.0 - {_sql_dot("c.v", "cent.v")} / (c.nrm * cent.nrm), 6)
+           round(1.0 - {oracle_dot("c.v", "cent.v")} / (c.nrm * cent.nrm), 6)
              AS cdist,
            row_number() OVER (
              PARTITION BY c.c_id
-             ORDER BY round({_sql_dot("c.v", "cent.v")}
+             ORDER BY round({oracle_dot("c.v", "cent.v")}
                             / (c.nrm * cent.nrm), 6) DESC,
                       cent.cell_id ASC) AS rn
     FROM c CROSS JOIN cent
@@ -298,7 +293,7 @@ an AS MATERIALIZED (
 ),
 p AS (
   SELECT a.cell_id, a.c_id AS id_a, b.c_id AS id_b,
-         round({_sql_dot("a.v", "b.v")} / (a.nrm * b.nrm), 6) AS score
+         round({oracle_dot("a.v", "b.v")} / (a.nrm * b.nrm), 6) AS score
   FROM an a JOIN an b ON a.cell_id = b.cell_id AND a.c_id < b.c_id
 ),
 pairs AS MATERIALIZED (SELECT * FROM p WHERE score >= 0.4)

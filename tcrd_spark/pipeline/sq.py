@@ -32,12 +32,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from tcrd_spark.pipeline.dedup import EMB_DIM, oracle_dot
 from tcrd_spark.session import memo
 
 # codes per dimension: 8-bit
 _LEVELS = 256
-# the synthetic embeddings table is 64-dim (TESTDATA.md)
-_EMB_DIM = 64
 
 
 def quantize_stats(corpus: DataFrame, vec_col: str, dim: int) -> DataFrame:
@@ -195,9 +194,9 @@ def q_ann_sq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     deq = memo(
         spark, "sq", sf_dir,
-        lambda: sq_dequant_frame(corpus, _EMB_DIM).cache(),
+        lambda: sq_dequant_frame(corpus, EMB_DIM).cache(),
     )
-    return brute_force_topk(qs, deq, _EMB_DIM, k=10)
+    return brute_force_topk(qs, deq, EMB_DIM, k=10)
 
 
 def q_ann_ivfsq(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -227,10 +226,10 @@ def q_ann_ivfsq(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("cell_id"),
         F.col("embedding").alias("cell_vec"),
     )
-    assigned = assign_cells(corpus, cents, _EMB_DIM).select(
+    assigned = assign_cells(corpus, cents, EMB_DIM).select(
         "c_id", "c_vec", "cell_id"
     )
-    stats = quantize_stats(corpus, "c_vec", _EMB_DIM)
+    stats = quantize_stats(corpus, "c_vec", EMB_DIM)
 
     # the SQ-coded inverted lists — the memoized cache() stands in for
     # the persisted cell-partitioned code table (see q_ann_sq_topk)
@@ -252,13 +251,13 @@ def q_ann_ivfsq(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     lists = memo(spark, "ivfsq", sf_dir, _build_lists)
-    probes = _probe_cells(qs, cents, _EMB_DIM, n_probe=2)
+    probes = _probe_cells(qs, cents, EMB_DIM, n_probe=2)
     w = Window.partitionBy("q_id").orderBy(F.desc("score"), F.asc("c_id"))
     return (
         lists.join(F.broadcast(probes), "cell_id")
         .select(
             "q_id", "c_id",
-            _pair_score("q_vec", "c_vec", _EMB_DIM).alias("score"),
+            _pair_score("q_vec", "c_vec", EMB_DIM).alias("score"),
         )
         .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= 10)
@@ -269,19 +268,11 @@ def q_ann_ivfsq(spark: SparkSession, sf_dir: str) -> DataFrame:
 QUERIES = {"ann_sq_topk": q_ann_sq_topk, "ann_ivfsq": q_ann_ivfsq}
 
 
-def _sql_dot(av: str, bv: str) -> str:
-    return (
-        "("
-        + " + ".join(f"{av}[{i + 1}] * {bv}[{i + 1}]" for i in range(_EMB_DIM))
-        + ")"
-    )
-
-
 _DEQ = f"""
 e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
 dims AS (
   SELECT i, min(v[i]) AS mn, max(v[i]) AS mx
-  FROM e CROSS JOIN range(1, {_EMB_DIM} + 1) r(i)
+  FROM e CROSS JOIN range(1, {EMB_DIM} + 1) r(i)
   GROUP BY i
 ),
 stats AS (
@@ -291,7 +282,7 @@ stats AS (
 ),
 enc AS (
   SELECT vec_id,
-         list_transform(range(1, {_EMB_DIM} + 1), i ->
+         list_transform(range(1, {EMB_DIM} + 1), i ->
            CASE WHEN spans[i] = 0 THEN 0
                 ELSE least({_LEVELS - 1},
                            CAST(floor((v[i] - mins[i]) / spans[i]
@@ -301,22 +292,22 @@ enc AS (
 ),
 deq AS (
   SELECT vec_id,
-         list_transform(range(1, {_EMB_DIM} + 1), i ->
+         list_transform(range(1, {EMB_DIM} + 1), i ->
            mins[i] + (codes[i] + 0.5) / {_LEVELS} * spans[i]) AS dv
   FROM enc CROSS JOIN stats
 ),
 dn AS (
-  SELECT vec_id, dv, sqrt({_sql_dot("dv", "dv")}) AS nrm FROM deq
+  SELECT vec_id, dv, sqrt({oracle_dot("dv", "dv")}) AS nrm FROM deq
 ),
 qn AS (
-  SELECT vec_id AS q_id, v, sqrt({_sql_dot("v", "v")}) AS nrm
+  SELECT vec_id AS q_id, v, sqrt({oracle_dot("v", "v")}) AS nrm
   FROM e WHERE vec_id < 5
 )
 """
 
 def _sql_score(a: str, av: str, b: str, bv: str) -> str:
     return (
-        f"round({_sql_dot(f'{a}.{av}', f'{b}.{bv}')} "
+        f"round({oracle_dot(f'{a}.{av}', f'{b}.{bv}')} "
         f"/ ({a}.nrm * {b}.nrm), 6)"
     )
 
@@ -324,10 +315,10 @@ def _sql_score(a: str, av: str, b: str, bv: str) -> str:
 ORACLE = {
     "ann_ivfsq": f"""
         WITH {_DEQ},
-        c AS (SELECT vec_id AS c_id, v, sqrt({_sql_dot("v", "v")}) AS nrm
+        c AS (SELECT vec_id AS c_id, v, sqrt({oracle_dot("v", "v")}) AS nrm
               FROM e),
         cent AS (SELECT vec_id AS cell_id, v,
-                        sqrt({_sql_dot("v", "v")}) AS nrm
+                        sqrt({oracle_dot("v", "v")}) AS nrm
                  FROM e WHERE vec_id < 8),
         assigned AS (
           SELECT c_id, cell_id FROM (
@@ -368,7 +359,7 @@ ORACLE = {
         WITH {_DEQ},
         scored AS (
           SELECT qn.q_id, dn.vec_id AS c_id,
-                 round({_sql_dot("qn.v", "dn.dv")} / (qn.nrm * dn.nrm), 6)
+                 round({oracle_dot("qn.v", "dn.dv")} / (qn.nrm * dn.nrm), 6)
                    AS score
           FROM dn CROSS JOIN qn
         ),

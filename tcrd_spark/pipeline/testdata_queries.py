@@ -17,10 +17,9 @@ from tcrd_spark.functions.hashing import (
     sql_hash60,
 )
 from tcrd_spark.pipeline import dedup, similarity, text
+from tcrd_spark.pipeline.dedup import EMB_DIM, oracle_dot
 from tcrd_spark.session import memo
 from tcrd_spark.sources.lake import load_table
-
-EMB_DIM = 64
 
 # ---------------------------------------------------------------- text
 
@@ -331,21 +330,17 @@ _SIMHASH_SIG = f"""
   FROM pb GROUP BY 1
 """
 
-# Unrolled left-assoc dot product — identical float op order to the
-# Spark side's dot() (SQL + is left-associative).
-def _sql_dot(av: str, bv: str) -> str:
-    return "(" + " + ".join(f"{av}[{i+1}] * {bv}[{i+1}]" for i in range(EMB_DIM)) + ")"
 
 
 # per-vector norm CTE body over embeddings: (vec_id, v, nrm)
 _EMB_NORMED = (
-    "SELECT vec_id, v, sqrt(" + _sql_dot("v", "v") + ") AS nrm "
+    "SELECT vec_id, v, sqrt(" + oracle_dot("v", "v") + ") AS nrm "
     "FROM (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings)"
 )
 
 
 def _sql_pair_score(a: str, b: str) -> str:
-    return f"round({_sql_dot(f'{a}.v', f'{b}.v')} / ({a}.nrm * {b}.nrm), 6)"
+    return f"round({oracle_dot(f'{a}.v', f'{b}.v')} / ({a}.nrm * {b}.nrm), 6)"
 
 
 _LANG_SCORE = {
@@ -571,7 +566,7 @@ ORACLE["kmeans_assign"] = f"""
     ),
     m AS (SELECT cell_id, {_MEAN_VEC} AS v FROM a0 GROUP BY cell_id),
     cent1 AS (
-      SELECT cell_id, v, sqrt({_sql_dot('v', 'v')}) AS nrm FROM m
+      SELECT cell_id, v, sqrt({oracle_dot('v', 'v')}) AS nrm FROM m
     )
     SELECT c_id, cell_id FROM (
       SELECT c.c_id, cent1.cell_id,

@@ -785,21 +785,26 @@ def streaming_snapshot_append(
     quarantine_dir: str | None = None,
 ):
     """Structured-Streaming sink into a versioned table: every
-    micro-batch is one append COMMIT whose txn_id is the checkpointed
-    batch_id, so at-least-once foreachBatch becomes exactly-once at
-    the manifest layer (a replayed batch finds its txn_id committed
-    and no-ops) — and every micro-batch boundary is a time-travelable
-    snapshot for free.
+    micro-batch is one append COMMIT under `streaming/sink.py`'s one
+    exactly-once rule, txn = (checkpoint, batch_id): its txn_id is
+    ``"<checkpoint's absolute path>:<batch_id>"``, so at-least-once
+    foreachBatch becomes exactly-once at the manifest layer (a
+    replayed batch finds its txn_id committed and no-ops), a second
+    stream or a fresh checkpoint into the same table commits under
+    ids of its own — and every micro-batch boundary is a
+    time-travelable snapshot for free.
 
     With `expectations` this becomes WRITE-AUDIT-PUBLISH: each
     micro-batch's one-pass quality verdicts run BEFORE the commit; a
     failing batch never publishes. If `quarantine_dir` is given, the
-    failing batch lands there under `batch_id=N/` (overwrite —
-    replay-idempotent) with its verdicts JSON beside it, and the
-    stream continues; without a quarantine the stream fails loudly.
-    Readers of the TABLE only ever see audited data."""
+    failing batch lands there by the same rule's directory write
+    (`batch_id=N/`, overwritten on replay) with its verdicts JSON
+    beside it, and the stream continues; without a quarantine the
+    stream fails loudly. A `quarantine_dir` belongs to one
+    checkpoint. Readers of the TABLE only ever see audited data."""
+    from tcrd_spark.streaming.sink import launch, write_batch
 
-    def _one(batch_df: DataFrame, batch_id: int) -> None:
+    def _one(batch_df: DataFrame, batch_id: int, txn: str) -> None:
         if expectations is not None:
             from tcrd_spark.quality.expectations import run_expectations
 
@@ -815,10 +820,7 @@ def streaming_snapshot_append(
                         f"micro-batch {batch_id} failed expectations "
                         f"({detail}) and no quarantine is configured"
                     )
-                qdir = os.path.join(
-                    quarantine_dir, f"batch_id={batch_id}"
-                )
-                batch_df.write.mode("overwrite").parquet(qdir)
+                write_batch(batch_df, quarantine_dir, batch_id)
                 with open(
                     os.path.join(
                         quarantine_dir, f"verdicts-{batch_id}.json"
@@ -829,14 +831,9 @@ def streaming_snapshot_append(
                         [r.asDict() for r in verdicts], f, indent=1
                     )
                 return
-        append_version(table_dir, batch_df, txn_id=batch_id)
+        append_version(table_dir, batch_df, txn_id=txn)
 
-    return (
-        stream.writeStream.foreachBatch(_one)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-        .start()
-    )
+    return launch(stream, checkpoint_dir, _one).start()
 
 
 def _txn_of(table_dir: str, v: int):

@@ -7,6 +7,11 @@ sources (same DataFrame surface); watermarks bound state so a
 stateful sessionizer uses applyInPandasWithState — Arrow-batched
 per-group state, the Spark-native replacement for the reference's
 shelve checkpoint/restart pattern (`loaders/load-PubMed.py:83`).
+
+The two ingest-dedup sinks write through `streaming/sink.py`, the one
+exactly-once rule: txn = (checkpoint, batch_id), each micro-batch
+overwrites its own ``batch_id=<id>`` directory with its batch twin's
+rows, and an ``out_path`` belongs to one checkpoint.
 """
 
 from __future__ import annotations
@@ -25,6 +30,8 @@ from pyspark.sql.types import (
     StructType,
     TimestampType,
 )
+
+from tcrd_spark.streaming.sink import to_directory
 
 EVENT_SCHEMA = StructType(
     [
@@ -261,25 +268,18 @@ def streaming_incremental_dedup(
     against the CORPUS only, by design: intra-stream duplicates are
     the job of streaming_exact_dedup upstream.
 
-    Exactly-once is earned, not assumed: foreachBatch alone is
-    at-least-once (a crash after the sink write but before the
-    checkpoint commit replays the micro-batch), so the sink write is
-    made IDEMPOTENT per batch — each batch overwrites its own
-    ``batch_id=<id>`` partition directory, and a replayed batch
-    rewrites identical content instead of appending duplicates.
+    Exactly-once is `streaming/sink.py`'s rule: foreachBatch alone is
+    at-least-once, so each batch overwrites its own ``batch_id=<id>``
+    directory with `incremental_near_dups` of the batch, and a replayed
+    batch rewrites identical rows instead of appending duplicates.
     """
+    from tcrd_spark.pipeline.corpus import incremental_near_dups
 
-    def _probe(batch_df: DataFrame, batch_id: int) -> None:
-        dedup_probe_batch(
-            batch_df, batch_id, corpus, out_path,
-            id_col=id_col, text_col=text_col, n=n, threshold=threshold,
-        )
-
-    return (
-        doc_stream.writeStream.foreachBatch(_probe)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-        .start()
+    return to_directory(
+        doc_stream, checkpoint_dir, out_path,
+        lambda batch_df: incremental_near_dups(
+            batch_df, corpus, id_col, text_col, n=n, threshold=threshold,
+        ),
     )
 
 
@@ -298,28 +298,16 @@ def streaming_substring_dedup(
     appends (doc, span) rows for every batch span duplicating corpus
     content — the streaming twin of `substring_dedup_incremental`,
     with the same idempotent batch_id-partitioned sink as
-    `streaming_incremental_dedup` (foreachBatch is at-least-once; a
-    replayed batch overwrites its own partition)."""
-    import os
-
+    `streaming_incremental_dedup` (`streaming/sink.py`)."""
     from tcrd_spark.pipeline.substring import (
         incremental_duplicate_spans_indexed,
     )
 
-    def _probe(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            incremental_duplicate_spans_indexed(
-                batch_df, gram_index_prefix, id_col, text_col, k=k
-            )
-            .write.mode("overwrite")
-            .parquet(os.path.join(out_path, f"batch_id={batch_id}"))
-        )
-
-    return (
-        doc_stream.writeStream.foreachBatch(_probe)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-        .start()
+    return to_directory(
+        doc_stream, checkpoint_dir, out_path,
+        lambda batch_df: incremental_duplicate_spans_indexed(
+            batch_df, gram_index_prefix, id_col, text_col, k=k
+        ),
     )
 
 
@@ -367,36 +355,3 @@ def stream_stream_time_join(
     )
     return lw.join(rw, cond, "inner").select(*out_cols)
 
-
-def dedup_probe_batch(
-    batch_df: DataFrame,
-    batch_id: int,
-    corpus: DataFrame,
-    out_path: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    threshold: float = 0.3,
-) -> None:
-    """One micro-batch of the ingest-dedup sink: probe the corpus and
-    overwrite this batch's own partition of the verdict sink.
-
-    Idempotent by construction — the write target is derived from the
-    checkpointed ``batch_id``, so replaying a batch (at-least-once
-    foreachBatch after a mid-commit crash) overwrites the same
-    directory with the same rows. Readers see the sink as one
-    partitioned parquet tree (``batch_id`` is a partition column).
-    The probe's shingle caches rotate one store slot per side, so
-    long-running streams hold one batch's worth of executor storage.
-    """
-    import os
-
-    from tcrd_spark.pipeline.corpus import incremental_near_dups
-
-    (
-        incremental_near_dups(
-            batch_df, corpus, id_col, text_col, n=n, threshold=threshold,
-        )
-        .write.mode("overwrite")
-        .parquet(os.path.join(out_path, f"batch_id={batch_id}"))
-    )

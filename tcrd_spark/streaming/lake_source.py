@@ -2,10 +2,14 @@
 PySpark (4.x) Python DataSource whose offsets are COMMIT VERSIONS.
 
 `streaming/web_ingest.py` and `snapshots.streaming_snapshot_append`
-put streams INTO the lake; this is the other half (Delta's streaming
-source): a downstream job tails a versioned table and receives each
-append commit's files as one micro-batch, exactly once, resuming from
-the checkpointed version offset after a restart.
+put streams INTO the lake under `streaming/sink.py`'s one exactly-once
+rule (txn = (checkpoint, batch_id); an out_path belongs to one
+checkpoint); this is the other half (Delta's streaming source): a
+downstream job tails a versioned table and receives each append
+commit's files as one micro-batch, exactly once, resuming from the
+checkpointed version offset after a restart. Its offsets are
+versions, not txn ids, so a table fed by several streams tails as
+one commit sequence.
 
 Semantics (mirrors Delta's defaults):
 

@@ -14,14 +14,15 @@ Composition, nothing new invented (the engine's whole design bet):
   keys' re-versioned rows only, cost ∝ batch;
 - persistence is `snapshots.merge_version` on (key, version) — COW,
   untouched files carry forward by reference;
-- exactly-once is the Delta txnAppId/txnVersion pattern in full: the
-  committed txn id is ``"<app_id>:<epoch>"`` — the app identity scopes
-  the epoch counter, so a rebuilt checkpoint (epochs restart at 0
-  under a NEW app_id) or a DIFFERENT sink writing the same table can
-  never collide with this stream's ids and silently no-op real
-  batches. A replayed batch re-offers the same scoped id and the
-  MERGE skips (`tests/test_scd_stream.py` pins replay == batch
-  rebuild with a restart in the middle).
+- exactly-once is `streaming/sink.py`'s one rule, the Delta
+  txnAppId/txnVersion pattern: txn = (checkpoint, batch_id), committed
+  as ``"<app>:<epoch>"`` where the app is the checkpoint's absolute
+  path. The app scopes the epoch counter, so a rebuilt checkpoint
+  (epochs restart at 0 under a NEW app) or a DIFFERENT stream writing
+  the same table can never collide with this stream's ids and
+  silently no-op real batches. A replayed batch re-offers the same
+  scoped id and the MERGE skips (`tests/test_scd_stream.py` pins
+  replay == batch rebuild with a restart in the middle).
 
 100 TB shape: per trigger, work ∝ batch (semi-join pulls only the
 touched keys' CURRENT rows; the windowed replay partitions by key
@@ -39,6 +40,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from tcrd_spark.streaming.sink import launch
 
 
 def with_history_bucket(
@@ -152,22 +155,18 @@ def scd2_stream_writer(
     checkpoint + txn-idempotent MERGE = exactly-once history.
 
     ``app_id`` scopes the txn ids (Delta's txnAppId): it defaults to
-    the CHECKPOINT path, which shares the epoch counter's lifetime
-    exactly — delete/relocate the checkpoint and the new stream is a
-    new app whose epoch-0 cannot collide with the old app's commits.
-    Pass it explicitly to survive a checkpoint MOVE that should keep
-    its history."""
-    app = app_id if app_id is not None else checkpoint
-
-    def fold(batch: DataFrame, epoch: int) -> None:
-        scd2_apply_to_lake(
+    the CHECKPOINT's absolute path, which shares the epoch counter's
+    lifetime exactly — delete/relocate the checkpoint and the new
+    stream is a new app whose epoch-0 cannot collide with the old
+    app's commits. Pass it explicitly to survive a checkpoint MOVE
+    that should keep its history."""
+    return launch(
+        stream, checkpoint,
+        lambda batch, _epoch, txn: scd2_apply_to_lake(
             batch.sparkSession, table_dir, batch,
             key_col, ts_col, attr_col,
-            txn_id=f"{app}:{epoch}", tiebreak_col=tiebreak_col,
+            txn_id=txn, tiebreak_col=tiebreak_col,
             bucket_col=bucket_col, n_buckets=n_buckets,
-        )
-
-    return (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint)
+        ),
+        app=app_id,
     )

@@ -9,11 +9,12 @@ micro-batch writes its OWN tiny sketch partition, and the "current"
 sketch is a fold over partitions at read time:
 
     batch side:  per-batch sketch (bounded: d·w cells / k hashes),
-                 written with mode=overwrite into batch_id=N — the
-                 idempotent per-batch-partition pattern
-                 `streaming/jobs.dedup_probe_batch` established
-                 (foreachBatch is at-least-once; a replayed batch
-                 overwrites ITS OWN partition, so reruns are no-ops)
+                 `cms_build` / `kmv_sketch` of the batch, written by
+                 `streaming/sink.py`'s one exactly-once rule:
+                 txn = (checkpoint, batch_id), and a batch overwrites
+                 its own batch_id=N directory, so a replay rewrites
+                 identical cells (an out_path belongs to one
+                 checkpoint)
     read side:   CMS:  groupBy(d, col).sum(cnt)   — cell-wise merge
                  KMV:  k smallest over the unioned batch sketches
                  (min-k(A ∪ B) == min-k(min-k(A) ∪ min-k(B)))
@@ -32,72 +33,29 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from tcrd_spark.pipeline.sketches import (
-    CMS_DEPTH,
-    CMS_SEED,
-    CMS_WIDTH,
-    KMV_K,
-    cms_build,
-    kmv_sketch,
-)
-
-
-def cms_batch_writer(grid_dir: str, item_col: str):
-    """foreachBatch hook: build this batch's grid, overwrite its own
-    batch_id partition (idempotent under foreachBatch retries)."""
-
-    def _write(batch_df: DataFrame, batch_id: int) -> None:
-        grid = cms_build(
-            batch_df, F.col(item_col).cast("string"),
-            CMS_DEPTH, CMS_WIDTH, CMS_SEED,
-        ).withColumn("batch_id", F.lit(int(batch_id)))
-        (
-            grid.coalesce(1)
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(grid_dir)
-        )
-
-    return _write
-
-
-def kmv_batch_writer(sketch_dir: str, item_col: str):
-    """foreachBatch hook: this batch's k smallest distinct hashes →
-    its own batch_id partition."""
-
-    def _write(batch_df: DataFrame, batch_id: int) -> None:
-        sk = kmv_sketch(
-            batch_df, [], F.col(item_col).cast("string"), KMV_K
-        ).withColumn("batch_id", F.lit(int(batch_id)))
-        (
-            sk.coalesce(1)
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(sketch_dir)
-        )
-
-    return _write
+from tcrd_spark.pipeline.sketches import KMV_K, cms_build, kmv_sketch
+from tcrd_spark.streaming.sink import to_directory
 
 
 def streaming_cms(stream: DataFrame, grid_dir: str, item_col: str,
                   checkpoint_dir: str):
     """Maintain a CMS grid over an append stream (foreachBatch)."""
-    return (
-        stream.writeStream.foreachBatch(cms_batch_writer(grid_dir, item_col))
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    return to_directory(
+        stream, checkpoint_dir, grid_dir,
+        lambda batch_df: cms_build(
+            batch_df, F.col(item_col).cast("string")
+        ).coalesce(1),
     )
 
 
 def streaming_kmv(stream: DataFrame, sketch_dir: str, item_col: str,
                   checkpoint_dir: str):
     """Maintain a KMV sketch over an append stream (foreachBatch)."""
-    return (
-        stream.writeStream.foreachBatch(kmv_batch_writer(sketch_dir, item_col))
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    return to_directory(
+        stream, checkpoint_dir, sketch_dir,
+        lambda batch_df: kmv_sketch(
+            batch_df, [], F.col(item_col).cast("string"), KMV_K
+        ).coalesce(1),
     )
 
 

@@ -19,9 +19,11 @@ into the ingest path a deployment actually runs:
 foreachBatch for the same reason as streaming_incremental_dedup: the
 probe is a multi-step plan Structured Streaming cannot express as one
 continuous query, and the static side is the persisted corpus index.
-Exactly-once is earned the same way — the sink write is keyed by the
-checkpointed batch_id, so an at-least-once replay overwrites its own
-partition with identical rows (replay==batch and restart tests in
+Exactly-once is `streaming/sink.py`'s one rule: txn = (checkpoint,
+batch_id), and each micro-batch overwrites its own ``batch_id=<id>``
+directory with `batch_web_ingest` of the batch, so an at-least-once
+replay rewrites identical rows; an ``out_path`` belongs to one
+checkpoint (replay==batch and restart tests in
 tests/test_web_ingest.py).
 
 100 TB shape: extraction and gating are shuffle-free map work over
@@ -33,53 +35,14 @@ corpus²); the sink appends one partition per micro-batch and rides
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from tcrd_spark.streaming.sink import to_directory
 
 # one quality_score credit (e.g. "no punctuation", 0.25) must not be
 # enough on its own — junk three-word pages earn exactly 0.25
 MIN_QUALITY = 0.3
-
-
-def web_ingest_batch(
-    batch_df: DataFrame,
-    batch_id: int,
-    corpus: DataFrame,
-    out_path: str,
-    id_col: str = "doc_id",
-    page_col: str = "page",
-    min_quality: float = MIN_QUALITY,
-    n: int = 3,
-    threshold: float = 0.3,
-) -> None:
-    """One micro-batch: extract, gate, probe, land. Idempotent — the
-    write target derives from the checkpointed batch_id."""
-    from tcrd_spark.pipeline.corpus import incremental_near_dups
-    from tcrd_spark.pipeline.html import html_extract
-    from tcrd_spark.pipeline.text import quality_score
-
-    gated = (
-        batch_df.select(
-            id_col, html_extract(page_col).alias("text")
-        )
-        .filter(
-            (F.length("text") > 0)
-            & (quality_score(F.col("text")) >= min_quality)
-        )
-    )
-    verdicts = incremental_near_dups(
-        gated, corpus, id_col, "text", n=n, threshold=threshold,
-    )
-    (
-        gated.join(
-            verdicts.select(id_col, "exact_src", "near_src", "verdict"),
-            id_col,
-        )
-        .write.mode("overwrite")
-        .parquet(os.path.join(out_path, f"batch_id={batch_id}"))
-    )
 
 
 def streaming_web_ingest(
@@ -94,19 +57,12 @@ def streaming_web_ingest(
     threshold: float = 0.3,
 ):
     """Run the ingest pipeline over an unbounded page stream."""
-
-    def _one(batch_df: DataFrame, batch_id: int) -> None:
-        web_ingest_batch(
-            batch_df, batch_id, corpus, out_path,
-            id_col=id_col, page_col=page_col,
+    return to_directory(
+        page_stream, checkpoint_dir, out_path,
+        lambda batch_df: batch_web_ingest(
+            batch_df, corpus, id_col=id_col, page_col=page_col,
             min_quality=min_quality, n=n, threshold=threshold,
-        )
-
-    return (
-        page_stream.writeStream.foreachBatch(_one)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-        .start()
+        ),
     )
 
 
@@ -119,8 +75,9 @@ def batch_web_ingest(
     n: int = 3,
     threshold: float = 0.3,
 ) -> DataFrame:
-    """The one-shot twin the replay test pins the stream against:
-    identical extract → gate → probe plan over all pages at once."""
+    """Extract → gate → probe over a set of pages: each micro-batch of
+    `streaming_web_ingest`, and the one-shot twin the replay test pins
+    the stream against."""
     from tcrd_spark.pipeline.corpus import incremental_near_dups
     from tcrd_spark.pipeline.html import html_extract
     from tcrd_spark.pipeline.text import quality_score

@@ -34,7 +34,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from tcrd_spark.operators import graph
-from tcrd_spark.pipeline import corpus, dedup, semdedup
+from tcrd_spark.pipeline import bloom, corpus, dedup, semdedup
 from tcrd_spark.registry import all_queries
 from tcrd_spark.session import memo
 from tcrd_spark.sources import lake
@@ -216,6 +216,48 @@ SEM_FIXTURES = {
 }
 
 
+# ---------------------------------------------------------- bloom probe
+
+def _bloom_probe(spark, sf_dir, rows):
+    """(corpus, filter): ``rows`` probed against the Bloom filter of the
+    sf_dir panel's benchmark docs (doc_id < 10, as in
+    decontaminate_bloom)."""
+    docs = lake.load_table(spark, sf_dir, "documents")
+    return (
+        spark.createDataFrame(rows, "doc_id long, text string"),
+        bloom.build_bloom(docs.where("doc_id < 10"), "doc_id", "text"),
+    )
+
+
+def _doc_texts(spark, sf_dir):
+    docs = lake.load_table(spark, sf_dir, "documents")
+    return [
+        (r.doc_id, r.text)
+        for r in docs.where("doc_id < 40").orderBy("doc_id").collect()
+    ]
+
+
+def _bloom_null(spark, sf_dir):
+    rows = _doc_texts(spark, sf_dir)
+    # a NULL id carrying a benchmark doc's text, and a NULL text
+    return _bloom_probe(
+        spark, sf_dir, rows[10:] + [(None, rows[0][1]), (1000, None)]
+    )
+
+
+def _bloom_hot(spark, sf_dir):
+    # every doc carries one benchmark doc's text: every doc is a hit
+    text = _doc_texts(spark, sf_dir)[0][1]
+    return _bloom_probe(spark, sf_dir, [(i, text) for i in range(10, 40)])
+
+
+BLOOM_FIXTURES = {
+    "empty": lambda spark, sf_dir: _bloom_probe(spark, sf_dir, []),
+    "null": _bloom_null,
+    "hot": _bloom_hot,
+}
+
+
 FORKS = {
     # driver union-find up to corpus._CC_DRIVER_MAX edges, the
     # alternating-star loop above it
@@ -265,6 +307,19 @@ FORKS = {
             **_blocked_paths(_semantic_blocked),
         },
         fixtures=SEM_FIXTURES,
+    ),
+    # the filter inlined as a plan literal up to bloom._INLINE_MAX_WORDS
+    # words, the K-broadcast-join probe above it
+    "bloom": Fork(
+        owner="pipeline/bloom.py::probe_bloom",
+        paths={
+            name: (
+                lambda x: bloom.probe_bloom(*x, "doc_id", "text"),
+                {(bloom, "_INLINE_MAX_WORDS"): cap},
+            )
+            for name, cap in (("inline", bloom.M_WORDS), ("join", 0))
+        },
+        fixtures=BLOOM_FIXTURES,
     ),
 }
 

@@ -401,3 +401,42 @@ def test_one_gc_sweep_and_one_reachability_walk():
                     found[kind].add(f"{rel}::{owner.name}")
     assert found["deletes"] == {GC_SWEEP, *OWN_CLEANUP}, found["deletes"]
     assert found["lists"] == {GC_WALK}, found["lists"]
+
+
+# The one exactly-once rule for micro-batch sinks (streaming/sink.py):
+# its launcher is the only foreachBatch call, and its batch write the
+# only place a `batch_id=` directory is named, whether by a path string
+# or by a dynamic partition overwrite on the column.
+SINK_LAUNCH = "streaming/sink.py::launch"
+SINK_WRITE = "streaming/sink.py::write_batch"
+FOREACH_BATCH = re.compile(r"foreachBatch\(")
+BATCH_DIR = re.compile(
+    r"""["']batch_id=|partitionBy\(\s*["']batch_id["']"""
+)
+
+
+def test_one_exactly_once_rule_for_stream_sinks():
+    """foreachBatch( occurs once in tcrd_spark/, in the launcher, and
+    only the batch write builds a `batch_id=` directory."""
+    import ast
+
+    found: dict[str, list[str]] = {"launch": [], "write": []}
+    for rel, text in _sources():
+        funcs = [
+            n for n in ast.walk(ast.parse(text))
+            if isinstance(n, ast.FunctionDef)
+        ]
+        for i, line in enumerate(text.splitlines(), 1):
+            for kind, rule in (("launch", FOREACH_BATCH),
+                               ("write", BATCH_DIR)):
+                if rule.search(line):
+                    owner = min(
+                        (n for n in funcs if n.lineno <= i <= n.end_lineno),
+                        key=lambda n: n.end_lineno - n.lineno,
+                        default=None,
+                    )
+                    found[kind].append(
+                        f"{rel}::{owner.name if owner else '<module>'}"
+                    )
+    assert found["launch"] == [SINK_LAUNCH], found["launch"]
+    assert found["write"] == [SINK_WRITE], found["write"]

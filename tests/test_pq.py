@@ -6,8 +6,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from tcrd_spark.pipeline.dedup import EMB_DIM
 from tcrd_spark.pipeline.pq import (
-    _EMB_DIM,
     _KSUB,
     _M,
     deterministic_codebooks,
@@ -45,8 +45,8 @@ def _mean_recall(truth, got):
 
 def test_codes_are_m_bytes_in_range(spark, sf_dir):
     _, corpus = _qs_corpus(spark, sf_dir)
-    cb = deterministic_codebooks(corpus, _EMB_DIM, _M, _KSUB)
-    coded = pq_encode(corpus, cb, _EMB_DIM, _M)
+    cb = deterministic_codebooks(corpus, EMB_DIM, _M, _KSUB)
+    coded = pq_encode(corpus, cb, EMB_DIM, _M)
     row = coded.select(
         F.size("codes").alias("m"),
         F.array_min("codes").alias("lo"),
@@ -72,7 +72,7 @@ def test_codes_are_m_bytes_in_range(spark, sf_dir):
                     dot(
                         F.col("c_vec").cast("array<double>"),
                         F.col("c_vec").cast("array<double>"),
-                        _EMB_DIM,
+                        EMB_DIM,
                     )
                 )
             ).alias("err"),
@@ -88,19 +88,19 @@ def test_trained_codebooks_recall_at_10(spark, sf_dir):
     """The REAL path: k-means∥ per subspace (ksub capped to the test
     corpus scale), ADC top-10 vs the exact baseline."""
     qs, corpus = _qs_corpus(spark, sf_dir)
-    cb = pq_train_codebooks(corpus, _EMB_DIM, _M, ksub=16, n_iters=2)
-    coded = pq_encode(corpus, cb, _EMB_DIM, _M)
-    exact = brute_force_topk(qs, corpus, _EMB_DIM, k=10).collect()
+    cb = pq_train_codebooks(corpus, EMB_DIM, _M, ksub=16, n_iters=2)
+    coded = pq_encode(corpus, cb, EMB_DIM, _M)
+    exact = brute_force_topk(qs, corpus, EMB_DIM, k=10).collect()
     truth = _by_q(exact)
     # 16-entry codebooks (32-bit codes) are a SHORTLIST generator, not
     # a final ranker: direct top-10 recall is coarse (measured ~0.36
     # at sf0.001); the deployment path re-ranks a shortlist, bounded
     # in test_rerank_recovers_most_of_exact_top10 below.
-    got10 = _by_q(pq_topk(qs, coded, cb, _EMB_DIM, _M, k=10).collect())
+    got10 = _by_q(pq_topk(qs, coded, cb, EMB_DIM, _M, k=10).collect())
     assert _mean_recall(truth, got10) >= 0.25, (truth, got10)
     # shortlist coverage grows with s (monotone by construction) and
     # reaches re-rank-usable levels by s=50
-    got50 = _by_q(pq_topk(qs, coded, cb, _EMB_DIM, _M, k=50).collect())
+    got50 = _by_q(pq_topk(qs, coded, cb, EMB_DIM, _M, k=50).collect())
     assert _mean_recall(truth, got50) >= _mean_recall(truth, got10)
     assert _mean_recall(truth, got50) >= 0.6, (truth, got50)
     # the self-match survives quantization (it shares every code)
@@ -146,11 +146,11 @@ def test_indexed_ivfpq_matches_inline_and_prunes_partitions(
         F.col("vec_id").alias("cell_id"),
         F.col("embedding").alias("cell_vec"),
     )
-    cb = deterministic_codebooks(corpus, _EMB_DIM, _M, _KSUB)
+    cb = deterministic_codebooks(corpus, EMB_DIM, _M, _KSUB)
     path = str(tmp_path / "ivfpq")
-    build_ivfpq_index(corpus, cents, cb, _EMB_DIM, _M, path)
+    build_ivfpq_index(corpus, cents, cb, EMB_DIM, _M, path)
     got = ivf_pq_topk_indexed(
-        qs, path, cents, cb, _EMB_DIM, _M, k=10, n_probe=2
+        qs, path, cents, cb, EMB_DIM, _M, k=10, n_probe=2
     )
     plan = plan_of(got)
     pf = [l for l in plan.splitlines() if "PartitionFilters" in l]
@@ -173,12 +173,12 @@ def test_rerank_recovers_most_of_exact_top10(spark, sf_dir):
     from tcrd_spark.pipeline.pq import pq_rerank_topk
 
     qs, corpus = _qs_corpus(spark, sf_dir)
-    cb = deterministic_codebooks(corpus, _EMB_DIM, _M, _KSUB)
-    coded = pq_encode(corpus, cb, _EMB_DIM, _M)
+    cb = deterministic_codebooks(corpus, EMB_DIM, _M, _KSUB)
+    coded = pq_encode(corpus, cb, EMB_DIM, _M)
     rr = pq_rerank_topk(
-        qs, coded, cb, corpus, _EMB_DIM, _M, k=10, shortlist=50
+        qs, coded, cb, corpus, EMB_DIM, _M, k=10, shortlist=50
     ).collect()
-    exact = brute_force_topk(qs, corpus, _EMB_DIM, k=10).collect()
+    exact = brute_force_topk(qs, corpus, EMB_DIM, k=10).collect()
     truth, got = _by_q(exact), _by_q(rr)
     assert _mean_recall(truth, got) >= 0.7, (truth, got)
     # re-ranked scores of true hits are the EXACT scores

@@ -7,8 +7,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from tcrd_spark.pipeline.dedup import EMB_DIM
 from tcrd_spark.pipeline.semdedup import (
-    _EMB_DIM,
     centroid_distance,
     semantic_dedup,
     semantic_pairs,
@@ -43,10 +43,10 @@ def test_pair_generation_is_cluster_bounded_in_the_plan(
 
     corpus, cents = _panel(spark, sf_dir)
     path = str(tmp_path / "assigned")
-    assign_cells(corpus, cents, _EMB_DIM).write.parquet(path)
+    assign_cells(corpus, cents, EMB_DIM).write.parquet(path)
     assigned = spark.read.parquet(path)
     plan = plan_of(
-        semantic_pairs(corpus, cents, _EMB_DIM, 0.4, _assigned=assigned)
+        semantic_pairs(corpus, cents, EMB_DIM, 0.4, _assigned=assigned)
     )
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan
@@ -81,7 +81,7 @@ def test_blocked_scorer_matches_join_scorer(spark, sf_dir):
         spark, sf_dir, "semdedup", ("panel",), paths=("join", "blocks-16")
     )["panel"]
     corpus, cents = _panel(spark, sf_dir)
-    blocked = semantic_pairs_blocked(corpus, cents, _EMB_DIM, 0.4)
+    blocked = semantic_pairs_blocked(corpus, cents, EMB_DIM, 0.4)
     plan = plan_of(blocked)
     assert "FlatMapGroupsInPandas" in plan, plan
     # the grouping keys surface in the node's Arguments line
@@ -98,9 +98,9 @@ def test_pairs_are_co_clustered_and_thresholded(spark, sf_dir):
 
     cells = {
         r["c_id"]: r["cell_id"]
-        for r in assign_cells(corpus, cents, _EMB_DIM).collect()
+        for r in assign_cells(corpus, cents, EMB_DIM).collect()
     }
-    rows = semantic_pairs(corpus, cents, _EMB_DIM, 0.4).collect()
+    rows = semantic_pairs(corpus, cents, EMB_DIM, 0.4).collect()
     assert rows, "no pairs at threshold 0.4 — fixture regression"
     for r in rows:
         assert r["id_a"] < r["id_b"]
@@ -112,9 +112,9 @@ def test_representative_is_farthest_from_centroid(spark, sf_dir):
     corpus, cents = _panel(spark, sf_dir)
     dist = {
         r["c_id"]: r["dist"]
-        for r in centroid_distance(corpus, cents, _EMB_DIM).collect()
+        for r in centroid_distance(corpus, cents, EMB_DIM).collect()
     }
-    rows = semantic_dedup(corpus, cents, _EMB_DIM, 0.4).collect()
+    rows = semantic_dedup(corpus, cents, EMB_DIM, 0.4).collect()
     by_group: dict[int, list] = {}
     for r in rows:
         by_group.setdefault(r["group_id"], []).append(r)
@@ -135,8 +135,8 @@ def test_trained_centroids_path(spark, sf_dir):
     from tcrd_spark.pipeline.similarity import kmeans_centroids
 
     corpus, _ = _panel(spark, sf_dir)
-    cents = kmeans_centroids(corpus, _EMB_DIM, k=8, n_iters=2)
-    rows = semantic_dedup(corpus, cents, _EMB_DIM, 0.4).collect()
+    cents = kmeans_centroids(corpus, EMB_DIM, k=8, n_iters=2)
+    rows = semantic_dedup(corpus, cents, EMB_DIM, 0.4).collect()
     assert len(rows) == corpus.count()
     dup_groups = [r for r in rows if r["group_sz"] > 1]
     assert dup_groups, "trained clusters found no near-dups at 0.4"

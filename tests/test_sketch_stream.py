@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from tcrd_spark.pipeline.sketches import cms_build, kmv_sketch
 from tcrd_spark.streaming import sketch_stream as ss
+from tcrd_spark.streaming.sink import write_batch
 
 
 @pytest.fixture(scope="module")
@@ -71,9 +72,15 @@ def test_streamed_kmv_equals_batch(spark, replay, tmp_path):
 
 
 def test_batch_replay_is_idempotent(spark, replay, tmp_path):
+    """The shared batch write of streaming_cms's batch twin: replaying
+    batch 0 leaves the merged grid unchanged."""
     ev, _ = replay
     out = str(tmp_path / f"idem_{uuid.uuid4().hex[:8]}")
-    writer = ss.cms_batch_writer(out, "user_id")
+
+    def writer(batch_df, batch_id):
+        grid = cms_build(batch_df, F.col("user_id").cast("string"))
+        write_batch(grid.coalesce(1), out, batch_id)
+
     half = ev.filter(F.col("event_id") % 2 == 0)
     writer(half, 0)
     writer(ev.filter(F.col("event_id") % 2 == 1), 1)

@@ -232,6 +232,39 @@ def test_streaming_snapshot_append_is_exactly_once(
     assert counts == sorted(counts)
 
 
+def test_two_streams_into_one_table_keep_both(spark, tmp_path):
+    """Two streams with their own checkpoints append into one table:
+    each stream's batch 0 commits under its own txn id, so neither
+    stream's batches are mistaken for the other's replays."""
+    import json as _json
+
+    table = str(tmp_path / "t")
+    snap.create_table(
+        spark.createDataFrame([(0, "a")], "k long, g string"), table, "g"
+    )
+
+    def run(name, keys):
+        src = tmp_path / f"src_{name}"
+        src.mkdir()
+        with open(src / "chunk.json", "w") as f:
+            for k in keys:
+                f.write(_json.dumps({"k": k, "g": "a"}) + "\n")
+        stream = spark.readStream.schema("k long, g string").json(str(src))
+        q = snap.streaming_snapshot_append(
+            stream, table, str(tmp_path / f"ckpt_{name}")
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+
+    run("a", [1, 2, 3])
+    run("b", [4, 5, 6])
+    got = sorted(r.k for r in snap.read_version(spark, table).collect())
+    assert got == [0, 1, 2, 3, 4, 5, 6]
+    assert snap.versions(table) == [1, 2, 3]
+
+
 def test_optimize_compacts_without_breaking_time_travel(
     spark, sf_dir, tmp_path
 ):

@@ -6,13 +6,13 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from tcrd_spark.pipeline.dedup import EMB_DIM
 from tcrd_spark.pipeline.similarity import brute_force_topk
 from tcrd_spark.pipeline.sq import (
     quantize_stats,
     sq_dequantize,
     sq_encode,
     sq_topk,
-    _EMB_DIM,
 )
 from tcrd_spark.sources.lake import load_table
 
@@ -30,15 +30,15 @@ def _qs_corpus(spark, sf_dir):
 
 def test_codes_are_8bit_and_reconstruction_bounded(spark, sf_dir):
     _, corpus = _qs_corpus(spark, sf_dir)
-    stats = quantize_stats(corpus, "c_vec", _EMB_DIM)
-    enc = sq_encode(corpus, "c_id", "c_vec", stats, _EMB_DIM)
+    stats = quantize_stats(corpus, "c_vec", EMB_DIM)
+    enc = sq_encode(corpus, "c_id", "c_vec", stats, EMB_DIM)
     row = enc.select(
         F.array_min("codes").alias("lo"), F.array_max("codes").alias("hi")
     ).agg(F.min("lo").alias("lo"), F.max("hi").alias("hi")).collect()[0]
     assert 0 <= row["lo"] and row["hi"] <= 255
 
     # |x_d − center_d| ≤ span_d / 512 (half a bucket)
-    deq = sq_dequantize(enc, "c_id", stats, _EMB_DIM)
+    deq = sq_dequantize(enc, "c_id", stats, EMB_DIM)
     err = (
         corpus.withColumn("c_vec", F.col("c_vec").cast("array<double>"))
         .join(deq, "c_id")
@@ -86,8 +86,8 @@ def test_ivfsq_tracks_full_precision_ivf(spark, sf_dir):
 
 def test_recall_at_10_vs_exact(spark, sf_dir):
     qs, corpus = _qs_corpus(spark, sf_dir)
-    exact = brute_force_topk(qs, corpus, _EMB_DIM, k=10).collect()
-    approx = sq_topk(qs, corpus, _EMB_DIM, k=10).collect()
+    exact = brute_force_topk(qs, corpus, EMB_DIM, k=10).collect()
+    approx = sq_topk(qs, corpus, EMB_DIM, k=10).collect()
     truth = {}
     for r in exact:
         truth.setdefault(r["q_id"], set()).add(r["c_id"])

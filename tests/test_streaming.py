@@ -877,26 +877,32 @@ def test_streaming_incremental_dedup_replayed_batch_idempotent(
     """The at-least-once window foreachBatch leaves open: a crash AFTER
     the sink write but BEFORE the checkpoint commit replays the
     micro-batch with the same batch_id. The sink must absorb the replay
-    — dedup_probe_batch overwrites its batch_id partition, so invoking
-    it twice (and even with drifted batch content, as a re-planned
-    source could produce) leaves exactly one copy of the batch's
-    verdicts."""
+    — the shared batch write overwrites the batch_id partition with the
+    sink's batch twin (incremental_near_dups), so invoking it twice
+    leaves exactly one copy of the batch's verdicts."""
     from pyspark.sql import functions as F
 
+    from tcrd_spark.pipeline.corpus import incremental_near_dups
     from tcrd_spark.sources.lake import load_table
-    from tcrd_spark.streaming.jobs import dedup_probe_batch
+    from tcrd_spark.streaming.sink import write_batch
 
     docs = load_table(spark, sf_dir, "documents")
     batch = docs.filter(F.col("doc_id") % 5 == 0).select("doc_id", "text")
     corpus = docs.filter(F.col("doc_id") % 5 != 0)
     out_path = str(tmp_path / "verdicts")
 
-    dedup_probe_batch(batch, 0, corpus, out_path)
+    def probe():
+        write_batch(
+            incremental_near_dups(batch, corpus, "doc_id", "text"),
+            out_path, 0,
+        )
+
+    probe()
     once = sorted(
         (r["doc_id"], r["verdict"])
         for r in spark.read.parquet(out_path).collect()
     )
-    dedup_probe_batch(batch, 0, corpus, out_path)  # simulated replay
+    probe()  # simulated replay
     twice = sorted(
         (r["doc_id"], r["verdict"])
         for r in spark.read.parquet(out_path).collect()

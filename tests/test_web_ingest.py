@@ -12,10 +12,10 @@ from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from tcrd_spark.pipeline.html import synth_page
 from tcrd_spark.sources.lake import load_table
+from tcrd_spark.streaming.sink import write_batch
 from tcrd_spark.streaming.web_ingest import (
     batch_web_ingest,
     streaming_web_ingest,
-    web_ingest_batch,
 )
 
 SCHEMA = StructType(
@@ -95,14 +95,15 @@ def test_streaming_web_ingest_matches_batch(spark, stream_dirs, tmp_path, sf_dir
 
 def test_web_ingest_batch_is_idempotent(spark, tmp_path, sf_dir):
     """Replaying a micro-batch (at-least-once foreachBatch) overwrites
-    its own partition with identical content."""
+    its own partition with identical content: the shared batch write
+    of the sink's batch twin, run twice."""
     pages, corpus = _pages_and_corpus(spark, sf_dir)
     out = str(tmp_path / "landed")
-    web_ingest_batch(pages, 7, corpus, out)
+    write_batch(batch_web_ingest(pages, corpus), out, 7)
     first = sorted(
         tuple(r) for r in spark.read.parquet(out).collect()
     )
-    web_ingest_batch(pages, 7, corpus, out)  # replay
+    write_batch(batch_web_ingest(pages, corpus), out, 7)  # replay
     second = sorted(
         tuple(r) for r in spark.read.parquet(out).collect()
     )

@@ -49,8 +49,8 @@ def _time(build) -> float:
 
 
 def bench_sf(spark, sf_dir: str) -> list[tuple]:
+    from tcrd_spark.pipeline.dedup import EMB_DIM
     from tcrd_spark.pipeline.pq import (
-        _EMB_DIM,
         _KSUB,
         _M,
         deterministic_codebooks,
@@ -81,22 +81,22 @@ def bench_sf(spark, sf_dir: str) -> list[tuple]:
     n = corpus.count()
 
     # indexes, built once and cached (the persisted-index stand-in)
-    deq = sq_dequant_frame(corpus, _EMB_DIM).cache()
+    deq = sq_dequant_frame(corpus, EMB_DIM).cache()
     deq.count()
-    cb_row = deterministic_codebooks(corpus, _EMB_DIM, _M, _KSUB).cache()
+    cb_row = deterministic_codebooks(corpus, EMB_DIM, _M, _KSUB).cache()
     cb_row.count()
-    coded = pq_encode(corpus, cb_row, _EMB_DIM, _M).cache()
+    coded = pq_encode(corpus, cb_row, EMB_DIM, _M).cache()
     coded.count()
-    assigned = assign_cells(corpus, cents, _EMB_DIM).select(
+    assigned = assign_cells(corpus, cents, EMB_DIM).select(
         "c_id", "c_vec", "cell_id"
     ).cache()
     assigned.count()
     coded_cells = pq_encode(
-        assigned, cb_row, _EMB_DIM, _M, extra_cols=("cell_id",)
+        assigned, cb_row, EMB_DIM, _M, extra_cols=("cell_id",)
     ).cache()
     coded_cells.count()
 
-    exact = brute_force_topk(qs, corpus, _EMB_DIM, k=K).cache()
+    exact = brute_force_topk(qs, corpus, EMB_DIM, k=K).cache()
     exact.count()
 
     sf = os.path.basename(sf_dir.rstrip("/"))
@@ -109,43 +109,43 @@ def bench_sf(spark, sf_dir: str) -> list[tuple]:
         print(f"  {variant:<12} nprobe={nprobe or '—':<3} "
               f"recall@{K}={rec:<7} wall={wall}s", flush=True)
 
-    add("brute", None, lambda: brute_force_topk(qs, corpus, _EMB_DIM, k=K))
-    add("sq8", None, lambda: brute_force_topk(qs, deq, _EMB_DIM, k=K))
-    add("pq-adc", None, lambda: pq_topk(qs, coded, cb_row, _EMB_DIM, _M, k=K))
+    add("brute", None, lambda: brute_force_topk(qs, corpus, EMB_DIM, k=K))
+    add("sq8", None, lambda: brute_force_topk(qs, deq, EMB_DIM, k=K))
+    add("pq-adc", None, lambda: pq_topk(qs, coded, cb_row, EMB_DIM, _M, k=K))
     add(
         "pq+rerank", None,
         lambda: pq_rerank_topk(
-            qs, coded, cb_row, corpus, _EMB_DIM, _M, k=K, shortlist=50
+            qs, coded, cb_row, corpus, EMB_DIM, _M, k=K, shortlist=50
         ),
     )
     # trained codebooks: the deployment path (the adjudicated queries
     # pin the weaker first-16-by-id contract for oracle determinism)
-    cb_tr = pq_train_codebooks(corpus, _EMB_DIM, _M, _KSUB).cache()
+    cb_tr = pq_train_codebooks(corpus, EMB_DIM, _M, _KSUB).cache()
     cb_tr.count()
-    coded_tr = pq_encode(corpus, cb_tr, _EMB_DIM, _M).cache()
+    coded_tr = pq_encode(corpus, cb_tr, EMB_DIM, _M).cache()
     coded_tr.count()
     add(
         "pq-trained", None,
-        lambda: pq_topk(qs, coded_tr, cb_tr, _EMB_DIM, _M, k=K),
+        lambda: pq_topk(qs, coded_tr, cb_tr, EMB_DIM, _M, k=K),
     )
     add(
         "pq-tr+rerank", None,
         lambda: pq_rerank_topk(
-            qs, coded_tr, cb_tr, corpus, _EMB_DIM, _M, k=K, shortlist=50
+            qs, coded_tr, cb_tr, corpus, EMB_DIM, _M, k=K, shortlist=50
         ),
     )
     for np_ in N_PROBES:
         add(
             "ivf", np_,
             lambda np_=np_: ivf_topk(
-                qs, corpus, cents, _EMB_DIM, k=K, n_probe=np_
+                qs, corpus, cents, EMB_DIM, k=K, n_probe=np_
             ),
         )
     for np_ in N_PROBES:
         add(
             "ivf-pq", np_,
             lambda np_=np_: ivf_pq_topk(
-                qs, coded_cells, cb_row, cents, _EMB_DIM, _M, k=K,
+                qs, coded_cells, cb_row, cents, EMB_DIM, _M, k=K,
                 n_probe=np_,
             ),
         )
