@@ -17,12 +17,23 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from tcrd_spark.functions.eav import dereference
+from tcrd_spark.operators.lineage import cut
 
 
 def entity(lake: dict[str, DataFrame]) -> DataFrame:
     """The universal 3-way access path target⋈t2tc⋈protein
     (`SQL/create-TCRDv7.sql:2352` view; `loaders/TCRD.py:2267-2269`).
-    target is ~20k rows — both joins broadcast."""
+    target is ~20k rows — both joins broadcast.
+
+    This is the lazy join, for whole-lake consumers (`target_documents`,
+    the TDL features). The point readers, bare `get_target` and
+    `find_targets`, filter `_entity_view(lake)` instead: the same rows
+    materialized once per set of lake frames. A read of the view is
+    one Spark job; a read of this join is three (two broadcasts and
+    the result), and re-plans it. The view wins when one set of frames
+    serves two or more entity reads (a refresh cycle's read-back of
+    changed targets, a portal session's thousands of lookups); a lake
+    read exactly once pays about one view build more."""
     t = lake["target"].select(
         F.col("id").alias("target_id"),
         F.col("name").alias("target_name"),
@@ -38,21 +49,38 @@ def entity(lake: dict[str, DataFrame]) -> DataFrame:
     )
 
 
+def _entity_view(lake: dict[str, DataFrame]) -> DataFrame:
+    """`entity(lake)` behind a keyed lineage cut, in the session
+    store's one "entity-view" slot. The key is the three frames
+    themselves (a DataFrame compares by identity), not their plans: a
+    lake re-loaded after an in-place rewrite plans the same as before,
+    and must not be served the old rows. Holding the frames in the key
+    keeps their ids from being reused, and a new frame for any of the
+    three releases the old view."""
+    return cut(
+        lambda: entity(lake), "entity-view",
+        (lake["target"], lake["t2tc"], lake["protein"]),
+    )
+
+
+_FIND_COLS = {
+    "sym": "sym", "uniprot": "uniprot", "geneid": "geneid",
+    "stringid": "stringid", "name": "target_name",
+    "tdl": "tdl", "fam": "fam",
+}
+
+
 def find_targets(lake: dict[str, DataFrame], **criteria) -> DataFrame:
     """find_targets(sym=..., uniprot=..., geneid=..., stringid=...,
     name=..., tdl=..., fam=...) — conjunctive equality like the
     reference's appended `AND p.<col> = %s` (`loaders/TCRD.py:
     2266-2289`). Returns distinct target_ids."""
-    df = entity(lake)
-    colmap = {
-        "sym": "sym", "uniprot": "uniprot", "geneid": "geneid",
-        "stringid": "stringid", "name": "target_name",
-        "tdl": "tdl", "fam": "fam",
-    }
-    for k, v in criteria.items():
-        if k not in colmap:
+    for k in criteria:
+        if k not in _FIND_COLS:
             raise KeyError(f"unsupported find_targets key: {k}")
-        df = df.filter(F.col(colmap[k]) == v)
+    df = _entity_view(lake)
+    for k, v in criteria.items():
+        df = df.filter(F.col(_FIND_COLS[k]) == v)
     return df.select("target_id").distinct()
 
 
@@ -834,12 +862,13 @@ def get_target(
     annotations; `:1857-1951` with). With annotations this is one
     nested-document row — the reference's ~40 point queries for the id
     collapse into the target_documents plan filtered to it (the filter
-    pushes down to every annotation scan)."""
+    pushes down to every annotation scan). Without, it filters the
+    lake's materialized entity view (`_entity_view`)."""
     if include_annotations:
         return target_documents(
             lake, target_ids=[target_id], get_ga_counts=get_ga_counts
         )
-    return entity(lake).filter(F.col("target_id") == target_id)
+    return _entity_view(lake).filter(F.col("target_id") == target_id)
 
 
 def get_protein(

@@ -2,10 +2,12 @@
 memo store (`tcrd_spark.session.memo`).
 
 - ``cut(df, slot, key=None)`` — an RDD round trip that resets the
-  plan. The store entry holds the frame AND its cached RDD handle, so
-  releasing the entry frees both. No key: the slot rotates on every
-  call (at most one live cut per slot). A key (e.g. ``sf_dir``): the
-  cut is reused, and ``df`` may be a builder so a hit builds nothing.
+  plan. No key: the slot rotates on every call (at most one live cut
+  per slot), and the entry holds the frame AND its cached RDD handle,
+  so releasing the entry frees both. A key (e.g. ``sf_dir``, or the
+  frames a view is built from): the cut is reused, cached once as a
+  DataFrame over the unpersisted RDD scan, and ``df`` may be a builder
+  so a hit builds nothing.
 - ``cache(df, slot)`` — ``df.cache()`` under a rotating slot, reused
   while the plan computes the same result.
 - ``_truncate(df, held)`` — the hop cut of an iterative loop
@@ -58,7 +60,8 @@ def _truncate(
     ``cache=False`` skips persisting the cut RDD (``held`` unused):
     right for strictly LINEAR chains (pagerank's per-iteration cut)
     where every cut is read exactly once by the single terminal
-    action — caching there only costs storage-memory bookkeeping.
+    action — caching there only costs storage-memory bookkeeping —
+    and under a keyed ``cut``, whose DataFrame cache holds the rows.
     """
     spark = df.sparkSession
     jrdd = df._jdf.javaRDD()
@@ -71,21 +74,29 @@ def _truncate(
 
 
 def cut(df, slot: str, key=None) -> DataFrame:
-    """``_truncate`` owned by the session store under ``slot``: the
-    entry holds (frame, cut RDD). ``key=None`` rotates the slot on
-    every call — registered queries return lazy frames and can never
-    unpersist "after the action", so each call releases the previous
-    call's cut (ADVICE r11: one cached RDD per invocation otherwise
-    accumulated for the session). With a key the live cut is reused,
-    and ``df`` may be a zero-argument builder of the frame; a reused cut
-    is also DataFrame-cached, since every later call scans it and a
-    columnar scan beats re-encoding the cached rows (measured warm at
-    sf0.1, 4 cores: web_pipeline 0.99s → 0.21s, corpus_pipeline_v2
-    15.2s → 11.9s, semantic_dedup 2.56s → 1.99s)."""
+    """``_truncate`` owned by the session store under ``slot``.
+    ``key=None`` rotates the slot on every call — registered queries
+    return lazy frames and can never unpersist "after the action", so
+    each call releases the previous call's cut (ADVICE r11: one cached
+    RDD per invocation otherwise accumulated for the session); the
+    entry holds (frame, cut RDD).
+
+    With a key the live cut is reused, and ``df`` may be a
+    zero-argument builder of the frame. A reused cut is cached ONCE:
+    a DataFrame cache over the cut's RDD scan, the RDD itself not
+    persisted. Every later call scans it, and a columnar scan beats
+    re-encoding cached rows (measured warm at sf0.1, 4 cores:
+    web_pipeline 0.99s → 0.21s, corpus_pipeline_v2 15.2s → 11.9s,
+    semantic_dedup 2.56s → 1.99s); persisting the RDD as well stored
+    every row twice and made the first read pay for both. The cached
+    relation is a ``LogicalRDD`` of its own, so no other query's plan
+    fragment can match it in the CacheManager."""
     def build():
+        if key is not None:
+            out = _truncate(df() if callable(df) else df, cache=False)
+            return (out.cache(),)
         held: list = []
-        out = _truncate(df() if callable(df) else df, held)
-        return (out if key is None else out.cache()), held[0]
+        return _truncate(df, held), held[0]
 
     spark = df.sparkSession if isinstance(df, DataFrame) else SparkSession.active()
     return memo(spark, slot, object() if key is None else key, build)[0]

@@ -10,8 +10,8 @@ operation:
       WHEN NOT MATCHED THEN INSERT
 
 `merge_frames` is the engine: ONE full-outer join on the keys plus
-row-local CASE arms — no windows, no second pass. SCD-1 semantics
-(matched rows take the source's non-key columns).
+row-local CASE arms — no windows, no second pass, one SQL parse.
+SCD-1 semantics (matched rows take the source's non-key columns).
 
 The versioned lake's copy-on-write MERGE (`snapshots.merge_version`)
 runs `merge_frames` over only the files a source can match and
@@ -27,6 +27,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
+def sql_name(name: str) -> str:
+    """``name`` as a backquoted SQL identifier, braces doubled for the
+    parameterized ``spark.sql`` formatter."""
+    return "`" + name.replace("`", "``").replace("{", "{{").replace(
+        "}", "}}") + "`"
+
+
 def merge_frames(
     target: DataFrame,
     source: DataFrame,
@@ -36,7 +43,10 @@ def merge_frames(
     """SCD-1 merge: update matched, insert unmatched-source, keep
     unmatched-target; matched rows satisfying `delete_condition`
     (a SQL string over source columns) are dropped. Schemas must
-    match."""
+    match.
+
+    One SQL projection over the full outer join, built in one parse:
+    py4j carries one text, not a Column tree per column."""
     cols = target.columns
     if source.columns != cols:
         raise ValueError(
@@ -45,29 +55,30 @@ def merge_frames(
     # Presence markers, NOT key null-ness, classify the join sides: a
     # target row whose merge-key value is genuinely NULL never equi-
     # matches, and inspecting keys[0] would misread it as source-only
-    # and null out all its columns (ADVICE r5 #2). The lit(1) markers
-    # are null exactly on the absent side of the full-outer join.
-    t = target.withColumn("_t_present", F.lit(1)).alias("t")
-    s = source.withColumn("_s_present", F.lit(1)).alias("s")
-    cond = None
-    for k in keys:
-        c = F.col(f"t.{k}") == F.col(f"s.{k}")
-        cond = c if cond is None else (cond & c)
-    j = t.join(s, cond, "full_outer")
-    matched = F.col("t._t_present").isNotNull() & F.col(
-        "s._s_present"
-    ).isNotNull()
-    src_only = F.col("t._t_present").isNull()
-    out = j.select(
-        *[
-            F.when(src_only | matched, F.col(f"s.{c}"))
-            .otherwise(F.col(f"t.{c}"))
-            .alias(c)
-            for c in cols
-        ],
-        (matched & F.expr(delete_condition or "false")).alias("_del"),
+    # and null out all its columns (ADVICE r5 #2). The 1 markers are
+    # null exactly on the absent side of the full-outer join, so a
+    # present source side (matched or source-only) wins every column.
+    pick = ",\n  ".join(
+        f"CASE WHEN s._s_present IS NOT NULL THEN s.{sql_name(c)} "
+        f"ELSE t.{sql_name(c)} END AS {sql_name(c)}"
+        for c in cols
     )
-    return out.where(~F.col("_del")).drop("_del")
+    on = " AND ".join(f"t.{sql_name(k)} = s.{sql_name(k)}" for k in keys)
+    # NOT (matched AND cond) drops a matched row whose condition is
+    # NULL too, as a filter on a NULL predicate does
+    where = "" if delete_condition is None else (
+        "WHERE NOT (t._t_present IS NOT NULL AND s._s_present IS NOT NULL"
+        " AND (" + delete_condition.replace("{", "{{").replace("}", "}}")
+        + "))"
+    )
+    return target.sparkSession.sql(
+        f"""SELECT
+  {pick}
+FROM (SELECT *, 1 AS _t_present FROM {{target}}) t
+FULL OUTER JOIN (SELECT *, 1 AS _s_present FROM {{source}}) s ON {on}
+{where}""",
+        target=target, source=source,
+    )
 
 
 # ------------------------------------------------- registered queries

@@ -67,7 +67,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructType
 
-from tcrd_spark.sources.merge import merge_frames
+from tcrd_spark.sources.merge import merge_frames, sql_name
 from tcrd_spark.sources.metastore import (  # metadata-plane seam
     _WIP_TIMEOUT,  # noqa: F401  (tests pin the posix protocol via here)
     _fallback_publish,  # noqa: F401
@@ -880,13 +880,14 @@ def _candidate_files(
     wherever they live) one table-wide range. A file without stats
     for the key is always kept."""
     part_col = m["part_col"]
-    groups = [part_col] if by_partition else []
+    k = sql_name(key)
+    agg = f"SELECT min({k}), max({k}) FROM {{source}}"
+    if by_partition:
+        p = sql_name(part_col)
+        agg = f"SELECT min({k}), max({k}), {p} FROM {{source}} GROUP BY {p}"
     ranges = {
-        (f"{part_col}={r[part_col]}" if by_partition else None):
-            (r["_lo"], r["_hi"])
-        for r in source.groupBy(*groups).agg(
-            F.min(key).alias("_lo"), F.max(key).alias("_hi")
-        ).collect()
+        (f"{part_col}={r[2]}" if by_partition else None): (r[0], r[1])
+        for r in source.sparkSession.sql(agg, source=source).collect()
     }
     stats = m.get("stats", {})
     out = []

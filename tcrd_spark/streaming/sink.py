@@ -21,8 +21,14 @@ same way, by making its write idempotent per transaction:
   directory as one parquet tree partitioned by ``batch_id``. The
   batch id alone keys the directory, so an ``out_path`` belongs to
   one checkpoint.
-- `to_directory` is a directory sink: each batch's twin plan (the
-  batch function the sink streams), written by `write_batch`.
+- `claim` enforces that: it publishes ``<out_path>/_checkpoint.json``
+  naming the checkpoint's absolute path, exclusively, and raises
+  ``ValueError`` for any other checkpoint, before a batch is written.
+  Spark's readers skip ``_``-prefixed files, so the directory still
+  reads as the batches alone.
+- `to_directory` is a directory sink: it claims ``out_path``, then
+  writes each batch's twin plan (the batch function the sink
+  streams) with `write_batch`.
 """
 
 from __future__ import annotations
@@ -32,6 +38,8 @@ from typing import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
+
+from tcrd_spark.sources.metastore import get_store
 
 
 def launch(
@@ -61,6 +69,25 @@ def write_batch(df: DataFrame, out_path: str, batch_id: int) -> None:
     )
 
 
+def claim(out_path: str, checkpoint: str) -> None:
+    """Make ``out_path`` the directory of ``checkpoint``'s stream: the
+    first claim wins (an exclusive publish), a restart from the same
+    checkpoint passes, any other checkpoint raises ``ValueError``."""
+    owner = os.path.abspath(checkpoint)
+    mark = os.path.join(out_path, "_checkpoint.json")
+    store = get_store()
+    store.makedirs(out_path)
+    try:
+        store.publish_exclusive(mark, {"checkpoint": owner}, mark)
+    except FileExistsError:
+        pass
+    held = store.read_json(mark)["checkpoint"]
+    if held != owner:
+        raise ValueError(
+            f"{out_path} belongs to checkpoint {held}, not {owner}"
+        )
+
+
 def to_directory(
     stream: DataFrame,
     checkpoint: str,
@@ -68,7 +95,8 @@ def to_directory(
     twin: Callable[[DataFrame], DataFrame],
 ) -> StreamingQuery:
     """Start a stream whose batches land as ``twin(batch_df)`` under
-    ``out_path``."""
+    ``out_path``, which ``checkpoint`` claims first (`claim`)."""
+    claim(out_path, checkpoint)
     return launch(
         stream,
         checkpoint,

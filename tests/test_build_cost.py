@@ -18,6 +18,10 @@ from pyspark.sql import functions as F
 CEILING = {"dedup_simhash_pairs": 200, "leakage_safe_split": 360,
            "tdl_classification": 230, "tdl_refresh": 320,
            "tau_continuous": 300}
+# a warm snapshots.merge_version of a 22-column table: 248-249 in one
+# parse, 1,862-1,863 as a Column tree per column (the count moves by a
+# command or two with the files a batch touches)
+MERGE_CEILING = 320
 
 
 @contextmanager
@@ -387,3 +391,48 @@ def test_tau_sql_builds_match_column_form(spark):
             sql_form(df, "gene", "tissue", "v"),
             column_form(df, "gene", "tissue", "v"),
         )
+
+
+def test_point_read_builds_a_filter_on_a_view_hit(spark):
+    """A bare get_target on a lake whose entity view is live builds a
+    filter over the view, not the three-table join: the same 31
+    commands on every hit, from 129 as the join."""
+    from tests.tcrd_fixtures import build_lake
+
+    from tcrd_spark.api.adaptor import get_target
+
+    lake = build_lake(spark)
+    get_target(lake, 1).collect()  # the view is built
+    counts = []
+    for tid in (2, 3, 4):
+        with py4j_commands(spark) as n:
+            df = get_target(lake, tid)
+        counts.append(n[0])
+        assert df.count() == 1
+    assert counts[0] == counts[1] == counts[2] <= 40, counts
+
+
+def test_merge_version_build_is_one_parse(spark, tmp_path):
+    """A warm merge_version (range aggregate, merge and commit) of a
+    wide table stays under its py4j ceiling; the Column-tree merge
+    sent one CASE tree per column."""
+    from tcrd_spark.sources import snapshots
+
+    cols = ", ".join(f"c{i} string" for i in range(20))
+    base = spark.createDataFrame(
+        [(i, "a" if i % 2 else "b", *[f"v{i}"] * 20) for i in range(40)],
+        f"id long, part string, {cols}",
+    )
+    table = str(tmp_path / "wide")
+    snapshots.create_table(base, table, "part")
+    counts = []
+    for round_ in range(3):
+        src = snapshots.read_version(spark, table).filter(
+            f"id % 7 = {round_}").withColumn("c0", F.lit(f"r{round_}"))
+        with py4j_commands(spark) as n:
+            snapshots.merge_version(spark, table, src, ["id"])
+        counts.append(n[0])
+    got = snapshots.read_version(spark, table)
+    assert got.filter("c0 = 'r2'").count() == 6
+    assert got.count() == 40
+    assert max(counts[1:]) <= MERGE_CEILING, counts

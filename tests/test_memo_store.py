@@ -163,6 +163,38 @@ def test_registered_queries_pin_bounded_storage(spark, sf_dir, tmp_path):
     assert n[0] == n[1] == n[2], n
 
 
+def test_point_reads_pin_one_live_entity_view(spark):
+    """get_target and find_targets over several lakes, read in turn:
+    one view lives at a time, each lake's reads share it, and a lake's
+    next frames release its predecessor's."""
+    from tests.tcrd_fixtures import build_lake
+
+    from tcrd_spark.api.adaptor import find_targets, get_target
+    from tcrd_spark.session import _SESSION_MEMO, _release
+
+    base = build_lake(spark)
+    lakes = [base, {**base, "target": base["target"].filter("id < 5")},
+             {**base, "protein": base["protein"].select("*")}]
+    held = _SESSION_MEMO.pop("entity-view", None)
+    if held is not None:
+        _release(spark, held[1])
+    n0 = spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+    pinned, views = [], []
+    for _ in range(2):
+        for lake in lakes:
+            for tid in (1, 2, 3):
+                get_target(lake, tid).collect()
+                view = _SESSION_MEMO["entity-view"][1][0]
+                assert not views or view is views[-1] or not views[-1].is_cached
+                views.append(view)
+            find_targets(lake, sym="SYM1").collect()
+            assert _SESSION_MEMO["entity-view"][1][0] is view
+            pinned.append(spark.sparkContext._jsc.sc().getPersistentRDDs().size())
+    assert pinned == [n0 + 1] * 6, (n0, pinned)
+    assert len({id(v) for v in views}) == 6  # one build per lake visit
+    assert [v.is_cached for v in views[::3]] == [False] * 5 + [True]
+
+
 def test_small_cache_is_not_pinned_at_shuffle_partitions(spark):
     """AQE may re-plan a cached frame (session.py): a materialized
     cache of a tiny aggregate, grouped into spark.sql.shuffle.partitions

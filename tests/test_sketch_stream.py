@@ -5,6 +5,7 @@ idempotent."""
 
 from __future__ import annotations
 
+import os
 import uuid
 
 import pytest
@@ -88,3 +89,38 @@ def test_batch_replay_is_idempotent(spark, replay, tmp_path):
     writer(half, 0)  # at-least-once delivery replays batch 0
     after = {(r.d, r.col): r.cnt for r in ss.cms_current(spark, out).collect()}
     assert before == after
+
+
+def test_out_path_belongs_to_one_checkpoint(spark, replay, tmp_path):
+    """A grid directory belongs to the checkpoint that first streamed
+    into it: a second checkpoint raises before it writes a batch, a
+    restart from the first runs, and the grid still reads as the
+    batches alone (the claim file is `_`-prefixed)."""
+    from tcrd_spark.streaming.jobs import read_event_replay
+
+    ev, src = replay
+    out = str(tmp_path / "grid")
+    _run(spark, replay, ss.streaming_cms, out, str(tmp_path / "ck_a"))
+    batches = sorted(os.listdir(out))
+    with pytest.raises(ValueError, match="belongs to checkpoint"):
+        ss.streaming_cms(
+            read_event_replay(spark, src, ev.schema, max_files_per_trigger=1),
+            out, "user_id", str(tmp_path / "ck_b"),
+        )
+    assert sorted(os.listdir(out)) == batches
+    q = ss.streaming_cms(
+        read_event_replay(spark, src, ev.schema, max_files_per_trigger=1),
+        out, "user_id", str(tmp_path / "ck_a"),
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    merged = {
+        (r.d, r.col): r.cnt for r in ss.cms_current(spark, out).collect()
+    }
+    batch = {
+        (r.d, r.col): r.cnt
+        for r in cms_build(ev, F.col("user_id").cast("string")).collect()
+    }
+    assert merged == batch
