@@ -22,16 +22,11 @@ plain F.sum is the faster choice if 1-ulp drift is acceptable.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-
-def _sorted_fold_sum(col: Column) -> Column:
-    """Order-deterministic double sum: sort values, fold left."""
-    return F.aggregate(
-        F.array_sort(F.collect_list(col)), F.lit(0.0), lambda acc, x: acc + x
-    )
+from tcrd_spark.functions.folds import sorted_fold_sum
 
 
 def paper_counts(mentions: DataFrame, pmid: str, entity: str) -> DataFrame:
@@ -53,7 +48,7 @@ def novelty(mentions: DataFrame, pmid: str, entity: str) -> DataFrame:
         .join(cts, pmid)
         .groupBy(entity)
         .agg(
-            F.round(1.0 / _sorted_fold_sum(1.0 / F.col("ct")), 6).alias(
+            F.round(1.0 / sorted_fold_sum(1.0 / F.col("ct")), 6).alias(
                 "novelty"
             )
         )
@@ -80,7 +75,7 @@ def importance(
         .groupBy(protein, disease)
         .agg(
             F.round(
-                _sorted_fold_sum(1.0 / (F.col("pct") * F.col("dct"))), 6
+                sorted_fold_sum(1.0 / (F.col("pct") * F.col("dct"))), 6
             ).alias("score")
         )
     )

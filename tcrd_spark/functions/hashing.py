@@ -6,10 +6,14 @@ ANSI-ish SQL (DuckDB oracle) and in a Spark column expression: the
 primitive is the first 15 hex digits of md5 (a 60-bit integer), which
 both engines produce byte-identically. On top of it we build:
 
-- ``hash60``          — 60-bit token hash (md5 prefix)
-- ``minhash_perm``    — universal-hash permutation (a*h+b) mod P over
-                        the 31-bit reduction of hash60 (no 64-bit
-                        overflow: h%P < 2^31, a < 2^31 → a*(h%P)+b < 2^62)
+- ``hash60``          — 60-bit token hash (md5 prefix), with
+                        ``spark_hash60`` / ``sql_hash60`` as its
+                        Spark-SQL and DuckDB strings
+- ``minhash_sig_expr`` — minhash signature: per permutation
+                        (a*h+b) mod P over the 31-bit reduction of
+                        hash60 (no 64-bit overflow: h%P < 2^31,
+                        a < 2^31 → a*(h%P)+b < 2^62), parsed once
+- ``band_hashes_expr`` — every LSH band key of a signature, parsed once
 - ``rolling_fingerprint`` — polynomial rolling hash over a token array
                         (the document-fingerprinting primitive)
 
@@ -53,40 +57,15 @@ def minhash_params(n_perms: int, seed: int = 7) -> list[tuple[int, int]]:
     return params
 
 
-def minhash_perm(h: Column, a: int, b: int) -> Column:
-    """One permuted hash: (a * (h mod P) + b) mod P, overflow-safe."""
-    return (F.lit(a) * (h % F.lit(MERSENNE_P)) + F.lit(b)) % F.lit(MERSENNE_P)
-
-
-def minhash_signature(tokens: Column, n_perms: int, seed: int = 7) -> Column:
-    """Array of n_perms minhash values over a (distinct) token array.
-
-    min over tokens of perm_i(hash60(token)) — one expression, no
-    shuffle; the classic shingle→minhash step of MinHash dedup
-    (Broder '97), reference has no equivalent (LLM-pipeline extension).
-    """
-    def perm_fn(a: int, b: int):
-        # single-parameter lambda — PySpark maps lambda arity onto the
-        # higher-order function's argument count, so defaults can't be
-        # used to close over (a, b)
-        return lambda t: minhash_perm(hash60(t), a, b)
-
-    exprs = [
-        F.array_min(F.transform(tokens, perm_fn(a, b)))
-        for a, b in minhash_params(n_perms, seed)
-    ]
-    return F.array(*exprs)
-
-
 def minhash_sig_expr(
     hashes_col: str, n_perms: int, seed: int = 7
 ) -> Column:
     """The minhash signature over a PRE-HASHED long array column, as
-    ONE Spark-SQL parse. Tree-identical to the Column-built form
-    (``array_min(transform(hs, h -> (a*(h%P)+b)%P))`` per perm), so
-    results are bit-identical — but n_perms transform lambdas built
-    through the Column API cost ~10 py4j calls each per invocation
-    (the ``dot()`` lesson, commit 8cfd3a8); this is a single
+    ONE Spark-SQL parse: ``array_min(transform(hs, h -> (a*(h%P)+b)%P))``
+    per permutation, min over the tokens of each permuted hash (the
+    classic shingle→minhash step of MinHash dedup, Broder '97). n_perms
+    transform lambdas built through the Column API would cost ~10 py4j
+    calls each per invocation (the ``dot()`` lesson); this is a single
     ``F.expr`` parse."""
     p = MERSENNE_P
     terms = ", ".join(
@@ -99,8 +78,9 @@ def minhash_sig_expr(
 
 def band_hashes_expr(sig_col: str, bands: int, rows_per_band: int) -> Column:
     """All LSH band keys of a signature column as ONE parsed array
-    expression (explode-ready) — the one-parse twin of ``band_hash``
-    over every band."""
+    expression (explode-ready): band b's key is ``'b,'`` followed by
+    its signature slice joined to a string (portable, no extra
+    hashing needed for bucketing correctness)."""
     parts = ", ".join(
         "concat_ws(',', '{b}', array_join(transform("
         "slice({s}, {o}, {r}), x -> cast(x as string)), ','))".format(
@@ -109,25 +89,6 @@ def band_hashes_expr(sig_col: str, bands: int, rows_per_band: int) -> Column:
         for b in range(bands)
     )
     return F.expr(f"array({parts})")
-
-
-def band_hash(sig: Column, band: int, rows_per_band: int) -> Column:
-    """LSH band key: fingerprint of one signature slice.
-
-    Represented as the slice itself joined to a string (portable, no
-    extra hashing needed for bucketing correctness).
-    """
-    return F.concat_ws(
-        ",",
-        F.lit(str(band)),
-        F.array_join(
-            F.transform(
-                F.slice(sig, band * rows_per_band + 1, rows_per_band),
-                lambda x: x.cast("string"),
-            ),
-            ",",
-        ),
-    )
 
 
 def rolling_fingerprint(tokens: Column) -> Column:
@@ -155,13 +116,3 @@ def spark_hash60(expr: str) -> str:
     ~10 py4j round-trips each per invocation; a single parse costs
     one). Produces the identical expression tree as ``hash60``."""
     return f"cast(conv(substring(md5({expr}), 1, 15), 16, 10) as bigint)"
-
-
-def sql_minhash_sig(tokens_expr: str, n_perms: int, seed: int = 7) -> str:
-    """DuckDB SQL producing the identical minhash signature array."""
-    parts = [
-        f"list_min(list_transform({tokens_expr}, t -> "
-        f"({a} * ({sql_hash60('t')} % {MERSENNE_P}) + {b}) % {MERSENNE_P}))"
-        for a, b in minhash_params(n_perms, seed)
-    ]
-    return "[" + ", ".join(parts) + "]"

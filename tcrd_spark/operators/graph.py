@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from tcrd_spark.functions.folds import sorted_fold_sum
 from tcrd_spark.operators.lineage import _keep, _truncate, cache
 from tcrd_spark.session import memo
 
@@ -534,14 +535,7 @@ def pagerank(
             .join(deg, "src")
             .select("dst", (F.col("pr") / F.col("outdeg")).alias("c"))
         )
-        if exact_fold:
-            s = F.aggregate(
-                F.array_sort(F.collect_list("c")),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-        else:
-            s = F.sum("c")
+        s = sorted_fold_sum("c") if exact_fold else F.sum("c")
         summed = contrib.groupBy("dst").agg(F.round(s, 9).alias("s"))
         ranks = (
             nodes.join(summed, F.col("node") == F.col("dst"), "left")

@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from tcrd_spark.functions.folds import sorted_fold_sum
+
 
 def welch_ttest(
     df: DataFrame, slice_col: str, val_col: str, a: str, b: str
@@ -98,14 +100,7 @@ def chi2_independence(
     return (
         cells.agg(
             F.count("*").alias("n_cells"),
-            F.round(
-                F.aggregate(
-                    F.array_sort(F.collect_list("term")),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                ),
-                6,
-            ).alias("chi2"),
+            F.round(sorted_fold_sum("term"), 6).alias("chi2"),
         )
         .crossJoin(F.broadcast(n_rows))
         .select(

@@ -36,6 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from tcrd_spark.functions.folds import sorted_fold_sum
 from tcrd_spark.pipeline.text import ws_tokens
 
 
@@ -48,15 +49,6 @@ def _token_counts(docs: DataFrame, slice_col: str, text_col: str) -> DataFrame:
         docs.select(F.col(slice_col).alias("slice"), F.explode(toks).alias("token"))
         .groupBy("slice", "token")
         .agg(F.count("*").alias("n"))
-    )
-
-
-def _sorted_fold_sum(col_name: str):
-    """Bit-exact cross-engine double sum: 0.0-seeded left fold over the
-    sorted term list (== DuckDB list_reduce over list_prepend 0.0 +
-    list_sort)."""
-    return F.aggregate(
-        F.array_sort(F.collect_list(col_name)), F.lit(0.0), lambda a, x: a + x
     )
 
 
@@ -88,8 +80,8 @@ def divergence_by_slice(
         (p * F.log(p / q)).alias("kl_term"),
         (0.5 * p * F.log(p / m) + 0.5 * q * F.log(q / m)).alias("js_term"),
     )
-    kl = _sorted_fold_sum("kl_term") if exact_fold else F.sum("kl_term")
-    js = _sorted_fold_sum("js_term") if exact_fold else F.sum("js_term")
+    kl = sorted_fold_sum("kl_term") if exact_fold else F.sum("kl_term")
+    js = sorted_fold_sum("js_term") if exact_fold else F.sum("js_term")
     return terms.groupBy("slice").agg(
         F.max("n_s").alias("n_tokens"),
         F.round(kl, 6).alias("kl_vs_corpus"),

@@ -19,9 +19,8 @@ multiplier is the dominant cost, so `exact_distinct=False` swaps in
 distincts are plain partial-mergeable aggregates, so the Expand
 rewrite disappears and the plan is ONE pass over the raw scan rows.
 Exact stays the adjudicated default (the DuckDB oracle hash-matches
-it); the approx form is the scale path — same split as
-`quality/profile.py`. For richer cardinality sketches plug
-`pipeline/sketches.py` (KMV) or `pipeline/quantiles.py`.
+it); the approx form is the scale path. For richer cardinality
+sketches plug `pipeline/sketches.py` (KMV) or `pipeline/quantiles.py`.
 
 Output is LONG form — one row per column: (col_name, n_rows, n_null,
 n_distinct, min_v, max_v, mean_v) with min/max/mean as strings/

@@ -24,8 +24,7 @@ join of data against data.
 Cross-engine determinism: binning is pure INTEGER arithmetic (floor
 division of non-negative ints — float width_bucket lands on bin-edge
 ulps the engines break differently); the B-term ln-sum folds in
-sorted order (the `pipeline/divergence.py` / TIN-X discipline) and
-rounds to 6dp.
+sorted order (`functions/folds.sorted_fold_sum`) and rounds to 6dp.
 
 Reference parity: none (extension; SURVEY.md §2 corpus-construction
 family — monitoring).
@@ -36,14 +35,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from tcrd_spark.functions.folds import sorted_fold_sum
+
 N_BINS = 10
-
-
-def _sorted_fold_sum(col_name: str):
-    """Bit-exact cross-engine double sum (see pipeline/divergence.py)."""
-    return F.aggregate(
-        F.array_sort(F.collect_list(col_name)), F.lit(0.0), lambda a, x: a + x
-    )
 
 
 def psi_by_slice(
@@ -95,7 +89,7 @@ def psi_by_slice(
         .groupBy("slice")
         .agg(
             F.max("n_s").alias("n_rows"),
-            F.round(_sorted_fold_sum("term"), 6).alias("psi"),
+            F.round(sorted_fold_sum("term"), 6).alias("psi"),
         )
     )
 

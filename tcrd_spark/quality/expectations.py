@@ -16,7 +16,7 @@ pipeline orchestrator gates on.
 Plan shape: one partial+final HashAggregate over the scan (the one
 `count_distinct` in a uniqueness check adds the usual two-phase
 distinct; keep suites to a single distinct-metric column or switch to
-`approx_count_distinct` at extreme scale — same switch quality/
+`approx_count_distinct` at extreme scale — same switch pipeline/
 profile.py documents), then a row-local `stack` unpivot of the 1-row
 metric frame. No joins, no windows, no second scan.
 
@@ -151,6 +151,21 @@ def run_expectations(df: DataFrame, specs: list[dict]) -> DataFrame:
         F.round("metric", 6).alias("metric"),
         passed.cast("int").alias("passed"),
     )
+
+
+def audit_expectations(
+    df: DataFrame, specs: list[dict]
+) -> tuple[list, str]:
+    """The quality gate every commit, export and micro-batch shares:
+    run the suite and return (verdict rows, failure detail). The
+    detail names each failed check as `check_name(metric=…)`, comma
+    separated; it is empty when every check passed."""
+    verdicts = run_expectations(df, specs).collect()
+    detail = ", ".join(
+        f"{r['check_name']}(metric={r['metric']})"
+        for r in verdicts if r["passed"] != 1
+    )
+    return verdicts, detail
 
 
 def run_group_expectations(

@@ -15,15 +15,16 @@ source's DATA:
 - `create_branch` makes `<table>/_branches/<name>/` with its own
   `_manifests` chain seeded by a COPY of the fork version's manifest
   (same version number, so numbering continues from the fork) and a
-  `data` SYMLINK to the source's data directory. Because manifests
-  list files relative to the data dir, every existing verb —
-  read_version, append_version, merge_version, delete_version,
-  optimize_version, read_changes, expectations, the streaming source
-  — works on the branch path UNCHANGED; new files staged on the
-  branch land in the shared data dir under uuid-tagged names no
-  source manifest ever references. (An object-store deployment maps
-  the two prefixes instead of symlinking; the manifest math is
-  identical.)
+  `_branch.json` that records the source's data directory as
+  `data_dir`. Branches and clones fork by this one rule (`_fork`):
+  `snapshots._data_dir` resolves every data path of the fork through
+  that recorded prefix, on a POSIX filesystem and an object store
+  alike. Because manifests list files relative to the data dir,
+  every existing verb — read_version, append_version, merge_version,
+  delete_version, optimize_version, read_changes, expectations, the
+  streaming source — works on the branch path UNCHANGED; new files
+  staged on the branch land in the shared data dir under uuid-tagged
+  names no source manifest ever references.
 - garbage collection has one rule (`snapshots._sweep`): a data file
   or DV sidecar lives while a live manifest of any root the source
   reaches references it — the source, its branches (`_branches/*`),
@@ -49,12 +50,14 @@ source's DATA:
 - `delete_branch` removes the branch's directory and fork tag, then
   sweeps the files and sidecars its subtree (nested branches
   included) referenced that no other root still references. It
-  refuses while a registered clone of the branch exists: a clone
-  records its data dir through the branch's path.
+  refuses while a registered clone of the branch exists: the clone
+  reads the root's data dir, but its registry entry lives under the
+  branch's `_clones/`, so the source's GC walk reaches the clone only
+  through the branch.
 
-100 TB shape: fork is O(1) (one manifest copy + one symlink + one
-tag) — no data moves, ever; merge moves manifests, not bytes; the
-branch's isolation is the manifest namespace, not a data copy.
+100 TB shape: fork is O(1) (one manifest copy, one `_branch.json`
+and one tag) — no data moves, ever; merge moves manifests, not bytes;
+the branch's isolation is the manifest namespace, not a data copy.
 
 Reference parity: none (lakehouse extension; with sources/snapshots.py).
 """
@@ -117,60 +120,59 @@ def list_branches(table_dir: str) -> dict[str, dict]:
     return out
 
 
-def create_branch(
-    table_dir: str, name: str, version: int | None = None,
-    no_symlink: bool = False,
-) -> str:
-    """Fork `table_dir` at `version` (default: head) into a writable
-    branch; returns the branch directory — a full table path every
-    existing verb accepts. O(1): no data is copied or moved.
-
-    Data sharing has two modes. Default: a `data` symlink into the
-    source (POSIX filesystems). `no_symlink=True` — or a filesystem
-    whose `os.symlink` raises (object-store mounts, some network
-    filesystems) — records the source data dir as `data_dir` in
-    `_branch.json` instead, and `snapshots._data_dir` resolves every
-    branch data path through that prefix mapping. The manifest math
-    is identical in both modes (manifests list files relative to the
-    data dir either way)."""
+def _fork(
+    table_dir: str, dest: str, tag: str, version: int | None,
+    then=None, **meta,
+) -> None:
+    """The one fork rule `create_branch` and `clone_table` seed
+    through: tag `version` (default: head) of `table_dir` as `tag`,
+    claim `dest`'s `_manifests`, publish a copy of that version's
+    manifest as `dest`'s seed (same version number, so numbering
+    continues from the fork), then publish `dest/_branch.json` with
+    `meta` and `data_dir`, the source's data dir, through which
+    `snapshots._data_dir` resolves every data path of `dest`. `then`
+    (the fork version) runs last. If any step fails, everything
+    published is rolled back."""
     m = _head(table_dir, version)
     v = m["version"]
     store = get_store()
-    bdir = _branch_dir(table_dir, name)
-    if os.path.exists(bdir) or store.exists(bdir):
-        raise FileExistsError(f"branch {name!r} exists at {table_dir}")
-    # the fork tag keeps the fork version readable on the source
-    # (retention); the branch's files live by the GC walk, not the tag
-    tag_version(table_dir, _fork_tag(name), v)
-    meta = {"name": name, "source": os.path.abspath(table_dir),
-            "fork_version": v}
+    if os.path.exists(dest) or store.exists(dest):
+        raise FileExistsError(f"fork destination exists: {dest}")
+    tag_version(table_dir, tag, v)
     try:
-        store.claim_dir(_manifest_dir(bdir))
-        if no_symlink or not store.supports_symlink:
-            meta["data_dir"] = os.path.abspath(_data_dir(table_dir))
-        else:
-            try:
-                os.makedirs(bdir, exist_ok=True)
-                os.symlink(
-                    os.path.relpath(_data_dir(table_dir), bdir),
-                    _data_dir(bdir),
-                )
-            except OSError:
-                # symlink-less filesystem: fall back to the prefix map
-                meta["data_dir"] = os.path.abspath(_data_dir(table_dir))
+        store.claim_dir(_manifest_dir(dest))
         _publish_exclusive(
-            _manifest_path(bdir, v), m,
-            f"branch seed v{v} already exists",
+            _manifest_path(dest, v), m, f"fork seed v{v} already exists"
         )
         _publish_exclusive(
-            os.path.join(bdir, "_branch.json"), meta,
-            f"branch meta for {name!r} already exists",
+            os.path.join(dest, "_branch.json"),
+            {**meta, "source": os.path.abspath(table_dir),
+             "fork_version": v,
+             "data_dir": os.path.abspath(_data_dir(table_dir))},
+            f"fork meta for {dest!r} already exists",
         )
+        if then is not None:
+            then(v)
     except Exception:
-        shutil.rmtree(bdir, ignore_errors=True)
-        store.remove_tree(bdir)
-        delete_tag(table_dir, _fork_tag(name))
+        shutil.rmtree(dest, ignore_errors=True)
+        store.remove_tree(dest)
+        delete_tag(table_dir, tag)
         raise
+
+
+def create_branch(
+    table_dir: str, name: str, version: int | None = None
+) -> str:
+    """Fork `table_dir` at `version` (default: head) into a writable
+    branch; returns the branch directory — a full table path every
+    existing verb accepts. O(1): no data is copied or moved. The
+    branch reaches the source's data through the `data_dir` its
+    `_branch.json` records (`_fork`); a branch of a branch records
+    the root's data dir. The fork tag keeps the fork version readable
+    on the source (retention); the branch's files live by the GC
+    walk, not the tag."""
+    bdir = _branch_dir(table_dir, name)
+    _fork(table_dir, bdir, _fork_tag(name), version, name=name)
     return bdir
 
 
@@ -292,8 +294,10 @@ def clone_table(
     ref made into a table): `dest_dir` becomes an INDEPENDENT
     versioned table whose manifest chain seeds from `version`
     (default: head) and whose data paths resolve through the
-    `_branch.json` prefix mapping to the source's data dir — no bytes
-    move, ever. Differences from a branch: the clone lives at an
+    `_branch.json` `data_dir` to the source's data dir, by the same
+    fork rule as a branch (`_fork`) — no bytes move, ever. A clone of
+    a branch records the root's data dir, not a path through the
+    branch. Differences from a branch: the clone lives at an
     arbitrary path, never merges back, and has its own history
     forever; it shares the branch rules that matter (every verb works
     on it; files it stages land in the SHARED data dir under names no
@@ -307,45 +311,24 @@ def clone_table(
     skips it. The automatic `clone-<basename>` tag pins the fork
     version on the source for retention; dropping it does not
     abandon the clone."""
-    m = _head(table_dir, version)
-    v = m["version"]
-    store = get_store()
-    if os.path.exists(dest_dir) or store.exists(dest_dir):
-        raise FileExistsError(f"clone destination exists: {dest_dir}")
     tag = clone_tag(dest_dir)
-    tag_version(table_dir, tag, v)
-    try:
-        store.claim_dir(_manifest_dir(dest_dir))
+    entry = os.path.join(table_dir, "_clones", f"{tag}.json")
+
+    def register(v: int) -> None:
+        # register the clone on the SOURCE so the GC walk sees the
+        # clone's manifests (clone-staged files live in the shared
+        # data dir and would otherwise look orphaned)
+        get_store().makedirs(os.path.dirname(entry))
         _publish_exclusive(
-            _manifest_path(dest_dir, v), m,
-            f"clone seed v{v} already exists",
-        )
-        _publish_exclusive(
-            os.path.join(dest_dir, "_branch.json"),
-            {"name": os.path.basename(os.path.normpath(dest_dir)),
-             "source": os.path.abspath(table_dir),
-             "fork_version": v, "clone": True, "gc_tag": tag,
-             "data_dir": os.path.abspath(_data_dir(table_dir))},
-            f"clone meta for {dest_dir!r} already exists",
-        )
-        # register the clone on the SOURCE so remove_orphans can see
-        # the clone's manifests (clone-staged files live in the
-        # shared data dir and would otherwise look orphaned)
-        store.makedirs(os.path.join(table_dir, "_clones"))
-        _publish_exclusive(
-            os.path.join(table_dir, "_clones", f"{tag}.json"),
-            {"dest": os.path.abspath(dest_dir), "fork_version": v},
+            entry, {"dest": os.path.abspath(dest_dir), "fork_version": v},
             f"clone registry entry {tag} already exists",
         )
-    except Exception:
-        shutil.rmtree(dest_dir, ignore_errors=True)
-        store.remove_tree(dest_dir)
-        delete_tag(table_dir, tag)
-        try:
-            store.unlink(os.path.join(table_dir, "_clones", f"{tag}.json"))
-        except FileNotFoundError:
-            pass
-        raise
+
+    _fork(
+        table_dir, dest_dir, tag, version, then=register,
+        name=os.path.basename(os.path.normpath(dest_dir)),
+        clone=True, gc_tag=tag,
+    )
     return dest_dir
 
 
@@ -368,7 +351,10 @@ def delete_branch(table_dir: str, name: str) -> list[str]:
     included) and the fork tag, then sweep the data files and DV
     sidecars its subtree referenced that no other root of the table
     still references. Refuses while a registered clone of the branch,
-    or of a branch nested under it, still exists. Returns the removed
+    or of a branch nested under it, still exists: the clone's registry
+    entry lives under the branch's `_clones/`, so once the branch is
+    gone the source's GC walk (`snapshots._roots`) no longer reaches
+    the clone and would reclaim files it reads. Returns the removed
     data files."""
     bdir = os.path.abspath(_branch_dir(table_dir, name))
     if not get_store().exists(os.path.join(bdir, "_branch.json")):
@@ -379,7 +365,8 @@ def delete_branch(table_dir: str, name: str) -> list[str]:
     if clones:
         raise ValueError(
             f"delete_branch refused: branch {name!r} has live clones "
-            f"{clones} that read through it — remove them first"
+            f"{clones} registered under it, which the source's GC walk "
+            "reaches only through the branch — remove them first"
         )
     files, dv = _referenced(bdir)
     shutil.rmtree(bdir, ignore_errors=True)

@@ -73,14 +73,10 @@ def _enforce_gates(df: DataFrame, expectations, k_anon) -> None:
     """Refuse-before-staging: every verdict is NAMED in the error so
     the publisher knows exactly which gate blocked the release."""
     if expectations:
-        from tcrd_spark.quality.expectations import run_expectations
+        from tcrd_spark.quality.expectations import audit_expectations
 
-        verdicts = run_expectations(df, expectations).collect()
-        failed = [r for r in verdicts if r["passed"] != 1]
-        if failed:
-            detail = ", ".join(
-                f"{r['check_name']}(metric={r['metric']})" for r in failed
-            )
+        _, detail = audit_expectations(df, expectations)
+        if detail:
             raise ValueError(
                 f"export refused — failed expectations: {detail}"
             )

@@ -82,12 +82,11 @@ def _manifest_dir(table_dir: str) -> str:
 
 
 def _data_dir(table_dir: str) -> str:
-    """The table's data directory. A branch normally shares its
-    source's data via a `data` symlink; on filesystems without
-    symlinks (object stores), `create_branch(no_symlink=True)` records
-    the source data dir in `_branch.json` instead and every path
-    resolves through this prefix mapping — same manifest math, no
-    symlink syscall anywhere."""
+    """The table's data directory: `<table>/data` when it exists,
+    else the `data_dir` a branch's or clone's `_branch.json` records
+    (`branches._fork`), the source's data dir, through which every
+    data path of the fork resolves — the same prefix mapping on a
+    POSIX filesystem and an object store."""
     d = os.path.join(table_dir, "data")
     if not os.path.exists(d):
         bj = os.path.join(table_dir, "_branch.json")
@@ -126,11 +125,13 @@ def _manifest_path(table_dir: str, version: int) -> str:
 
 def _dv_dir(table_dir: str) -> str:
     """DV sidecars live in the DATA namespace (`<table>/_dv`, beside
-    `<table>/data`), resolved through the same symlink/prefix mapping
+    `<table>/data`), resolved through the same recorded `data_dir`
     branches and clones use for data files: a branch's dv delete
     writes into the SHARED sidecar dir under a uuid name no source
     manifest references — exactly the staged-data-file discipline —
-    and source-inherited dv names keep resolving on the branch."""
+    and source-inherited dv names keep resolving on the branch.
+    `realpath` follows the `data` symlink of a branch made before
+    forks recorded `data_dir`."""
     base = os.path.realpath(os.path.abspath(_data_dir(table_dir)))
     return os.path.join(os.path.dirname(base), "_dv")
 
@@ -466,14 +467,10 @@ def _enforce_expectations(df: DataFrame, specs) -> None:
     incoming frame's one-pass verdict suite must be all-green or the
     commit NEVER STAGES A BYTE. Cost: one aggregate pass over the
     batch being committed — not the table."""
-    from tcrd_spark.quality.expectations import run_expectations
+    from tcrd_spark.quality.expectations import audit_expectations
 
-    verdicts = run_expectations(df, specs).collect()
-    failed = [r for r in verdicts if r["passed"] != 1]
-    if failed:
-        detail = ", ".join(
-            f"{r['check_name']}(metric={r['metric']})" for r in failed
-        )
+    _, detail = audit_expectations(df, specs)
+    if detail:
         raise ValueError(f"commit refused — failed expectations: {detail}")
 
 
@@ -806,15 +803,10 @@ def streaming_snapshot_append(
 
     def _one(batch_df: DataFrame, batch_id: int, txn: str) -> None:
         if expectations is not None:
-            from tcrd_spark.quality.expectations import run_expectations
+            from tcrd_spark.quality.expectations import audit_expectations
 
-            verdicts = run_expectations(batch_df, expectations).collect()
-            failed = [r for r in verdicts if r["passed"] != 1]
-            if failed:
-                detail = ", ".join(
-                    f"{r['check_name']}(metric={r['metric']})"
-                    for r in failed
-                )
+            verdicts, detail = audit_expectations(batch_df, expectations)
+            if detail:
                 if quarantine_dir is None:
                     raise ValueError(
                         f"micro-batch {batch_id} failed expectations "

@@ -237,7 +237,7 @@ def test_branch_lifecycle_without_symlinks(
     UNAVAILABLE (raising OSError, as on object-store mounts), the
     whole branch lifecycle — fork, isolated commits, streaming tail,
     rewrite fast-forward, vacuum safety, delete — runs through the
-    _branch.json prefix mapping instead of the data symlink."""
+    _branch.json prefix mapping; nothing calls os.symlink."""
     from tcrd_spark.streaming.lake_source import LakeCommitsDataSource
 
     table, seed = _mk(spark, sf_dir, tmp_path)
@@ -247,7 +247,7 @@ def test_branch_lifecycle_without_symlinks(
 
     monkeypatch.setattr(os, "symlink", no_symlink)
     bdir = br.create_branch(table, "wip")
-    # no symlink exists; the mapping is recorded instead
+    # no link exists; the mapping is recorded
     assert not os.path.lexists(os.path.join(bdir, "data"))
     assert br._branch_meta(bdir)["data_dir"] == os.path.abspath(
         snap._data_dir(table)
@@ -290,16 +290,22 @@ def test_branch_lifecycle_without_symlinks(
     assert snap.read_version(spark, table).count() == seed.count() + 4
 
 
-def test_create_branch_explicit_no_symlink(spark, sf_dir, tmp_path):
-    """no_symlink=True opts into the prefix mapping even where
-    symlinks work — the deployment knob for object-store paths."""
+def test_forks_record_the_root_data_dir(spark, sf_dir, tmp_path):
+    """One fork rule: a branch makes no `data` link, and a branch of a
+    branch and a clone of a branch both record the ROOT's data dir,
+    so neither reads through the branch's directory."""
     table, seed = _mk(spark, sf_dir, tmp_path)
-    bdir = br.create_branch(table, "wip", no_symlink=True)
+    root_data = os.path.abspath(snap._data_dir(table))
+    bdir = br.create_branch(table, "wip")
     assert not os.path.lexists(os.path.join(bdir, "data"))
-    assert "data_dir" in br._branch_meta(bdir)
+    assert br._branch_meta(bdir)["data_dir"] == root_data
+    inner = br.create_branch(bdir, "inner")
+    assert br._branch_meta(inner)["data_dir"] == root_data
     snap.append_version(bdir, _shift(seed.limit(2), 10**9))
-    assert snap.read_version(spark, bdir).count() == seed.count() + 2
-    assert snap.read_version(spark, table).count() == seed.count()
+    dest = str(tmp_path / "cl")
+    br.clone_table(bdir, dest)
+    assert br._branch_meta(dest)["data_dir"] == root_data
+    assert snap.read_version(spark, dest).count() == seed.count() + 2
 
 
 def test_fast_forward_merge_is_one_squash_manifest(
@@ -441,8 +447,8 @@ def test_gc_verbs_keep_every_live_root_readable(
     """After each GC verb every surviving root reads its pre-GC rows at
     every live version. vacuum must keep the branch's merged file that
     only the branch (and its clone) still references; delete_branch
-    refuses while a clone reads through the branch, and once that
-    clone is gone it leaves the source and its clone intact."""
+    refuses while a clone is registered under the branch, and once
+    that clone is gone it leaves the source and its clone intact."""
     import shutil
 
     roots = _gc_lake(spark, sf_dir, tmp_path)

@@ -376,21 +376,21 @@ def test_write_and_read_corpus_shards(spark, sf_dir, tmp_path):
 
 
 def test_profile_table_values(spark):
-    from tcrd_spark.quality.profile import profile_table
+    from tcrd_spark.pipeline.profile import profile_table
 
     df = spark.createDataFrame(
         [(1, "b", None), (2, "a", 5.0), (2, None, 7.0)],
         "id long, s string, v double",
     )
-    rows = {r["column"]: r for r in profile_table(df).collect()}
-    assert rows["id"]["n_rows"] == 3 and rows["id"]["n_nulls"] == 0
+    rows = {r["col_name"]: r for r in profile_table(df).collect()}
+    assert rows["id"]["n_rows"] == 3 and rows["id"]["n_null"] == 0
     assert rows["id"]["n_distinct"] == 2
-    assert rows["id"]["min_value"] == "1" and rows["id"]["max_value"] == "2"
-    assert rows["s"]["n_nulls"] == 1 and rows["s"]["n_distinct"] == 2
-    assert rows["s"]["min_value"] == "a" and rows["s"]["max_value"] == "b"
-    assert rows["v"]["n_nulls"] == 1
+    assert rows["id"]["min_v"] == "1" and rows["id"]["max_v"] == "2"
+    assert rows["s"]["n_null"] == 1 and rows["s"]["n_distinct"] == 2
+    assert rows["s"]["min_v"] == "a" and rows["s"]["max_v"] == "b"
+    assert rows["v"]["n_null"] == 1
     # numeric min/max computed in the native type, then cast
-    assert rows["v"]["min_value"] == "5.0" and rows["v"]["max_value"] == "7.0"
+    assert rows["v"]["min_v"] == "5.0" and rows["v"]["max_v"] == "7.0"
 
 
 def test_corpus_ops_degenerate_inputs(spark):
@@ -452,15 +452,15 @@ def test_profile_approx_distinct_within_bound(spark, sf_dir):
     within HLL's default ±5%-ish envelope of the exact counts on the
     real documents table — the evidence behind 'swap the flag at
     extreme scale'."""
-    from tcrd_spark.quality.profile import profile_table
+    from tcrd_spark.pipeline.profile import profile_table
     from tcrd_spark.sources.lake import load_table
 
     docs = load_table(spark, sf_dir, "documents")
     exact = {
-        r["column"]: r["n_distinct"] for r in profile_table(docs).collect()
+        r["col_name"]: r["n_distinct"] for r in profile_table(docs).collect()
     }
     approx = {
-        r["column"]: r["n_distinct"]
+        r["col_name"]: r["n_distinct"]
         for r in profile_table(docs, exact_distinct=False).collect()
     }
     for col, n in exact.items():

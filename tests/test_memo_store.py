@@ -472,3 +472,39 @@ def test_one_exactly_once_rule_for_stream_sinks():
                     )
     assert found["launch"] == [SINK_LAUNCH], found["launch"]
     assert found["write"] == [SINK_WRITE], found["write"]
+
+
+# The one fork rule (sources/branches.py): a branch or a clone reaches
+# its source's data only through the `data_dir` its `_branch.json`
+# records, and only the fork helper publishes that object.
+FORK_HELPER = "sources/branches.py::_fork"
+PUBLISHES = {"_publish_exclusive", "publish_exclusive"}
+
+
+def test_one_fork_rule():
+    """No os.symlink call in tcrd_spark/sources/, and only the fork
+    helper publishes a `_branch.json`."""
+    import ast
+
+    links: list[str] = []
+    publishers: set[str] = set()
+    for rel, text in _sources():
+        if not rel.startswith("sources" + os.sep):
+            continue
+        tree = ast.parse(text)
+        links += [
+            f"{rel}:{n.lineno}" for n in ast.walk(tree)
+            if isinstance(n, ast.Call)
+            and getattr(n.func, "attr", getattr(n.func, "id", None))
+            == "symlink"
+        ]
+        funcs = [n for n in ast.walk(tree) if isinstance(n, ast.FunctionDef)]
+        for fn in funcs:
+            for i in _derived_calls(fn, {"_branch.json"}, PUBLISHES):
+                owner = min(
+                    (n for n in funcs if n.lineno <= i <= n.end_lineno),
+                    key=lambda n: n.end_lineno - n.lineno,
+                )
+                publishers.add(f"{rel}::{owner.name}")
+    assert not links, links
+    assert publishers == {FORK_HELPER}, publishers
