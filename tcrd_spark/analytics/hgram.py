@@ -66,7 +66,6 @@ def hgram_cdfs(
     entity_col: str,
     type_col: str,
     count_col: str,
-    use_erf: bool = True,
 ) -> DataFrame:
     """counts: (entity, type, attr_count) → + (mu, sigma, attr_cdf).
     Stats join is broadcast (one row per type). σ=0 groups are dropped,
@@ -76,12 +75,9 @@ def hgram_cdfs(
     stats = attr_stats(counts, type_col, count_col)
     joined = counts.join(F.broadcast(stats), type_col)
     x, mu, sg = F.col(count_col), F.col("mu"), F.col("sigma")
-    if use_erf:
-        cdf = F.when(sg > 0, gaussian_cdf_col(x, mu, sg)).otherwise(
-            logistic_cdf_col(x, mu, sg)
-        )
-    else:
-        cdf = logistic_cdf_col(x, mu, sg)
+    cdf = F.when(sg > 0, gaussian_cdf_col(x, mu, sg)).otherwise(
+        logistic_cdf_col(x, mu, sg)
+    )
     return joined.withColumn("attr_cdf", F.round(cdf, 6)).filter(
         F.col("attr_cdf").isNotNull()
     )

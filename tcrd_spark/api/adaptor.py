@@ -84,22 +84,31 @@ def find_targets(lake: dict[str, DataFrame], **criteria) -> DataFrame:
     return df.select("target_id").distinct()
 
 
-def find_targets_by_xref(
-    lake: dict[str, DataFrame], xtype: str, value: str
+def _attached_targets(
+    lake: dict[str, DataFrame], rows: DataFrame
 ) -> DataFrame:
-    """Two-branch xref lookup: target-attached ∪ protein-attached,
-    deduped (`loaders/TCRD.py:2300-2353`, union+set() at :2338-2342)."""
-    x = lake["xref"].filter(
-        (F.col("xtype") == xtype) & (F.col("value") == value)
-    )
-    direct = x.filter(F.col("target_id").isNotNull()).select("target_id")
+    """Distinct target_ids of `rows` through either attachment: the
+    rows' own `target_id` ∪ their `protein_id` mapped through t2tc —
+    the reference's two-branch union+set() (`loaders/TCRD.py:
+    2338-2342`)."""
+    direct = rows.filter(F.col("target_id").isNotNull()).select("target_id")
     via_protein = (
-        x.filter(F.col("protein_id").isNotNull())
+        rows.filter(F.col("protein_id").isNotNull())
         .select("protein_id")
         .join(lake["t2tc"], "protein_id")
         .select("target_id")
     )
     return direct.unionByName(via_protein).distinct()
+
+
+def find_targets_by_xref(
+    lake: dict[str, DataFrame], xtype: str, value: str
+) -> DataFrame:
+    """Two-branch xref lookup: target-attached ∪ protein-attached,
+    deduped (`loaders/TCRD.py:2300-2353`)."""
+    return _attached_targets(lake, lake["xref"].filter(
+        (F.col("xtype") == xtype) & (F.col("value") == value)
+    ))
 
 
 def find_targets_by_alias(

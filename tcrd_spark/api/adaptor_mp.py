@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from tcrd_spark.api.adaptor import _attached_targets
+
 
 # ------------------------------------------------------------- expression
 
@@ -226,17 +228,9 @@ def get_pathway_targets(
     lake: dict[str, DataFrame], pwtype: str, name: str
 ) -> DataFrame:
     """`TCRDMP.py:3466-3489` — target_ids on one named pathway."""
-    pw = lake["pathway"].filter(
+    return _attached_targets(lake, lake["pathway"].filter(
         (F.col("pwtype") == pwtype) & (F.col("name") == name)
-    )
-    direct = pw.filter(F.col("target_id").isNotNull()).select("target_id")
-    via_protein = (
-        pw.filter(F.col("protein_id").isNotNull())
-        .select("protein_id")
-        .join(lake["t2tc"], "protein_id")
-        .select("target_id")
-    )
-    return direct.unionByName(via_protein).distinct()
+    ))
 
 
 def get_diseases(
@@ -252,15 +246,9 @@ def get_diseases(
 def get_disease_targets(lake: dict[str, DataFrame], did: str) -> DataFrame:
     """`TCRDMP.py:3519-3542` — target_ids associated with one disease
     id, through either attachment branch."""
-    dz = lake["disease"].filter(F.col("did") == did)
-    direct = dz.filter(F.col("target_id").isNotNull()).select("target_id")
-    via_protein = (
-        dz.filter(F.col("protein_id").isNotNull())
-        .select("protein_id")
-        .join(lake["t2tc"], "protein_id")
-        .select("target_id")
+    return _attached_targets(
+        lake, lake["disease"].filter(F.col("did") == did)
     )
-    return direct.unionByName(via_protein).distinct()
 
 
 def get_phenotypes(

@@ -37,7 +37,6 @@ def stage(
     root: str,
     name: str,
     build: Callable[[], DataFrame],
-    force: bool = False,
 ) -> DataFrame:
     """Return the stage's DataFrame, computing it at most once per
     ``root``: reuse ``<root>/<name>`` when a completed write exists,
@@ -45,8 +44,6 @@ def stage(
     downstream lineage starts at the parquet scan — also the
     lineage-cut that keeps iterative pipelines analyzable)."""
     final = stage_path(root, name)
-    if force and os.path.isdir(final):
-        shutil.rmtree(final)
     if not is_complete(root, name):
         tmp = final + ".__stage_tmp__"
         if os.path.isdir(tmp):
@@ -62,11 +59,9 @@ def run_stages(
     spark: SparkSession,
     root: str,
     stages: list[tuple[str, Callable[[DataFrame | None], DataFrame]]],
-    force: bool = False,
 ) -> DataFrame:
     """Chain named stages, each receiving the previous stage's (read
-    back) DataFrame; completed stages are skipped on rerun. ``force``
-    recomputes everything from the first stage."""
+    back) DataFrame; completed stages are skipped on rerun."""
     os.makedirs(root, exist_ok=True)
     prev: DataFrame | None = None
     for i, (name, fn) in enumerate(stages):
@@ -76,7 +71,6 @@ def run_stages(
             root,
             f"{i:02d}_{name}",
             lambda p=prev_df, f=fn: f(p),
-            force=force,
         )
     assert prev is not None, "run_stages: empty stage list"
     return prev

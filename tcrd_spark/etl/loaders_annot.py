@@ -44,9 +44,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from tcrd_spark.etl.loaders import STRING_TAXON_PREFIX
 from tcrd_spark.etl.resolve import Resolution, resolve
-
-STRING_TAXON_PREFIX = "9606."
 
 # ---------------------------------------------------------- JensenLab
 

@@ -425,15 +425,14 @@ def load_lincs(
     spark: SparkSession,
     csv_path: str,
     protein: DataFrame,
-    partition_by_protein: bool = True,
 ) -> LincsLoad:
     """LINCS level-5 export CSV (`geneid, zscore, pert_dcid,
     pert_smiles, cellid`) → lincs rows (`loaders/load-LINCS.py:
     92-116`). 84M rows in the reference (16h41m of INSERTs,
     `doc/README_v6.txt:1985-1988`); here one broadcast-joined scan.
-    `partition_by_protein` clusters output by protein_id so the
-    dominant downstream access path (per-target signature slices)
-    prunes instead of shuffling."""
+    Output is clustered by protein_id so the dominant downstream
+    access path (per-target signature slices) prunes instead of
+    shuffling."""
     raw = spark.read.csv(
         csv_path,
         schema=("geneid int, zscore double, pert_dcid string, "
@@ -443,6 +442,6 @@ def load_lincs(
                   [("geneid", "geneid")], id_col="id", out_col="protein_id")
     rows = res.resolved.select("protein_id", "cellid", "zscore",
                                "pert_dcid", "pert_smiles")
-    if partition_by_protein:
-        rows = rows.repartition("protein_id")
-    return LincsLoad(lincs=rows, notfnd=res.unresolved)
+    return LincsLoad(
+        lincs=rows.repartition("protein_id"), notfnd=res.unresolved
+    )

@@ -22,10 +22,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tcrd_spark.analytics import tinx as tinx_scores
+from tcrd_spark.etl.loaders import STRING_TAXON_PREFIX
 from tcrd_spark.etl.resolve import resolve
 from tcrd_spark.sources.obo import read_obo
-
-STRING_TAXON_PREFIX = "9606."
 
 
 def _mentions_long(

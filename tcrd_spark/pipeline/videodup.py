@@ -43,12 +43,11 @@ corpus-curation point; consumers wanting whole-clip duplicates only
 raise min_overlap (a 16-bit band collision alone never qualifies —
 verification requires a full 64-bit frame to be close).
 
-Three tiers, one bit contract (the imagedup discipline):
+Two tiers, one bit contract (the imagedup discipline); real frame
+extraction needs a video decoder, which no tier has (the multimodal
+honesty rule, `multimodal.sample_frames`):
 
-- `video_fingerprints(real_decode=True)` raises NotImplementedError —
-  real frame extraction needs a video decoder this container doesn't
-  ship (the multimodal honesty rule, `multimodal.sample_frames`).
-- `video_fingerprints(real_decode=False)`: deterministic fake —
+- `video_fingerprints`: deterministic fake —
   frames are contiguous byte slices of the payload at stride
   len/N_FRAMES, each dHashed with `imagedup._fake_grid`; for ASCII
   payloads bit-identical to the expression twin (pytest-pinned).
@@ -190,20 +189,16 @@ def video_fingerprints(
     media: DataFrame,
     id_col: str = "doc_id",
     n_frames: int = N_FRAMES,
-    real_decode: bool = False,
 ) -> DataFrame:
     """mapInPandas frame-sample + dHash over the binary payload column
     → (id, frame_idx, b0..b3). Arrow-batched, 1→n_frames fan-out
     inside the UDF; payloads never leave the scan task — only the
-    band ints shuffle downstream. real_decode raises (no video
-    library in this container; `multimodal.sample_frames` contract)."""
+    band ints shuffle downstream. Frames are the deterministic fake's
+    byte slices: real frame extraction needs a video decoder
+    (`multimodal.sample_frames` contract)."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            if real_decode:
-                raise NotImplementedError(
-                    "real frame sampling requires a video library"
-                )
             ids, idxs, cols = [], [], {f"b{j}": [] for j in range(BANDS)}
             for i, p in zip(pdf[id_col], pdf["payload"]):
                 p = bytes(p)

@@ -39,14 +39,15 @@ source's DATA:
   source files, so per-branch retention GC could delete data live in
   the source. Merge or delete the branch, then vacuum the source.
 - `merge_branch`: pure-APPEND branches replay onto the CURRENT
-  source head even if the source advanced since the fork (appends
-  conflict with nothing — the optimistic-append rule), through the
-  same manifest CAS every writer uses. Branches containing REWRITE
-  commits (merge/delete/optimize) merge only fast-forward (source
-  still at the fork version) — their file lists encode the fork-time
-  table state, so replaying them onto a moved head would silently
-  drop the source's newer rows; otherwise the merge raises a
-  conflict and the caller re-forks.
+  source head even if the source advanced since the fork, by the
+  one append-rebase rule `append_version` commits through
+  (`snapshots._append_commit`): a blind append conflicts only with a
+  concurrent change to the table's schema or partition spec.
+  Branches containing REWRITE commits (merge/delete/optimize) merge
+  only fast-forward (source still at the fork version) — their file
+  lists encode the fork-time table state, so replaying them onto a
+  moved head would silently drop the source's newer rows; otherwise
+  the merge raises a conflict and the caller re-forks.
 - `delete_branch` removes the branch's directory and fork tag, then
   sweeps the files and sidecars its subtree (nested branches
   included) referenced that no other root still references. It
@@ -71,6 +72,7 @@ from pyspark.sql import SparkSession
 
 from tcrd_spark.sources.metastore import get_store
 from tcrd_spark.sources.snapshots import (
+    _append_commit,
     _commit,
     _data_dir,
     _head,
@@ -185,9 +187,15 @@ def merge_branch(
     spark: SparkSession, table_dir: str, name: str
 ) -> int:
     """Publish the branch's commits onto the source; returns the new
-    source head. Append-only branches merge onto a MOVED head;
-    branches with rewrite commits fast-forward only (else raises).
-    The branch itself is left intact — `delete_branch` retires it."""
+    source head. Append-only branches merge onto a MOVED head: each
+    branch append's added files replay as one source commit by the
+    append-rebase rule every append follows (`snapshots._append_commit`:
+    a lost CAS rebases, a source whose schema or partition spec
+    changed since the fork raises ValueError, and the commit records
+    the source's schema when the branch staged under the same one,
+    else the one inference over its files). Branches with rewrite
+    commits fast-forward only (else raises). The branch itself is
+    left intact — `delete_branch` retires it."""
     bdir = _branch_dir(table_dir, name)
     if not get_store().exists(os.path.join(bdir, "_branch.json")):
         raise FileNotFoundError(f"no branch {name!r} at {table_dir}")
@@ -198,54 +206,20 @@ def merge_branch(
         return src_head
     ops = {v: _read_manifest(bdir, v)["op"] for v in new_vs}
     if all(op in _APPEND_OPS for op in ops.values()):
-        # replay each append's ADDED files onto the live head via the
-        # standard manifest CAS — safe under concurrent writers
+        # replay each append's ADDED files onto the live head by the
+        # one append-rebase rule — safe under concurrent writers
         for v in new_vs:
             bm = _read_manifest(bdir, v)
             prev = set(_read_manifest(bdir, bm["parent"])["files"])
             added = [f for f in bm["files"] if f not in prev]
-            added_stats = {
-                f: s for f, s in bm.get("stats", {}).items() if f in set(added)
-            }
-            while True:
-                cur = versions(table_dir)[-1]
-                cm = _read_manifest(table_dir, cur)
-                if cm["columns"] != bm["columns"]:
-                    raise ValueError(
-                        "merge conflict: source schema changed — "
-                        f"{cm['columns']} vs branch {bm['columns']}"
-                    )
-                if cm["part_col"] != bm["part_col"]:
-                    # repartition_table on the source since the fork:
-                    # attaching branch files would mix two hive
-                    # layouts in one manifest and break partition
-                    # discovery on the merged head
-                    raise ValueError(
-                        "merge conflict: source partition spec changed "
-                        f"({bm['part_col']!r} → {cm['part_col']!r}) "
-                        "since the fork — re-fork and replay"
-                    )
-                try:
-                    _commit(table_dir, {
-                        "version": cur + 1, "parent": cur,
-                        "op": "append", "merged_from": name,
-                        # the branch files were staged under the
-                        # branch's schema: a source whose schema
-                        # differs reads the merged head by inference
-                        **_layout(cm, schema=(
-                            cm.get("schema")
-                            if cm.get("schema") == bm.get("schema")
-                            else None
-                        )),
-                        "files": sorted(set(cm["files"]) | set(added)),
-                        "stats": {**cm.get("stats", {}), **added_stats},
-                        # the SOURCE head's dv state — append-only
-                        # branches cannot add dv commits
-                        "dv": cm.get("dv", []),
-                    })
-                    break
-                except FileExistsError:
-                    continue  # lost the CAS to a concurrent writer
+            stats = bm.get("stats", {})
+            _append_commit(
+                spark, table_dir, bm, added,
+                {f: stats[f] for f in added if f in stats},
+                {"merged_from": name},
+                # the files were staged under the branch's schema
+                lambda schema, want=bm.get("schema"): schema == want,
+            )
         return versions(table_dir)[-1]
     if src_head != fork_v:
         raise ValueError(

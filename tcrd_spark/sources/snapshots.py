@@ -68,13 +68,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructType
 
 from tcrd_spark.sources.merge import merge_frames, sql_name
-from tcrd_spark.sources.metastore import (  # metadata-plane seam
-    _WIP_TIMEOUT,  # noqa: F401  (tests pin the posix protocol via here)
-    _fallback_publish,  # noqa: F401
-    _repair_aborted,  # noqa: F401
-    get_store,
-    use_store,  # noqa: F401  (re-export: the deployment/test knob)
-)
+from tcrd_spark.sources.metastore import get_store  # metadata-plane seam
 
 
 def _manifest_dir(table_dir: str) -> str:
@@ -611,7 +605,12 @@ def checkpoint_manifests(table_dir: str) -> int:
 
 def _walk_headers(table_dir: str) -> dict[int, dict]:
     """{version: header} for every LIVE version — checkpoint entries
-    for the covered prefix, manifest reads only beyond it."""
+    for the covered prefix, manifest reads only beyond it, each parsed
+    once per file identity (`_parsed`): manifests are immutable, so a
+    streaming sink's per-trigger txn guard re-reads no JSON it has
+    seen, and a table recreated at the same path never resolves to
+    the old table's headers. A version that vanishes mid-walk
+    (repaired away, vacuumed) is absent."""
     live = versions(table_dir)
     ck = _latest_ckpt(table_dir)
     out: dict[int, dict] = {}
@@ -623,9 +622,9 @@ def _walk_headers(table_dir: str) -> dict[int, dict]:
                 out[v] = entries[v]
     for v in live:
         if v > through or v not in out:
-            m = _read_manifest_opt(table_dir, v)
-            if m is not None:
-                out[v] = _walk_entry(m)
+            e = _parsed(_manifest_path(table_dir, v), _walk_entry)
+            if e is not _ABSENT:
+                out[v] = e
     return out
 
 
@@ -694,6 +693,62 @@ def read_version_pruned(
     return _scan(spark, table_dir, m, kept).where(pred)
 
 
+def _append_commit(
+    spark: SparkSession,
+    table_dir: str,
+    m: dict,
+    new_files: list[str],
+    new_stats: dict[str, dict],
+    header: dict,
+    fits,
+    columns: list[str] | None = None,
+) -> int | None:
+    """The one append-rebase rule (Delta's blind-append rule) that
+    `append_version` and `merge_branch`'s append replay commit through:
+    `new_files`, staged under manifest `m`, land on the CURRENT head,
+    which keeps every file, zone map and dv entry of its own. A blind
+    append conflicts only with a concurrent metadata change: a head
+    whose columns or partition column differ from `m`'s raises
+    ValueError. A head that records `header`'s txn_id returns None
+    (the race was with our own replay). The commit records the head's
+    schema when `fits(schema)`, else the one inference over its files;
+    a lost CAS rebases on the new head (data files are staged once).
+    Returns the committed version."""
+    txn_id = header.get("txn_id")
+    while True:
+        base = _head(table_dir)
+        if (base["columns"], base["part_col"]) != (
+            m["columns"], m["part_col"]
+        ):
+            raise ValueError(
+                "append conflict: the table's schema or partition spec "
+                f"changed since the files were staged (columns "
+                f"{m['columns']} → {base['columns']}, partitioned by "
+                f"{m['part_col']!r} → {base['part_col']!r}) — restage "
+                "against the new head (a branch: re-fork and replay)"
+            )
+        if txn_id is not None and txn_seen(table_dir, txn_id):
+            return None
+        v = base["version"] + 1
+        files = sorted(set(base["files"]).union(new_files))
+        schema = base.get("schema")
+        if schema is None or not fits(schema):
+            schema = _infer_schema(spark, table_dir, files)
+        try:
+            _commit(table_dir, {
+                "version": v, "parent": base["version"], "op": "append",
+                **header,
+                **_layout(base, columns=columns or base["columns"],
+                          schema=schema),
+                "files": files,
+                "stats": {**base.get("stats", {}), **new_stats},
+                "dv": base.get("dv", []),
+            })
+            return v
+        except FileExistsError:
+            continue  # lost the CAS: rebase on the new head
+
+
 def append_version(
     table_dir: str,
     df: DataFrame,
@@ -712,11 +767,16 @@ def append_version(
     schema-merging write): the frame may carry NEW columns (it must
     still hold every existing one); they append to the committed
     column order, and snapshots containing pre-evolution files read
-    them as NULL."""
+    them as NULL.
+
+    Concurrent writers: the commit goes through `_append_commit`, so
+    an append that loses the manifest CAS to another append rebases
+    onto the new head, and one that races a concurrent schema or
+    partition-spec change (`append_version(merge_schema=True)`,
+    `repartition_table`) raises ValueError."""
     m = _head(table_dir)
     if txn_id is not None and txn_seen(table_dir, txn_id):
         return None  # already committed: replay is a no-op
-    cur_v = m["version"]
     cols = m["columns"]
     extra = [c for c in df.columns if c not in cols]
     if extra and not merge_schema:
@@ -729,49 +789,22 @@ def append_version(
         raise ValueError(f"append is missing table columns {missing}")
     if expectations:
         _enforce_expectations(df, expectations)
-    cols = cols + extra if merge_schema else cols
+    cols = cols + extra
     staged = df.select(*cols)
+    part_col = m["part_col"]
     new_files, new_stats = _stage_files(
-        staged, table_dir, m["part_col"], cur_v + 1
+        staged, table_dir, part_col, m["version"] + 1
     )
-    # Optimistic concurrency (the Delta conflict-resolution rule for
-    # blind appends): if another writer commits first, an append
-    # conflicts with NOTHING — its staged files are disjoint by
-    # construction — so re-read the current manifest and re-offer the
-    # commit on top. Only the manifest CAS retries; data files are
-    # staged once. (Concurrent MERGEs are write conflicts and keep
-    # the loud FileExistsError — the caller must re-run the merge.)
-    while True:
-        base_m = _read_manifest(table_dir, versions(table_dir)[-1])
-        if base_m["columns"] != m["columns"]:
-            raise ValueError(
-                "concurrent schema change during append — re-run the "
-                "append against the evolved table"
-            )
-        v_next = base_m["version"] + 1
-        if txn_id is not None and txn_seen(table_dir, txn_id):
-            return None  # the race was with our own replay
-        files = sorted(base_m["files"] + new_files)
-        # an evolving append infers over the whole new file list, so
-        # its schema is the one a read of it inferred before
-        schema = (
-            _infer_schema(df.sparkSession, table_dir, files) if extra
-            else _next_schema(table_dir, base_m, staged,
-                              base_m["part_col"], new_files, files)
-        )
-        try:
-            _commit(table_dir, {
-                "version": v_next, "parent": base_m["version"],
-                "op": "append",
-                **_layout(base_m, columns=cols, schema=schema),
-                "txn_id": txn_id,
-                "files": files,
-                "stats": {**base_m.get("stats", {}), **new_stats},
-                "dv": base_m.get("dv", []),  # deletes stay applied
-            })
-            return v_next
-        except FileExistsError:
-            continue  # lost the CAS — rebase on the new current
+    # an evolving append infers over the whole new file list, so its
+    # schema is the one a read of it inferred before
+    return _append_commit(
+        df.sparkSession, table_dir, m, new_files, new_stats,
+        {"txn_id": txn_id},
+        lambda schema: not extra and _fits(
+            schema, table_dir, staged, part_col, new_files
+        ),
+        columns=cols,
+    )
 
 
 def streaming_snapshot_append(
@@ -828,33 +861,17 @@ def streaming_snapshot_append(
     return launch(stream, checkpoint_dir, _one).start()
 
 
-def _txn_of(table_dir: str, v: int):
-    """Memoized manifest txn_id lookup (`_parsed`) — manifests are
-    immutable, so a committed version's txn_id never changes; without
-    the cache every txn-guarded commit re-parses the FULL manifest
-    history (O(N) JSON reads per trigger, O(N²) over a stream's
-    life). A version that vanishes mid-walk reads as _ABSENT (never
-    equal to any txn_id)."""
-    return _parsed(_manifest_path(table_dir, v), lambda m: m.get("txn_id"))
-
-
 def txn_seen(table_dir: str, txn_id) -> bool:
     """True if any committed manifest records this txn_id — the check
     an at-least-once sink makes BEFORE recomputing a batch's effect
     (a replayed batch may no longer VALIDATE against the post-apply
     state, e.g. SCD2's strictly-later precondition, so skip-detection
-    cannot wait for the write verb's own guard). The covered prefix
-    answers from the walk checkpoint (one identity-cached parse);
-    only post-checkpoint manifests hit the per-version txn cache."""
-    ck = _latest_ckpt(table_dir)
-    through, entries = ck if ck is not None else (-1, {})
-    for v in versions(table_dir):
-        if v <= through and v in entries:
-            if entries[v].get("txn_id") == txn_id:
-                return True
-        elif _txn_of(table_dir, v) == txn_id:
-            return True
-    return False
+    cannot wait for the write verb's own guard). One history walk
+    (`_walk_headers`): the checkpoint answers the covered prefix, the
+    identity-cached parse the manifests beyond it."""
+    return any(
+        e.get("txn_id") == txn_id for e in _walk_headers(table_dir).values()
+    )
 
 
 def _candidate_files(
@@ -1034,8 +1051,11 @@ def _merge_dv(
     rewrite granularity needs zone-map luck to touch few files; this
     needs none). Semantics mirror `merge_frames` exactly (SCD-1:
     update matched, insert unmatched-source, keep unmatched-target;
-    `delete_condition` is SQL over the s-aliased source columns) —
-    pytest-pinned row-identical to the partition-rewrite merge. One
+    `delete_condition` is SQL over the s-aliased source columns, and
+    a matched row whose condition is NULL is deleted) — row-identical
+    to the partition-rewrite merge, duplicate keys included: a source
+    row appends once per target row it matches, a NULL key matches
+    nothing (pytest-pinned). One
     contract RELAXATION vs the rewrite mode: matches are found by
     key across the whole table (zone-map-scoped, not
     partition-scoped) and old copies are position-marked, so CDC
@@ -1063,7 +1083,10 @@ def _merge_dv(
         marks = matched.select(
             F.col("_rf").alias("file"), F.col("_ri").alias("pos")
         )
-        matched_keys = matched.select(*keys).distinct()
+        # one key row per matched TARGET row, not distinct: a source
+        # row matching two target rows appends twice, as merge_frames'
+        # join emits it twice
+        matched_keys = matched.select(*keys)
     else:
         matched_keys = source.select(*keys).limit(0)
     # the source's effect: matched rows update (append the SOURCE

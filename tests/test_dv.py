@@ -391,7 +391,9 @@ def test_mor_merge_equals_rewrite_merge(spark, sf_dir, tmp_path):
     """merge_version(granularity='dv') is row-identical to the
     partition-rewrite merge for the same source — updates, inserts,
     and delete_condition all included — without rewriting any target
-    file; a replayed txn_id no-ops; a second dv merge composes."""
+    file; a replayed txn_id no-ops; a second dv merge composes; and
+    duplicate target or source keys, NULL keys and a NULL
+    delete_condition give both merges the same head."""
     ta, seed = _mk(spark, sf_dir, tmp_path, "a")
     tb, _ = _mk(spark, sf_dir, tmp_path, "b")
     src = seed.where("o_orderkey % 6 = 0").withColumn(
@@ -439,6 +441,36 @@ def test_mor_merge_equals_rewrite_merge(spark, sf_dir, tmp_path):
     assert _rows(snap.read_version(spark, ta, 2)) == _rows(
         snap.read_version(spark, tb, 2)
     )
+
+    # duplicate keys and NULLs: two target rows sharing a key each
+    # take the matching source row, as the rewrite merge's join emits
+    # it; a NULL key on either side matches nothing; two source rows
+    # sharing a key both land; a NULL delete_condition deletes
+    schema = "id long, p string, val long"
+    target = spark.createDataFrame([
+        (1, "a", 10), (1, "a", 11), (None, "a", 5), (2, "b", 20),
+        (3, "b", 30), (5, "b", 50), (6, "a", 60),
+    ], schema)
+    source = spark.createDataFrame([
+        (1, "a", 99), (4, "b", 40), (None, "a", 7), (2, "b", 21),
+        (2, "b", 22), (3, "b", None), (5, "b", 500),
+    ], schema)
+    heads = []
+    for name, granularity in (("dup_dv", "dv"), ("dup_rw", "partition")):
+        t = str(tmp_path / name)
+        snap.create_table(target, t, "p")
+        snap.merge_version(
+            spark, t, source, ["id"], delete_condition="s.val > 100",
+            granularity=granularity,
+        )
+        heads.append(sorted(
+            (tuple(r) for r in snap.read_version(spark, t).collect()),
+            key=repr,
+        ))
+    assert heads[0] == heads[1] == sorted([
+        (1, "a", 99), (1, "a", 99), (None, "a", 5), (None, "a", 7),
+        (2, "b", 21), (2, "b", 22), (4, "b", 40), (6, "a", 60),
+    ], key=repr)
 
 
 def test_mor_merge_applies_partition_moving_source(

@@ -508,3 +508,53 @@ def test_one_fork_rule():
                 publishers.add(f"{rel}::{owner.name}")
     assert not links, links
     assert publishers == {FORK_HELPER}, publishers
+
+
+# The one append rule (sources/snapshots.py): a blind append rebases
+# onto a moved head through one helper, so the conflict check, the
+# txn guard and the schema it records cannot drift between callers.
+APPEND_HELPER = "sources/snapshots.py::_append_commit"
+
+
+def test_one_append_rule():
+    """In tcrd_spark/sources/ only the append helper calls `_commit`
+    inside a loop (the CAS retry), and only it builds an
+    `"op": "append"` manifest."""
+    import ast
+
+    found: dict[str, set[str]] = {"loops": set(), "appends": set()}
+    for rel, text in _sources():
+        if not rel.startswith("sources" + os.sep):
+            continue
+        tree = ast.parse(text)
+        funcs = [n for n in ast.walk(tree) if isinstance(n, ast.FunctionDef)]
+
+        def owner(node):
+            return min(
+                (f for f in funcs
+                 if f.lineno <= node.lineno <= f.end_lineno),
+                key=lambda f: f.end_lineno - f.lineno,
+                default=None,
+            )
+
+        def where(node):
+            fn = owner(node)
+            return f"{rel}::{fn.name if fn else '<module>'}"
+
+        for loop in ast.walk(tree):
+            if not isinstance(loop, (ast.For, ast.While)):
+                continue
+            for n in ast.walk(loop):
+                if isinstance(n, ast.Call) and getattr(
+                    n.func, "attr", getattr(n.func, "id", None)
+                ) == "_commit":
+                    found["loops"].add(where(n))
+        for n in ast.walk(tree):
+            if isinstance(n, ast.Dict) and any(
+                isinstance(k, ast.Constant) and k.value == "op"
+                and isinstance(v, ast.Constant) and v.value == "append"
+                for k, v in zip(n.keys, n.values)
+            ):
+                found["appends"].add(where(n))
+    assert found["loops"] == {APPEND_HELPER}, found["loops"]
+    assert found["appends"] == {APPEND_HELPER}, found["appends"]

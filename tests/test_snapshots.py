@@ -8,6 +8,7 @@ import os
 
 from pyspark.sql import functions as F
 
+from tcrd_spark.sources import metastore
 from tcrd_spark.sources import snapshots as snap
 
 
@@ -791,6 +792,43 @@ def test_concurrent_appends_both_land(spark, sf_dir, tmp_path):
         assert r["o_orderkey"] in ks
 
 
+def test_append_refuses_a_concurrent_repartition(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """A blind append conflicts with a concurrent change to the
+    table's metadata: an append whose files were staged under one
+    partition spec, racing a `repartition_table` that lands before
+    its commit, raises instead of publishing files of the old layout
+    under the new spec — and the head still reads."""
+    import pytest
+
+    table = str(tmp_path / "t")
+    seed = _orders(spark, sf_dir).limit(20).withColumn(
+        "bucket", F.col("o_orderkey") % 3
+    )
+    snap.create_table(seed, table, "o_orderstatus")
+    batch = seed.limit(3).withColumn(
+        "o_orderkey", F.col("o_orderkey") + 10**9
+    )
+
+    real = snap._stage_files
+    raced = []
+
+    def stage_then_repartition(*args, **kwargs):
+        out = real(*args, **kwargs)
+        if not raced:  # the repartition stages through here too
+            raced.append("staged")
+            raced.append(snap.repartition_table(spark, table, "bucket"))
+        return out
+
+    monkeypatch.setattr(snap, "_stage_files", stage_then_repartition)
+    with pytest.raises(ValueError, match="partition spec changed"):
+        snap.append_version(table, batch)
+    monkeypatch.undo()
+    assert raced == ["staged", 2] and snap.versions(table) == [1, 2]
+    assert _rows(snap.read_version(spark, table)) == _rows(seed)
+
+
 def test_torn_fallback_manifest_is_repaired(spark, sf_dir, tmp_path):
     """ADVICE r9: a writer that died mid-write on the link(2)-less
     fallback path leaves a torn manifest + stale .wip marker. The
@@ -817,7 +855,7 @@ def test_torn_fallback_manifest_is_repaired(spark, sf_dir, tmp_path):
     wip = final + ".wip"
     with open(wip, "w") as f:
         pass
-    old = os.path.getmtime(wip) - snap._WIP_TIMEOUT - 5
+    old = os.path.getmtime(wip) - metastore._WIP_TIMEOUT - 5
     os.utime(wip, (old, old))
 
     with pytest.raises(FileNotFoundError, match="aborted commit"):
@@ -862,10 +900,10 @@ def test_stale_marker_with_complete_manifest_stands(
     wip = final + ".wip"
     with open(wip, "w"):
         pass
-    old = os.path.getmtime(wip) - snap._WIP_TIMEOUT - 5
+    old = os.path.getmtime(wip) - metastore._WIP_TIMEOUT - 5
     os.utime(wip, (old, old))
     with pytest.raises(FileExistsError):
-        snap._fallback_publish(final, {"version": 1}, "taken")
+        metastore._fallback_publish(final, {"version": 1}, "taken")
     assert not os.path.exists(wip)  # orphan marker swept
     assert snap._read_manifest(table, 1)["op"] == "create"
 
@@ -1054,17 +1092,15 @@ def test_stalled_fallback_writer_loses_loudly(spark, sf_dir, tmp_path):
             _json.dump({"version": 2, "op": "competitor",
                         "files": [], "ts": 1.0}, f)
 
-    import tcrd_spark.sources.snapshots as s
-
-    orig = s.os.fsync
-    s.os.fsync = stall_then_repair
+    orig = metastore.os.fsync
+    metastore.os.fsync = stall_then_repair
     try:
         with pytest.raises(FileExistsError):
-            snap._fallback_publish(
+            metastore._fallback_publish(
                 final, {"version": 2, "op": "mine", "files": []}, "lost"
             )
     finally:
-        s.os.fsync = orig
+        metastore.os.fsync = orig
 
     # the competitor's commit stands untouched
     assert snap._read_manifest(table, 2)["op"] == "competitor"
@@ -1093,7 +1129,7 @@ def test_version_walks_skip_repaired_manifests(spark, sf_dir, tmp_path):
         f.write('{"version": 3, "files": ["trunc')
     with open(final + ".wip", "w"):
         pass
-    old = os.path.getmtime(final + ".wip") - snap._WIP_TIMEOUT - 5
+    old = os.path.getmtime(final + ".wip") - metastore._WIP_TIMEOUT - 5
     os.utime(final + ".wip", (old, old))
 
     assert snap.txn_seen(table, "b1")

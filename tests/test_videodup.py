@@ -1,13 +1,12 @@
 """Video near-dup pins (pipeline/videodup.py): the JVM expression
 twin equals the mapInPandas fake path bit-for-bit on ASCII payloads,
 an identical clip collides on every frame while a distinct clip makes
-no pair, a partial edit yields fractional frame_overlap, real decode
-raises (honest stub), and the hot-band cap bounds candidate fan-out
+no pair, a partial edit yields fractional frame_overlap, and the
+hot-band cap bounds candidate fan-out
 on a degenerate corpus without disturbing below-cap pairs."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from tcrd_spark.pipeline import imagedup, videodup
@@ -27,7 +26,7 @@ def _docs(spark, sf_dir, n=200):
 
 def test_expression_twin_equals_fake_frame_path(spark, sf_dir):
     """video_bands_expr (pure JVM, the registered query's path) and
-    video_fingerprints(real_decode=False) (Arrow UDF over payload
+    video_fingerprints (Arrow UDF over payload
     bytes) agree bit-for-bit on ASCII payloads."""
     docs = _docs(spark, sf_dir)
     expr_fp = {
@@ -151,15 +150,6 @@ def test_unaligned_tier_bounded_on_degenerate_corpus(spark):
     assert not any(
         a <= 40 and b <= 40 for a, b in pairs
     ), "hot-bucket members must lose unaligned candidacy"
-
-
-def test_real_decode_raises(spark):
-    media = _clip_media(spark, [(1, _mk_text(1))])
-    with pytest.raises(Exception) as ei:
-        videodup.video_fingerprints(media, "doc_id", real_decode=True).collect()
-    assert "NotImplementedError" in str(ei.value) or isinstance(
-        ei.value, NotImplementedError
-    )
 
 
 def test_hot_band_cap_bounds_candidates_keeps_cold_pairs(spark):
