@@ -79,6 +79,7 @@ from tcrd_spark.pipeline.dsir import (
 )
 from tcrd_spark.pipeline.dedup import EMB_DIM
 from tcrd_spark.pipeline.semdedup import semantic_dedup_reps
+from tcrd_spark.pipeline.similarity import panel
 from tcrd_spark.pipeline.substring import excise_duplicate_spans
 from tcrd_spark.sources.lake import load_table, split_for_scan
 
@@ -206,9 +207,7 @@ def corpus_pipeline_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus_vec = emb.join(
         keep_vec, emb["vec_id"] == keep_vec["c_id"], "semi"
     ).select(F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_vec"))
-    cents = emb.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("cell_id"), F.col("embedding").alias("cell_vec")
-    )
+    _, _, cents = panel(spark, sf_dir)
     sem_reps = semantic_dedup_reps(
         corpus_vec, cents, EMB_DIM, threshold=SEM_T, _assigned=assigned,
         # adaptive pair blocks sized from the FULL corpus count (a

@@ -14,10 +14,11 @@ commensurable.
 
 100 TB shape: each system produces a per-QUERY top-K via its own
 scale path (BM25: one corpus-stats broadcast + row-local scoring;
-ANN: the IVF/SQ/PQ stack); rank windows partition by query id, so a
-query batch parallelizes across queries and the per-query state is K
-rows. Fusion is a full-outer join of two (query, doc, rank) lists —
-2K rows per query, trivially broadcastable.
+ANN: the IVF/SQ/PQ stack). Both system ranks and the fused rank are
+the one per-query top-k (`operators/topk.top_k`), whose windows
+partition by query id, so a query batch parallelizes across queries
+and the per-query state is K rows. Fusion is a full-outer join of two
+(query, doc, rank) lists — 2K rows per query, trivially broadcastable.
 
 Reference parity: none (the reference has no retrieval scoring);
 completes the hybrid pair BM25 (`pipeline/bm25.py`) + ANN
@@ -28,7 +29,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
+
+from tcrd_spark.operators.topk import top_k
 
 RRF_K = 60
 TOP_PER_SYSTEM = 100
@@ -57,20 +59,13 @@ def rrf_fuse(
             1.0 / (F.lit(k) + F.col(f"rank_{i}")), F.lit(0.0)
         )
         score = term if score is None else score + term
-    w = Window.partitionBy("q_id").orderBy(
-        F.desc("_rrf"), F.asc("doc_id")
-    )
-    return (
-        fused.withColumn("_rrf", F.round(score, 6))
-        .withColumn("fused_rank", F.row_number().over(w))
-        .filter(F.col("fused_rank") <= top_out)
-        .select(
-            "q_id",
-            "doc_id",
-            F.col("_rrf").alias("rrf"),
-            *[F.col(f"rank_{i}") for i in range(len(ranked_lists))],
-            "fused_rank",
-        )
+    return top_k(
+        fused.withColumn("rrf", F.round(score, 6)),
+        top_out,
+        id_col="doc_id",
+        score="rrf",
+        carry=tuple(f"rank_{i}" for i in range(len(ranked_lists))),
+        rank="fused_rank",
     )
 
 
@@ -94,13 +89,12 @@ def q_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = emb.filter(F.col("vec_id") == 0).select(
         F.col("vec_id").alias("q_id")
     )
-    wl = Window.partitionBy("q_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    lex = (
+    lex = top_k(
         bm25_scores(docs, "doc_id", "text")
         .select("doc_id", "score")
-        .crossJoin(F.broadcast(queries))
-        .withColumn("rank", F.row_number().over(wl))
-        .filter(F.col("rank") <= TOP_PER_SYSTEM)
+        .crossJoin(F.broadcast(queries)),
+        TOP_PER_SYSTEM,
+        id_col="doc_id",
     )
     qs = emb.filter(F.col("vec_id") == 0).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")

@@ -9,13 +9,16 @@ Per anchor: rank corpus by cosine DESC, drop self and anything with
 score >= dup_threshold (those are positives/duplicates, not
 negatives), keep the top k. Scores rounded to 6 for the oracle.
 
-100 TB shape: the anchor panel broadcasts over the corpus scan (the
-brute_force_topk plan — one pass, WindowGroupLimit heap per anchor);
-for corpus-scale anchor sets `hard_negatives_shortlist` replaces the
-exact scan with the persisted-IVF probe (partition-pruned to the
-probed cells) and applies the SAME sub-threshold filter + rank over
-the candidate shortlist — the composition is tested (overlap bound vs
-the exact path, tests/test_round7_ext.py) and adjudicated
+Both paths are the retrieval core's composition (similarity.py):
+candidates × the exact scorer × `operators/topk.top_k`, with the
+negative filter between scorer and top-k. `hard_negatives` scores
+every corpus row against the broadcast anchor panel (one pass,
+WindowGroupLimit heap per anchor). For corpus-scale anchor sets,
+`hard_negatives_shortlist` takes its candidates from the persisted-IVF
+probe instead (`ivf_topk_indexed`, partition-pruned to the probed
+cells) and applies the SAME sub-threshold filter + top-k over that
+shortlist — the composition is tested (overlap bound vs the exact
+path, tests/test_round7_ext.py) and adjudicated
 (`hard_negatives_shortlist`).
 
 Reference parity: none (extension, SURVEY §2 corpus-construction).
@@ -25,10 +28,26 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
+
+from tcrd_spark.operators.topk import top_k
+from tcrd_spark.pipeline.dedup import EMB_DIM
+from tcrd_spark.pipeline.similarity import (
+    _all_pairs,
+    _exact,
+    ivf_topk_indexed,
+    panel,
+    panel_ivf_index,
+)
 
 K = 5
 DUP_THRESHOLD = 0.95
+
+
+def _negatives(scored: DataFrame, dup_threshold: float) -> DataFrame:
+    """Drop self and the near-duplicates (score >= dup_threshold)."""
+    return scored.filter(
+        (F.col("c_id") != F.col("q_id")) & (F.col("score") < dup_threshold)
+    )
 
 
 def hard_negatives(
@@ -40,25 +59,8 @@ def hard_negatives(
 ) -> DataFrame:
     """(q_id, c_id, score, rank): the k best sub-threshold negatives
     per anchor. queries: (q_id, q_vec); corpus: (c_id, c_vec)."""
-    from tcrd_spark.pipeline.similarity import _pair_score, _with_norm
-
-    q = _with_norm(queries, "q_id", "q_vec", dim)
-    c = _with_norm(corpus, "c_id", "c_vec", dim)
-    w = Window.partitionBy("q_id").orderBy(F.desc("score"), F.asc("c_id"))
-    return (
-        c.crossJoin(F.broadcast(q))
-        .select(
-            "q_id", "c_id",
-            _pair_score("q_vec", "c_vec", dim).alias("score"),
-        )
-        .filter(
-            (F.col("c_id") != F.col("q_id"))
-            & (F.col("score") < dup_threshold)
-        )
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "c_id", "score", "rank")
-    )
+    scored = _exact(_all_pairs(queries, corpus, dim), dim)
+    return top_k(_negatives(scored, dup_threshold), k)
 
 
 SHORTLIST = 50
@@ -81,21 +83,10 @@ def hard_negatives_shortlist(
     shortlist must be deep enough to survive the duplicate filter
     (shortlist >> k); recall vs the exact path is the IVF probe's
     recall, pytest-bounded."""
-    from tcrd_spark.pipeline.similarity import ivf_topk_indexed
-
     cand = ivf_topk_indexed(
         queries, index_path, centroids, dim, k=shortlist, n_probe=n_probe
     ).drop("rank")
-    w = Window.partitionBy("q_id").orderBy(F.desc("score"), F.asc("c_id"))
-    return (
-        cand.filter(
-            (F.col("c_id") != F.col("q_id"))
-            & (F.col("score") < dup_threshold)
-        )
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "c_id", "score", "rank")
-    )
+    return top_k(_negatives(cand, dup_threshold), k)
 
 
 # ------------------------------------------------- registered query
@@ -104,16 +95,10 @@ def hard_negatives_shortlist(
 def q_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-5 hard negatives (cosine < 0.95, excluding self) for the
     standard 5-anchor panel over the embeddings corpus."""
-    from tcrd_spark.sources.lake import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    corpus = emb.select(
-        F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_vec")
+    corpus, qs, _ = panel(spark, sf_dir)
+    return hard_negatives(
+        qs, corpus, EMB_DIM, k=K, dup_threshold=DUP_THRESHOLD
     )
-    qs = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
-    )
-    return hard_negatives(qs, corpus, 64, k=K, dup_threshold=DUP_THRESHOLD)
 
 
 def q_hard_negatives_shortlist(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -121,40 +106,12 @@ def q_hard_negatives_shortlist(spark: SparkSession, sf_dir: str) -> DataFrame:
     shortlist (first-8 centroids, probe 2, shortlist 50): the scan is
     partition-pruned to the probed cells, and the identical
     sub-threshold filter + rank runs over the candidates. The oracle
-    replicates the probe algorithm, so results hash-match exactly."""
-    import hashlib
-    import os
-    import tempfile
-
-    from tcrd_spark.pipeline.similarity import build_ivf_index
-    from tcrd_spark.session import memo
-    from tcrd_spark.sources.lake import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    corpus = emb.select(
-        F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_vec")
-    )
-    centroids = emb.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("cell_id"), F.col("embedding").alias("cell_vec")
-    )
-    # own memo slot (NOT testdata_queries' — that module's closure
-    # stays out of this one): built once per sf_dir, pid-tagged so
-    # concurrent processes never race overwrite-writes against reads
-    key = os.path.realpath(sf_dir)
-    tag = hashlib.md5(f"hn:{key}:{os.getpid()}".encode()).hexdigest()[:12]
-    path = memo(
-        spark, "hn-ivf-index", key,
-        lambda: build_ivf_index(
-            corpus, centroids, 64,
-            os.path.join(tempfile.gettempdir(), f"tcrd_hn_ivf_{tag}"),
-        ),
-    )
-    qs = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
-    )
+    replicates the probe algorithm, so results hash-match exactly.
+    The index is the one `ann_ivf_indexed` searches."""
+    _, qs, centroids = panel(spark, sf_dir)
     return hard_negatives_shortlist(
-        qs, path, centroids, 64, k=K, dup_threshold=DUP_THRESHOLD,
-        shortlist=SHORTLIST, n_probe=N_PROBE,
+        qs, panel_ivf_index(spark, sf_dir), centroids, EMB_DIM, k=K,
+        dup_threshold=DUP_THRESHOLD, shortlist=SHORTLIST, n_probe=N_PROBE,
     )
 
 

@@ -33,16 +33,27 @@ the exact baseline is pytest-bounded (tests/test_pq.py).
 
 Scale: codebooks are tiny (m × ksub × subdim doubles — 16 KB at
 8×256×8) and broadcast; encoding is row-local against that broadcast;
-the only shuffle in search is the final per-query top-k window, whose
-input is already cut to the probed cells.
+the only shuffle in search is the final per-query top-k
+(`operators/topk.top_k`, over the ADC scorer `_adc` and the
+candidates: every code row, or the probed cells' lists), whose input
+is already cut to the probed cells.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from tcrd_spark.operators.topk import top_k
 from tcrd_spark.pipeline.dedup import EMB_DIM, dot, dot_sql, oracle_dot
+from tcrd_spark.pipeline.similarity import (
+    _exact,
+    _probe_cells,
+    _with_norm,
+    assign_cells,
+    kmeans_centroids,
+    panel,
+)
 from tcrd_spark.session import memo
 
 # m subspaces over the 64-dim synthetic embeddings (TESTDATA.md)
@@ -52,20 +63,6 @@ _SUBDIM = EMB_DIM // _M
 # codebook_j = j-th sub-vectors of vec_id < _KSUB (ann_ivf's first-k
 # convention). The trained path defaults to ksub=256 (1-byte codes).
 _KSUB = 16
-
-
-def _l2(a, b, dim: int):
-    """Unrolled left-assoc squared L2 — same codegen/bit-identity
-    rationale as dedup.dot (the oracle writes the identical terms)."""
-    terms = [
-        (F.element_at(a, i + 1) - F.element_at(b, i + 1))
-        * (F.element_at(a, i + 1) - F.element_at(b, i + 1))
-        for i in range(dim)
-    ]
-    out = terms[0]
-    for t in terms[1:]:
-        out = out + t
-    return out
 
 
 def deterministic_codebooks(
@@ -125,8 +122,6 @@ def pq_train_codebooks(
     independent jobs; each job is the audited zero-shuffle-assignment
     kmeans. Returns the same one-row cbs frame as
     deterministic_codebooks."""
-    from tcrd_spark.pipeline.similarity import kmeans_centroids
-
     sub = dim // m
     v = F.col("c_vec").cast("array<double>")
     rows = []
@@ -164,7 +159,7 @@ def _l2_sql(a_of, b_of, sub: int) -> str:
 def _codes_sql(vec_sql: str, dim: int, m: int) -> str:
     """The m per-subspace argmin codes as ONE Spark-SQL parse (r12,
     the dot() lesson): the Column-built form — a transform lambda over
-    each book with an unrolled _l2 per entry — cost ~5k py4j
+    each book with an unrolled squared L2 per entry — cost ~5k py4j
     round-trips per pq_encode construction. Sub-vector elements index
     the full vector directly (element_at(v, j·sub+i) instead of
     slicing first): identical doubles, flatter tree."""
@@ -248,9 +243,11 @@ def _query_luts(
     )
 
 
-def _adc_score():
-    """round(Σ_j lut[j][codes[j]] / (q_nrm · c_nrm), 6) — the fold
-    references the stored `codes`/`lut` columns once each."""
+def _adc(cands: DataFrame) -> DataFrame:
+    """The ADC scorer: (q_id, c_id, score) over code rows joined to
+    their query's LUT, score = round(Σ_j lut[j][codes[j]] / (q_nrm ·
+    c_nrm), 6). The fold references the stored `codes`/`lut` columns
+    once each."""
     s = F.aggregate(
         F.zip_with(
             F.col("lut"), F.col("codes"),
@@ -259,7 +256,8 @@ def _adc_score():
         F.lit(0.0),
         lambda acc, x: acc + x,
     )
-    return F.round(s / (F.col("q_nrm") * F.col("c_nrm")), 6)
+    score = F.round(s / (F.col("q_nrm") * F.col("c_nrm")), 6)
+    return cands.select("q_id", "c_id", score.alias("score"))
 
 
 def pq_topk(
@@ -270,14 +268,7 @@ def pq_topk(
     score, rank) — the 64×-smaller-scan counterpart of
     similarity.brute_force_topk."""
     luts = _query_luts(queries, cb_row, dim, m)
-    w = Window.partitionBy("q_id").orderBy(F.desc("score"), F.asc("c_id"))
-    return (
-        coded.crossJoin(F.broadcast(luts))
-        .select("q_id", "c_id", _adc_score().alias("score"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "c_id", "score", "rank")
-    )
+    return top_k(_adc(coded.crossJoin(F.broadcast(luts))), k)
 
 
 def pq_rerank_topk(
@@ -290,23 +281,13 @@ def pq_rerank_topk(
     shortlist rows pay a full-precision exact re-rank — s rows/query,
     never the corpus. Recall@k equals the shortlist's coverage of the
     exact top-k, which is what tests/test_pq.py bounds."""
-    from tcrd_spark.pipeline.similarity import _pair_score, _with_norm
-
     sl = pq_topk(queries, coded, cb_row, dim, m, k=shortlist).select(
         "q_id", "c_id"
     )
     c = _with_norm(corpus, "c_id", "c_vec", dim)
     qn = _with_norm(queries, "q_id", "q_vec", dim)
-    w = Window.partitionBy("q_id").orderBy(F.desc("score"), F.asc("c_id"))
-    return (
-        sl.join(c, "c_id")
-        .join(F.broadcast(qn), "q_id")
-        .select(
-            "q_id", "c_id", _pair_score("q_vec", "c_vec", dim).alias("score")
-        )
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "c_id", "score", "rank")
+    return top_k(
+        _exact(sl.join(c, "c_id").join(F.broadcast(qn), "q_id"), dim), k
     )
 
 
@@ -317,94 +298,21 @@ def ivf_pq_topk(
 ) -> DataFrame:
     """IVF + PQ: probe n_probe cells, ADC-score only those inverted
     lists. `coded` must carry cell_id (pq_encode extra_cols)."""
-    from tcrd_spark.pipeline.similarity import _probe_cells
-
     probes = _probe_cells(queries, centroids, dim, n_probe).select(
         "q_id", "q_vec", "cell_id"
     )
     luts = _query_luts(probes, cb_row, dim, m, carry=("cell_id",))
-    w = Window.partitionBy("q_id").orderBy(F.desc("score"), F.asc("c_id"))
-    return (
-        coded.join(F.broadcast(luts), "cell_id")
-        .select("q_id", "c_id", _adc_score().alias("score"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "c_id", "score", "rank")
-    )
-
-
-def build_ivfpq_index(
-    corpus: DataFrame, centroids: DataFrame, cb_row: DataFrame,
-    dim: int, m: int, path: str,
-) -> None:
-    """Persist the IVF-PQ index: PQ codes + quantized norms in a
-    cell_id-PARTITIONED parquet table — the real at-scale layout
-    (mirrors similarity.build_ivf_index, but each row is ~16 bytes of
-    codes+norm instead of the 512-byte vector: the stored index is
-    ~32× smaller than the float64 inverted lists)."""
-    from tcrd_spark.pipeline.similarity import assign_cells
-
-    assigned = assign_cells(corpus, centroids, dim).select(
-        "c_id", "c_vec", "cell_id"
-    )
-    coded = pq_encode(assigned, cb_row, dim, m, extra_cols=("cell_id",))
-    coded.write.mode("overwrite").partitionBy("cell_id").parquet(path)
-
-
-def ivf_pq_topk_indexed(
-    queries: DataFrame, index_path: str, centroids: DataFrame,
-    cb_row: DataFrame, dim: int, m: int, k: int = 10, n_probe: int = 2,
-) -> DataFrame:
-    """Search a build_ivfpq_index table: probed cell ids become a
-    STATIC partition filter, so the scan reads only the probed cells'
-    files (PartitionFilters plan-asserted in tests/test_pq.py) — and
-    every byte it reads is an 8-byte code, never a vector. Identical
-    results to ivf_pq_topk over the same centroids/codebooks."""
-    from tcrd_spark.pipeline.similarity import _probe_cells
-
-    spark = queries.sparkSession
-    probes = _probe_cells(queries, centroids, dim, n_probe).select(
-        "q_id", "q_vec", "cell_id"
-    )
-    cells = [
-        int(r.cell_id)
-        for r in probes.select("cell_id").distinct().collect()
-    ]
-    index = spark.read.parquet(index_path).filter(
-        F.col("cell_id").isin(cells)
-    )
-    luts = _query_luts(probes, cb_row, dim, m, carry=("cell_id",))
-    w = Window.partitionBy("q_id").orderBy(F.desc("score"), F.asc("c_id"))
-    return (
-        index.join(F.broadcast(luts), "cell_id")
-        .select("q_id", "c_id", _adc_score().alias("score"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "c_id", "score", "rank")
-    )
+    return top_k(_adc(coded.join(F.broadcast(luts), "cell_id")), k)
 
 
 # ------------------------------------------------- registered queries
-
-
-def _panel(spark: SparkSession, sf_dir: str):
-    from tcrd_spark.sources.lake import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    corpus = emb.select(
-        F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_vec")
-    )
-    qs = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
-    )
-    return emb, corpus, qs
 
 
 def q_ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PQ ADC cosine top-10 for the standard 5-query panel —
     first-16-by-id codebooks (the oracle contract), full-corpus scan
     of the 8-byte codes."""
-    _, corpus, qs = _panel(spark, sf_dir)
+    corpus, qs, _ = panel(spark, sf_dir)
     cb_row = deterministic_codebooks(corpus, EMB_DIM, _M, _KSUB)
     coded = memo(
         spark, "pq", sf_dir,
@@ -416,13 +324,7 @@ def q_ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The composed Faiss IVF-PQ pipeline: first-8 cells (the ann_ivf
     contract), PQ codes in the inverted lists, probe-2 ADC scan."""
-    from tcrd_spark.pipeline.similarity import assign_cells
-
-    emb, corpus, qs = _panel(spark, sf_dir)
-    cents = emb.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("cell_id"),
-        F.col("embedding").alias("cell_vec"),
-    )
+    corpus, qs, cents = panel(spark, sf_dir)
     cb_row = deterministic_codebooks(corpus, EMB_DIM, _M, _KSUB)
 
     def _build() -> DataFrame:
@@ -442,7 +344,7 @@ def q_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_ann_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ADC shortlist-50 + exact re-rank top-10 — the deployment
     composition (the exact pass touches 50 rows/query)."""
-    _, corpus, qs = _panel(spark, sf_dir)
+    corpus, qs, _ = panel(spark, sf_dir)
     cb_row = deterministic_codebooks(corpus, EMB_DIM, _M, _KSUB)
     coded = memo(
         spark, "pq", sf_dir,

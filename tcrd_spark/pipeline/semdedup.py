@@ -35,6 +35,7 @@ from tcrd_spark.pipeline.dedup import (
     embedding_near_dups_blocked,
     oracle_dot,
 )
+from tcrd_spark.pipeline.similarity import _with_norm, assign_cells, panel
 from tcrd_spark.session import memo
 
 def semantic_pairs(
@@ -47,8 +48,6 @@ def semantic_pairs(
     (cell_id, cell_vec). Cross-cluster pairs are never generated —
     the join key is cell_id. ``_assigned`` lets semantic_dedup reuse
     one cached assignment across its three consumers."""
-    from tcrd_spark.pipeline.similarity import assign_cells
-
     a = (
         _assigned
         if _assigned is not None
@@ -99,8 +98,6 @@ def semantic_pairs_blocked(
     so a small corpus does not pay the full grid of Python-task
     launches per cell for tiny matmuls. Output is identical for every
     block count."""
-    from tcrd_spark.pipeline.similarity import assign_cells
-
     a = (
         _assigned
         if _assigned is not None
@@ -119,8 +116,6 @@ def centroid_distance(
     """(c_id, cell_id, dist): 1 − cosine to the vector's OWN centroid
     — the paper's keep-the-farthest representative score. One
     broadcast join after the row-local assignment."""
-    from tcrd_spark.pipeline.similarity import _with_norm, assign_cells
-
     a = (
         _assigned
         if _assigned is not None
@@ -141,7 +136,6 @@ def centroid_distance(
 
 def _assign(corpus: DataFrame, centroids: DataFrame, dim: int) -> DataFrame:
     from tcrd_spark.operators.lineage import cache
-    from tcrd_spark.pipeline.similarity import assign_cells
 
     return cache(assign_cells(corpus, centroids, dim), "semdedup-assign")
 
@@ -199,26 +193,11 @@ def semantic_dedup_reps(
 # ------------------------------------------------- registered queries
 
 
-def _panel(spark: SparkSession, sf_dir: str):
-    from tcrd_spark.sources.lake import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    corpus = emb.select(
-        F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_vec")
-    )
-    cents = emb.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("cell_id"),
-        F.col("embedding").alias("cell_vec"),
-    )
-    return corpus, cents
-
-
 def _assigned_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The cell assignment both registered queries read — memoized per
     sf_dir like the SQ/PQ code tables (one cached copy, shared by the
     pair sides, the rep score, and repeated bench/sweep invocations)."""
     from tcrd_spark.operators.lineage import cut
-    from tcrd_spark.pipeline.similarity import assign_cells
 
     # lineage-cut the memoized assignment: .cache() does not bound
     # Catalyst analysis, so the argmax-over-centroids tree (64-dim dot
@@ -226,7 +205,7 @@ def _assigned_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     # rep score, both registered queries) — the cut makes each reader's
     # plan start from an opaque scan of the cached rows
     def build():
-        corpus, cents = _panel(spark, sf_dir)
+        corpus, _, cents = panel(spark, sf_dir)
         return assign_cells(corpus, cents, EMB_DIM)
 
     return cut(build, "semassign", sf_dir)
@@ -244,7 +223,7 @@ def _assigned_count_cached(spark: SparkSession, sf_dir: str) -> int:
 def q_semantic_dedup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cluster-scoped cosine ≥ 0.4 pairs over the embeddings table
     (first-8 centroid contract), via the blocked BLAS scorer."""
-    corpus, cents = _panel(spark, sf_dir)
+    corpus, _, cents = panel(spark, sf_dir)
     return semantic_pairs_blocked(
         corpus, cents, EMB_DIM, threshold=0.4,
         _assigned=_assigned_cached(spark, sf_dir),
@@ -254,7 +233,7 @@ def q_semantic_dedup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full SemDeDup: groups + farthest-from-centroid representatives."""
-    corpus, cents = _panel(spark, sf_dir)
+    corpus, _, cents = panel(spark, sf_dir)
     return semantic_dedup(
         corpus, cents, EMB_DIM, threshold=0.4,
         _assigned=_assigned_cached(spark, sf_dir),

@@ -1,12 +1,28 @@
-"""Similarity search over an embedding column (`array<float>`).
+"""Similarity search over an embedding column (`array<float>`): the
+retrieval core of the ANN family.
 
+Every search here, in sq.py, pq.py and negatives.py is one
+composition of three stages (REPOSE, ICDE 2021; the EDBT 2020
+incremental top-k framework): candidates × scorer × top-k.
+
+- Candidates: every corpus row against the broadcast query panel
+  (`_all_pairs`), the inverted lists of each query's probed IVF cells
+  (`_probed`: in-memory cell assignment, SQ8-coded lists, or a
+  partition-pruned persisted index), or a PQ shortlist.
+- Scorers: the exact cosine `_exact` (here) and PQ's asymmetric
+  `_adc` (pq.py).
+- Top-k: `operators/topk.top_k`, the one per-query rule (score desc,
+  then id asc).
+
+The searches:
 - brute_force_topk: exact cosine top-k — the correctness baseline.
-- ivf_topk: IVF-style two-stage search — the scale path. Centroids are
-  the first `n_cells` vectors by id (deterministic; a real build would
-  k-means, but the *engine mechanics* — assign, invert, probe — are
-  identical and this keeps the oracle reproducible). Every vector is
-  assigned to its nearest centroid; a query probes the `n_probe`
-  nearest cells and scans only those inverted lists.
+- ivf_topk / ivf_topk_indexed: IVF two-stage search — the scale path.
+  The registered queries' centroids are the first 8 vectors by id
+  (`panel`: deterministic, so the oracle reproduces them; the trained
+  build is `kmeans_centroids`, and the engine mechanics — assign,
+  invert, probe — are identical). Every vector is assigned to its
+  nearest centroid; a query probes the `n_probe` nearest cells and
+  scans only those inverted lists.
 
 Float discipline: norms are precomputed once per vector; a pair score
 is one unrolled left-assoc dot divided by the two norms — the oracle
@@ -16,22 +32,48 @@ whole-stage codegen; F.aggregate folds were interpreted and ~10× slower.
 
 Scale notes (100 TB / 10^9 vectors):
 - The query side is broadcast; scores compute map-side over the corpus
-  scan. The only shuffle is the per-query top-k, and Spark's
-  WindowGroupLimit (3.5+) pre-filters rank()<=k before the exchange,
-  so k rows per partition move, not the corpus.
+  scan. The only shuffle is the per-query top-k, which Spark plans as
+  WindowGroupLimit (3.5+): each partition keeps k rows per query
+  before the exchange, so k rows per partition move, not the corpus
+  (plan-tested for every registered retrieval query,
+  tests/test_plans.py).
 - IVF: assignment is a broadcast join against centroids (tiny); layout
-  partitioned/bucketed by cell_id makes a probe a partition-pruned
-  scan of n_probe/n_cells of the data.
+  partitioned by cell_id makes a probe a partition-pruned scan of
+  n_probe/n_cells of the data.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import hashlib
+import os
+import tempfile
+
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from tcrd_spark.operators.lineage import _keep, _truncate
-from tcrd_spark.pipeline.dedup import dot
+from tcrd_spark.operators.topk import top_k
+from tcrd_spark.pipeline.dedup import EMB_DIM, dot
+from tcrd_spark.session import memo
+from tcrd_spark.sources.lake import load_table
+
+
+def panel(spark: SparkSession, sf_dir: str):
+    """(corpus, queries, cells) over the embeddings table: corpus
+    (c_id, c_vec) is every vector, queries (q_id, q_vec) the ones with
+    vec_id < 5, cells (cell_id, cell_vec) the ones with vec_id < 8 —
+    the contract every retrieval oracle reproduces."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    corpus = emb.select(
+        F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_vec")
+    )
+    queries = emb.filter(F.col("vec_id") < 5).select(
+        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
+    )
+    cells = emb.filter(F.col("vec_id") < 8).select(
+        F.col("vec_id").alias("cell_id"), F.col("embedding").alias("cell_vec")
+    )
+    return corpus, queries, cells
 
 
 def _with_norm(df: DataFrame, id_out: str, vec_out: str, dim: int) -> DataFrame:
@@ -52,21 +94,27 @@ def _pair_score(qv: str, cv: str, dim: int):
     )
 
 
+def _exact(cands: DataFrame, dim: int) -> DataFrame:
+    """The exact scorer: (q_id, c_id, score) over candidate rows that
+    carry both sides' vectors and norms."""
+    return cands.select(
+        "q_id", "c_id", _pair_score("q_vec", "c_vec", dim).alias("score")
+    )
+
+
+def _all_pairs(queries: DataFrame, corpus: DataFrame, dim: int) -> DataFrame:
+    """Every corpus row against the broadcast query panel."""
+    q = _with_norm(queries, "q_id", "q_vec", dim)
+    c = _with_norm(corpus, "c_id", "c_vec", dim)
+    return c.crossJoin(F.broadcast(q))
+
+
 def brute_force_topk(
     queries: DataFrame, corpus: DataFrame, dim: int, k: int = 10
 ) -> DataFrame:
     """Exact cosine top-k per query. queries: (q_id, q_vec);
     corpus: (c_id, c_vec)."""
-    q = _with_norm(queries, "q_id", "q_vec", dim)
-    c = _with_norm(corpus, "c_id", "c_vec", dim)
-    w = Window.partitionBy("q_id").orderBy(F.desc("score"), F.asc("c_id"))
-    return (
-        c.crossJoin(F.broadcast(q))
-        .select("q_id", "c_id", _pair_score("q_vec", "c_vec", dim).alias("score"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "c_id", "score", "rank")
-    )
+    return top_k(_exact(_all_pairs(queries, corpus, dim), dim), k)
 
 
 def assign_cells(corpus: DataFrame, centroids: DataFrame, dim: int) -> DataFrame:
@@ -154,138 +202,6 @@ def lloyd_mean_update(
     )
 
 
-def kmeans_parallel_init(
-    corpus: DataFrame,
-    dim: int,
-    k: int,
-    l: int | None = None,
-    rounds: int = 3,
-    id_col: str = "c_id",
-    vec_col: str = "c_vec",
-) -> DataFrame:
-    """Deterministic k-means|| initialization (Bahmani et al., VLDB'12
-    "Scalable K-Means++") in cosine space — the DISTRIBUTED init that
-    replaces farthest-first's k sequential driver picks with O(rounds)
-    full-corpus passes:
-
-    each round oversamples ~l candidates with probability
-    l·cost(x)/Σcost (cost = 1 − nearest-candidate cosine), then the
-    small candidate set (≤ ~l·rounds) is weighted by its attraction
-    counts and reduced to k seeds driver-side by weighted
-    farthest-first. Randomness is the portable hash60 of (id, round) —
-    seeded, engine-independent, rerun-identical; no RNG state.
-
-    Per round: one broadcast-argmax pass (row-local, like
-    assign_cells), one scalar aggregate, one bounded collect (the
-    candidate sample, capped at 4·l rows in deterministic hash order).
-    Driver memory holds candidates only — never the corpus.
-    """
-    import math
-
-    from tcrd_spark.functions.hashing import hash60
-
-    l = l or 2 * k
-    held: list = []  # hop cuts, all released before returning
-    c = _truncate(_with_norm(
-        corpus.select(F.col(id_col).alias("c_id"), F.col(vec_col).alias("c_vec")),
-        "c_id",
-        "c_vec",
-        dim,
-    ), held)
-    first = c.orderBy("c_id").select("c_id", "c_vec").first()
-    if first is None:
-        held.pop().unpersist()
-        raise ValueError("kmeans_parallel_init: empty corpus")
-    cand: dict[int, list[float]] = {first["c_id"]: list(first["c_vec"])}
-
-    def _cents_df(mapping: dict[int, list[float]]) -> DataFrame:
-        return corpus.sparkSession.createDataFrame(
-            [(i, v) for i, v in sorted(mapping.items())],
-            "cell_id long, cell_vec array<double>",
-        )
-
-    for rnd in range(rounds):
-        cents = _with_norm(_cents_df(cand), "cell_id", "cell_vec", dim)
-        cent_row = cents.agg(
-            F.array_sort(
-                F.collect_list(F.struct("cell_id", "cell_vec", "cell_vec_nrm"))
-            ).alias("cents")
-        )
-        best = F.array_max(
-            F.transform(
-                F.col("cents"),
-                lambda x: F.round(
-                    dot(F.col("c_vec"), x["cell_vec"], dim)
-                    / (F.col("c_vec_nrm") * x["cell_vec_nrm"]),
-                    6,
-                ),
-            )
-        )
-        costed = _truncate(
-            c.crossJoin(F.broadcast(cent_row))
-            .select("c_id", "c_vec", (F.lit(1.0) - best).alias("cost")),
-            held,
-        )
-        tot_row = costed.agg(F.sum("cost").alias("tot"))
-        # u(x) ∈ [0,1): 12 low decimal digits of hash60(id:round)
-        u = (
-            hash60(F.concat_ws(":", F.col("c_id"), F.lit(str(rnd))))
-            % F.lit(1_000_000_000_000)
-        ) / F.lit(1_000_000_000_000.0)
-        picked = (
-            costed.crossJoin(F.broadcast(tot_row))
-            .filter(u * F.col("tot") < F.lit(float(l)) * F.col("cost"))
-            .orderBy("c_id")
-            .limit(4 * l)
-            .select("c_id", "c_vec")
-            .collect()
-        )
-        held.pop().unpersist()  # this round's costed cut
-        for r in picked:
-            cand.setdefault(r["c_id"], list(r["c_vec"]))
-
-    if len(cand) < k:
-        held.pop().unpersist()
-        raise ValueError(
-            f"kmeans_parallel_init: only {len(cand)} distinct candidates "
-            f"for k={k}; corpus too small or raise l/rounds"
-        )
-    # weight candidates by attraction count (one distributed pass)
-    assigned = assign_cells(c.select("c_id", "c_vec"), _cents_df(cand), dim)
-    wrow = {
-        r["cell_id"]: r["n"]
-        for r in assigned.groupBy("cell_id").agg(F.count("*").alias("n")).collect()
-    }
-    held.pop().unpersist()  # the corpus cut
-
-    # driver-side weighted farthest-first over the SMALL candidate set
-    def cos(a, b):
-        num = sum(x * y for x, y in zip(a, b))
-        na = math.sqrt(sum(x * x for x in a))
-        nb = math.sqrt(sum(x * x for x in b))
-        return num / (na * nb) if na and nb else 0.0
-
-    items = sorted(cand.items())
-    start = max(items, key=lambda kv: (wrow.get(kv[0], 0), -kv[0]))
-    chosen = [start]
-    chosen_ids = {start[0]}
-    while len(chosen) < k:
-        best_item, best_score = None, None
-        for cid, vec in items:
-            if cid in chosen_ids:
-                continue
-            d = min(1.0 - cos(vec, cv) for _, cv in chosen)
-            score = (wrow.get(cid, 0) * d, -cid)
-            if best_score is None or score > best_score:
-                best_item, best_score = (cid, vec), score
-        chosen.append(best_item)
-        chosen_ids.add(best_item[0])
-    return corpus.sparkSession.createDataFrame(
-        [(i, vec) for i, (_, vec) in enumerate(chosen)],
-        "cell_id long, cell_vec array<double>",
-    )
-
-
 def kmeans_centroids(
     corpus: DataFrame,
     dim: int,
@@ -293,7 +209,6 @@ def kmeans_centroids(
     n_iters: int = 5,
     id_col: str = "c_id",
     vec_col: str = "c_vec",
-    init_centroids: DataFrame | None = None,
 ) -> DataFrame:
     """Distributed Lloyd k-means over the embedding column — the real
     IVF build step (ivf_topk's deterministic first-k-by-id centroids
@@ -313,7 +228,7 @@ def kmeans_centroids(
     Lloyd degeneracy handling). Cosine-space assignment matches
     ivf_topk's probe metric, so trained centroids drop straight in.
     """
-    held: list = []  # hop cuts; _lloyd_iterate hands off the survivor
+    held: list = []  # hop cuts; the Lloyd loop hands off the survivor
     c = _truncate(_with_norm(
         corpus.select(
             F.col(id_col).alias("c_id"), F.col(vec_col).alias("c_vec")
@@ -322,14 +237,6 @@ def kmeans_centroids(
         "c_vec",
         dim,
     ), held)
-
-    if init_centroids is not None:
-        # externally-supplied seeds (e.g. kmeans_parallel_init — the
-        # distributed k-means|| oversampling path); skip farthest-first
-        cents = init_centroids.select(
-            "cell_id", F.col("cell_vec").cast("array<double>").alias("cell_vec")
-        )
-        return _lloyd_iterate(c, cents, dim, n_iters, held)
 
     # Farthest-first init runs k sequential passes — bound them to a
     # deterministic sample pool of the max(200·k, 1000) smallest-id
@@ -387,15 +294,8 @@ def kmeans_centroids(
         [(i, list(s["c_vec"])) for i, s in enumerate(seeds)],
         "cell_id long, cell_vec array<double>",
     )
-    return _lloyd_iterate(c, cents, dim, n_iters, held)
-
-
-def _lloyd_iterate(
-    c: DataFrame, cents: DataFrame, dim: int, n_iters: int, held: list
-) -> DataFrame:
-    """The Lloyd refinement loop shared by both init paths; releases
-    every cut in ``held`` and hands the final centroids to the rotating
-    "kmeans" store slot."""
+    # Lloyd refinement; releases every cut in ``held`` and hands the
+    # final centroids to the rotating "kmeans" store slot
     rdd = None
     for _ in range(n_iters):
         assigned = assign_cells(
@@ -419,6 +319,15 @@ def _lloyd_iterate(
     return _keep(cents, rdd, held, "kmeans")
 
 
+def _probed(lists: DataFrame, probes: DataFrame) -> DataFrame:
+    """The inverted lists of each query's probed cells: ``lists``
+    (c_id, c_vec, c_vec_nrm, cell_id) joined to ``_probe_cells``. The
+    probe list (queries × n_probe) is the SMALL side by contract —
+    broadcast it explicitly, else a centroid broadcast hint inside
+    ``lists`` propagates and Catalyst broadcasts the corpus."""
+    return lists.join(F.broadcast(probes), "cell_id")
+
+
 def ivf_topk(
     queries: DataFrame,
     corpus: DataFrame,
@@ -434,41 +343,26 @@ def ivf_topk(
     hash-match."""
     assigned = assign_cells(corpus, centroids, dim)
     probes = _probe_cells(queries, centroids, dim, n_probe)
-    w = Window.partitionBy("q_id").orderBy(F.desc("score"), F.asc("c_id"))
-    # the probe list (queries × n_probe) is the SMALL side by contract —
-    # broadcast it explicitly, else the centroid broadcast hint inside
-    # `assigned` propagates and Catalyst broadcasts the corpus
-    return (
-        assigned.join(F.broadcast(probes), "cell_id")
-        .select("q_id", "c_id", _pair_score("q_vec", "c_vec", dim).alias("score"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "c_id", "score", "rank")
-    )
+    return top_k(_exact(_probed(assigned, probes), dim), k)
 
 
 def _probe_cells(
     queries: DataFrame, centroids: DataFrame, dim: int, n_probe: int
 ) -> DataFrame:
     """(q_id, q_vec, q_vec_nrm, cell_id): each query's n_probe nearest
-    cells — the shared probe-selection stage of ivf_topk and the
-    persisted-index search."""
+    cells — the probe-selection stage of every IVF search."""
     q = _with_norm(queries, "q_id", "q_vec", dim)
     cent = _with_norm(centroids, "cell_id", "cell_vec", dim)
-    wq = Window.partitionBy("q_id").orderBy(F.desc("cs"), F.asc("cell_id"))
-    return (
-        q.crossJoin(F.broadcast(cent))
-        .select(
-            "q_id",
-            "q_vec",
-            "q_vec_nrm",
-            "cell_id",
-            _pair_score("q_vec", "cell_vec", dim).alias("cs"),
-        )
-        .withColumn("rn", F.row_number().over(wq))
-        .filter(F.col("rn") <= n_probe)
-        .select("q_id", "q_vec", "q_vec_nrm", "cell_id")
+    scored = q.crossJoin(F.broadcast(cent)).select(
+        "q_id",
+        "q_vec",
+        "q_vec_nrm",
+        "cell_id",
+        _pair_score("q_vec", "cell_vec", dim).alias("score"),
     )
+    return top_k(
+        scored, n_probe, id_col="cell_id", carry=("q_vec", "q_vec_nrm")
+    ).select("q_id", "q_vec", "q_vec_nrm", "cell_id")
 
 
 def build_ivf_index(
@@ -491,6 +385,26 @@ def build_ivf_index(
     return path
 
 
+def panel_ivf_index(spark: SparkSession, sf_dir: str) -> str:
+    """The panel's persisted IVF index (every vector under the first-8
+    cells), built once per session per sf_dir for every query that
+    searches it. The write is the build step, not the query; the
+    directory is removed when the store entry is released. The pid in
+    its name keeps concurrent processes (bench + check) from racing
+    overwrite-writes against each other's reads."""
+    key = os.path.realpath(sf_dir)
+    tag = hashlib.md5(f"{key}:{os.getpid()}".encode()).hexdigest()[:12]
+
+    def build() -> str:
+        corpus, _, cells = panel(spark, sf_dir)
+        return build_ivf_index(
+            corpus, cells, EMB_DIM,
+            os.path.join(tempfile.gettempdir(), f"tcrd_ivf_index_{tag}"),
+        )
+
+    return memo(spark, "ivf-index", key, build)
+
+
 def ivf_topk_indexed(
     queries: DataFrame,
     index_path: str,
@@ -510,11 +424,4 @@ def ivf_topk_indexed(
     probes = _probe_cells(queries, centroids, dim, n_probe)
     cells = [int(r.cell_id) for r in probes.select("cell_id").distinct().collect()]
     index = spark.read.parquet(index_path).filter(F.col("cell_id").isin(cells))
-    w = Window.partitionBy("q_id").orderBy(F.desc("score"), F.asc("c_id"))
-    return (
-        index.join(F.broadcast(probes), "cell_id")
-        .select("q_id", "c_id", _pair_score("q_vec", "c_vec", dim).alias("score"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "c_id", "score", "rank")
-    )
+    return top_k(_exact(_probed(index, probes), dim), k)

@@ -8,12 +8,15 @@ smaller), learned from per-dimension [min, max] ranges:
     center_d = mn_d + (code_d + 0.5) / 256 · span_d
 
 Search is ASYMMETRIC (Faiss SQ convention): queries stay full
-precision, corpus vectors are dequantized to bucket centers on the
-fly — so the scan reads 64-byte codes, not 512-byte vectors, and the
-top-k machinery is exactly `similarity.brute_force_topk` over the
-reconstructed corpus (same WindowGroupLimit plan). Compose with the
-IVF index for the full Faiss-style IVF+SQ pipeline: the cell scan
-then reads n_probe/n_cells of a table 8× smaller.
+precision, corpus vectors are dequantized to bucket centers (one
+fused encode∘decode expression, `_centers_expr`), so the scan reads
+64-byte codes, not 512-byte vectors. The retrieval is the family's
+core (similarity.py) over the reconstructed corpus: `ann_sq_topk` is
+`brute_force_topk` on it, and `ann_ivfsq` is the exact probed scan
+over SQ-coded inverted lists — candidates × exact scorer ×
+`operators/topk.top_k`, the same WindowGroupLimit plan. The IVF
+composition is the full Faiss-style IVF+SQ pipeline: the cell scan
+reads n_probe/n_cells of a table 8× smaller.
 
 Determinism is engineered like the rest of the similarity family:
 range stats are exact min/max aggregates (order-independent), the
@@ -23,8 +26,8 @@ quantization error is therefore bit-identical in DuckDB, and the
 query is fully oracle-adjudicated (`ann_sq_topk`). Recall vs the
 exact baseline is pytest-bounded (tests/test_sq.py).
 
-Everything is whole-stage-codegen column expressions (unrolled
-per-dimension arrays, no higher-order folds, no Python).
+Everything is JVM column expressions, no Python: the dot is unrolled,
+and the quantizer is one zip_with pair per vector (`_centers_expr`).
 """
 
 from __future__ import annotations
@@ -32,7 +35,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from tcrd_spark.operators.topk import top_k
 from tcrd_spark.pipeline.dedup import EMB_DIM, oracle_dot
+from tcrd_spark.pipeline.similarity import (
+    _exact,
+    _probe_cells,
+    _probed,
+    assign_cells,
+    brute_force_topk,
+    panel,
+)
 from tcrd_spark.session import memo
 
 # codes per dimension: 8-bit
@@ -63,50 +75,6 @@ def quantize_stats(corpus: DataFrame, vec_col: str, dim: int) -> DataFrame:
     ).select(
         F.transform("a", lambda z: z["mn"]).alias("mins"),
         F.transform("a", lambda z: z["mx"] - z["mn"]).alias("spans"),
-    )
-
-
-def _code(v, mins, spans, i: int):
-    x = F.element_at(v, i + 1)
-    mn = F.element_at(mins, i + 1)
-    s = F.element_at(spans, i + 1)
-    return F.when(s == 0, F.lit(0)).otherwise(
-        F.least(
-            F.lit(_LEVELS - 1),
-            F.floor((x - mn) / s * _LEVELS).cast("int"),
-        )
-    )
-
-
-def sq_encode(
-    df: DataFrame, id_col: str, vec_col: str, stats: DataFrame, dim: int
-) -> DataFrame:
-    """(id, codes array<int>) — 8-bit codes per dimension. Unrolled
-    array constructor (codegen; interpreted transform() folds are the
-    measured 10× slow path, see dedup.dot)."""
-    v = F.col(vec_col).cast("array<double>")
-    return df.crossJoin(F.broadcast(stats)).select(
-        id_col,
-        F.array(
-            *[_code(v, F.col("mins"), F.col("spans"), i) for i in range(dim)]
-        ).alias("codes"),
-    )
-
-
-def sq_dequantize(
-    df: DataFrame, id_col: str, stats: DataFrame, dim: int,
-    out_col: str = "dv",
-) -> DataFrame:
-    """(id, dv array<double>) — bucket centers from codes."""
-
-    def center(i: int):
-        c = F.element_at(F.col("codes"), i + 1)
-        mn = F.element_at(F.col("mins"), i + 1)
-        s = F.element_at(F.col("spans"), i + 1)
-        return mn + (c + F.lit(0.5)) / F.lit(_LEVELS) * s
-
-    return df.crossJoin(F.broadcast(stats)).select(
-        id_col, F.array(*[center(i) for i in range(dim)]).alias(out_col)
     )
 
 
@@ -142,33 +110,14 @@ def _centers_expr(vec_col: str = "c_vec"):
 
 def sq_dequant_frame(corpus: DataFrame, dim: int) -> DataFrame:
     """(c_id, c_vec): the corpus reconstructed to SQ8 bucket centers —
-    the table the asymmetric scan reads (uncached; see sq_topk)."""
+    the table the asymmetric scan reads. Uncached: `ann_sq_topk` keeps
+    one cached copy in the store, the single-session stand-in for the
+    persisted codes, which also stops the optimizer from substituting
+    the center expression into every dot term of the scorer."""
     stats = quantize_stats(corpus, "c_vec", dim)
     return corpus.crossJoin(F.broadcast(stats)).select(
         "c_id", _centers_expr().alias("c_vec")
     )
-
-
-def sq_topk(
-    queries: DataFrame, corpus: DataFrame, dim: int, k: int,
-) -> DataFrame:
-    """Asymmetric SQ8 top-k: full-precision queries (q_id, q_vec) vs
-    the quantize→dequantize corpus (c_id, c_vec). Same output shape as
-    the exact baseline: (q_id, c_id, score, rank)."""
-    from tcrd_spark.operators.lineage import cache
-    from tcrd_spark.pipeline.similarity import brute_force_topk
-
-    deq = sq_dequant_frame(corpus, dim)
-    # Materialization barrier: in a real deployment the codes ARE the
-    # persisted index (that is the point of SQ — the scan reads 64-byte
-    # codes from disk); cache() is the single-session stand-in. It
-    # also stops the optimizer from substituting the center expression
-    # into every dot term (the blowup above) — the top-k reads stored
-    # arrays exactly like it would read the persisted index. One
-    # rotating store slot: an untracked per-call cache() accumulated
-    # executor storage across repeated calls (ADVICE r5 #3).
-    deq = cache(deq, "sq-deq")
-    return brute_force_topk(queries, deq, dim, k)
 
 
 # ------------------------------------------------- registered queries
@@ -182,16 +131,7 @@ def sq_topk(
 def q_ann_sq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SQ8 cosine top-10 for the standard 5-query panel (vec_id < 5),
     corpus = every embedding, quantized."""
-    from tcrd_spark.pipeline.similarity import brute_force_topk
-    from tcrd_spark.sources.lake import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    corpus = emb.select(
-        F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_vec")
-    )
-    qs = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
-    )
+    corpus, qs, _ = panel(spark, sf_dir)
     deq = memo(
         spark, "sq", sf_dir,
         lambda: sq_dequant_frame(corpus, EMB_DIM).cache(),
@@ -206,26 +146,7 @@ def q_ann_ivfsq(spark: SparkSession, sf_dir: str) -> DataFrame:
     a 100 TB deployment runs (n_probe/n_cells of a table 8× smaller).
     Same deterministic first-8 centroids / probe-2 contract as
     `ann_ivf`, so the two queries differ ONLY by quantization."""
-    from pyspark.sql.window import Window
-
-    from tcrd_spark.pipeline.similarity import (
-        _pair_score,
-        _probe_cells,
-        assign_cells,
-    )
-    from tcrd_spark.sources.lake import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    corpus = emb.select(
-        F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_vec")
-    )
-    qs = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
-    )
-    cents = emb.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("cell_id"),
-        F.col("embedding").alias("cell_vec"),
-    )
+    corpus, qs, cents = panel(spark, sf_dir)
     assigned = assign_cells(corpus, cents, EMB_DIM).select(
         "c_id", "c_vec", "cell_id"
     )
@@ -252,17 +173,7 @@ def q_ann_ivfsq(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     lists = memo(spark, "ivfsq", sf_dir, _build_lists)
     probes = _probe_cells(qs, cents, EMB_DIM, n_probe=2)
-    w = Window.partitionBy("q_id").orderBy(F.desc("score"), F.asc("c_id"))
-    return (
-        lists.join(F.broadcast(probes), "cell_id")
-        .select(
-            "q_id", "c_id",
-            _pair_score("q_vec", "c_vec", EMB_DIM).alias("score"),
-        )
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 10)
-        .select("q_id", "c_id", "score", "rank")
-    )
+    return top_k(_exact(_probed(lists, probes), EMB_DIM), 10)
 
 
 QUERIES = {"ann_sq_topk": q_ann_sq_topk, "ann_ivfsq": q_ann_ivfsq}

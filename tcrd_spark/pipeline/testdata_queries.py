@@ -18,7 +18,6 @@ from tcrd_spark.functions.hashing import (
 )
 from tcrd_spark.pipeline import dedup, similarity, text
 from tcrd_spark.pipeline.dedup import EMB_DIM, oracle_dot
-from tcrd_spark.session import memo
 from tcrd_spark.sources.lake import load_table
 
 # ---------------------------------------------------------------- text
@@ -154,30 +153,15 @@ def q_corpus_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------- similarity
 
-def _queries_and_corpus(spark, sf_dir):
-    emb = load_table(spark, sf_dir, "embeddings")
-    corpus = emb.select(
-        F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_vec")
-    )
-    qs = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
-    )
-    return qs, corpus
-
-
 def q_ann_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact cosine top-10 for 5 query vectors (the ANN baseline)."""
-    qs, corpus = _queries_and_corpus(spark, sf_dir)
+    corpus, qs, _ = similarity.panel(spark, sf_dir)
     return similarity.brute_force_topk(qs, corpus, EMB_DIM, k=10)
 
 
 def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF two-stage ANN: 8 deterministic centroids, probe 2 cells."""
-    qs, corpus = _queries_and_corpus(spark, sf_dir)
-    emb = load_table(spark, sf_dir, "embeddings")
-    centroids = emb.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("cell_id"), F.col("embedding").alias("cell_vec")
-    )
+    corpus, qs, centroids = similarity.panel(spark, sf_dir)
     return similarity.ivf_topk(qs, corpus, centroids, EMB_DIM, k=10, n_probe=2)
 
 
@@ -188,13 +172,7 @@ def q_kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     doubles to values both engines represent identically), re-assign
     every vector under the updated centroids. Oracle-adjudicates the
     assign→mean→assign machinery the trained build runs per iteration."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    corpus = emb.select(
-        F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_vec")
-    )
-    cents0 = emb.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("cell_id"), F.col("embedding").alias("cell_vec")
-    )
+    corpus, _, cents0 = similarity.panel(spark, sf_dir)
     a0 = similarity.assign_cells(corpus, cents0, EMB_DIM).select(
         "c_id", "c_vec", "cell_id"
     )
@@ -208,35 +186,11 @@ def q_ann_ivf_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF search against the PERSISTED cell_id-partitioned index —
     same centroids/probes as ann_ivf, so identical results; the scan
     is partition-pruned to the probed cells. The index builds once per
-    session per sf_dir (the write is the build step, not the query) and
-    its directory is removed when the memo entry is released."""
-    import hashlib
-    import os
-    import tempfile
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    corpus = emb.select(
-        F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_vec")
-    )
-    centroids = emb.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("cell_id"), F.col("embedding").alias("cell_vec")
-    )
-    key = os.path.realpath(sf_dir)
-    # pid in the tag: concurrent processes (bench + check) must not
-    # race overwrite-writes against each other's reads
-    tag = hashlib.md5(f"{key}:{os.getpid()}".encode()).hexdigest()[:12]
-    path = memo(
-        spark, "ivf-index", key,
-        lambda: similarity.build_ivf_index(
-            corpus, centroids, EMB_DIM,
-            os.path.join(tempfile.gettempdir(), f"tcrd_ivf_index_{tag}"),
-        ),
-    )
-    qs = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
-    )
+    session per sf_dir (`similarity.panel_ivf_index`)."""
+    _, qs, centroids = similarity.panel(spark, sf_dir)
     return similarity.ivf_topk_indexed(
-        qs, path, centroids, EMB_DIM, k=10, n_probe=2
+        qs, similarity.panel_ivf_index(spark, sf_dir), centroids, EMB_DIM,
+        k=10, n_probe=2,
     )
 
 

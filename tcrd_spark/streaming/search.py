@@ -43,7 +43,7 @@ def _topk_merge(k: int):
             for c, s in zip(pdf["c_id"], pdf["score"]):
                 rows[int(c)] = float(s)
         # (-score, c_id): descending score, ascending id on ties —
-        # identical ordering to brute_force_topk's window
+        # the batch searches' one top-k order (operators/topk.top_k)
         best = sorted(rows.items(), key=lambda cs: (-cs[1], cs[0]))[:k]
         state.update(([c for c, _ in best], [s for _, s in best]))
         yield pd.DataFrame(
@@ -89,7 +89,7 @@ def streaming_running_topk(
             for j, qid in enumerate(ids_q):
                 col = sims[:, j]
                 # (-score, c_id) lexsort so per-batch pruning uses the
-                # SAME tie order as _topk_merge / brute_force_topk —
+                # SAME tie order as _topk_merge / operators/topk.top_k —
                 # score-only argsort could drop the smallest-c_id row of
                 # a tie straddling the k cutoff (duplicate vectors)
                 top = np.lexsort((c_ids, -col))[:k]

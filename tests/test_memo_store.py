@@ -289,6 +289,110 @@ def test_one_way_to_pair_candidates():
     assert found == set(OWN_PAIR_JOIN), found ^ set(OWN_PAIR_JOIN)
 
 
+# pipeline functions that keep their own per-query top-k window, and why
+# (none today: every retrieval search and both fusion ranks use top_k)
+OWN_TOPK: dict[str, str] = {}
+
+
+def test_one_topk_rule():
+    """A per-query top-k in tcrd_spark/pipeline/ goes through
+    operators/topk.py (`top_k`): no function there numbers a
+    `partitionBy("q_id")` window with row_number outside OWN_TOPK, and
+    every entry there still does."""
+    import ast
+
+    root = os.path.join(os.path.dirname(tcrd_spark.__file__), "pipeline")
+    found = set()
+    for f in sorted(os.listdir(root)):
+        if not f.endswith(".py"):
+            continue
+        with open(os.path.join(root, f)) as fh:
+            tree = ast.parse(fh.read())
+        for fn in ast.walk(tree):
+            if not isinstance(fn, ast.FunctionDef):
+                continue
+            calls = [n for n in ast.walk(fn) if isinstance(n, ast.Call)]
+            names = {getattr(c.func, "attr", getattr(c.func, "id", None))
+                     for c in calls}
+            by_q = any(
+                getattr(c.func, "attr", None) == "partitionBy"
+                and any(isinstance(a, ast.Constant) and a.value == "q_id"
+                        for arg in c.args for a in ast.walk(arg))
+                for c in calls
+            )
+            if by_q and "row_number" in names:
+                found.add(f"{f}::{fn.name}")
+    assert found == set(OWN_TOPK), found ^ set(OWN_TOPK)
+
+
+RETRIEVAL_MODULES = ("similarity", "pq", "sq", "negatives", "fusion", "mmr")
+
+
+def test_retrieval_code_is_reached_from_the_program():
+    """Every top-level function of the retrieval modules is reached from
+    the program — a registered query, API method, tool, benchmark or
+    module-level use in tcrd_spark/, tools/, perfbench/ or bench.py —
+    directly or through other reached functions; a function only tests
+    call is dead code."""
+    import ast
+
+    repo = os.path.dirname(os.path.dirname(tcrd_spark.__file__))
+    pkg = "tcrd_spark.pipeline"
+    mod_path = {m: os.path.join("tcrd_spark", "pipeline", f"{m}.py")
+                for m in RETRIEVAL_MODULES}
+    defs = {}
+    for m, rel in mod_path.items():
+        with open(os.path.join(repo, rel)) as fh:
+            defs[m] = {n.name for n in ast.parse(fh.read()).body
+                       if isinstance(n, ast.FunctionDef)}
+    files = [os.path.join(repo, "bench.py")]
+    for top in ("tcrd_spark", "tools", "perfbench"):
+        for dirpath, _, fs in os.walk(os.path.join(repo, top)):
+            files += [os.path.join(dirpath, f) for f in fs
+                      if f.endswith(".py") and not f.startswith("test_")]
+    roots, edges = set(), {}
+    for path in files:
+        with open(path) as fh:
+            tree = ast.parse(fh.read())
+        rel = os.path.relpath(path, repo)
+        own = next((m for m, p in mod_path.items() if p == rel), None)
+        # the retrieval modules this file imports (or is)
+        seen = {own} - {None}
+        for n in ast.walk(tree):
+            mod = getattr(n, "module", None) or ""
+            if isinstance(n, ast.ImportFrom) and mod == pkg:
+                seen |= {a.name for a in n.names}
+            elif isinstance(n, ast.ImportFrom) and mod.startswith(pkg + "."):
+                seen.add(mod.rsplit(".", 1)[1])
+            elif isinstance(n, ast.Import):
+                seen |= {a.name.rsplit(".", 1)[1] for a in n.names
+                         if a.name.startswith(pkg + ".")}
+        seen &= set(RETRIEVAL_MODULES)
+        spans = [(f.lineno, f.end_lineno, f.name) for f in tree.body
+                 if isinstance(f, ast.FunctionDef)] if own else []
+        for n in ast.walk(tree):
+            name = n.id if isinstance(n, ast.Name) else (
+                n.attr if isinstance(n, ast.Attribute) else None)
+            for m in seen:
+                if name not in defs[m]:
+                    continue
+                owner = next(
+                    (f for a, b, f in spans if a <= n.lineno <= b), None)
+                if owner is None:
+                    roots.add((m, name))
+                elif (own, owner) != (m, name):
+                    edges.setdefault((own, owner), set()).add((m, name))
+    live, todo = set(), list(roots)
+    while todo:
+        node = todo.pop()
+        if node not in live:
+            live.add(node)
+            todo += edges.get(node, ())
+    dead = {f"{m}.{n}" for m in RETRIEVAL_MODULES for n in defs[m]} - {
+        f"{m}.{n}" for m, n in live}
+    assert not dead, sorted(dead)
+
+
 SPLIT_RULE = re.compile(r"inputFiles\(\)|repartition\([^)]*defaultParallelism")
 SIZE_PROBE = re.compile(r"\.limit\(\s*[A-Za-z_][\w.]*\s*\+\s*1\s*\)")
 # size probes that bound a resource instead of choosing between paths

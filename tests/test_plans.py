@@ -53,6 +53,25 @@ def test_topk_uses_window_group_limit(spark, sf_dir, queries):
     assert "WindowGroupLimit" in plan, plan
 
 
+# every registered query whose answer is a per-query top-k
+RETRIEVAL = (
+    "ann_bruteforce", "ann_ivf", "ann_ivf_indexed", "ann_sq_topk",
+    "ann_ivfsq", "ann_pq_topk", "ann_ivfpq", "ann_pq_rerank",
+    "hard_negatives", "hard_negatives_shortlist", "rrf_fusion",
+)
+
+
+@pytest.mark.parametrize("name", RETRIEVAL)
+def test_retrieval_topk_uses_window_group_limit(spark, sf_dir, queries, name):
+    """The scale claim of the retrieval family (pipeline/similarity.py):
+    each partition keeps k rows per query before the top-k's exchange,
+    so k rows per partition move, not the candidates."""
+    df = queries[name](spark, sf_dir)
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "WindowGroupLimit" in plan, plan
+
+
 def test_all_query_plans_are_scale_clean(spark, sf_dir, queries):
     """One plan-build pass over every registered query, two gates:
 

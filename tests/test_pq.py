@@ -121,51 +121,6 @@ def test_ivfpq_tracks_full_precision_ivf(spark, sf_dir):
     assert _mean_recall(ivf, ivfpq) >= 0.4, (ivf, ivfpq)
 
 
-def test_indexed_ivfpq_matches_inline_and_prunes_partitions(
-    spark, sf_dir, tmp_path
-):
-    """The persisted index: identical results to the inline ann_ivfpq,
-    and the probe scan carries a PartitionFilters entry on cell_id so
-    only the probed cells' files are read."""
-    from tests.test_plans import plan_of
-    from tcrd_spark.pipeline.pq import (
-        build_ivfpq_index,
-        ivf_pq_topk_indexed,
-    )
-    from tcrd_spark.registry import all_queries
-    from tcrd_spark.sources.lake import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    corpus = emb.select(
-        F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_vec")
-    )
-    qs = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
-    )
-    cents = emb.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("cell_id"),
-        F.col("embedding").alias("cell_vec"),
-    )
-    cb = deterministic_codebooks(corpus, EMB_DIM, _M, _KSUB)
-    path = str(tmp_path / "ivfpq")
-    build_ivfpq_index(corpus, cents, cb, EMB_DIM, _M, path)
-    got = ivf_pq_topk_indexed(
-        qs, path, cents, cb, EMB_DIM, _M, k=10, n_probe=2
-    )
-    plan = plan_of(got)
-    pf = [l for l in plan.splitlines() if "PartitionFilters" in l]
-    assert pf and "cell_id" in pf[0], plan
-    inline = {
-        (r["q_id"], r["c_id"], r["score"], r["rank"])
-        for r in all_queries()["ann_ivfpq"](spark, sf_dir).collect()
-    }
-    indexed = {
-        (r["q_id"], r["c_id"], r["score"], r["rank"])
-        for r in got.collect()
-    }
-    assert inline == indexed
-
-
 def test_rerank_recovers_most_of_exact_top10(spark, sf_dir):
     """The deployment composition: ADC shortlist-50 + exact re-rank.
     Recall@10 equals the shortlist's coverage of the exact top-10

